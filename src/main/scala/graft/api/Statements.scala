@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct, Filter,
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftOuter, RightOuter}
 import org.apache.spark.sql.types._
 
-import graft.changelog.{Op, RawRecord}
+import graft.changelog.{Changelog, Op, RawRecord}
 import graft.streaming.{ChangelogStream, StatefulOps}
 
 object Statements {
@@ -76,7 +76,8 @@ final class Statement private[api] (
   }
 
   /** Result pages as a raw-record iterator: streaming statements read the
-    * live changelog cursor; batch statements produce `+I` rows (a bounded
+    * sink's record log directly (validated per record, with no history
+    * copy per cursor); batch statements produce `+I` rows (a bounded
     * query's entire changelog is its result set).
     *
     * The streaming iterator never exhausts (the query is continuous), so
@@ -94,14 +95,15 @@ final class Statement private[api] (
   def results(heartbeatMs: Long = 10L): Iterator[Option[RawRecord]] =
     streamHandle match {
       case Some(h) => new Iterator[Option[RawRecord]] {
-        private val cl = h.changelog()
+        private val log = h.records()
         override def hasNext: Boolean = true // continuous: never exhausts
-        override def next(): Option[RawRecord] = cl.consume(1).headOption match {
-          case Some(rec) => Some(RawRecord(rec.op.map(_.code), rec.values))
-          case None => // heartbeat — no data this poll; back off
+        override def next(): Option[RawRecord] =
+          if (log.hasNext) log.next().map { raw =>
+            Changelog.validate(h.schema, raw); raw
+          } else { // heartbeat — no data this poll; back off
             if (heartbeatMs > 0) Thread.sleep(heartbeatMs)
             None
-        }
+          }
       }
       case None => new Iterator[Option[RawRecord]] {
         private val rows =

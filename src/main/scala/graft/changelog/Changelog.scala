@@ -95,17 +95,6 @@ final class Changelog(val schema: Seq[String],
   def history: Seq[ChangelogRecord] = historyBuf.toSeq
   def opsReceived: Set[Op] = opsSeen.toSet
 
-  /** Arity + op validation (reference `lib/flink.py:72-100`). */
-  private def validate(raw: RawRecord): ChangelogRecord = {
-    require(raw.row.length == schema.length,
-      s"table has ${schema.length} columns but row has ${raw.row.length}: ${raw.row}")
-    val op = raw.op.map { c =>
-      Op.fromCode(c).getOrElse(
-        throw new IllegalArgumentException(s"invalid op code received for row: $raw"))
-    }
-    ChangelogRecord(op, raw.row.toVector)
-  }
-
   /** Pull up to `limit` valid records; heartbeats (`None`) are skipped and
     * do not count toward the limit. Returns only the new records. */
   def consume(limit: Int = Int.MaxValue): Seq[ChangelogRecord] = {
@@ -115,7 +104,7 @@ final class Changelog(val schema: Seq[String],
       source.next() match {
         case None => // heartbeat: statement produced no rows this page
         case Some(raw) =>
-          val rec = validate(raw)
+          val rec = Changelog.validate(schema, raw)
           historyBuf += rec
           rec.op.foreach(opsSeen += _)
           consumed += 1
@@ -135,4 +124,17 @@ final class Changelog(val schema: Seq[String],
     * guarantees `-U` is immediately followed by its `+U`). */
   def latestIsUpdateBefore: Boolean =
     historyBuf.lastOption.exists(_.op.contains(Op.UpdateBefore))
+}
+
+object Changelog {
+  /** Arity + op validation (reference `lib/flink.py:72-100`). */
+  private[graft] def validate(schema: Seq[String], raw: RawRecord): ChangelogRecord = {
+    require(raw.row.length == schema.length,
+      s"table has ${schema.length} columns but row has ${raw.row.length}: ${raw.row}")
+    val op = raw.op.map { c =>
+      Op.fromCode(c).getOrElse(
+        throw new IllegalArgumentException(s"invalid op code received for row: $raw"))
+    }
+    ChangelogRecord(op, raw.row.toVector)
+  }
 }

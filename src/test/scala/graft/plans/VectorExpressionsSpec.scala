@@ -280,4 +280,40 @@ class VectorExpressionsSpec extends AnyFunSuite {
     assert(names.distinct.size == names.size,
       s"duplicate local declarations across two instances: $names")
   }
+
+  test("BloomBitsProbe: negative keys probe in-range floorMod positions, " +
+      "identically interpreted and in codegen; non-negative keys keep the " +
+      "`%` positions p14's bit build uses") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateMutableProjection
+    import org.apache.spark.sql.types.LongType
+    val m = 1024L
+    val k = 3
+    def step(s: Long): Long = (s.toDouble / 1048576.0d).toLong * 2L + 1L
+    def positions(s: Long): Seq[Long] =
+      (0 until k).map(j => Math.floorMod(s % m + step(s) * j, m))
+    val members = Seq(-1L, -100L, -987654321L, Long.MinValue / 4, 7L,
+      123456789L)
+    val bits = new Array[Long]((m / 64).toInt)
+    members.flatMap(positions).foreach(p =>
+      bits((p / 64).toInt) |= 1L << (p % 64))
+    def expected(s: Long): Boolean = positions(s).forall(p =>
+      ((bits((p / 64).toInt) >> (p % 64)) & 1L) == 1L)
+    val keys = members ++ Seq(-2L, -5000L, Long.MinValue, 0L, 99L,
+      4242424242L, Long.MaxValue)
+    val probe = BloomBitsProbe(BoundReference(0, LongType, nullable = false),
+      bits.toIndexedSeq, m, k)
+    val generated = GenerateMutableProjection.generate(Seq(probe))
+    keys.foreach { s =>
+      val row = InternalRow(s)
+      assert(probe.eval(row) == expected(s), s"interpreted probe of $s")
+      assert(generated(row).getBoolean(0) == expected(s),
+        s"codegen probe of $s")
+    }
+    assert(members.forall(expected), "an inserted key must always hit")
+    Seq(0L, 7L, 99L, 123456789L, 4242424242L, Long.MaxValue).foreach { s =>
+      assert(positions(s) == (0 until k).map(j => (s % m + step(s) * j) % m),
+        s"non-negative key $s must keep its `%` positions")
+    }
+  }
 }

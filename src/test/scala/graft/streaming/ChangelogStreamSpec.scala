@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -250,14 +251,14 @@ class ChangelogStreamSpec extends AnyFunSuite {
     } finally handle.stop()
   }
 
-  // the synthesizer sinks (updating/snapshotting) cannot bound via
-  // limit() — a truncated batch would corrupt synthesizer state (dropped
-  // groups would later read as deletions) — so their bound is fail-fast:
-  // an executor-side limit(cap+1).count BEFORE the collect. The
-  // nondeterministic instrumented projection (pruning-proof) counts row
-  // evaluations: the count pass evaluates ≤ partitions×(cap+1) rows and
-  // the collect pass would evaluate all R again, so evals < R proves the
-  // oversized transfer never happened.
+  // the synthesizer sinks (updating/snapshotting) must never fold a
+  // truncated batch — it would corrupt synthesizer state (dropped groups
+  // would later read as deletions) — so their bound is fail-fast: the
+  // single limit(cap+1) collect errors once more than cap rows arrive,
+  // BEFORE any synthesizer mutation. The nondeterministic instrumented
+  // projection (pruning-proof) counts row evaluations: the bounded pass
+  // stops each partition at cap+1 rows, so evals < R proves the full
+  // R-row transfer never happened.
   test("over-cap grouped micro-batch fails via the cap before collecting") {
     val s = spark
     import s.implicits._
@@ -289,6 +290,47 @@ class ChangelogStreamSpec extends AnyFunSuite {
       assert(handle.changelog().consume().isEmpty,
         "failed batch must not leave partial records in the log")
     } finally handle.stop()
+  }
+
+  // one Spark pass per micro-batch: each synthesizer sink must run its
+  // batch plan once, so the state-store stage under it loads and commits
+  // its state once. The nondeterministic instrumented projection above the
+  // stateful operator counts row evaluations — one per output row; a
+  // second action on the batch (e.g. a count before the collect) re-runs
+  // the stage and makes it two.
+  test("synthesizer sinks evaluate an under-cap micro-batch exactly once") {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val rows = 40
+    def grouped(mem: MemoryStream[Int], touched: Column => Column) =
+      mem.toDF().groupBy($"value").agg(count(lit(1)).as("n"))
+        .select(touched($"value").as("k"), $"n")
+    val sinks = Seq[(String, (MemoryStream[Int], Column => Column) =>
+        ChangelogStream.Handle)](
+      "updating" -> ((mem, t) =>
+        ChangelogStream.updating(grouped(mem, t), "once-updating", Seq("k"))),
+      "snapshotting" -> ((mem, t) => ChangelogStream.snapshotting(
+        grouped(mem, t), "once-snapshotting", Seq("k"))),
+      "foldingSnapshot" -> ((mem, t) => ChangelogStream.foldingSnapshot(
+        mem.toDF().dropDuplicates("value").select(t($"value").as("k")),
+        "once-folding", Seq("k"), Seq("k"), deltas => Seq(deltas))))
+    sinks.foreach { case (sink, start) =>
+      val mem = MemoryStream[Int]
+      val evals = s.sparkContext.longAccumulator(s"once-$sink-evals")
+      val touched = udf { (i: Int) => evals.add(1L); i }.asNondeterministic()
+      val handle = start(mem, c => touched(c))
+      try {
+        mem.addData(1 to rows)
+        handle.processAllAvailable()
+        val recs = handle.changelog().consume()
+        assert(recs.size == rows && recs.forall(_.op.contains(Op.Insert)),
+          s"$sink: expected $rows +I records, got $recs")
+        assert(evals.value == rows,
+          s"$sink: ${evals.value} row evaluations for a $rows-row " +
+            "micro-batch — the batch plan ran more than once")
+      } finally handle.stop()
+    }
   }
 
   test("append-only streaming query passes rows through as +I") {
