@@ -5,10 +5,11 @@ import java.security.SecureRandom
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedHaving, UnresolvedRelation, UnresolvedStar}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Cast, Descending, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Not, NullsFirst, Or, SortOrder}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct, Filter, GlobalLimit, Join, LocalLimit, LogicalPlan, Project, Sort, SubqueryAlias}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeReference, BasePredicate, BoundReference, Cast, CommonExpressionRef, EqualTo, Expression, InterpretedOrdering, Literal, NullOrdering, NullsFirst, Predicate, RowOrdering, RuntimeReplaceable, SortDirection, SortOrder, Unevaluable, With}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct, Filter, GlobalLimit, Join, LocalLimit, LocalRelation, LogicalPlan, Project, Sort, SubqueryAlias}
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftOuter, RightOuter}
 import org.apache.spark.sql.types._
 
@@ -1873,13 +1874,13 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
           bail("the event-time window must be a GROUP BY expression")
       }
     }
-    // output schema (also the types HAVING compiles against)
+    // output schema (also the rows HAVING and ORDER BY evaluate over)
     def kindType(k: ValKind): DataType = k match {
       case LongK => LongType
       case DoubleK => DoubleType
       case StringK => StringType
     }
-    val fields = outCols.map {
+    val fields = StructType(outCols.map {
       case (n, Left(i)) => StructField(n, ds.types(i))
       case (n, Right(CountStar)) => StructField(n, LongType)
       case (n, Right(CountCol(_))) => StructField(n, LongType)
@@ -1891,121 +1892,13 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       case (n, Right(MinCol(_, k))) => StructField(n, kindType(k))
       case (n, Right(MaxCol(_, k))) => StructField(n, kindType(k))
       case (n, Right(DistinctCol(_, _))) => StructField(n, LongType)
-    }
-    // HAVING compiler — HAVING filters the fold's EMITTED snapshots, so
-    // unlike WHERE (which rides filterDeltas' executor-side Catalyst
-    // rewrite) it needs a driver-side predicate over output rows. The
-    // supported algebra: an output column compared to a literal (=, <>,
-    // <, <=, >, >=), IS [NOT] NULL, AND/OR/NOT with SQL three-valued
-    // semantics (Option[Boolean], None = unknown; only definite TRUE
-    // passes). Comparisons are typed at COMPILE time from the output
-    // schema (the r9 version decided comparability per row and silently
-    // excluded mismatches): integral columns compare EXACTLY via
-    // BigDecimal (a long beyond 2^53 never rounds through a double),
-    // fractional/string columns compare in the DOUBLE domain (Spark's
-    // PromoteStrings; an unparseable cell or literal becomes NULL →
-    // unknown), and any type outside the algebra rejects at create().
-    def compileCmp(resolve: UnresolvedAttribute => Int,
-        typeAt: Int => DataType)(a: UnresolvedAttribute, l: Literal,
-        test: Int => Boolean): Vector[Any] => Option[Boolean] = {
-      val i = resolve(a)
-      val ck = kindOf(typeAt(i)).getOrElse(
-        bail(s"column ${a.nameParts.mkString(".")} of type ${typeAt(i)} " +
-          "is not comparable here (numeric and string only)"))
-      val lv = l.value match {
-        case null => null
-        case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-        case d: org.apache.spark.sql.types.Decimal => d.toJavaBigDecimal
-        case other => other
-      }
-      if (lv == null) return (_: Vector[Any]) => None // cmp to NULL: unknown
-      (ck, lv) match {
-        case (StringK, s: String) =>
-          v => {
-            val x = v(i)
-            if (x == null) None
-            else Some(test(x.asInstanceOf[String].compareTo(s)))
-          }
-        case (LongK | DoubleK, s: String) =>
-          // numeric column vs string literal: the literal coerces to
-          // DOUBLE; unparseable casts to NULL → the predicate is unknown
-          val y = exactNum(s)
-          if (y == null) (_: Vector[Any]) => None
-          else v => {
-            val x = exactNum(v(i))
-            if (x == null) None else Some(test(x.compareTo(y)))
-          }
-        case _ =>
-          // numeric-vs-numeric, or string column coerced to DOUBLE
-          // against a numeric literal (lenient cast per row). The
-          // comparison domain follows Spark's promotion: a fractional or
-          // string COLUMN compares in DOUBLE — the literal must round
-          // through its double first, or an exact decimal like 7.13
-          // could never equal the binary cell it came from (r10 review
-          // finding) — while an integral column compares EXACTLY via
-          // decimals (the r9 advice: long cells past 2^53 must not
-          // round through a double)
-          val yRaw = exactNum(lv)
-          if (yRaw == null)
-            bail(s"literal $lv of type ${l.dataType} is not comparable " +
-              s"with ${typeAt(i)}")
-          val y =
-            if (ck == LongK) yRaw
-            else exactNum(java.lang.Double.valueOf(yRaw.doubleValue))
-          if (y == null) (_: Vector[Any]) => None // literal overflows double
-          else v => {
-            val x = exactNum(v(i))
-            if (x == null) None else Some(test(x.compareTo(y)))
-          }
-      }
-    }
-    def compilePred(resolve: UnresolvedAttribute => Int,
-        typeAt: Int => DataType)(e: Expression): Vector[Any] => Option[Boolean] = {
-      val rec = compilePred(resolve, typeAt) _
-      val cmp = compileCmp(resolve, typeAt) _
-      e match {
-        case And(l, r) =>
-          val lf = rec(l); val rf = rec(r)
-          (v: Vector[Any]) => (lf(v), rf(v)) match {
-            case (Some(false), _) | (_, Some(false)) => Some(false)
-            case (Some(true), Some(true)) => Some(true)
-            case _ => None
-          }
-        case Or(l, r) =>
-          val lf = rec(l); val rf = rec(r)
-          (v: Vector[Any]) => (lf(v), rf(v)) match {
-            case (Some(true), _) | (_, Some(true)) => Some(true)
-            case (Some(false), Some(false)) => Some(false)
-            case _ => None
-          }
-        case Not(c) => // also covers `<>`, which parses as Not(EqualTo)
-          val f = rec(c); (v: Vector[Any]) => f(v).map(!_)
-        case IsNull(a: UnresolvedAttribute) =>
-          val i = resolve(a); (v: Vector[Any]) => Some(v(i) == null)
-        case IsNotNull(a: UnresolvedAttribute) =>
-          val i = resolve(a); (v: Vector[Any]) => Some(v(i) != null)
-        case EqualTo(a: UnresolvedAttribute, l: Literal) => cmp(a, l, _ == 0)
-        case EqualTo(l: Literal, a: UnresolvedAttribute) => cmp(a, l, _ == 0)
-        case LessThan(a: UnresolvedAttribute, l: Literal) => cmp(a, l, _ < 0)
-        case LessThan(l: Literal, a: UnresolvedAttribute) => cmp(a, l, _ > 0)
-        case LessThanOrEqual(a: UnresolvedAttribute, l: Literal) => cmp(a, l, _ <= 0)
-        case LessThanOrEqual(l: Literal, a: UnresolvedAttribute) => cmp(a, l, _ >= 0)
-        case GreaterThan(a: UnresolvedAttribute, l: Literal) => cmp(a, l, _ > 0)
-        case GreaterThan(l: Literal, a: UnresolvedAttribute) => cmp(a, l, _ < 0)
-        case GreaterThanOrEqual(a: UnresolvedAttribute, l: Literal) => cmp(a, l, _ >= 0)
-        case GreaterThanOrEqual(l: Literal, a: UnresolvedAttribute) => cmp(a, l, _ <= 0)
-        case other =>
-          bail(s"predicate $other is outside the supported algebra " +
-            "(column-vs-literal comparisons, IS [NOT] NULL, AND/OR/NOT)")
-      }
-    }
-    // WHERE was already applied executor-side in routeAgg (it compiles
-    // against the SOURCE view's columns, before any normalization
-    // projection). Only HAVING needs the driver-side compiled predicate
-    // below (it evaluates EMITTED snapshots).
-    // HAVING and ORDER BY resolve against the OUTPUT columns (aliases +
-    // group cols); the error names the resolving CLAUSE — an ORDER BY
-    // typo must not be blamed on a HAVING the statement doesn't have
+    })
+    // WHERE was already applied executor-side in routeAgg. HAVING and
+    // ORDER BY act on the fold's EMITTED snapshots, as Spark's own bound
+    // expressions over Catalyst rows of the output schema. They resolve
+    // against the OUTPUT columns (aliases + group cols); the error names
+    // the resolving CLAUSE — an ORDER BY typo must not be blamed on a
+    // HAVING the statement doesn't have
     def outIdx(clause: String)(a: UnresolvedAttribute): Int =
       a.nameParts match {
         case Seq(n) if outCols.exists(_._1 == n) =>
@@ -2015,10 +1908,48 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
           s"(${outCols.map(_._1).mkString(", ")})")
       }
     // HAVING filters the fold's emitted snapshot — a group crossing the
-    // boundary emits the -D / +I the complete-mode diff produces
-    val havingFilter: Option[Vector[Any] => Boolean] = having.map { cond =>
-      val f = compilePred(outIdx("HAVING"), i => fields(i).dataType)(cond)
-      (v: Vector[Any]) => f(v).contains(true)
+    // boundary emits the -D / +I the complete-mode diff produces. The
+    // condition is analyzed ONCE, as a Filter over a relation carrying
+    // the output schema (Spark's type coercion and function resolution)
+    val havingPred: Option[BasePredicate] = having.map { cond =>
+      val rel = LocalRelation(
+        fields.map(f => AttributeReference(f.name, f.dataType)()))
+      val bound = cond.transform {
+        case a: UnresolvedAttribute => rel.output(outIdx("HAVING")(a))
+      }
+      val f = try {
+        val qe = spark.sessionState.executePlan(Filter(bound, rel))
+        qe.assertAnalyzed()
+        qe.analyzed.collectFirst { case x: Filter => x }.get
+      } catch { case e: AnalysisException =>
+        bail(s"HAVING does not analyze over the output columns: ${e.getMessage}")
+      }
+      if (!f.condition.deterministic)
+        bail("a non-deterministic HAVING cannot filter a maintained view " +
+          "(a group must pass or fail identically on every snapshot)")
+      // the optimizer's substitutions that make an analyzed condition
+      // evaluable: a RuntimeReplaceable (BETWEEN, …) becomes its
+      // replacement, and a With (a shared operand) inlines its
+      // definitions — sound, as the condition is deterministic
+      def evaluable(e: Expression): Expression = e match {
+        case r: RuntimeReplaceable => evaluable(r.replacement)
+        case With(child, defs) =>
+          val byId = defs.map(d => d.id -> evaluable(d.child)).toMap
+          evaluable(child).transform {
+            case r: CommonExpressionRef if byId.contains(r.id) => byId(r.id)
+          }
+        case other => other.mapChildren(evaluable)
+      }
+      val pred = evaluable(f.condition)
+      // (an attribute is unevaluable only until Predicate.create binds it)
+      pred.find(e => e.isInstanceOf[Unevaluable] &&
+          !e.isInstanceOf[Attribute]).foreach { e =>
+        bail(s"HAVING expression ${e.sql} cannot be evaluated over the " +
+          "fold's snapshots")
+      }
+      val p = Predicate.create(pred, rel.output)
+      p.initialize(0)
+      p
     }
     // ORDER BY … LIMIT k over the AGGREGATE view — Flink's Top-N over a
     // grouped aggregate (the leaderboard statement): the emitted
@@ -2026,9 +1957,8 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     // crossing the k-boundary wire the same +I/-D membership
     // transitions as the feed-level top-k. Ties break by the group-key
     // columns ascending — deterministic for any arrival order.
-    val presentation: Seq[Vector[Any]] => Seq[Vector[Any]] = topK match {
-      case None => identity
-      case Some((order, k)) =>
+    val topOrder: Option[(Ordering[InternalRow], Int)] = topK.map {
+      case (order, k) =>
         if (k <= 0) bail("a maintained top-k needs a positive LIMIT")
         val sIdx = order.child match {
           case a: UnresolvedAttribute => outIdx("ORDER BY")(a)
@@ -2038,10 +1968,21 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
         val keyIdxs = outCols.zipWithIndex.collect {
           case ((_, Left(i)), at) if groupIdx.contains(i) => at
         }
-        val ord = rowOrdering(sIdx, order.direction == Descending,
-          order.nullOrdering == NullsFirst, i => fields(i).dataType, keyIdxs)
-        rows => rows.sorted(ord).take(k)
+        (topKOrdering(fields, sIdx, order, keyIdxs, sql), k)
     }
+    // without HAVING or ORDER BY the snapshot passes through unconverted
+    val presentation: Seq[Vector[Any]] => Seq[Vector[Any]] =
+      if (havingPred.isEmpty && topOrder.isEmpty) identity
+      else {
+        val toRow = catalystRows(fields)
+        rows => {
+          val all = rows.map(r => (toRow(r), r))
+          val kept = havingPred.fold(all)(p => all.filter(x => p.eval(x._1)))
+          topOrder.fold(kept) { case (ord, k) =>
+            kept.sortBy(_._1)(ord).take(k)
+          }.map(_._2)
+        }
+      }
     // ---- driver-side incremental fold over the source's retraction
     // deltas; the heavy join/upsert state stays in the executor StateStore
     val aggOps = outCols.collect { case (_, Right(op)) => op }
@@ -2348,10 +2289,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
             }
         }.toVector
       }.toSeq
-      presentation(havingFilter match {
-        case Some(f) => snapshot.filter(f)
-        case None => snapshot
-      })
+      presentation(snapshot)
     }
     val outNames = outCols.map(_._1)
     val keyNames = outCols.collect {
@@ -2365,56 +2303,36 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     // advertised schema ("traits.schema") is the aggregate view's — an
     // empty typed frame carries it; results flow through the handle
     val schemaDf = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(fields))
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fields)
     new Statement(name, sql, schemaDf, Some(handle), properties)
   }
 
-  /** Canonical comparison of two cells under a known (or unknown) kind
-    * — the deterministic building block of every maintained ordering. */
-  private def cmpCells(dt: DataType, a: Any, b: Any): Int = kindOf(dt) match {
-    case Some(LongK) => java.lang.Long.compare(
-      a.asInstanceOf[Number].longValue, b.asInstanceOf[Number].longValue)
-    case Some(DoubleK) => java.lang.Double.compare(
-      a.asInstanceOf[Number].doubleValue, b.asInstanceOf[Number].doubleValue)
-    case Some(StringK) =>
-      a.asInstanceOf[String].compareTo(b.asInstanceOf[String])
-    // a column of a kind the fold can't compare (e.g. a boolean dim
-    // column) still needs a DETERMINISTIC tiebreak: canonical string form
-    case None => String.valueOf(a).compareTo(String.valueOf(b))
+  /** Fold rows (external values, positionally typed by `schema`) as
+    * Catalyst rows, for the bound HAVING / ORDER BY expressions. */
+  private def catalystRows(schema: StructType): Vector[Any] => InternalRow = {
+    val conv = CatalystTypeConverters.createToCatalystConverter(schema)
+    v => conv(Row.fromSeq(v)).asInstanceOf[InternalRow]
   }
 
-  /** Total deterministic order for maintained top-k rows: the sort
+  /** Spark's ordering for maintained top-k rows of `schema`: the sort
     * column first (direction + null placement from the SQL), then the
     * `tiebreak` columns ascending nulls-first — so the served k-set is
-    * identical for any arrival interleaving. */
-  private def rowOrdering(sortIdx: Int, desc: Boolean, nullsFirst: Boolean,
-      typeAt: Int => DataType,
-      tiebreak: Seq[Int]): Ordering[Vector[Any]] =
-    new Ordering[Vector[Any]] {
-      override def compare(x: Vector[Any], y: Vector[Any]): Int = {
-        val xv = x(sortIdx); val yv = y(sortIdx)
-        val c =
-          if (xv == null && yv == null) 0
-          else if (xv == null) { if (nullsFirst) -1 else 1 }
-          else if (yv == null) { if (nullsFirst) 1 else -1 }
-          else {
-            val base = cmpCells(typeAt(sortIdx), xv, yv)
-            if (desc) -base else base
-          }
-        if (c != 0) return c
-        tiebreak.foreach { i =>
-          val a = x(i); val b = y(i)
-          val t =
-            if (a == null && b == null) 0
-            else if (a == null) -1
-            else if (b == null) 1
-            else cmpCells(typeAt(i), a, b)
-          if (t != 0) return t
-        }
-        0
-      }
-    }
+    * identical for any arrival interleaving. A tiebreak column Spark
+    * cannot order (a MAP) cannot break ties and is skipped. */
+  private def topKOrdering(schema: StructType, sortIdx: Int, order: SortOrder,
+      tiebreak: Seq[Int], sql: String): Ordering[InternalRow] = {
+    val sortCol = schema(sortIdx)
+    if (!RowOrdering.isOrderable(sortCol.dataType))
+      unsupported(sql, s"ORDER BY column ${sortCol.name} of type " +
+        s"${sortCol.dataType.sql} is not orderable")
+    def by(i: Int, dir: SortDirection, nulls: NullOrdering): SortOrder =
+      SortOrder(BoundReference(i, schema(i).dataType, nullable = true),
+        dir, nulls, Seq.empty)
+    new InterpretedOrdering(
+      by(sortIdx, order.direction, order.nullOrdering) +:
+        tiebreak.filter(i => RowOrdering.isOrderable(schema(i).dataType))
+          .map(by(_, Ascending, NullsFirst)))
+  }
 
   /** `SELECT * FROM <source> [WHERE …] ORDER BY <col> [ASC|DESC] LIMIT
     * k` over ANY matched delta source (a feed's maintained view, a feed
@@ -2446,12 +2364,12 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       case other =>
         unsupported(sql, s"ORDER BY expression $other is not a view column")
     }
-    if (kindOf(ds.types(sortIdx)).isEmpty)
-      unsupported(sql, s"ORDER BY column ${ds.viewCols(sortIdx)} of type " +
-        s"${ds.types(sortIdx)} is not orderable here (numeric/string only)")
-    val ord = rowOrdering(sortIdx, order.direction == Descending,
-      order.nullOrdering == NullsFirst, ds.types,
-      ds.viewCols.indices.filterNot(_ == sortIdx))
+    val schema = StructType(ds.viewCols.zip(ds.types).map {
+      case (n, t) => StructField(n, t)
+    })
+    val ord = topKOrdering(schema, sortIdx, order,
+      ds.viewCols.indices.filterNot(_ == sortIdx), sql)
+    val toRow = catalystRows(schema)
     // live VIEW rows as a counted multiset. Pure-feed views cannot hold
     // duplicates (rows carry their ids), but a static dim with fully
     // duplicate rows duplicates joined rows — so the k-selection COUNTS
@@ -2485,19 +2403,18 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
             s"view delta carried an invalid changelog op: $other")
         }
       }
-      Seq(live.iterator
-        .flatMap { case (row, n) =>
+      Seq(live.toVector
+        .map { case (row, n) => (toRow(row), row, n) }
+        .sortBy(_._1)(ord)
+        .flatMap { case (_, row, n) =>
           Iterator.fill(math.min(n, k.toLong).toInt)(row)
         }
-        .toVector.sorted(ord).take(k).distinct)
+        .take(k).distinct)
     }
     val handle = ChangelogStream.foldingSnapshot(ds.deltas, name,
       ds.viewCols, ds.viewCols, fold)
     val schemaDf = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(ds.viewCols.zip(ds.types).map {
-        case (n, t) => StructField(n, t)
-      }))
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     new Statement(name, sql, schemaDf, Some(handle), properties)
   }
 

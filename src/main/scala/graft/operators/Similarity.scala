@@ -80,8 +80,7 @@ object Similarity {
     * (members+angles, surviving tile pairs, gathered tiles). See
     * [[v21CosinePairsBlocked]] for the algorithm and exactness argument. */
   private[operators] def v21Internals(spark: SparkSession, dir: String,
-                                      tau: Double, tileTarget: Int,
-                                      stageShared: Boolean = true)
+                                      tau: Double, tileTarget: Int)
       : (DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
     val emb = normalizedEmbeddings(spark, dir)
@@ -105,16 +104,12 @@ object Similarity {
     // tilePairs leg. withAngle is corpus-proportional (the p29/d15
     // caution) but NARROW — ids, one D-vector, two doubles — and the
     // sf1 interleaved cmp is the evidence the barrier pays.
-    // stageShared=false preserves the r12 recompute shape for Profile
-    // cmp A/Bs.
-    val withAngle0 = ivfAssign(emb, centArray(cents), 1)
+    val withAngle = Tables.stage(ivfAssign(emb, centArray(cents), 1)
       .join(broadcast(cmeta), Seq("cent_id"))
       .withColumn("ra", angle(dot($"v", $"cv") / ($"nrm" * $"cn")))
-      .select($"cent_id", $"vec_id", $"v", $"nrm", $"ra")
-    val withAngle = if (stageShared) Tables.stage(withAngle0) else withAngle0
+      .select($"cent_id", $"vec_id", $"v", $"nrm", $"ra"))
     val radii = withAngle.groupBy($"cent_id").agg(max($"ra").as("r"))
-    val tm0 = cmeta.join(radii, Seq("cent_id"))
-    val tm = if (stageShared) Tables.stage(tm0) else tm0
+    val tm = Tables.stage(cmeta.join(radii, Seq("cent_id")))
     // triangle-inequality pruning on the ANGULAR metric θ = acos(cos):
     // a∈tile i, b∈tile j with cos(a,b) ≥ τ ⟹
     //   θ(cᵢ,cⱼ) ≤ θ(cᵢ,a) + θ(a,b) + θ(b,cⱼ) ≤ rᵢ + θτ + rⱼ,
@@ -180,11 +175,9 @@ object Similarity {
     * fixture scale. */
   def v21CosinePairsBlocked(spark: SparkSession, dir: String,
                             tau: Double = CosineThreshold,
-                            tileTarget: Int = ExactPairTileTarget,
-                            stageShared: Boolean = true): DataFrame = {
+                            tileTarget: Int = ExactPairTileTarget): DataFrame = {
     import spark.implicits._
-    val (_, tilePairs, tiles) =
-      v21Internals(spark, dir, tau, tileTarget, stageShared)
+    val (_, tilePairs, tiles) = v21Internals(spark, dir, tau, tileTarget)
     val paired = tilePairs
       .join(tiles.select($"cent_id".as("ci"), $"ids".as("aid"),
         $"flat".as("af"), $"nrms".as("an")), Seq("ci"))
@@ -233,11 +226,6 @@ object Similarity {
       val rng = new scala.util.Random(42L + j)
       Seq.fill(dim)(if (rng.nextBoolean()) 1.0 else -1.0)
     }
-
-  /** Random-hyperplane signature: bit j = sign(v · plane_j). */
-  private[graft] def lshSignatureProbe(v: org.apache.spark.sql.Column,
-                                       dim: Int, nPlanes: Int): Column =
-    lshSignature(v, dim, nPlanes)
 
   /** ±1 planes pack into bitmasks and the native PlaneSignBits
     * expression runs the whole signature as one primitive loop — the
@@ -321,9 +309,7 @@ object Similarity {
   private[graft] def tableStamp(dir: String, table: String): Long =
     Tables.tableStamp(dir, table)
 
-  /** The adaptive band width from the corpus count — ONE definition,
-    * shared with `Profile v3probe` so the diagnostic measures the same
-    * bucketing v3 runs. */
+  /** The adaptive band width from the corpus count. */
   private[graft] def adaptiveLshBits(n: Long): Int =
     math.min(8, math.max(4,
       math.ceil(math.log(math.max(1.0, n / 64.0)) / math.log(2.0)).toInt))

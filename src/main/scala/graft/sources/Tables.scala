@@ -30,37 +30,24 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     load(spark, dir, name, spread = false)
 
-  /** Measurement-harness force-on for [[spreadNarrow]] (Profile's
-    * interleaved A/B runs both layouts in ONE JVM so host drift cancels);
-    * production entry points never touch it. Opt-in stays per call site
-    * because the win is per-OPERATOR, not per-table: spreading pays only
-    * when the scan stage itself carries heavy fused work (codec decode,
-    * Expand, wide moments), and costs a stage of overhead everywhere else
-    * (measured: m4 0.38×, q27 0.57× vs t10 1.60×, d9 1.35× at sf0.1). */
-  @volatile private[graft] var spreadAll = false
-
-  /** Measurement-harness force-OFF (wins over spreadAll and call-site
-    * opt-ins): reproduces the pre-spread plan of spread-only queries for
-    * the before/after plan dumps. Production never touches it. */
-  @volatile private[graft] var spreadNone = false
-
   /** `spread = true` opts this call site into [[spreadNarrow]] — for
     * operators whose SCAN STAGE carries heavy fused work that would
     * otherwise run single-task on the fixtures' one-row-group files.
-    * NOT safe for the demo `user` view feeding demo1's seeded RAND jitter
-    * (rand(seed) draws per (partition, row-offset), so re-spreading would
-    * re-draw every jitter value). */
+    * Opt-in stays per call site because the win is per OPERATOR, not per
+    * table: elsewhere the extra stage only costs. NOT safe for the demo
+    * `user` view feeding demo1's seeded RAND jitter (rand(seed) draws per
+    * (partition, row-offset), so re-spreading would re-draw every jitter
+    * value). */
   def load(spark: SparkSession, dir: String, name: String,
            spread: Boolean): DataFrame = {
-    val eff = (spread || spreadAll) && !spreadNone
     // evict entries for stopped sessions (ADVICE r12): Bench recycles the
     // session every few queries, and a dead session's DataFrames would
     // otherwise pin their plan trees (and the session) for the JVM's life
     cache.keySet.removeIf(_._1.sparkContext.isStopped)
-    cache.computeIfAbsent((spark, s"$dir/$name.parquet", eff), _ => {
+    cache.computeIfAbsent((spark, s"$dir/$name.parquet", spread), _ => {
       val df = if (name == "events") loadEvents(spark, dir)
                else spark.read.parquet(s"$dir/$name.parquet")
-      if (eff) spreadIfNarrow(spark, dir, name, df) else df
+      if (spread) spreadIfNarrow(spark, dir, name, df) else df
     })
   }
 
@@ -101,7 +88,7 @@ object Tables {
   private[graft] def spreadNarrow(spark: SparkSession, bytes: Long,
                                   df: DataFrame): DataFrame = {
     val p = spark.sparkContext.defaultParallelism
-    if (!spreadNone && bytes >= MinSpreadBytes && df.rdd.getNumPartitions < p)
+    if (bytes >= MinSpreadBytes && df.rdd.getNumPartitions < p)
       df.repartition(p)
     else df
   }

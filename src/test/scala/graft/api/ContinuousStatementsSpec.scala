@@ -219,12 +219,6 @@ class ContinuousStatementsSpec extends AnyFunSuite {
     rejects("SELECT tumble(key, 10) AS t, session(key, 5) AS w, " +
       "count(*) AS c FROM lt_feed GROUP BY tumble(key, 10), session(key, 5)",
       "one event-time window")
-    // HAVING is driver-evaluated over emitted snapshots, so ITS algebra
-    // is the compiled subset: column-vs-column comparisons reject
-    // (WHERE, by contrast, rides the executor-side Catalyst rewrite and
-    // supports them — see the filtered-view and agg-WHERE specs)
-    rejects("SELECT key, count(*) AS c, sum(id) AS s FROM lt_feed " +
-      "GROUP BY key HAVING c = s", "outside the supported algebra")
     // a PROJECTED/star subquery routes as of r11, but an aggregate
     // nested INSIDE the subquery still matches no route — the default
     // route would fold delete markers as data rows
@@ -284,6 +278,144 @@ class ContinuousStatementsSpec extends AnyFunSuite {
           "legacy mode: '7' passes, unparseable 'oops' is unknown")
       }
     } finally bad.stop()
+  }
+
+  test("HAVING evaluates Spark's own algebra: after random delete-heavy " +
+    "pages the collapse equals spark.sql's GROUP BY … HAVING over the " +
+    "live rows") {
+    val s = spark
+    import s.implicits._
+    val preds = Seq(
+      // column-vs-column, arithmetic, IN and BETWEEN …
+      "c = s", "c * 2 > s", "key IN (0, 2)", "s BETWEEN 3 AND 9",
+      // … and column-vs-literal, IS NULL and a string literal
+      "c >= 2", "mn IS NULL", "mn > 'm'", "c > '1'")
+    def query(from: String, pred: String): String =
+      s"SELECT key, count(*) AS c, sum(id) AS s, min(value) AS mn " +
+        s"FROM $from GROUP BY key HAVING $pred"
+    // one feed per statement (MemoryStream.commit trims shared batches)
+    val feeds = preds.indices.map(i => newFeed(s"hp_feed$i"))
+    val stmts = new Statements(s)
+    // what the fold's output rows cannot answer still rejects at create():
+    // an aggregate outside the SELECT list, a subquery
+    for (p <- Seq("count(*) > 1", "c > (SELECT 1)"))
+      intercept[UnsupportedContinuousStatement](
+        stmts.create(query("hp_feed0", p)))
+    val running = preds.zipWithIndex.map { case (p, i) =>
+      stmts.create(query(s"hp_feed$i", p))
+    }
+    try {
+      running.foreach { st =>
+        assert(st.isStreaming, s"${st.sql} must route")
+        assert(stmts.waitForStatus(st, Set(Phase.Running)).isDefined)
+      }
+      val cls = running.map(_.handle.get.changelog())
+      val rnd = new scala.util.Random(71)
+      // id is the feed's row identity: id → (key, value)
+      val live = scala.collection.mutable.Map.empty[Long, (Long, String)]
+      var seq = 0L
+      for (pg <- 0 until 8) {
+        val evs = (0 until 1 + rnd.nextInt(8)).map { _ =>
+          seq += 1
+          (seq, rnd.nextInt(3).toLong, rnd.nextInt(10).toLong,
+            if (rnd.nextInt(3) == 0) null
+            else ('a' + rnd.nextInt(26)).toChar.toString,
+            rnd.nextInt(3) == 0)
+        }
+        feeds.foreach(_.addData(evs))
+        running.foreach(_.handle.get.processAllAvailable())
+        evs.foreach { f =>
+          if (f._5) live.remove(f._3) else live(f._3) = (f._2, f._4)
+        }
+        live.toSeq.map { case (id, (k, v)) => (k, id, v) }
+          .toDF("key", "id", "value").createOrReplaceTempView("hp_live")
+        preds.zip(cls).foreach { case (p, cl) =>
+          while (cl.consume(1).nonEmpty) ()
+          val expected = spark.sql(query("hp_live", p)).collect()
+            .map(_.toSeq.toVector).toSet
+          val got = cl.collapse().rows.toSet
+          assert(got == expected,
+            s"page $pg HAVING $p: collapse $got != batch $expected")
+        }
+      }
+    } finally running.foreach(_.stop())
+    // a string output compared with a number coerces the Spark way: under
+    // ANSI the malformed cast fails the STATEMENT (as spark.sql fails);
+    // in legacy mode it nulls and the group is unknown-excluded. Mode
+    // read at runtime — see the agg-WHERE test.
+    val mem = newFeed("hp_cast")
+    val bad = stmts.create(
+      "SELECT key, min(value) AS mn FROM hp_cast GROUP BY key HAVING mn > 5")
+    try {
+      mem.addData((0L, 1L, 100L, "oops", false), (1L, 2L, 200L, "7", false))
+      if (spark.conf.get("spark.sql.ansi.enabled").toBoolean) {
+        intercept[Exception](bad.handle.get.processAllAvailable())
+        assert(bad.phase == Phase.Failed,
+          "an ANSI cast error in HAVING must surface as a failed statement")
+      } else {
+        bad.handle.get.processAllAvailable()
+        val cl = bad.handle.get.changelog()
+        while (cl.consume(1).nonEmpty) ()
+        assert(cl.collapse().rows.toSet == Set(Vector[Any](2L, "7")),
+          "legacy mode: '7' passes, unparseable 'oops' is unknown")
+      }
+    } finally bad.stop()
+  }
+
+  test("HAVING compares DECIMAL(38,0) exactly: a literal one above " +
+    "10^22 does not round through a double") {
+    spark.sql("SELECT * FROM VALUES " +
+      "(1L, CAST('10000000000000000000001' AS DECIMAL(38,0))), " +
+      "(2L, CAST('10000000000000000000002' AS DECIMAL(38,0))) AS t(k, amt)")
+      .createOrReplaceTempView("dh_dims")
+    val mem = newFeed("dh_feed")
+    val stmts = new Statements(spark)
+    val stmt = stmts.create(
+      "SELECT d.amt, count(*) AS c FROM dh_feed a JOIN dh_dims d " +
+        "ON a.key = d.k GROUP BY d.amt HAVING amt > 10000000000000000000001")
+    try {
+      assert(stmt.isStreaming, "a feed ⋈ dim aggregate must route")
+      assert(stmts.waitForStatus(stmt, Set(Phase.Running)).isDefined)
+      val cl = stmt.handle.get.changelog()
+      mem.addData((0L, 1L, 100L, "x", false), (1L, 2L, 200L, "y", false))
+      stmt.handle.get.processAllAvailable()
+      while (cl.consume(1).nonEmpty) ()
+      assert(cl.collapse().rows.toSet ==
+        Set(Vector[Any](new java.math.BigDecimal("10000000000000000000002"), 1L)),
+        s"only the 10^22+2 group passes: ${cl.collapse().rows}")
+    } finally stmt.stop()
+  }
+
+  test("maintained top-k orders DECIMAL(38,0) exactly: 10^22+2 outranks " +
+    "10^22+1, though the two tie as doubles") {
+    spark.sql("SELECT * FROM VALUES " +
+      "(1L, CAST('10000000000000000000001' AS DECIMAL(38,0))), " +
+      "(2L, CAST('10000000000000000000002' AS DECIMAL(38,0))) AS t(k, amt)")
+      .createOrReplaceTempView("dt_dims")
+    val mem = newFeed("dt_feed")
+    val stmts = new Statements(spark)
+    val stmt = stmts.create(
+      "SELECT * FROM dt_feed a JOIN dt_dims d ON a.key = d.k " +
+        "ORDER BY d.amt DESC LIMIT 1")
+    try {
+      assert(stmt.isStreaming, "top-k over a feed ⋈ dim view must route")
+      assert(stmts.waitForStatus(stmt, Set(Phase.Running)).isDefined)
+      val cl = stmt.handle.get.changelog()
+      mem.addData((0L, 1L, 100L, "x", false), (1L, 2L, 200L, "y", false))
+      stmt.handle.get.processAllAvailable()
+      while (cl.consume(1).nonEmpty) ()
+      // Spark's batch answer over the same live rows
+      val s = spark
+      import s.implicits._
+      Seq((1L, 100L, "x"), (2L, 200L, "y")).toDF("key", "id", "value")
+        .createOrReplaceTempView("dt_live")
+      val expected = spark.sql("SELECT * FROM dt_live a JOIN dt_dims d " +
+        "ON a.key = d.k ORDER BY d.amt DESC LIMIT 1").collect()
+        .map(_.toSeq.toVector).toSet
+      assert(expected.map(_(1)) == Set(200L))
+      assert(cl.collapse().rows.toSet == expected,
+        s"top-1 must be key 2's row: ${cl.collapse().rows}")
+    } finally stmt.stop()
   }
 
   test("three-way continuous JOIN chain: SELECT * and GROUP BY both " +
