@@ -259,11 +259,6 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
                                  types: Seq[DataType],
                                  resolve: UnresolvedAttribute => Option[Int])
 
-  /** Columns of the two-feed maintained join view, in delta-row order
-    * AFTER the leading op column. */
-  private val JoinViewCols =
-    Seq("key", "left_id", "left_value", "right_id", "right_value")
-
   /** Columns of a single feed's maintained view, in delta-row order
     * after the leading op column. */
   private val FeedViewCols = Seq("key", "id", "value")
@@ -299,7 +294,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
 
   /** The single-feed maintained view: one feed's wire rows through the
     * exact-retraction upsert IVM
-    * ([[graft.streaming.StatefulOps.changelogUpsertStream]]). */
+    * ([[graft.streaming.StatefulOps.changelogUnionUpsertStream]]). */
   private def matchSingleFeed(rel: LogicalPlan): Option[DeltaSource] =
     for {
       (relName, alias) <- relInfo(rel)
@@ -315,160 +310,22 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       }
       colName.map(FeedViewCols.indexOf)
     }
-    DeltaSource(upsertDeltas(feed), FeedViewCols, FeedViewTypes, resolve)
+    DeltaSource(upsertDeltas(Seq(feed)), FeedViewCols, FeedViewTypes, resolve)
   }
 
-  /** One feed's wire rows → the exact retraction deltas of its
-    * maintained view. */
-  private def upsertDeltas(feed: DataFrame): DataFrame = {
+  /** Feeds' wire rows → the exact retraction deltas of their maintained
+    * multiset union in one id-keyed upsert operator, state keyed by
+    * (feed index, id); one feed is that feed's own view. */
+  private def upsertDeltas(feeds: Seq[DataFrame]): DataFrame = {
     import spark.implicits._
-    StatefulOps.changelogUpsertStream(
-      feed.select("seq", "key", "id", "value", "delete")
-        .as[(Long, Long, Long, String, Boolean)]
-        .map { case (seq, k, id, v, del) =>
-          (seq, StatefulOps.UpsertEvent(k, id, v, del))
-        }).toDF()
-  }
-
-  /** Match `l [AS a] <type> JOIN r [AS b] ON a.key = b.key` over two
-    * registered changelog feeds and build the exact-retraction IVM join
-    * ([[graft.streaming.StatefulOps.changelogJoinStream]]) over them —
-    * Structured Streaming's own stream-stream join is append-only and
-    * never retracts on upsert/delete, so this operator is the engine's
-    * equivalent of what the reference's Flink service maintains for a
-    * continuous two-table JOIN. */
-  private def matchFeedJoin2(j: Join): Option[DeltaSource] = {
-    val outer = j.joinType match {
-      case Inner => Some((false, false))
-      case LeftOuter => Some((true, false))
-      case RightOuter => Some((false, true))
-      case FullOuter => Some((true, true))
-      case _ => None
-    }
-    for {
-      (lo, ro) <- outer
-      (ln, la) <- relInfo(j.left); (rn, ra) <- relInfo(j.right)
-      if j.condition.exists(keyEquality(_, la, ra))
-      lt <- changelogFeed(ln); rt <- changelogFeed(rn)
-    } yield {
-      import spark.implicits._
-      def feed(t: DataFrame, isLeft: Boolean) = t
-        .select("seq", "key", "id", "value", "delete")
-        .as[(Long, Long, Long, String, Boolean)]
-        .map { case (seq, k, id, v, del) =>
-          // -1 is the outer routes' pad-sentinel id: a live row carrying
-          // it would be misread as a pad by the denull conversion below
-          // — fail loudly (the cascade route enforces the same contract)
-          if ((lo || ro) && id == -1L)
-            throw new IllegalStateException(
-              "changelog feed id -1 is reserved for outer-join pad " +
-                "sentinels and cannot be a live row identity in an " +
-                "outer continuous join")
-          (seq, StatefulOps.JoinEvent(k, isLeft, id, v, del))
-        }
-      val raw = StatefulOps
-        .changelogJoinStream(feed(lt, true).union(feed(rt, false)), lo, ro)
-        .toDF()
-      // the operator pads an unmatched row's opposite side with the
-      // (-1, null) sentinel (a case-class Long cannot hold null); the
-      // FACADE's maintained view is SQL, where a pad is a NULL row — so
-      // the sentinel converts to true NULLs here, making `b.id IS NULL`
-      // anti-joins and null-skipping COUNT/MIN/MAX over the padded side
-      // behave like SQL (r10 review finding). A pad is exactly
-      // (id == -1 AND value IS NULL) on its side: -1 is the wire's
-      // reserved pad id, never a row identity.
-      val deltas = {
-        import org.apache.spark.sql.functions.{col, lit, when}
-        def denull(idc: String, vc: String)(df: DataFrame): DataFrame =
-          df.withColumn(idc,
-            when(col(idc) === -1L && col(vc).isNull, lit(null).cast("long"))
-              .otherwise(col(idc)))
-        var d = raw
-        if (lo) d = denull("right_id", "right_value")(d) // left outer pads RIGHT
-        if (ro) d = denull("left_id", "left_value")(d)
-        d
-      }
-      // view-column resolution: unqualified names hit the view columns
-      // directly; alias-qualified names map id/value/key onto their side
-      val resolve: UnresolvedAttribute => Option[Int] = attr => {
-        val colName = attr.nameParts match {
-          case Seq(c) if JoinViewCols.contains(c) => Some(c)
-          case Seq(q, c) if q == la || q == ra =>
-            val side = if (q == la) "left" else "right"
-            c match {
-              case "key" => Some("key")
-              case "id" => Some(s"${side}_id")
-              case "value" => Some(s"${side}_value")
-              case _ => None
-            }
-          case _ => None
-        }
-        colName.map(JoinViewCols.indexOf)
-      }
-      DeltaSource(deltas, JoinViewCols,
-        Seq(LongType, LongType, StringType, LongType, StringType), resolve)
-    }
-  }
-
-  /** Match a LEFT-DEEP chain of ≥3 changelog feeds INNER-joined on ONE
-    * shared key (`a JOIN b ON a.key = b.key JOIN c ON b.key = c.key …`)
-    * and build the N-way IVM join
-    * ([[graft.streaming.StatefulOps.changelogMultiJoinStream]]) over the
-    * union of all feeds. Sharing the key keeps all sides' live rows in
-    * one keyed state entry — each change emits its exact cross-side
-    * delta in one pass, with no intermediate retraction stream to
-    * re-shuffle. View columns: `key`, then `<alias>_id`/`<alias>_value`
-    * per side in join order. */
-  private def matchFeedChain(j: Join): Option[DeltaSource] =
-    for {
-      (rels, conds) <- flattenInnerJoins(j)
-      if rels.length >= 3
-      infos <- sequenceOpts(rels.map(relInfo))
-      aliases = infos.map(_._2)
-      if aliases.distinct.length == aliases.length
-      // condition i must equate the NEW side's key with some PREVIOUS
-      // side's key — the whole chain shares one join key
-      if conds.zipWithIndex.forall { case (c, i) =>
-        aliases.take(i + 1).exists(prev => keyEquality(c, prev, aliases(i + 1)))
-      }
-      feeds <- sequenceOpts(infos.map { case (n, _) => changelogFeed(n) })
-    } yield chainSource(feeds, aliases)
-
-  /** The same-key INNER N-way join of `feeds` (n ≥ 2) as a delta source:
-    * view columns `key`, then `<alias>_id`/`<alias>_value` per side. */
-  private def chainSource(feeds: Seq[DataFrame],
-                          aliases: Seq[String]): DeltaSource = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, element_at}
-    val n = feeds.length
-    val unioned = feeds.zipWithIndex.map { case (t, i) =>
-      t.select("seq", "key", "id", "value", "delete")
-        .as[(Long, Long, Long, String, Boolean)]
-        .map { case (seq, k, id, v, del) =>
-          (seq, StatefulOps.MultiJoinEvent(k, i, id, v, del))
-        }
-    }.reduce(_ union _)
-    val multi = StatefulOps.changelogMultiJoinStream(unioned, n).toDF()
-    val sideCols = aliases.zipWithIndex.flatMap { case (al, i) =>
-      Seq(element_at(col("ids"), i + 1).as(s"${al}_id"),
-        element_at(col("values"), i + 1).as(s"${al}_value"))
-    }
-    val deltas = multi.select((col("op") +: col("key") +: sideCols): _*)
-    val viewCols =
-      "key" +: aliases.flatMap(al => Seq(s"${al}_id", s"${al}_value"))
-    val types: Seq[DataType] =
-      LongType +: aliases.flatMap(_ => Seq[DataType](LongType, StringType))
-    val resolve: UnresolvedAttribute => Option[Int] = a => {
-      val colName = a.nameParts match {
-        case Seq(c) if viewCols.contains(c) => Some(c)
-        case Seq(q, "key") if aliases.contains(q) => Some("key")
-        case Seq(q, "id") if aliases.contains(q) => Some(s"${q}_id")
-        case Seq(q, "value") if aliases.contains(q) => Some(s"${q}_value")
-        case _ => None
-      }
-      colName.map(viewCols.indexOf)
-    }
-    DeltaSource(deltas, viewCols, types, resolve)
+    StatefulOps.changelogUnionUpsertStream(feeds.zipWithIndex.map {
+      case (t, i) =>
+        t.select("seq", "key", "id", "value", "delete")
+          .as[(Long, Long, Long, String, Boolean)]
+          .map { case (seq, k, id, v, del) =>
+            (seq, i, StatefulOps.UpsertEvent(k, id, v, del))
+          }
+    }.reduce(_ union _)).toDF()
   }
 
   /** Extend a delta source with a broadcast STATIC dim, INNER-joined on
@@ -507,12 +364,14 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
   /** Match a left-deep all-INNER tree mixing changelog feeds (a
     * same-key group) with one or more broadcast static dims — the
     * enrichment statement (`a JOIN b ON a.key = b.key JOIN dims d ON
-    * a.key = d.k …`) the pure-feed and single-dim matchers above do not
-    * cover. The FIRST leaf must be a feed (fact first, dims after);
+    * a.key = d.k …`) the single-dim and pure-feed cascade matchers do
+    * not cover. The FIRST leaf must be a feed (fact first, dims after);
     * every further feed must key-equate with a previous feed, and every
     * dim must equate some previous feed's `key` with one of its own
-    * integral columns. INNER only: a pad over a static side cannot
-    * transition, and outer feed-sides belong to the 2-way matcher. */
+    * integral columns. The feed group is a same-key Z-set cascade under
+    * the shared-key view (`key`, `<alias>_id`/`<alias>_value`). INNER
+    * only: a pad over a static side cannot transition, and outer feed
+    * joins belong to the cascade. */
   private def matchFeedTree(j: Join, sql: String): Option[DeltaSource] = {
     val (rels, conds) = flattenInnerJoins(j).getOrElse(return None)
     if (rels.length < 2) return None
@@ -533,7 +392,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     val feedLeaves = classified.collect { case (a, Left(f)) => (a, f) }
     val staticLeaves = classified.collect { case (a, Right(st)) => (a, st) }
     // pure-feed trees and single-feed⋈single-dim (incl. outer) belong to
-    // the earlier matchers; this one exists for the MIXED shapes
+    // the cascade and static matchers; this one exists for the MIXED shapes
     if (feedLeaves.isEmpty || staticLeaves.isEmpty) return None
     if (!classified.head._2.isLeft) return None // fact first
     val staticJoinCol = mutable.Map.empty[String, String]
@@ -568,10 +427,15 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
           }
       }
     }
+    val feedAliases = feedLeaves.map(_._1)
+    // every feed key-equates with a previous one, so each stage can
+    // join on feed 0's key
     var ds =
       if (feedLeaves.length == 1)
         singleFeedSource(feedLeaves.head._2, feedLeaves.head._1)
-      else chainSource(feedLeaves.map(_._2), feedLeaves.map(_._1))
+      else sharedKeyView(cascadeSource(feedLeaves.map(_._2), feedAliases,
+        feedAliases.tail.map(_ => (0, true, false, false))),
+        feedAliases, feedAliases)
     staticLeaves.foreach { case (a, st) =>
       ds = attachStatic(ds, a, st, staticJoinCol(a), sql)
     }
@@ -609,7 +473,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
           case _ => None
         }
       }
-      case _ => None // feed⋈feed handled by the 2-way/chain matchers
+      case _ => None // feed⋈feed is the cascade's
     }
     val (feed, fAlias, static, sAlias, feedOuter) =
       arranged.getOrElse(return None)
@@ -639,7 +503,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
         "shadow the maintained view's op/key/id/value — rename them " +
         "(e.g. SELECT them under aliases into a temp view) to join a feed")
     import org.apache.spark.sql.functions.broadcast
-    val fd = upsertDeltas(feed)
+    val fd = upsertDeltas(Seq(feed))
     val joined = fd
       .join(broadcast(static), fd("key") === static(jcol),
         if (feedOuter) "left_outer" else "inner")
@@ -659,12 +523,12 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     Some(DeltaSource(joined, viewCols, types, resolve))
   }
 
-  /** Match a left-deep tree of changelog feeds joined on DIFFERENT
-    * keys (`a JOIN b ON a.key = b.key [LEFT] JOIN c ON b.id = c.key …`)
-    * — the shape the same-key chain cannot keep in one keyed state
-    * entry — and build it as a CASCADE of Z-set binary joins
-    * ([[graft.streaming.StatefulOps.zJoinStream]]), one per stage, each
-    * keyed (shuffled) by its own join column: exactly how Flink plans a
+  /** Match a left-deep tree of changelog feeds (`a JOIN b ON a.key =
+    * b.key [LEFT] JOIN c ON b.id = c.key …`) — every feed ⋈ feed
+    * statement — and build it as a CASCADE of Z-set binary joins
+    * ([[graft.streaming.StatefulOps.zJoinStream]]) over each feed's
+    * id-keyed upsert deltas, one stage per condition, each keyed
+    * (shuffled) by its own join column: exactly how Flink plans a
     * multi-way continuous join as two-input joins. Every condition must
     * equate the NEW feed's `key` with a previous feed's `key` or `id`
     * (the view's long columns); stage i's left input is stage i−1's
@@ -673,8 +537,11 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     * pad algebra), and the facade converts the operator's (-1, null)
     * pad sentinels into true SQL NULLs on the padded side's columns.
     * View columns: `<alias>_key` / `<alias>_id` / `<alias>_value` per
-    * side in join order (keys differ per side, so unlike the same-key
-    * chain there is no shared `key` column). */
+    * side in join order, except where every condition equates keys and
+    * the view has one shared `key` column ([[sharedKeyView]]): two feeds
+    * of any join type (`key, left_id, left_value, right_id,
+    * right_value`) and all-INNER chains of three or more (`key`,
+    * `<alias>_id`, `<alias>_value` …). */
   private def matchFeedCascade(j: Join): Option[DeltaSource] =
     for {
       (rels, conds) <- flattenCascadeJoins(j)
@@ -690,7 +557,15 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
               jt == RightOuter || jt == FullOuter)
         }
       })
-    } yield cascadeSource(feeds, aliases, refs)
+    } yield {
+      val ds = cascadeSource(feeds, aliases, refs)
+      val sameKey = refs.forall(_._2)
+      val allInner = refs.forall(r => !r._3 && !r._4)
+      if (sameKey && feeds.length == 2)
+        sharedKeyView(ds, aliases, Seq("left", "right"))
+      else if (sameKey && allInner) sharedKeyView(ds, aliases, aliases)
+      else ds
+    }
 
   /** Flatten a LEFT-DEEP tree of INNER/LEFT/RIGHT/FULL joins into
     * (leaves, per-stage (condition, joinType)) — the cascade's shape. */
@@ -730,12 +605,12 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     import graft.streaming.StatefulOps.{ZDelta, ZEvent, ZRow}
     // -1 is the cascade's OUTER-pad sentinel, so the reservation only
     // binds when the cascade actually HAS an outer stage — an all-INNER
-    // cascade never emits pads, and -1 is a legal domain value there
-    // (the two-feed route draws the same line); guarding unconditionally
-    // would kill a RUNNING inner cascade mid-stream for a legal row
+    // cascade never emits pads, and -1 is a legal domain value there;
+    // guarding unconditionally would kill a RUNNING inner cascade
+    // mid-stream for a legal row
     val anyOuter = refs.exists(r => r._3 || r._4)
     def feedDeltas(t: DataFrame): org.apache.spark.sql.Dataset[ZDelta] =
-      upsertDeltas(t).as[(Int, Long, Long, String)].map {
+      upsertDeltas(Seq(t)).as[(Int, Long, Long, String)].map {
         case (op, k, id, v) =>
           // a live row carrying the pad sentinel would be misread as a
           // pad in the served view, or join pad rows at a later stage
@@ -768,8 +643,8 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       else {
         // a pad is exactly (id == -1 AND value IS NULL) on its side —
         // -1 is the wire's reserved pad id, never a row identity — and
-        // surfaces as true SQL NULLs in the facade view (the
-        // matchFeedJoin2 denull convention)
+        // surfaces as true SQL NULLs in the facade view, so `b.id IS
+        // NULL` anti-joins and null-skipping aggregates behave like SQL
         val isPad = id === -1L && value.isNull
         Seq(when(isPad, lit(null).cast("long")).otherwise(key).as(s"${al}_key"),
           when(isPad, lit(null).cast("long")).otherwise(id).as(s"${al}_id"),
@@ -794,13 +669,43 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     DeltaSource(deltas, viewCols, types, resolve)
   }
 
-  /** All continuous-join shapes, most specific first: the same-key
-    * single-operator forms, then the static-dim forms, then the
-    * different-key cascade. */
+  /** A same-key cascade's view on ONE shared `key` column: `key` (the
+    * coalesce of the side keys — equal on matched rows, the live side's
+    * on a pad), then `<name>_id` / `<name>_value` per side, `names`
+    * parallel to `aliases`. `<alias>.key` resolves to the shared column,
+    * `<alias>.id` / `<alias>.value` to that side's. */
+  private def sharedKeyView(ds: DeltaSource, aliases: Seq[String],
+      names: Seq[String]): DeltaSource = {
+    import org.apache.spark.sql.functions.{coalesce, col}
+    val sides = aliases.zip(names)
+    val deltas = ds.deltas.select((col("op") +:
+      coalesce(aliases.map(al => col(s"${al}_key")): _*).as("key") +:
+      sides.flatMap { case (al, n) =>
+        Seq(col(s"${al}_id").as(s"${n}_id"),
+          col(s"${al}_value").as(s"${n}_value"))
+      }): _*)
+    val viewCols = "key" +: names.flatMap(n => Seq(s"${n}_id", s"${n}_value"))
+    val types: Seq[DataType] =
+      LongType +: names.flatMap(_ => Seq[DataType](LongType, StringType))
+    val nameOf = sides.toMap
+    val resolve: UnresolvedAttribute => Option[Int] = a => {
+      val colName = a.nameParts match {
+        case Seq(c) if viewCols.contains(c) => Some(c)
+        case Seq(q, "key") if nameOf.contains(q) => Some("key")
+        case Seq(q, "id") if nameOf.contains(q) => Some(s"${nameOf(q)}_id")
+        case Seq(q, "value") if nameOf.contains(q) =>
+          Some(s"${nameOf(q)}_value")
+        case _ => None
+      }
+      colName.map(viewCols.indexOf)
+    }
+    DeltaSource(deltas, viewCols, types, resolve)
+  }
+
+  /** All continuous-join shapes: feed ⋈ static, then mixed feed/static
+    * trees, then the feed ⋈ feed cascade. */
   private def matchJoinSource(j: Join, sql: String): Option[DeltaSource] =
-    matchFeedJoin2(j)
-      .orElse(matchFeedChain(j))
-      .orElse(matchFeedStatic(j, sql))
+    matchFeedStatic(j, sql)
       .orElse(matchFeedTree(j, sql))
       .orElse(matchFeedCascade(j))
 
@@ -937,8 +842,8 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
   }
 
   /** Flatten a LEFT-DEEP all-INNER join tree into (leaves, conditions):
-    * conds(i) joins leaves(i+1) to the prefix — shared by the chain and
-    * tree matchers so they always agree on which plans flatten. */
+    * conds(i) joins leaves(i+1) to the prefix — the mixed-tree matcher's
+    * shape. */
   private def flattenInnerJoins(p: LogicalPlan)
       : Option[(Seq[LogicalPlan], Seq[Expression])] = p match {
     case jj: Join if jj.joinType == Inner =>
@@ -956,9 +861,11 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     * semantics the default `spark.sql` route cannot express, and run them
     * through the IVM operators:
     *  - `SELECT * FROM <source> [WHERE <pred>]` where the source is a
-    *    feed, a two-feed equi-join (INNER/LEFT/RIGHT/FULL), a same-key
-    *    INNER chain of ≥3 feeds, or a feed ⋈ static-table equi-join —
-    *    the (optionally filtered) maintained view
+    *    feed, a left-deep feed ⋈ feed join (INNER/LEFT/RIGHT/FULL stages,
+    *    each on the new feed's key = a previous feed's key or id), a
+    *    feed ⋈ static-table equi-join, or a same-key feed group
+    *    enriched with static dims — the (optionally filtered)
+    *    maintained view
     *  - `SELECT <groups>, <aliased aggs> FROM <source> [WHERE …]
     *    GROUP BY … [HAVING …]` (grouped or UNGROUPED incremental fold —
     *    COUNT/SUM/AVG/MIN/MAX — over the view's deltas)
@@ -1064,21 +971,8 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
           case _ => None
         }
         if (feedsOpt.exists(_.isEmpty)) None
-        else {
-          import spark.implicits._
-          val unioned = feedsOpt.map(_.get).zipWithIndex.map { case (t, i) =>
-            t.select("seq", "key", "id", "value", "delete")
-              .as[(Long, Long, Long, String, Boolean)]
-              .map { case (seq, k, id, v, del) =>
-                (seq, i, StatefulOps.UpsertEvent(k, id, v, del))
-              }
-          }.reduce(_ union _)
-          val deltas =
-            StatefulOps.changelogUnionUpsertStream(unioned).toDF()
-          Some(viewStatement(
-            DeltaSource(deltas, FeedViewCols, FeedViewTypes, _ => None),
-            sql, name, properties))
-        }
+        else Some(viewStatement(DeltaSource(upsertDeltas(feedsOpt.flatten),
+          FeedViewCols, FeedViewTypes, _ => None), sql, name, properties))
       // the composed continuous statement a reference user writes next:
       // JOIN → [WHERE] → GROUP BY in one statement (Flink-the-service
       // maintains it as one changelog; `spark.sql` alone cannot — a
@@ -1214,8 +1108,8 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
   }
 
   /** Dispatch an `Aggregate over [Filter over] <source>` continuous
-    * statement: the source is a feed, a feed join (2-way, chain, or
-    * feed ⋈ static) — all reduced to their exact retraction deltas. A
+    * statement: the source is a feed, a feed ⋈ feed cascade, or a
+    * feed ⋈ static join — all reduced to their exact retraction deltas. A
     * feed-touching aggregate that matches NO route rejects loudly: the
     * default route's append-only reading would silently mis-evaluate it
     * (deletes as rows, upserts double-counted). */
@@ -1247,9 +1141,10 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
         if (referencesFeed(src))
           unsupported(sql, "the FROM clause references changelog feed(s) " +
             "in a shape no IVM route matches (supported: one feed; a " +
-            "two-feed equi-join on key, INNER/LEFT/RIGHT/FULL; a same-key " +
-            "INNER chain of 3+ feeds; a feed joined to a static table; " +
-            "deterministic projected subqueries / CTEs over those)")
+            "left-deep join of feeds, each INNER/LEFT/RIGHT/FULL on the " +
+            "new feed's key = a previous feed's key or id; a feed joined " +
+            "to a static table; deterministic projected subqueries / CTEs " +
+            "over those)")
         None
     }
   }
@@ -2336,7 +2231,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
 
   /** `SELECT * FROM <source> [WHERE …] ORDER BY <col> [ASC|DESC] LIMIT
     * k` over ANY matched delta source (a feed's maintained view, a feed
-    * join, a chain, feed ⋈ static): the continuously-maintained top-k
+    * ⋈ feed join, feed ⋈ static): the continuously-maintained top-k
     * view — Flink's Top-N operator for this statement shape (the
     * reference dashboard sorts client-side, `dashboard.py:93`; the Flink
     * service would maintain it server-side). Like Flink's no-rownum

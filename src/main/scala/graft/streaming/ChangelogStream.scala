@@ -363,9 +363,9 @@ object ChangelogStream {
   }
 
   /** Start a query whose rows ALREADY ARE exact changelog deltas — the
-    * IVM join ([[StatefulOps.changelogJoinStream]]) emits its own
-    * retractions, so no synthesizer state sits between the operator and
-    * the wire: each row's `opCol` (changelog code) becomes the record op
+    * IVM operators ([[StatefulOps.changelogUnionUpsertStream]],
+    * [[StatefulOps.zJoinStream]]) emit their own retractions, so no
+    * synthesizer state sits between the operator and the wire: each row's `opCol` (changelog code) becomes the record op
     * and the remaining columns the record values, in schema order. */
   def deltaPassthrough(df: DataFrame, queryName: String, opCol: String = "op",
                        trigger: Trigger = Trigger.ProcessingTime(0),

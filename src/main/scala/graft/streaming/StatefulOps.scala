@@ -378,87 +378,36 @@ object StatefulOps extends Serializable {
       }
   }
 
-  /** One side's change to a continuously-maintained join: an upsert
-    * (`delete=false`, the row (id → value) is now live on `side`) or a
-    * delete (`delete=true`, id leaves). `left` tags which input the change
-    * belongs to once the two feeds are unioned onto one keyed stream. */
-  case class JoinEvent(key: Long, left: Boolean, id: Long, value: String,
-                       delete: Boolean)
-
-  /** An emitted delta of the maintained join view: `op` uses the
-    * changelog codes (0 = +I, 3 = -D, matching [[graft.changelog.Op]]). */
-  case class JoinDelta(op: Int, key: Long, left_id: Long, left_value: String,
-                       right_id: Long, right_value: String)
-
-  /** Per-join-key live rows of both inputs — exactly the state Flink's
-    * streaming two-input join keeps (ids and current values; nothing of
-    * the history). Parallel seqs, not Maps: Spark's product encoder
-    * round-trips them cheaply and live-row counts per key are join-state
-    * sized, not corpus sized. */
-  case class JoinState(lid: Seq[Long], lval: Seq[String],
-                       rid: Seq[Long], rval: Seq[String])
-
   /** A keyed upsert/delete change on a single changelog feed. */
   case class UpsertEvent(key: Long, id: Long, value: String, delete: Boolean)
 
-  /** An emitted delta of the maintained single-feed view: `op` uses the
-    * changelog codes (0 = +I, 3 = -D, matching [[graft.changelog.Op]]). */
+  /** An emitted delta of a maintained feed view: `op` uses the changelog
+    * codes (0 = +I, 3 = -D, matching [[graft.changelog.Op]]). */
   case class UpsertDelta(op: Int, key: Long, id: Long, value: String)
 
-  /** Latest live row of one id — the state the single-feed view keeps. */
+  /** Latest live row of one id — the state a feed view keeps. */
   case class UpsertState(key: Long, value: String)
 
-  /** Exact retraction deltas of a single keyed UPSERT/DELETE feed — the
-    * one-input analogue of [[changelogJoinStream]], and what a GROUP BY
-    * over an upsert table needs that an append-only reading cannot give
-    * (a delete must SUBTRACT, an update must not double-count): an
-    * upsert of an id that had an old value first retracts (`-D`) the old
-    * row, then inserts (`+I`) the new one; a delete retracts the live
-    * row; a delete of an unknown id is a tolerated no-op (the
-    * reference's missing-retract tolerance, `lib/flink.py:28-32`).
-    * Collapsing the deltas at ANY prefix yields exactly the feed's live
-    * rows — the same IVM invariant as the join, property-tested in
-    * StreamingEventsSpec.
+  /** Exact retraction deltas of the MULTISET UNION of keyed UPSERT/DELETE
+    * feeds (one feed: that feed's own view) in ONE stateful operator —
+    * what a GROUP BY or a join over an upsert table needs that an
+    * append-only reading cannot give (a delete must SUBTRACT, an update
+    * must not double-count). State is keyed by (feed index, id): `id` is
+    * the feed's row identity, and the same id in two feeds is two
+    * INDEPENDENT rows — exactly UNION ALL's multiset reading. An upsert
+    * of an id that had an old row first retracts (`-D`) the old row with
+    * ITS stored key, then inserts (`+I`) the new one — so an upsert that
+    * moves an id to a new key leaves nothing under the old key; a delete
+    * retracts the live row; a delete of an unknown id is a tolerated
+    * no-op (the reference's missing-retract tolerance,
+    * `lib/flink.py:28-32`). Collapsing the deltas at ANY prefix yields
+    * exactly the feeds' live rows (property-tested in
+    * StreamingEventsSpec).
     *
-    * Scale shape: state is one (key, value) per live id in the executor
-    * StateStore sharded by id — the irreducible upsert-table state;
-    * emission per change is ≤ 2 rows, the true output delta. Events
-    * within a micro-batch fold in the caller's `seq` order. */
-  def changelogUpsertStream(
-      events: Dataset[(Long, UpsertEvent)]): Dataset[UpsertDelta] = {
-    implicit val stateEnc: Encoder[UpsertState] = Encoders.product[UpsertState]
-    implicit val outEnc: Encoder[UpsertDelta] = Encoders.product[UpsertDelta]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    events.groupByKey(_._2.id)
-      .flatMapGroupsWithState[UpsertState, UpsertDelta](
-        OutputMode.Append, GroupStateTimeout.NoTimeout()) {
-        (id: Long, rows: Iterator[(Long, UpsertEvent)],
-         state: GroupState[UpsertState]) =>
-          var cur = state.getOption
-          val out = Seq.newBuilder[UpsertDelta]
-          rows.toSeq.sortBy(_._1).foreach { case (_, e) =>
-            // retract the previous row with ITS stored key: the stored
-            // row is what collapsed views hold, so the retraction must
-            // match it bit-for-bit even if a malformed event re-keys id
-            cur.foreach(s => out += UpsertDelta(3, s.key, id, s.value))
-            cur = if (e.delete) None else Some(UpsertState(e.key, e.value))
-            if (!e.delete) out += UpsertDelta(0, e.key, id, e.value)
-          }
-          cur match {
-            case Some(s) => state.update(s)
-            case None => state.remove()
-          }
-          out.result().iterator
-      }
-  }
-
-  /** Exact retraction deltas of the MULTISET UNION of several keyed
-    * upsert feeds, in ONE stateful operator — the union needs no
-    * cross-side state, so one keyed pass beats composing per-feed
-    * operators. State is keyed by (feed index, id): the same id in two
-    * feeds is two INDEPENDENT rows — exactly UNION ALL's multiset
-    * reading — and each row's retraction semantics are
-    * [[changelogUpsertStream]]'s verbatim. */
+    * Scale shape: state is one (key, value) per live (feed, id) in the
+    * executor StateStore — the irreducible upsert-table state; emission
+    * per change is ≤ 2 rows, the true output delta. Events within a
+    * micro-batch fold in the caller's `seq` order. */
   def changelogUnionUpsertStream(
       events: Dataset[(Long, Int, UpsertEvent)]): Dataset[UpsertDelta] = {
     implicit val stateEnc: Encoder[UpsertState] = Encoders.product[UpsertState]
@@ -485,204 +434,6 @@ object StatefulOps extends Serializable {
       }
   }
 
-  /** Continuously-maintained equi-join (INNER or LEFT OUTER) over two
-    * changelog (upsert/delete) feeds — the reference's Flink runtime
-    * maintains exactly this for a two-table continuous `JOIN` statement
-    * (SURVEY §2A S10/S14 is the single-input aggregate case; this is the
-    * two-input operator), and it is the one streaming shape Structured
-    * Streaming's built-in stream-stream join does NOT express: built-in
-    * joins are append-only with watermark-bounded state, while a changelog
-    * join must RETRACT previously-emitted matches when either side updates
-    * or deletes.
-    *
-    * Both feeds arrive unioned and tagged ([[JoinEvent]]); state is keyed
-    * by the equi-join key. Every arriving change emits the exact join
-    * deltas: an upsert of a row that had an old value first retracts
-    * (`-D`) its old matches, then inserts (`+I`) matches with the current
-    * opposite side; a delete retracts its live matches. Collapsing the
-    * emitted deltas (+I adds a joined row, -D removes it) at ANY prefix of
-    * the stream yields precisely `left ⋈ right` of the rows live at that
-    * prefix — the incremental-view-maintenance invariant, property-tested
-    * against random interleavings in StreamingEventsSpec.
-    *
-    * `leftOuter = true` adds Flink's null-padding retraction dance: a left
-    * row with NO right matches is emitted as (l, -1, null); when the
-    * key's FIRST right row arrives, every live left row's null-padded
-    * emission is retracted before its real matches insert, and when the
-    * key's LAST right row leaves, the null-padded rows come back. The
-    * collapse invariant then holds against the null-padded left outer
-    * join — the transition both append-only joins and naive
-    * delta-propagation get wrong. `rightOuter = true` is the exact
-    * mirror ((-1, null, r) pads tracking the LEFT side's 0/1
-    * transitions); both together are FULL OUTER.
-    *
-    * Scale shape: state lives in the executor StateStore sharded by join
-    * key (same layout as a streaming aggregate — nothing driver-side);
-    * per-key state is the live rows of that key only, the irreducible
-    * cost of the operator (Flink keeps the same). Emission per change is
-    * |opposite side of this key| — the true output delta, not a rescan.
-    * Events within one micro-batch fold in arrival order via the sorted
-    * `seq` tiebreak below. */
-  def changelogJoinStream(events: Dataset[(Long, JoinEvent)],
-                          leftOuter: Boolean = false,
-                          rightOuter: Boolean = false): Dataset[JoinDelta] = {
-    implicit val stateEnc: Encoder[JoinState] = Encoders.product[JoinState]
-    implicit val outEnc: Encoder[JoinDelta] = Encoders.product[JoinDelta]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    events.groupByKey(_._2.key)
-      .flatMapGroupsWithState[JoinState, JoinDelta](
-        OutputMode.Append, GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[(Long, JoinEvent)],
-         state: GroupState[JoinState]) =>
-          val s0 = state.getOption.getOrElse(JoinState(Nil, Nil, Nil, Nil))
-          // id-keyed working views of both sides, insertion-ordered like
-          // the stored seqs (an update removes then re-appends — exactly
-          // the old patch-then-append order, so emission order is
-          // unchanged): O(1) per event instead of indexOf/patch's
-          // O(live rows), so a hot join key's batch folds in
-          // O(live + events), not O(live × events)
-          val lmap = scala.collection.mutable.LinkedHashMap
-            .from(s0.lid.zip(s0.lval))
-          val rmap = scala.collection.mutable.LinkedHashMap
-            .from(s0.rid.zip(s0.rval))
-          val out = Seq.newBuilder[JoinDelta]
-          // the null-padded emission for an unmatched row of either side
-          def pad(op: Int, left: Boolean, id: Long, v: String): JoinDelta =
-            if (left) JoinDelta(op, key, id, v, -1L, null)
-            else JoinDelta(op, key, -1L, null, id, v)
-          // micro-batch iterator order is not a delivery contract; the
-          // caller-supplied seq number makes the fold deterministic
-          rows.toSeq.sortBy(_._1).foreach { case (_, e) =>
-            val (own, opp) = if (e.left) (lmap, rmap) else (rmap, lmap)
-            // does this event's OWN side pad when the opposite is empty?
-            val padOwn = if (e.left) leftOuter else rightOuter
-            // do the OPPOSITE side's pads track THIS side's 0/1 counts?
-            val padOpp = if (e.left) rightOuter else leftOuter
-            val old = own.remove(e.id)
-            // retract the old value's matches (update or delete)
-            old.foreach { ov0 =>
-              opp.foreach { case (oi, ov) =>
-                out += (if (e.left) JoinDelta(3, key, e.id, ov0, oi, ov)
-                        else JoinDelta(3, key, oi, ov, e.id, ov0))
-              }
-              // outer: an unmatched row of this side was live null-padded
-              if (padOwn && opp.isEmpty)
-                out += pad(3, e.left, e.id, ov0)
-            }
-            // outer: this side's FIRST row retracts the opposite side's
-            // null pads; it must happen before the inserts below
-            if (padOpp && !e.delete && old.isEmpty && own.isEmpty)
-              opp.foreach { case (oi, ov) => out += pad(3, !e.left, oi, ov) }
-            if (!e.delete) {
-              opp.foreach { case (oi, ov) =>
-                out += (if (e.left) JoinDelta(0, key, e.id, e.value, oi, ov)
-                        else JoinDelta(0, key, oi, ov, e.id, e.value))
-              }
-              // outer: an upsert into an opposite-empty key is live as
-              // a null pad (an update's old pad was retracted above)
-              if (padOwn && opp.isEmpty)
-                out += pad(0, e.left, e.id, e.value)
-              own.update(e.id, e.value)
-            }
-            // outer: this side's LAST row leaving re-pads every live
-            // opposite row with null
-            if (padOpp && e.delete && old.isDefined && own.isEmpty)
-              opp.foreach { case (oi, ov) => out += pad(0, !e.left, oi, ov) }
-          }
-          if (lmap.isEmpty && rmap.isEmpty) state.remove()
-          else state.update(JoinState(lmap.keys.toSeq, lmap.values.toSeq,
-            rmap.keys.toSeq, rmap.values.toSeq))
-          out.result().iterator
-      }
-  }
-
-  /** One side's change to an N-input continuously-maintained same-key
-    * join: `side` is the input's position in the chain (0-based). */
-  case class MultiJoinEvent(key: Long, side: Int, id: Long, value: String,
-                            delete: Boolean)
-
-  /** An emitted delta of the maintained N-way join view: `ids`/`values`
-    * are positionally parallel across the N sides, in side order. `op`
-    * uses the changelog codes (0 = +I, 3 = -D). */
-  case class MultiJoinDelta(op: Int, key: Long, ids: Seq[Long],
-                            values: Seq[String])
-
-  /** Per-join-key live rows of ALL N inputs — the chain generalization
-    * of [[JoinState]] (outer seq indexed by side). */
-  case class MultiJoinState(ids: Seq[Seq[Long]], vals: Seq[Seq[String]])
-
-  /** Continuously-maintained N-way INNER equi-join over `nSides`
-    * changelog feeds sharing ONE join key — the shape of a chained
-    * `a JOIN b ON a.key = b.key JOIN c ON b.key = c.key` continuous
-    * statement (the reference's Flink service maintains the same via a
-    * cascade of two-input joins; sharing the key lets the engine keep
-    * ALL sides' live rows in one keyed state entry and emit each delta
-    * in one pass — no intermediate retraction stream to re-shuffle).
-    *
-    * Semantics are [[changelogJoinStream]]'s, generalized: an upsert of
-    * a row that had an old value first retracts (`-D`) the old value's
-    * cross-product with every OTHER side's live rows, then inserts
-    * (`+I`) the new value's; a delete retracts its live cross-product.
-    * Collapsing the deltas at ANY prefix yields exactly the N-way inner
-    * join of the rows live at that prefix (property-tested in
-    * StatementsSpec through the facade).
-    *
-    * Scale shape: state is the live rows per (key, side) in the executor
-    * StateStore sharded by join key; emission per change is the product
-    * of the OTHER sides' live-row counts for that key — the true output
-    * delta of an N-way join, which is also its irreducible cost. */
-  def changelogMultiJoinStream(events: Dataset[(Long, MultiJoinEvent)],
-                               nSides: Int): Dataset[MultiJoinDelta] = {
-    require(nSides >= 2, s"a multi-join needs at least 2 sides, got $nSides")
-    implicit val stateEnc: Encoder[MultiJoinState] =
-      Encoders.product[MultiJoinState]
-    implicit val outEnc: Encoder[MultiJoinDelta] =
-      Encoders.product[MultiJoinDelta]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    events.groupByKey(_._2.key)
-      .flatMapGroupsWithState[MultiJoinState, MultiJoinDelta](
-        OutputMode.Append, GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[(Long, MultiJoinEvent)],
-         state: GroupState[MultiJoinState]) =>
-          val s0 = state.getOption.getOrElse(MultiJoinState(
-            Seq.fill(nSides)(Nil), Seq.fill(nSides)(Nil)))
-          // id-keyed working view per side, insertion-ordered like the
-          // stored seqs (remove-then-append == the old patch+append):
-          // O(1) per event instead of indexOf/patch's O(live rows)
-          val maps = s0.ids.zip(s0.vals).map { case (ids, vals) =>
-            scala.collection.mutable.LinkedHashMap.from(ids.zip(vals))
-          }.toIndexedSeq
-          val out = Seq.newBuilder[MultiJoinDelta]
-          // every combination of one live row from each side EXCEPT
-          // `side`, with (id, v) plugged in at `side` — the exact delta
-          // set one change on `side` touches
-          def emit(op: Int, side: Int, id: Long, v: String): Unit = {
-            def rec(i: Int, ids: List[Long], vs: List[String]): Unit =
-              if (i < 0) out += MultiJoinDelta(op, key, ids, vs)
-              else if (i == side) rec(i - 1, id :: ids, v :: vs)
-              else maps(i).foreach { case (mi, mv) =>
-                rec(i - 1, mi :: ids, mv :: vs)
-              }
-            // the combination walk short-circuits to nothing if any
-            // OTHER side is empty — an inner join has no partial rows
-            if ((0 until nSides).forall(i => i == side || maps(i).nonEmpty))
-              rec(nSides - 1, Nil, Nil)
-          }
-          rows.toSeq.sortBy(_._1).foreach { case (_, e) =>
-            val old = maps(e.side).remove(e.id)
-            old.foreach(v0 => emit(3, e.side, e.id, v0))
-            if (!e.delete) {
-              emit(0, e.side, e.id, e.value)
-              maps(e.side).update(e.id, e.value)
-            }
-          }
-          if (maps.forall(_.isEmpty)) state.remove()
-          else state.update(MultiJoinState(
-            maps.map(_.keys.toSeq), maps.map(_.values.toSeq)))
-          out.result().iterator
-      }
-  }
-
   /** A row of the Z-set join's accumulated view: positionally parallel
     * per-feed (key, id, value) triples in join order — stage N of a
     * cascade carries N-length seqs. */
@@ -701,15 +452,15 @@ object StatefulOps extends Serializable {
                         rrows: Seq[ZRow], rcounts: Seq[Long])
 
   /** Continuously-maintained binary INNER equi-join over two RETRACTION
-    * DELTA streams, as counted multisets (Z-sets) — the composable join
-    * tier that [[changelogJoinStream]]'s upsert-keyed form cannot give:
-    * its inputs are keyed upsert/delete events, while a CASCADE stage's
-    * left input is the previous join's emitted delta stream (multiset
-    * inserts/retracts of composite rows, no per-id upsert identity). A
-    * left-deep tree of feeds joined on DIFFERENT keys chains one of
-    * these per stage — each stage keyed (shuffled) by its own join
-    * column, exactly how Flink plans a multi-way continuous join as a
-    * cascade of two-input joins. All stages run flatMapGroupsWithState
+    * DELTA streams, as counted multisets (Z-sets) — the one continuous
+    * join operator between feeds. Its inputs carry no row identity of
+    * their own: a feed's side is its id-keyed upsert deltas
+    * ([[changelogUnionUpsertStream]], which owns the row-identity
+    * contract), and a CASCADE stage's left input is the previous join's
+    * emitted delta stream (multiset inserts/retracts of composite rows).
+    * A left-deep tree of feeds chains one of these per stage — each
+    * stage keyed (shuffled) by its own join column, exactly how Flink
+    * plans a multi-way continuous join as a cascade of two-input joins. All stages run flatMapGroupsWithState
     * in APPEND mode (delta streams are append streams), which is what
     * lets several stateful operators legally compose in one query.
     *

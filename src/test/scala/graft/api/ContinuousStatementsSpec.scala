@@ -30,6 +30,15 @@ class ContinuousStatementsSpec extends AnyFunSuite {
                         f: Feed): Unit =
     if (f._5) { m.remove((f._2, f._3)); () } else m((f._2, f._3)) = f._4
 
+  /** Id-keyed live rows of one feed (id → (key, value)): the feed's row
+    * identity is `id`, so an upsert with a new key MOVES the row. */
+  private def applyById(m: scala.collection.mutable.Map[Long, (Long, String)],
+                        f: Feed): Unit =
+    if (f._5) { m.remove(f._3); () } else m(f._3) = (f._2, f._4)
+
+  /** Orders served rows so that sorted row lists compare as multisets. */
+  private val rowOrder: Ordering[Vector[Any]] = Ordering.by(_.mkString("|"))
+
   test("continuous JOIN → GROUP BY with MAX/MIN: a delete of the row " +
     "supporting the current extremum re-derives the next one exactly") {
     val lmem = newFeed("lm_feed"); val rmem = newFeed("rm_feed")
@@ -93,7 +102,7 @@ class ContinuousStatementsSpec extends AnyFunSuite {
         val cl = stmt.handle.get.changelog()
         // id is the feed's ROW IDENTITY (an upsert with a new key RE-KEYS
         // the row): the reference fold must be keyed by id alone, like
-        // changelogUpsertStream's state
+        // the upsert operator's state
         val live = scala.collection.mutable.Map.empty[Long, (Long, String)]
         var seq = 0L
         for (pg <- 0 until 6) {
@@ -502,8 +511,10 @@ class ContinuousStatementsSpec extends AnyFunSuite {
     try {
       assert(stmts.waitForStatus(stmt, Set(Phase.Running)).isDefined)
       val cl = stmt.handle.get.changelog()
+      // reference keyed by id, the feeds' row identity: the generator
+      // re-keys ids, and a re-keyed id leaves its old key
       val sides = Seq.fill(3)(
-        scala.collection.mutable.Map.empty[(Long, Long), String])
+        scala.collection.mutable.Map.empty[Long, (Long, String)])
       var seq = 0L
       for (pg <- 0 until 5) {
         val batches = (0 until 3).map { _ =>
@@ -517,11 +528,11 @@ class ContinuousStatementsSpec extends AnyFunSuite {
         if (batches(1).nonEmpty) f2.addData(batches(1))
         if (batches(2).nonEmpty) f3.addData(batches(2))
         stmt.handle.get.processAllAvailable()
-        (0 until 3).foreach(i => batches(i).foreach(applyFeed(sides(i), _)))
+        (0 until 3).foreach(i => batches(i).foreach(applyById(sides(i), _)))
         while (cl.consume(1).nonEmpty) ()
-        val expected = (for (((ak, ai), av) <- sides(0).toSeq;
-                             ((bk, bi), bv) <- sides(1).toSeq if bk == ak;
-                             ((ck, ci), cv) <- sides(2).toSeq if ck == ak)
+        val expected = (for ((ai, (ak, av)) <- sides(0).toSeq;
+                             (bi, (bk, bv)) <- sides(1).toSeq if bk == ak;
+                             (ci, (ck, cv)) <- sides(2).toSeq if ck == ak)
           yield Vector[Any](ak, ai, av, bi, bv, ci, cv)).toSet
         val got = cl.collapse().rows.toSet
         assert(got == expected,
@@ -1277,8 +1288,8 @@ class ContinuousStatementsSpec extends AnyFunSuite {
     val gam = newFeed("cascg_a"); val gbm = newFeed("cascg_b")
     val gcm = newFeed("cascg_c")
     val stmts = new Statements(spark)
-    // a⋈b share a key; c joins on b's ROW ID — the shape the same-key
-    // chain cannot keep in one state entry, so it cascades
+    // a⋈b share a key; c joins on b's ROW ID — no shared key, so the
+    // view keeps the cascade's per-side key/id/value columns
     val stmt = stmts.create("SELECT * FROM casc_a a " +
       "JOIN casc_b b ON a.key = b.key JOIN casc_c c ON b.id = c.key")
     val aggStmt = stmts.create("SELECT a.key AS k, count(*) AS c, " +
@@ -1406,8 +1417,8 @@ class ContinuousStatementsSpec extends AnyFunSuite {
     "when the last leaves — 2-feed and 3-feed forms, collapse == batch") {
     val am = newFeed("oc_a"); val bm = newFeed("oc_b")
     val stmts = new Statements(spark)
-    // a's ROW ID is the join column — different-key, so the cascade
-    // (not the same-key 2-way operator) must serve the outer join
+    // a's ROW ID is the join column — different-key, so the view keeps
+    // the cascade's per-side columns
     val stmt = stmts.create(
       "SELECT * FROM oc_a a LEFT JOIN oc_b b ON a.id = b.key")
     try {
@@ -1959,5 +1970,172 @@ class ContinuousStatementsSpec extends AnyFunSuite {
       assert(messages(ex2).contains("maxFoldStateEntries"))
       assert(stmt2.phase == Phase.Failed)
     } finally stmt2.stop()
+  }
+
+  test("a re-keyed id retracts its old join rows: INNER, LEFT and the " +
+    "same-key chain follow b moving id 20 from key 1 to key 2, in step " +
+    "with b's own view") {
+    // one feed per statement (MemoryStream.commit trims shared batches)
+    val ia = newFeed("rk_ia"); val ib = newFeed("rk_ib")
+    val la = newFeed("rk_la"); val lb = newFeed("rk_lb")
+    val ca = newFeed("rk_ca"); val cb = newFeed("rk_cb")
+    val cc = newFeed("rk_cc"); val vb = newFeed("rk_vb")
+    val stmts = new Statements(spark)
+    val inner = stmts.create(
+      "SELECT * FROM rk_ia a JOIN rk_ib b ON a.key = b.key")
+    val left = stmts.create(
+      "SELECT * FROM rk_la a LEFT JOIN rk_lb b ON a.key = b.key")
+    val chain = stmts.create(
+      "SELECT * FROM rk_ca a JOIN rk_cb b ON a.key = b.key " +
+        "JOIN rk_cc c ON b.key = c.key")
+    val bView = stmts.create("SELECT * FROM rk_vb")
+    val all = Seq(inner, left, chain, bView)
+    try {
+      for (st <- all)
+        assert(stmts.waitForStatus(st, Set(Phase.Running)).isDefined)
+      val Seq(cli, cll, clc, clb) = all.map(_.handle.get.changelog())
+      val a = scala.collection.mutable.Map.empty[Long, (Long, String)]
+      val b = scala.collection.mutable.Map.empty[Long, (Long, String)]
+      val c = scala.collection.mutable.Map.empty[Long, (Long, String)]
+      def page(ab: Seq[Feed], bb: Seq[Feed], cbb: Seq[Feed]): Unit = {
+        if (ab.nonEmpty) Seq(ia, la, ca).foreach(_.addData(ab))
+        if (bb.nonEmpty) Seq(ib, lb, cb, vb).foreach(_.addData(bb))
+        if (cbb.nonEmpty) cc.addData(cbb)
+        all.foreach(_.handle.get.processAllAvailable())
+        ab.foreach(applyById(a, _)); bb.foreach(applyById(b, _))
+        cbb.foreach(applyById(c, _))
+        Seq(cli, cll, clc, clb).foreach(cl => while (cl.consume(1).nonEmpty) ())
+        val bRows = b.toSeq.map { case (id, (k, v)) => Vector[Any](k, id, v) }
+        assert(clb.collapse().rows.toSet == bRows.toSet,
+          s"b's view diverged: ${clb.collapse().rows} vs $bRows")
+        def matches(ak: Long) = b.toSeq.filter(_._2._1 == ak)
+        val expInner = for ((ai, (ak, av)) <- a.toSeq;
+                            (bi, (_, bv)) <- matches(ak))
+          yield Vector[Any](ak, ai, av, bi, bv)
+        val expLeft = a.toSeq.flatMap { case (ai, (ak, av)) =>
+          if (matches(ak).isEmpty) Seq(Vector[Any](ak, ai, av, null, null))
+          else matches(ak).map { case (bi, (_, bv)) =>
+            Vector[Any](ak, ai, av, bi, bv) }
+        }
+        val expChain = for ((ai, (ak, av)) <- a.toSeq;
+                            (bi, (_, bv)) <- matches(ak);
+                            (ci, (ck, cv)) <- c.toSeq if ck == ak)
+          yield Vector[Any](ak, ai, av, bi, bv, ci, cv)
+        for ((cl, exp, what) <- Seq((cli, expInner, "INNER"),
+            (cll, expLeft, "LEFT"), (clc, expChain, "chain"))) {
+          val got = cl.collapse()
+          assert(got.rows.sorted(rowOrder) == exp.sorted(rowOrder),
+            s"$what collapse ${got.rows} != id-keyed join $exp")
+          assert(got.missedRetractions == 0, s"$what missed a retraction")
+          // every b side the join serves is a row of b's own view
+          got.rows.filter(_(3) != null).foreach { r =>
+            assert(bRows.contains(Vector[Any](r(0), r(3), r(4))),
+              s"$what serves b row ${Vector(r(0), r(3), r(4))} that b's " +
+                s"view does not hold: $bRows")
+          }
+        }
+      }
+      page(Seq((0L, 1L, 10L, "A", false)), Seq((0L, 1L, 20L, "B", false)),
+        Seq((0L, 1L, 30L, "C", false)))
+      // b re-keys id 20 to key 2: its key-1 join rows must leave
+      page(Nil, Seq((1L, 2L, 20L, "B", false)), Nil)
+      assert(cli.collapse().rows.isEmpty && clc.collapse().rows.isEmpty)
+      // key 2 fills on a and c: id 20 joins at its new key only
+      page(Seq((1L, 2L, 11L, "A2", false)), Nil,
+        Seq((1L, 2L, 31L, "C2", false)))
+      // back to key 1 with a new value, beside an a-side update
+      page(Seq((2L, 1L, 10L, "A1", false)), Seq((2L, 1L, 20L, "B1", false)),
+        Nil)
+      // the delete leaves every view without id 20
+      page(Nil, Seq((3L, 1L, 20L, "B1", true)), Nil)
+      assert(cli.collapse().rows.isEmpty && clc.collapse().rows.isEmpty)
+    } finally all.foreach(_.stop())
+  }
+
+  /** Delete-heavy outer-join property through the facade: `a <jt> JOIN b
+    * ON a.key = b.key` over 2 ids per side × 3 keys, delete probability
+    * 1/2 (sides empty and refill constantly, ids move between keys), one
+    * earlier page REDELIVERED whole mid-stream (a re-applied upsert
+    * retracts-then-reinserts, a re-applied delete no-ops), checked after
+    * every page against the id-keyed outer join. Returns the history of
+    * every run for the callers' non-vacuousness checks. */
+  private def outerJoinProperty(jt: String, seeds: Seq[Int],
+      leftPads: Boolean): Seq[Seq[graft.changelog.ChangelogRecord]] =
+    seeds.map { seed =>
+      val rnd = new scala.util.Random(seed)
+      val evs = (0 until 160).map { i =>
+        val left = rnd.nextBoolean()
+        (left, (i.toLong, rnd.nextInt(3).toLong,
+          (if (left) 100 else 200) + rnd.nextInt(2).toLong,
+          s"v${rnd.nextInt(100)}", rnd.nextBoolean()))
+      }
+      val lm = newFeed(s"oj_${jt}_l$seed"); val rm = newFeed(s"oj_${jt}_r$seed")
+      val stmts = new Statements(spark)
+      val stmt = stmts.create(s"SELECT * FROM oj_${jt}_l$seed a $jt JOIN " +
+        s"oj_${jt}_r$seed b ON a.key = b.key")
+      try {
+        assert(stmt.columns ==
+          Seq("key", "left_id", "left_value", "right_id", "right_value"))
+        assert(stmts.waitForStatus(stmt, Set(Phase.Running)).isDefined)
+        val cl = stmt.handle.get.changelog()
+        val l = scala.collection.mutable.Map.empty[Long, (Long, String)]
+        val r = scala.collection.mutable.Map.empty[Long, (Long, String)]
+        val base = evs.grouped(40).toSeq
+        val pages = base.patch(base.size - 1,
+          Seq(base(rnd.nextInt(base.size - 1))), 0)
+        pages.zipWithIndex.foreach { case (pg, pi) =>
+          val (lb, rb) = pg.partition(_._1)
+          if (lb.nonEmpty) lm.addData(lb.map(_._2))
+          if (rb.nonEmpty) rm.addData(rb.map(_._2))
+          stmt.handle.get.processAllAvailable()
+          pg.foreach { case (isL, f) => applyById(if (isL) l else r, f) }
+          while (cl.consume(1).nonEmpty) ()
+          val matched = for ((li, (lk, lv)) <- l.toSeq;
+                             (ri, (rk, rv)) <- r.toSeq if lk == rk)
+            yield Vector[Any](lk, li, lv, ri, rv)
+          val lPad = if (!leftPads) Nil else l.toSeq.collect {
+            case (li, (lk, lv)) if !r.values.exists(_._1 == lk) =>
+              Vector[Any](lk, li, lv, null, null)
+          }
+          val rPad = r.toSeq.collect {
+            case (ri, (rk, rv)) if !l.values.exists(_._1 == rk) =>
+              Vector[Any](rk, null, null, ri, rv)
+          }
+          val expected = (matched ++ lPad ++ rPad).sorted(rowOrder)
+          val got = cl.collapse()
+          assert(got.rows.sorted(rowOrder) == expected,
+            s"$jt seed $seed page $pi: collapse ${got.rows} != id-keyed " +
+              s"outer join $expected")
+          assert(got.missedRetractions == 0,
+            s"$jt seed $seed page $pi: a retraction missed its row")
+        }
+        cl.history
+      } finally stmt.stop()
+    }
+
+  test("RIGHT JOIN on a.key = b.key: delete-heavy interleavings with a " +
+    "redelivered page collapse to the id-keyed right outer join after " +
+    "every page, and right pads are born and retract") {
+    import graft.changelog.Op
+    outerJoinProperty("RIGHT", Seq(5, 29, 83), leftPads = false)
+      .zip(Seq(5, 29, 83)).foreach { case (hist, seed) =>
+        def pads(op: Op) = hist.count(h => h.op.contains(op) && h.values(1) == null)
+        assert(pads(Op.Insert) > 0 && pads(Op.Delete) > 0,
+          s"seed $seed: right pads never born (${pads(Op.Insert)}) or " +
+            s"retracted (${pads(Op.Delete)})")
+        assert(!hist.exists(_.values(3) == null),
+          s"seed $seed: a RIGHT JOIN must never pad the right side")
+      }
+  }
+
+  test("FULL JOIN on a.key = b.key: delete-heavy interleavings with a " +
+    "redelivered page collapse to the id-keyed full outer join after " +
+    "every page, with pads on both sides") {
+    outerJoinProperty("FULL", Seq(3, 23, 71), leftPads = true)
+      .zip(Seq(3, 23, 71)).foreach { case (hist, seed) =>
+        assert(hist.exists(_.values(1) == null) &&
+          hist.exists(_.values(3) == null),
+          s"seed $seed: the run must exercise pads on BOTH sides")
+      }
   }
 }

@@ -386,8 +386,10 @@ class StatementsSpec extends AnyFunSuite {
       try {
         assert(stmts.waitForStatus(stmt, Set(Phase.Running)).isDefined)
         val cl = stmt.handle.get.changelog()
-        val l = scala.collection.mutable.Map.empty[(Long, Long), String]
-        val r = scala.collection.mutable.Map.empty[(Long, Long), String]
+        // reference keyed by id, the feeds' row identity: the generator
+        // re-keys ids, and a re-keyed id leaves its old key
+        val l = scala.collection.mutable.Map.empty[Long, (Long, String)]
+        val r = scala.collection.mutable.Map.empty[Long, (Long, String)]
         var seq = 0L
         // 6 pages × up to 8 events/side, delete-heavy (p=1/3), 3 keys ×
         // 2 ids/side so rows collide, retract, and re-match repeatedly
@@ -401,13 +403,13 @@ class StatementsSpec extends AnyFunSuite {
           if (lb.nonEmpty) lmem.addData(lb)
           if (rb.nonEmpty) rmem.addData(rb)
           stmt.handle.get.processAllAvailable()
-          def apply(m: scala.collection.mutable.Map[(Long, Long), String],
+          def apply(m: scala.collection.mutable.Map[Long, (Long, String)],
                     f: Feed): Unit =
-            if (f._5) { m.remove((f._2, f._3)); () } else m((f._2, f._3)) = f._4
+            if (f._5) { m.remove(f._3); () } else m(f._3) = (f._2, f._4)
           lb.foreach(apply(l, _)); rb.foreach(apply(r, _))
           while (cl.consume(1).nonEmpty) ()
-          val expected = (for (((lk, li), lv) <- l.toSeq;
-                               ((rk, ri), rv) <- r.toSeq if lk == rk)
+          val expected = (for ((li, (lk, lv)) <- l.toSeq;
+                               (ri, (rk, rv)) <- r.toSeq if lk == rk)
             yield Vector[Any](lk, li, lv, ri, rv)).toSet
           val got = cl.collapse().rows.toSet
           assert(got == expected,
@@ -443,13 +445,14 @@ class StatementsSpec extends AnyFunSuite {
       assert(stmts.waitForStatus(stmt, Set(Phase.Running)).isDefined)
       val cl = stmt.handle.get.changelog()
       // driver-side reference fold of the live rows; values are exact
-      // binary doubles (multiples of 0.25) so sum order cannot drift ulps
-      val l = scala.collection.mutable.Map.empty[(Long, Long), String]
-      val r = scala.collection.mutable.Map.empty[(Long, Long), String]
-      def apply(side: scala.collection.mutable.Map[(Long, Long), String],
+      // binary doubles (multiples of 0.25) so sum order cannot drift ulps.
+      // Keyed by id, the feeds' row identity: page 2 re-keys right id 201
+      val l = scala.collection.mutable.Map.empty[Long, (Long, String)]
+      val r = scala.collection.mutable.Map.empty[Long, (Long, String)]
+      def apply(side: scala.collection.mutable.Map[Long, (Long, String)],
                 f: Feed): Unit =
-        if (f._5) { side.remove((f._2, f._3)); () }
-        else side((f._2, f._3)) = f._4
+        if (f._5) { side.remove(f._3); () }
+        else side(f._3) = (f._2, f._4)
       def page(lb: Seq[Feed], rb: Seq[Feed]): Unit = {
         if (lb.nonEmpty) lmem.addData(lb)
         if (rb.nonEmpty) rmem.addData(rb)
@@ -458,8 +461,8 @@ class StatementsSpec extends AnyFunSuite {
         while (cl.consume(1).nonEmpty) ()
         // batch reference: inner join on key, then GROUP BY key with
         // count(*) and avg(left value)
-        val joined = for (((lk, li), lv) <- l.toSeq;
-                          ((rk, ri), rv) <- r.toSeq if lk == rk)
+        val joined = for ((_, (lk, lv)) <- l.toSeq;
+                          (_, (rk, _)) <- r.toSeq if lk == rk)
           yield (lk, lv)
         val expected = joined.groupBy(_._1).map { case (k, rows) =>
           val vals = rows.map(_._2.toDouble)
@@ -473,11 +476,12 @@ class StatementsSpec extends AnyFunSuite {
       page(Seq((0L, 1L, 100L, "1.5", false), (1L, 1L, 101L, "2.5", false),
                (2L, 2L, 102L, "4.0", false)),
            Seq((0L, 1L, 200L, "x", false)))
-      // page 2: key 2 matches (group +I); left UPDATE on key 1 changes its
-      // avg (-U/+U); a second right row on key 1 doubles its join rows
+      // page 2: left UPDATE on key 1 changes its avg (-U/+U); right id
+      // 201 lands on key 2, then moves to key 1 in the same page — key 2
+      // stays unmatched and key 1's join rows double
       page(Seq((3L, 1L, 100L, "3.5", false)),
            Seq((1L, 2L, 201L, "y", false), (2L, 1L, 201L, "z", false)))
-      // page 3: key 2's only right row deletes → its group -D's away;
+      // page 3: the delete of id 201 removes it wherever it lives (key 1);
       // key 1 loses one left row
       page(Seq((4L, 1L, 101L, "2.5", true)),
            Seq((3L, 2L, 201L, "y", true)))
@@ -715,8 +719,10 @@ class StatementsSpec extends AnyFunSuite {
       try {
         assert(stmts.waitForStatus(stmt, Set(Phase.Running)).isDefined)
         val cl = stmt.handle.get.changelog()
-        val l = scala.collection.mutable.Map.empty[(Long, Long), String]
-        val r = scala.collection.mutable.Map.empty[(Long, Long), String]
+        // reference keyed by id, the feeds' row identity: the generator
+        // re-keys ids, and a re-keyed id leaves its old key
+        val l = scala.collection.mutable.Map.empty[Long, (Long, String)]
+        val r = scala.collection.mutable.Map.empty[Long, (Long, String)]
         var seq = 0L
         // values are ADVERSARIAL decimals (e.g. "7.13" — NOT exactly
         // representable in binary), delete p = 1/3, 3 keys × 2 ids/side
@@ -735,13 +741,13 @@ class StatementsSpec extends AnyFunSuite {
           if (lb.nonEmpty) lmem.addData(lb)
           if (rb.nonEmpty) rmem.addData(rb)
           stmt.handle.get.processAllAvailable()
-          def apply(m: scala.collection.mutable.Map[(Long, Long), String],
+          def apply(m: scala.collection.mutable.Map[Long, (Long, String)],
                     f: Feed): Unit =
-            if (f._5) { m.remove((f._2, f._3)); () } else m((f._2, f._3)) = f._4
+            if (f._5) { m.remove(f._3); () } else m(f._3) = (f._2, f._4)
           lb.foreach(apply(l, _)); rb.foreach(apply(r, _))
           while (cl.consume(1).nonEmpty) ()
-          val joined = for (((lk, li), lv) <- l.toSeq;
-                            ((rk, _), _) <- r.toSeq if lk == rk)
+          val joined = for ((_, (lk, lv)) <- l.toSeq;
+                            (_, (rk, _)) <- r.toSeq if lk == rk)
             yield (lk, lv.toDouble)
           val expected = joined.groupBy(_._1).map { case (k, rows) =>
             // the fold's SUM contract: the EXACT (arbitrary-precision)

@@ -676,121 +676,9 @@ class StreamingEventsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("changelog join: collapsed deltas equal the live-rows join at every " +
-    "micro-batch prefix") {
-    import StatefulOps.{JoinDelta, JoinEvent}
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-
-    // seeded random interleaving of upserts/updates/deletes on both sides
-    val rnd = new scala.util.Random(42)
-    val evs = (0 until 150).map { i =>
-      val key = rnd.nextInt(5).toLong
-      val left = rnd.nextBoolean()
-      val id = (if (left) 100 else 200) + rnd.nextInt(4).toLong
-      JoinEvent(key, left, id, s"v${rnd.nextInt(1000)}", rnd.nextInt(4) == 0)
-    }
-    // driver-side reference: independent fold with plain maps
-    def liveJoin(prefix: Seq[JoinEvent])
-        : Set[(Long, Long, String, Long, String)] = {
-      val l = scala.collection.mutable.Map.empty[(Long, Long), String]
-      val r = scala.collection.mutable.Map.empty[(Long, Long), String]
-      prefix.foreach { e =>
-        val m = if (e.left) l else r
-        if (e.delete) m.remove((e.key, e.id))
-        else m((e.key, e.id)) = e.value
-      }
-      (for (((lk, li), lv) <- l; ((rk, ri), rv) <- r if lk == rk)
-        yield (lk, li, lv, ri, rv)).toSet
-    }
-
-    val mem = MemoryStream[(Long, JoinEvent)]
-    val q = StatefulOps.changelogJoinStream(mem.toDS())
-      .writeStream.outputMode("append")
-      .format("memory").queryName("cl_join_test").start()
-    try {
-      val batches = evs.zipWithIndex.map { case (e, i) => (i.toLong, e) }
-        .grouped(50).toSeq
-      var prefix = Vector.empty[JoinEvent]
-      batches.foreach { b =>
-        mem.addData(b); q.processAllAvailable()
-        prefix ++= b.map(_._2)
-        // collapse ALL deltas emitted so far: +I adds a joined row, -D
-        // removes it — counts must be exactly {0, 1} and the 1s must be
-        // the join of the rows live at this prefix
-        val counts = s.table("cl_join_test").as[JoinDelta].collect()
-          .groupBy(d => (d.key, d.left_id, d.left_value, d.right_id,
-            d.right_value))
-          .view.mapValues(_.map(d => if (d.op == 0) 1 else -1).sum).toMap
-        assert(counts.values.forall(c => c == 0 || c == 1),
-          s"collapse must never go negative or double-insert: $counts")
-        val collapsed = counts.filter(_._2 == 1).keySet
-        assert(collapsed == liveJoin(prefix),
-          s"maintained view diverged at prefix ${prefix.size}: " +
-            s"$collapsed vs ${liveJoin(prefix)}")
-      }
-      assert(s.table("cl_join_test").count() > 0,
-        "fixture interleaving must exercise actual join emissions")
-    } finally q.stop()
-  }
-
-  test("changelogMultiJoinStream property: collapsing the deltas equals " +
-    "the 3-way inner join of live rows at every micro-batch prefix") {
-    import StatefulOps.{MultiJoinDelta, MultiJoinEvent}
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val rnd = new scala.util.Random(77)
-    val nSides = 3
-    // delete-heavy interleaving over few keys/ids so rows collide,
-    // retract, and re-match across all three sides repeatedly
-    val evs = (0 until 180).map { _ =>
-      MultiJoinEvent(rnd.nextInt(4).toLong, rnd.nextInt(nSides),
-        100L + rnd.nextInt(3), s"v${rnd.nextInt(1000)}",
-        rnd.nextInt(4) == 0)
-    }
-    def liveJoin(prefix: Seq[MultiJoinEvent])
-        : Set[(Long, Seq[Long], Seq[String])] = {
-      val sides = Seq.fill(nSides)(
-        scala.collection.mutable.Map.empty[(Long, Long), String])
-      prefix.foreach { e =>
-        val m = sides(e.side)
-        if (e.delete) m.remove((e.key, e.id)) else m((e.key, e.id)) = e.value
-      }
-      (for (((k0, i0), v0) <- sides(0).toSeq;
-            ((k1, i1), v1) <- sides(1).toSeq if k1 == k0;
-            ((k2, i2), v2) <- sides(2).toSeq if k2 == k0)
-        yield (k0, Seq(i0, i1, i2), Seq(v0, v1, v2))).toSet
-    }
-    val mem = MemoryStream[(Long, MultiJoinEvent)]
-    val q = StatefulOps.changelogMultiJoinStream(mem.toDS(), nSides)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("cl_mjoin_test").start()
-    try {
-      val batches = evs.zipWithIndex.map { case (e, i) => (i.toLong, e) }
-        .grouped(45).toSeq
-      var prefix = Vector.empty[MultiJoinEvent]
-      batches.foreach { b =>
-        mem.addData(b); q.processAllAvailable()
-        prefix ++= b.map(_._2)
-        val counts = s.table("cl_mjoin_test").as[MultiJoinDelta].collect()
-          .groupBy(d => (d.key, d.ids, d.values))
-          .view.mapValues(_.map(d => if (d.op == 0) 1 else -1).sum).toMap
-        assert(counts.values.forall(c => c == 0 || c == 1),
-          s"collapse must never go negative or double-insert: $counts")
-        val collapsed = counts.filter(_._2 == 1).keySet
-        assert(collapsed == liveJoin(prefix),
-          s"3-way view diverged at prefix ${prefix.size}: " +
-            s"$collapsed vs ${liveJoin(prefix)}")
-      }
-      assert(s.table("cl_mjoin_test").count() > 0,
-        "fixture interleaving must exercise actual join emissions")
-    } finally q.stop()
-  }
-
-  test("changelogUpsertStream property: collapsing the deltas equals the " +
-    "feed's live rows at every prefix; counts never leave {0, 1}") {
+  test("one-feed changelogUnionUpsertStream property: collapsing the " +
+    "deltas equals the feed's live rows at every prefix; counts never " +
+    "leave {0, 1}") {
     import StatefulOps.{UpsertDelta, UpsertEvent}
     val s = spark
     import s.implicits._
@@ -810,17 +698,18 @@ class StreamingEventsSpec extends AnyFunSuite {
       }
       m.map { case (id, (k, v)) => (k, id, v) }.toSet
     }
-    val mem = MemoryStream[(Long, UpsertEvent)]
-    val q = StatefulOps.changelogUpsertStream(mem.toDS())
+    // a single feed is the one-feed union: every event is feed 0's
+    val mem = MemoryStream[(Long, Int, UpsertEvent)]
+    val q = StatefulOps.changelogUnionUpsertStream(mem.toDS())
       .writeStream.outputMode("append")
       .format("memory").queryName("cl_upsert_test").start()
     try {
-      val batches = evs.zipWithIndex.map { case (e, i) => (i.toLong, e) }
+      val batches = evs.zipWithIndex.map { case (e, i) => (i.toLong, 0, e) }
         .grouped(40).toSeq
       var prefix = Vector.empty[UpsertEvent]
       batches.foreach { b =>
         mem.addData(b); q.processAllAvailable()
-        prefix ++= b.map(_._2)
+        prefix ++= b.map(_._3)
         val counts = s.table("cl_upsert_test").as[UpsertDelta].collect()
           .groupBy(d => (d.key, d.id, d.value))
           .view.mapValues(_.map(d => if (d.op == 0) 1 else -1).sum).toMap
@@ -830,304 +719,6 @@ class StreamingEventsSpec extends AnyFunSuite {
           s"maintained view diverged at prefix ${prefix.size}")
       }
     } finally q.stop()
-  }
-
-  test("left-outer changelog join: null padding appears and retracts " +
-    "exactly at right-side 0/1 transitions, at every prefix") {
-    import StatefulOps.{JoinDelta, JoinEvent}
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-
-    // a different seed than the inner test, and a delete-heavier mix so
-    // right sides repeatedly empty out (the transition under test)
-    val rnd = new scala.util.Random(7)
-    val evs = (0 until 180).map { i =>
-      val key = rnd.nextInt(4).toLong
-      val left = rnd.nextBoolean()
-      val id = (if (left) 100 else 200) + rnd.nextInt(3).toLong
-      JoinEvent(key, left, id, s"v${rnd.nextInt(1000)}", rnd.nextInt(3) == 0)
-    }
-    def liveOuterJoin(prefix: Seq[JoinEvent])
-        : Set[(Long, Long, String, Long, String)] = {
-      val l = scala.collection.mutable.Map.empty[(Long, Long), String]
-      val r = scala.collection.mutable.Map.empty[(Long, Long), String]
-      prefix.foreach { e =>
-        val m = if (e.left) l else r
-        if (e.delete) m.remove((e.key, e.id))
-        else m((e.key, e.id)) = e.value
-      }
-      l.flatMap { case ((lk, li), lv) =>
-        val matches = r.collect {
-          case ((rk, ri), rv) if rk == lk => (lk, li, lv, ri, rv) }
-        if (matches.isEmpty) Seq((lk, li, lv, -1L, null: String))
-        else matches
-      }.toSet
-    }
-
-    val mem = MemoryStream[(Long, JoinEvent)]
-    val q = StatefulOps.changelogJoinStream(mem.toDS(), leftOuter = true)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("cl_ljoin_test").start()
-    try {
-      val batches = evs.zipWithIndex.map { case (e, i) => (i.toLong, e) }
-        .grouped(45).toSeq
-      var prefix = Vector.empty[JoinEvent]
-      batches.foreach { b =>
-        mem.addData(b); q.processAllAvailable()
-        prefix ++= b.map(_._2)
-        val counts = s.table("cl_ljoin_test").as[JoinDelta].collect()
-          .groupBy(d => (d.key, d.left_id, d.left_value, d.right_id,
-            d.right_value))
-          .view.mapValues(_.map(d => if (d.op == 0) 1 else -1).sum).toMap
-        assert(counts.values.forall(c => c == 0 || c == 1),
-          s"collapse must never go negative or double-insert: " +
-            counts.filter(kv => kv._2 != 0 && kv._2 != 1))
-        val collapsed = counts.filter(_._2 == 1).keySet
-        assert(collapsed == liveOuterJoin(prefix),
-          s"outer view diverged at prefix ${prefix.size}")
-      }
-      // the interleaving must actually exercise the padded state
-      val all = s.table("cl_ljoin_test").as[JoinDelta].collect()
-      assert(all.exists(d => d.op == 0 && d.right_id == -1L) &&
-        all.exists(d => d.op == 3 && d.right_id == -1L),
-        "fixture must emit and retract null-padded rows")
-    } finally q.stop()
-  }
-
-  test("full-outer changelog join: both sides' null pads track the " +
-    "opposite side's 0/1 transitions, at every prefix") {
-    import StatefulOps.{JoinDelta, JoinEvent}
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-
-    val rnd = new scala.util.Random(19)
-    val evs = (0 until 180).map { i =>
-      val key = rnd.nextInt(4).toLong
-      val left = rnd.nextBoolean()
-      val id = (if (left) 100 else 200) + rnd.nextInt(3).toLong
-      JoinEvent(key, left, id, s"v${rnd.nextInt(1000)}", rnd.nextInt(3) == 0)
-    }
-    def liveFullJoin(prefix: Seq[JoinEvent])
-        : Set[(Long, Long, String, Long, String)] = {
-      val l = scala.collection.mutable.Map.empty[(Long, Long), String]
-      val r = scala.collection.mutable.Map.empty[(Long, Long), String]
-      prefix.foreach { e =>
-        val m = if (e.left) l else r
-        if (e.delete) m.remove((e.key, e.id))
-        else m((e.key, e.id)) = e.value
-      }
-      val matched = for (((lk, li), lv) <- l.toSeq; ((rk, ri), rv) <- r.toSeq
-                         if lk == rk) yield (lk, li, lv, ri, rv)
-      val lPads = l.collect { case ((lk, li), lv)
-        if !r.keys.exists(_._1 == lk) => (lk, li, lv, -1L, null: String) }
-      val rPads = r.collect { case ((rk, ri), rv)
-        if !l.keys.exists(_._1 == rk) => (rk, -1L, null: String, ri, rv) }
-      (matched ++ lPads ++ rPads).toSet
-    }
-
-    val mem = MemoryStream[(Long, JoinEvent)]
-    val q = StatefulOps.changelogJoinStream(mem.toDS(),
-        leftOuter = true, rightOuter = true)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("cl_fjoin_test").start()
-    try {
-      val batches = evs.zipWithIndex.map { case (e, i) => (i.toLong, e) }
-        .grouped(45).toSeq
-      var prefix = Vector.empty[JoinEvent]
-      batches.foreach { b =>
-        mem.addData(b); q.processAllAvailable()
-        prefix ++= b.map(_._2)
-        val counts = s.table("cl_fjoin_test").as[JoinDelta].collect()
-          .groupBy(d => (d.key, d.left_id, d.left_value, d.right_id,
-            d.right_value))
-          .view.mapValues(_.map(d => if (d.op == 0) 1 else -1).sum).toMap
-        assert(counts.values.forall(c => c == 0 || c == 1),
-          s"collapse must never go negative or double-insert: " +
-            counts.filter(kv => kv._2 != 0 && kv._2 != 1))
-        assert(counts.filter(_._2 == 1).keySet == liveFullJoin(prefix),
-          s"full-outer view diverged at prefix ${prefix.size}")
-      }
-      val all = s.table("cl_fjoin_test").as[JoinDelta].collect()
-      assert(all.exists(d => d.right_id == -1L) &&
-        all.exists(d => d.left_id == -1L),
-        "fixture must exercise pads on BOTH sides")
-    } finally q.stop()
-  }
-
-  test("full-outer changelog join PROPERTY: delete-heavy interleavings " +
-    "where both sides repeatedly empty, WITH mid-stream redelivery, " +
-    "at every prefix, over multiple seeds") {
-    import StatefulOps.{JoinDelta, JoinEvent}
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    def liveFullJoin(prefix: Seq[JoinEvent])
-        : Set[(Long, Long, String, Long, String)] = {
-      val l = scala.collection.mutable.Map.empty[(Long, Long), String]
-      val r = scala.collection.mutable.Map.empty[(Long, Long), String]
-      prefix.foreach { e =>
-        val m = if (e.left) l else r
-        if (e.delete) m.remove((e.key, e.id))
-        else m((e.key, e.id)) = e.value
-      }
-      val matched = for (((lk, li), lv) <- l.toSeq; ((rk, ri), rv) <- r.toSeq
-                         if lk == rk) yield (lk, li, lv, ri, rv)
-      val lPads = l.collect { case ((lk, li), lv)
-        if !r.keys.exists(_._1 == lk) => (lk, li, lv, -1L, null: String) }
-      val rPads = r.collect { case ((rk, ri), rv)
-        if !l.keys.exists(_._1 == rk) => (rk, -1L, null: String, ri, rv) }
-      (matched ++ lPads ++ rPads).toSet
-    }
-    // harder than the left-outer suite on every axis: delete probability
-    // 1/2 (sides empty and refill constantly), only 2 ids per side × 3
-    // keys (maximum transition churn), and one random earlier batch
-    // REDELIVERED whole mid-stream. Redelivery is legal input — the
-    // operator's semantics are a value fold (a re-applied upsert
-    // retracts-then-reinserts, a re-applied delete no-ops), so the
-    // reference fold simply re-applies the same events and the collapse
-    // equality must STILL hold at every prefix.
-    Seq(3, 23, 71).foreach { seed =>
-      val rnd = new scala.util.Random(seed)
-      val evs = (0 until 160).map { _ =>
-        val left = rnd.nextBoolean()
-        JoinEvent(rnd.nextInt(3).toLong, left,
-          (if (left) 100 else 200) + rnd.nextInt(2).toLong,
-          s"v${rnd.nextInt(100)}", rnd.nextBoolean())
-      }
-      val qn = s"cl_fjoin_prop_$seed"
-      val mem = MemoryStream[(Long, JoinEvent)]
-      val q = StatefulOps.changelogJoinStream(mem.toDS(),
-          leftOuter = true, rightOuter = true)
-        .writeStream.outputMode("append")
-        .format("memory").queryName(qn).start()
-      try {
-        val base = evs.zipWithIndex.map { case (e, i) => (i.toLong, e) }
-          .grouped(40).toSeq
-        val redelivered = base(rnd.nextInt(base.size - 1))
-        val batches = base.patch(base.size - 1, Seq(redelivered), 0)
-        var prefix = Vector.empty[JoinEvent]
-        var emptiedBoth = 0
-        batches.foreach { b =>
-          mem.addData(b); q.processAllAvailable()
-          prefix ++= b.map(_._2)
-          val counts = s.table(qn).as[JoinDelta].collect()
-            .groupBy(d => (d.key, d.left_id, d.left_value, d.right_id,
-              d.right_value))
-            .view.mapValues(_.map(d => if (d.op == 0) 1 else -1).sum).toMap
-          assert(counts.values.forall(c => c == 0 || c == 1),
-            s"seed $seed: collapse went negative/double: " +
-              counts.filter(kv => kv._2 != 0 && kv._2 != 1))
-          assert(counts.filter(_._2 == 1).keySet == liveFullJoin(prefix),
-            s"seed $seed: full-outer view diverged at prefix ${prefix.size}")
-        }
-        // non-vacuousness: replay the full event stream ONE EVENT at a
-        // time and count states where a previously-populated key has BOTH
-        // sides empty — the transition family under test (checked
-        // per-event, not per-batch: a key can empty and refill inside
-        // one micro-batch and a boundary-only guard misses it)
-        val l = scala.collection.mutable.Map.empty[(Long, Long), String]
-        val r = scala.collection.mutable.Map.empty[(Long, Long), String]
-        val touched = scala.collection.mutable.Set.empty[Long]
-        prefix.foreach { e =>
-          val m = if (e.left) l else r
-          touched += e.key
-          if (e.delete) m.remove((e.key, e.id))
-          else m((e.key, e.id)) = e.value
-          emptiedBoth += touched.count(k =>
-            !l.keys.exists(_._1 == k) && !r.keys.exists(_._1 == k))
-        }
-        assert(emptiedBoth > 0,
-          s"seed $seed: interleaving never emptied both sides of a " +
-            "touched key — the fixture is not adversarial enough")
-      } finally q.stop()
-    }
-  }
-
-  test("right-outer changelog join PROPERTY: delete-heavy interleavings " +
-    "with mid-stream redelivery, at every prefix, over multiple seeds — " +
-    "the facade accepts RIGHT JOIN SQL, so the right-only pad direction " +
-    "gets the same adversarial coverage as LEFT/FULL") {
-    import StatefulOps.{JoinDelta, JoinEvent}
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    // reference view: matched pairs plus RIGHT-side pads only — a left
-    // row with no right match emits nothing under a right-outer join
-    def liveRightJoin(prefix: Seq[JoinEvent])
-        : Set[(Long, Long, String, Long, String)] = {
-      val l = scala.collection.mutable.Map.empty[(Long, Long), String]
-      val r = scala.collection.mutable.Map.empty[(Long, Long), String]
-      prefix.foreach { e =>
-        val m = if (e.left) l else r
-        if (e.delete) m.remove((e.key, e.id))
-        else m((e.key, e.id)) = e.value
-      }
-      val matched = for (((lk, li), lv) <- l.toSeq; ((rk, ri), rv) <- r.toSeq
-                         if lk == rk) yield (lk, li, lv, ri, rv)
-      val rPads = r.collect { case ((rk, ri), rv)
-        if !l.keys.exists(_._1 == rk) => (rk, -1L, null: String, ri, rv) }
-      (matched ++ rPads).toSet
-    }
-    // same adversarial axes as the full-outer suite: delete probability
-    // 1/2, 2 ids per side × 3 keys, one whole batch redelivered
-    Seq(5, 29, 83).foreach { seed =>
-      val rnd = new scala.util.Random(seed)
-      val evs = (0 until 160).map { _ =>
-        val left = rnd.nextBoolean()
-        JoinEvent(rnd.nextInt(3).toLong, left,
-          (if (left) 100 else 200) + rnd.nextInt(2).toLong,
-          s"v${rnd.nextInt(100)}", rnd.nextBoolean())
-      }
-      val qn = s"cl_rjoin_prop_$seed"
-      val mem = MemoryStream[(Long, JoinEvent)]
-      val q = StatefulOps.changelogJoinStream(mem.toDS(),
-          leftOuter = false, rightOuter = true)
-        .writeStream.outputMode("append")
-        .format("memory").queryName(qn).start()
-      try {
-        val base = evs.zipWithIndex.map { case (e, i) => (i.toLong, e) }
-          .grouped(40).toSeq
-        val redelivered = base(rnd.nextInt(base.size - 1))
-        val batches = base.patch(base.size - 1, Seq(redelivered), 0)
-        var prefix = Vector.empty[JoinEvent]
-        batches.foreach { b =>
-          mem.addData(b); q.processAllAvailable()
-          prefix ++= b.map(_._2)
-          val counts = s.table(qn).as[JoinDelta].collect()
-            .groupBy(d => (d.key, d.left_id, d.left_value, d.right_id,
-              d.right_value))
-            .view.mapValues(_.map(d => if (d.op == 0) 1 else -1).sum).toMap
-          assert(counts.values.forall(c => c == 0 || c == 1),
-            s"seed $seed: collapse went negative/double: " +
-              counts.filter(kv => kv._2 != 0 && kv._2 != 1))
-          assert(counts.filter(_._2 == 1).keySet == liveRightJoin(prefix),
-            s"seed $seed: right-outer view diverged at prefix ${prefix.size}")
-        }
-        // non-vacuousness: the interleaving must exercise BOTH pad
-        // transitions — a right pad appearing (right row while left side
-        // of its key is empty) and a pad retracting into a match (left
-        // arrival on a padded key); count them per-event on the replay
-        val l = scala.collection.mutable.Map.empty[(Long, Long), String]
-        val r = scala.collection.mutable.Map.empty[(Long, Long), String]
-        var padBorn = 0; var padRetracted = 0
-        prefix.foreach { e =>
-          def rightAlone(k: Long) =
-            r.keys.exists(_._1 == k) && !l.keys.exists(_._1 == k)
-          val before = rightAlone(e.key)
-          val m = if (e.left) l else r
-          if (e.delete) m.remove((e.key, e.id))
-          else m((e.key, e.id)) = e.value
-          val after = rightAlone(e.key)
-          if (!before && after) padBorn += 1
-          if (before && !after && e.left && !e.delete) padRetracted += 1
-        }
-        assert(padBorn > 0 && padRetracted > 0,
-          s"seed $seed: interleaving never exercised pad birth " +
-            s"($padBorn) or pad-to-match retraction ($padRetracted)")
-      } finally q.stop()
-    }
   }
 
   test("nearDupStream bucket saturation is observable via the overflow " +
@@ -1738,31 +1329,35 @@ class StreamingEventsSpec extends AnyFunSuite {
     "40k-event upsert batch in linear time (the id-keyed state fold; " +
     "the old Seq.indexOf/patch fold was O(live × events) and busts the " +
     "budget by an order of magnitude), and the collapse stays exact") {
-    import StatefulOps.{JoinDelta, JoinEvent}
+    import StatefulOps.{ZDelta, ZEvent, ZRow}
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
     val n = 40000
-    val mem = MemoryStream[(Long, JoinEvent)]
-    val q = StatefulOps.changelogJoinStream(mem.toDS())
+    val mem = MemoryStream[ZEvent]
+    val q = StatefulOps.zJoinStream(mem.toDS())
       .writeStream.outputMode("append")
       .format("memory").queryName("cl_join_hotkey").start()
+    // a feed row as a Z-set change on join key 1: an upsert reaches the
+    // join as its id-keyed upsert deltas (retract the old row, insert
+    // the new one), each distinct row one entry of the hash-map fold
+    def ev(left: Boolean, id: Long, v: String, sign: Int): ZEvent =
+      ZEvent(1L, left, ZRow(Seq(1L), Seq(id), Seq(v)), sign)
     try {
-      def timed(evs: Seq[(Long, JoinEvent)]): Double = {
+      def timed(evs: Seq[ZEvent]): Double = {
         val t0 = System.nanoTime
         mem.addData(evs); q.processAllAvailable()
         (System.nanoTime - t0) / 1e9
       }
       // batch 1: ONE join key, one right row, then 40k left inserts —
       // each left insert emits exactly one joined row
-      val insert = (0L, JoinEvent(1L, false, -100L, "r", false)) +:
-        (0 until n).map(i =>
-          (i + 1L, JoinEvent(1L, true, i.toLong, s"v$i", false)))
+      val insert = ev(false, -100L, "r", 1) +:
+        (0 until n).map(i => ev(true, i.toLong, s"v$i", 1))
       val tIns = timed(insert)
-      // batch 2: re-key every live left id (retract + insert per event);
+      // batch 2: update every live left id (retract + insert per event);
       // the emission is 2 deltas/event, so the fold itself dominates
-      val churn = (0 until n).map(i =>
-        (i.toLong, JoinEvent(1L, true, i.toLong, s"w$i", false)))
+      val churn = (0 until n).flatMap(i =>
+        Seq(ev(true, i.toLong, s"v$i", -1), ev(true, i.toLong, s"w$i", 1)))
       val tChurn = timed(churn)
       // generous linear budget with ~10× headroom on this hardware; the
       // quadratic fold's ~1.6e9 list traversals + 40k list rebuilds sat
@@ -1770,41 +1365,12 @@ class StreamingEventsSpec extends AnyFunSuite {
       assert(tIns < 30.0 && tChurn < 30.0,
         f"hot-key batches took insert=$tIns%.1fs churn=$tChurn%.1fs — " +
           "the join fold is not linear in (live rows + events)")
-      val counts = s.table("cl_join_hotkey").as[JoinDelta].collect()
-        .groupBy(d => (d.left_id, d.left_value))
+      val counts = s.table("cl_join_hotkey").as[ZDelta].collect()
+        .groupBy(d => (d.row.ids.head, d.row.values.head))
         .view.mapValues(_.map(d => if (d.op == 0) 1 else -1).sum)
       val live = counts.filter(_._2 == 1).keys.toSet
       assert(live == (0 until n).map(i => (i.toLong, s"w$i")).toSet,
         s"hot-key collapse diverged (got ${live.size} live rows)")
     } finally q.stop()
-    // the N-way fold shares the discipline: 20k churn events against a
-    // 20k-row side with singleton other sides emits O(1) per event
-    import StatefulOps.{MultiJoinDelta, MultiJoinEvent}
-    val m = 20000
-    val mem2 = MemoryStream[(Long, MultiJoinEvent)]
-    val q2 = StatefulOps.changelogMultiJoinStream(mem2.toDS(), nSides = 3)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("cl_mjoin_hotkey").start()
-    try {
-      val seed = Seq((0L, MultiJoinEvent(1L, 1, -1000L, "b", false)),
-        (1L, MultiJoinEvent(1L, 2, -2000L, "c", false)))
-      val ins = seed ++ (0 until m).map(i =>
-        (i + 2L, MultiJoinEvent(1L, 0, i.toLong, s"v$i", false)))
-      val t0 = System.nanoTime
-      mem2.addData(ins); q2.processAllAvailable()
-      mem2.addData((0 until m).map(i =>
-        (i.toLong, MultiJoinEvent(1L, 0, i.toLong, s"w$i", false))))
-      q2.processAllAvailable()
-      val tAll = (System.nanoTime - t0) / 1e9
-      assert(tAll < 30.0,
-        f"3-way hot-key fold took $tAll%.1fs — not linear")
-      val counts = s.table("cl_mjoin_hotkey").as[MultiJoinDelta].collect()
-        .groupBy(d => (d.ids, d.values))
-        .view.mapValues(_.map(d => if (d.op == 0) 1 else -1).sum)
-      val live = counts.filter(_._2 == 1).keys.toSet
-      assert(live == (0 until m).map(i =>
-        (Seq(i.toLong, -1000L, -2000L), Seq(s"w$i", "b", "c"))).toSet,
-        s"3-way hot-key collapse diverged (got ${live.size} live rows)")
-    } finally q2.stop()
   }
 }

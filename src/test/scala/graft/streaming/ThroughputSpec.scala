@@ -15,6 +15,19 @@ import graft.sources.Tables
 class ThroughputSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
+  /** A changelog feed (`seq, key, id, value, delete`) registered as a
+    * streaming temp view for the facade statements below. */
+  private def feed(name: String)
+      : MemoryStream[(Long, Long, Long, String, Boolean)] = {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val m = MemoryStream[(Long, Long, Long, String, Boolean)]
+    m.toDF().toDF("seq", "key", "id", "value", "delete")
+      .createOrReplaceTempView(name)
+    m
+  }
+
   test("changelog sink sustains well over the 20 events/s baseline") {
     val s = spark
     import s.implicits._
@@ -49,40 +62,44 @@ class ThroughputSpec extends AnyFunSuite {
   }
 
   test("changelog join sustains well over the 20 changes/s baseline") {
-    import StatefulOps.JoinEvent
     val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    // 10 batches × 1000 changes over 100 keys × ~10 live rows/side —
-    // realistic continuous-join state (every change emits ~10 deltas)
+    val lm = feed("tpj_a"); val rm = feed("tpj_b")
+    val stmts = new graft.api.Statements(s)
+    // the facade's same-key join: 2 upsert IVMs + 1 Z-set join stage
+    val stmt = stmts.create(
+      "SELECT * FROM tpj_a a JOIN tpj_b b ON a.key = b.key")
+    // 10 batches × 1000 changes over 100 keys; ids are the feeds' row
+    // identity and move between keys, so each side holds ≤ 10 live rows
     val rnd = new scala.util.Random(11)
     val batches = (0 until 10).map { b =>
       (0 until 1000).map { i =>
         val key = rnd.nextInt(100).toLong
         val left = rnd.nextBoolean()
         val id = (if (left) 1000 else 2000) + rnd.nextInt(10).toLong
-        ((b * 1000 + i).toLong,
-          JoinEvent(key, left, id, s"v$i", rnd.nextInt(5) == 0))
+        (left, ((b * 1000 + i).toLong, key, id, s"v$i", rnd.nextInt(5) == 0))
       }
     }
-    val mem = MemoryStream[(Long, JoinEvent)]
-    val q = StatefulOps.changelogJoinStream(mem.toDS())
-      .writeStream.outputMode("append")
-      .format("noop").start()
+    def add(b: Seq[(Boolean, (Long, Long, Long, String, Boolean))]): Unit = {
+      val (l, r) = b.partition(_._1)
+      if (l.nonEmpty) lm.addData(l.map(_._2))
+      if (r.nonEmpty) rm.addData(r.map(_._2))
+    }
+    def sync(): Unit =
+      s.streams.active.find(_.name == stmt.name).get.processAllAvailable()
     try {
       // warmup on keys disjoint from the workload (999+), so the timed
       // region replays nothing and measures exactly the 10k changes
-      val warm = (0 until 10).map(i =>
-        (-10L + i, JoinEvent(999L + i, left = true, 1L, "w", delete = false)))
-      mem.addData(warm); q.processAllAvailable()
+      add((0 until 10).map(i =>
+        (true, (-10L + i, 999L + i, 1L, "w", false))))
+      sync()
       val t0 = System.nanoTime()
-      batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+      batches.foreach { b => add(b); sync() }
       val secs = (System.nanoTime() - t0) / 1e9
       val rate = 10000 / secs
       info(f"sustained $rate%.0f changes/s through the maintained join")
       assert(rate >= 20 * 10,
         f"join rate $rate%.0f changes/s below 10x the baseline")
-    } finally q.stop()
+    } finally stmt.stop()
   }
 
   test("composed continuous statement (upsert IVM -> executor WHERE -> " +
@@ -146,12 +163,6 @@ class ThroughputSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    def feed(name: String): MemoryStream[(Long, Long, Long, String, Boolean)] = {
-      val m = MemoryStream[(Long, Long, Long, String, Boolean)]
-      m.toDF().toDF("seq", "key", "id", "value", "delete")
-        .createOrReplaceTempView(name)
-      m
-    }
     val am = feed("tpc_a"); val bm = feed("tpc_b"); val cm = feed("tpc_c")
     val stmts = new graft.api.Statements(s)
     // the 5-stateful-operator route: 3 upsert IVMs + 2 Z-set join stages,
