@@ -5,12 +5,14 @@ import java.security.SecureRandom
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedHaving, UnresolvedRelation, UnresolvedStar}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeReference, BasePredicate, BoundReference, Cast, CommonExpressionRef, EqualTo, Expression, InterpretedOrdering, Literal, NullOrdering, NullsFirst, Predicate, RowOrdering, RuntimeReplaceable, SortDirection, SortOrder, Unevaluable, With}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeReference, AttributeSeq, BasePredicate, BindReferences, BoundReference, CommonExpressionRef, EqualTo, Expression, GenericInternalRow, InterpretedOrdering, Literal, NamedExpression, NullsFirst, Predicate, RowOrdering, RuntimeReplaceable, SortOrder, Unevaluable, With}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, DeclarativeAggregate, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct, Filter, GlobalLimit, Join, LocalLimit, LocalRelation, LogicalPlan, Project, Sort, SubqueryAlias}
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftOuter, RightOuter}
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.types._
 
 import graft.changelog.{Changelog, Op, RawRecord}
@@ -181,19 +183,45 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     bytes.map(b => f"${b & 0xff}%02x").mkString
   }
 
+  /** For each grouping expression of an analyzed Aggregate, the index of
+    * the SELECT item carrying it (the item itself, or an alias of a
+    * semantically equal expression), if one does. */
+  private def groupingOutputs(a: Aggregate): Seq[Option[Int]] =
+    a.groupingExpressions.map { g =>
+      Some(a.aggregateExpressions.indexWhere {
+        case Alias(c, _) => c.semanticEquals(g)
+        case ne => ne.semanticEquals(g)
+      }).filter(_ >= 0)
+    }
+
   /** Grouping-key columns of the statement's top aggregate, read from the
     * analyzed plan (the way the reference reads the server-inferred schema,
-    * `dashboard.py:201` — the engine knows its own plan). Only keys that
-    * survive into the output schema count; empty for non-aggregating
+    * `dashboard.py:201` — the engine knows its own plan): the output
+    * column carrying each grouping expression. A grouping expression
+    * with no output column cannot key the changelog (two groups could
+    * emit identical rows), so it rejects. Empty for non-aggregating
     * (append-only) queries. */
   private def derivedKeys(df: DataFrame): Seq[String] = {
-    import org.apache.spark.sql.catalyst.expressions.NamedExpression
-    val out = df.schema.fieldNames.toSet
-    df.queryExecution.analyzed.collectFirst {
-      case a: Aggregate => a.groupingExpressions.collect {
-        case ne: NamedExpression if out.contains(ne.name) => ne.name
+    val plan = df.queryExecution.analyzed
+    plan.collectFirst { case a: Aggregate => a }.fold(Seq.empty[String]) { a =>
+      a.groupingExpressions.zip(groupingOutputs(a)).map { case (g, out) =>
+        out.map(a.aggregateExpressions(_).toAttribute.exprId)
+          .flatMap(id => plan.output.find(_.exprId == id)).map(_.name)
+          .getOrElse(throw new IllegalArgumentException(
+            s"GROUP BY expression ${g.sql} has no column in the " +
+              "statement's output, so the changelog cannot key its groups " +
+              "— select it, or pass keyCols"))
       }
-    }.getOrElse(Nil)
+    }
+  }
+
+  /** A Filter between the plan's root and its top Aggregate (a HAVING):
+    * a group can leave the result, which only a complete-mode snapshot
+    * diff turns into a `-D`. */
+  private def filtersAggregate(p: LogicalPlan): Boolean = p match {
+    case _: Aggregate => false
+    case f: Filter if f.child.exists(_.isInstanceOf[Aggregate]) => true
+    case _ => p.children.exists(filtersAggregate)
   }
 
   /** Column contract for one side of a continuous JOIN statement: a
@@ -244,6 +272,24 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       case _ => false
     })
 
+  /** A parsed aggregate with its HAVING: an Aggregate, or an UNGROUPED
+    * one (`SELECT count(*) AS c FROM feed`) that parses as a plain
+    * Project — the parser cannot know count() aggregates; this is the
+    * same rewrite Catalyst's GlobalAggregates rule makes at analysis
+    * time. */
+  private object Aggregated {
+    def unapply(p: LogicalPlan): Option[(Aggregate, Option[Expression])] =
+      p match {
+        case a: Aggregate => Some((a, None))
+        case pj: Project if hasAggFunction(pj.projectList) =>
+          Some((Aggregate(Nil, pj.projectList, pj.child, None), None))
+        case h: UnresolvedHaving => unapply(h.child).collect {
+          case (a, None) => (a, Some(h.havingCondition))
+        }
+        case _ => None
+      }
+  }
+
   private def unsupported(sql: String, what: String): Nothing =
     throw new UnsupportedContinuousStatement(
       "continuous statement over changelog feed(s) cannot be maintained " +
@@ -253,16 +299,28 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
 
   /** A matched continuous source: its exact-retraction delta stream
     * (leading `op` column + the view columns), the maintained view's
-    * column names and types (positionally aligned), and the resolver
-    * mapping an UNRESOLVED SQL attribute onto a view column index. */
+    * column names (positionally aligned; their types are the delta
+    * stream's own), and the resolver mapping an UNRESOLVED SQL attribute
+    * onto a view column index. The last `hidden` view columns resolve
+    * but are not served by `SELECT *`. */
   private case class DeltaSource(deltas: DataFrame, viewCols: Seq[String],
-                                 types: Seq[DataType],
-                                 resolve: UnresolvedAttribute => Option[Int])
+                                 resolve: UnresolvedAttribute => Option[Int],
+                                 hidden: Int = 0) {
+    def typeOf(i: Int): DataType = deltas.schema(i + 1).dataType
+    def servedCols: Seq[String] = viewCols.dropRight(hidden)
+    /** The delta stream as `SELECT *` serves it: op + the served columns. */
+    def served: DataFrame =
+      if (hidden == 0) deltas
+      else deltas.select(("op" +: servedCols).map(deltas(_)): _*)
+  }
 
   /** Columns of a single feed's maintained view, in delta-row order
     * after the leading op column. */
   private val FeedViewCols = Seq("key", "id", "value")
-  private val FeedViewTypes = Seq[DataType](LongType, LongType, StringType)
+
+  /** The integral types: join keys and event times over the feeds' long
+    * domain. */
+  private val Integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
 
   /** Relation name (resolves the feed) and the outermost alias (what
     * column references qualify by; the relation name itself when
@@ -310,13 +368,14 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       }
       colName.map(FeedViewCols.indexOf)
     }
-    DeltaSource(upsertDeltas(Seq(feed)), FeedViewCols, FeedViewTypes, resolve)
+    DeltaSource(feedView(Seq(feed)), FeedViewCols, resolve)
   }
 
   /** Feeds' wire rows → the exact retraction deltas of their maintained
     * multiset union in one id-keyed upsert operator, state keyed by
-    * (feed index, id); one feed is that feed's own view. */
-  private def upsertDeltas(feeds: Seq[DataFrame]): DataFrame = {
+    * (feed index, id); each delta carries its feed index. */
+  private def upsertDeltas(
+      feeds: Seq[DataFrame]): Dataset[StatefulOps.UpsertDelta] = {
     import spark.implicits._
     StatefulOps.changelogUnionUpsertStream(feeds.zipWithIndex.map {
       case (t, i) =>
@@ -325,8 +384,13 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
           .map { case (seq, k, id, v, del) =>
             (seq, i, StatefulOps.UpsertEvent(k, id, v, del))
           }
-    }.reduce(_ union _)).toDF()
+    }.reduce(_ union _))
   }
+
+  /** The union's maintained view (`op, key, id, value`); one feed is that
+    * feed's own view. */
+  private def feedView(feeds: Seq[DataFrame]): DataFrame =
+    upsertDeltas(feeds).toDF().drop("feed")
 
   /** Extend a delta source with a broadcast STATIC dim, INNER-joined on
     * the view's `key`: the static side never changes, so a `+I` delta
@@ -357,8 +421,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
         case _ => ds.resolve(a)
       }
     }
-    DeltaSource(joined, ds.viewCols ++ staticCols,
-      ds.types ++ staticCols.map(c => static.schema(c).dataType), resolve)
+    DeltaSource(joined, ds.viewCols ++ staticCols, resolve)
   }
 
   /** Match a left-deep all-INNER tree mixing changelog feeds (a
@@ -421,7 +484,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
             case _ => None
           }
           jc match {
-            case Some(col) if kindOf(st.schema(col).dataType) == Some(LongK) =>
+            case Some(col) if Integral(st.schema(col).dataType) =>
               staticJoinCol(na) = col
             case _ => return None
           }
@@ -435,7 +498,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
         singleFeedSource(feedLeaves.head._2, feedLeaves.head._1)
       else sharedKeyView(cascadeSource(feedLeaves.map(_._2), feedAliases,
         feedAliases.tail.map(_ => (0, true, false, false))),
-        feedAliases, feedAliases)
+        feedAliases, feedAliases, padded = false)
     staticLeaves.foreach { case (a, st) =>
       ds = attachStatic(ds, a, st, staticJoinCol(a), sql)
     }
@@ -492,7 +555,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       case _ => return None
     }
     // the feed's key is a long: the static join column must be integral
-    if (kindOf(static.schema(jcol).dataType) != Some(LongK)) return None
+    if (!Integral(static.schema(jcol).dataType)) return None
     // the view's columns are the feed's three plus the dim's, by name —
     // a dim column shadowing op/key/id/value would make the view
     // ambiguous, and the shape HAS matched, so reject loudly (rename the
@@ -503,14 +566,13 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
         "shadow the maintained view's op/key/id/value — rename them " +
         "(e.g. SELECT them under aliases into a temp view) to join a feed")
     import org.apache.spark.sql.functions.broadcast
-    val fd = upsertDeltas(Seq(feed))
+    val fd = feedView(Seq(feed))
     val joined = fd
       .join(broadcast(static), fd("key") === static(jcol),
         if (feedOuter) "left_outer" else "inner")
       .select((Seq("op", "key", "id", "value").map(fd(_)) ++
         staticCols.map(static(_))): _*)
     val viewCols = FeedViewCols ++ staticCols
-    val types = FeedViewTypes ++ staticCols.map(c => static.schema(c).dataType)
     val resolve: UnresolvedAttribute => Option[Int] = a => {
       val colName = a.nameParts match {
         case Seq(c) if viewCols.count(_ == c) == 1 => Some(c)
@@ -520,7 +582,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       }
       colName.map(viewCols.indexOf)
     }
-    Some(DeltaSource(joined, viewCols, types, resolve))
+    Some(DeltaSource(joined, viewCols, resolve))
   }
 
   /** Match a left-deep tree of changelog feeds (`a JOIN b ON a.key =
@@ -562,8 +624,9 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       val sameKey = refs.forall(_._2)
       val allInner = refs.forall(r => !r._3 && !r._4)
       if (sameKey && feeds.length == 2)
-        sharedKeyView(ds, aliases, Seq("left", "right"))
-      else if (sameKey && allInner) sharedKeyView(ds, aliases, aliases)
+        sharedKeyView(ds, aliases, Seq("left", "right"), padded = !allInner)
+      else if (sameKey && allInner)
+        sharedKeyView(ds, aliases, aliases, padded = false)
       else ds
     }
 
@@ -609,28 +672,36 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     // guarding unconditionally would kill a RUNNING inner cascade
     // mid-stream for a legal row
     val anyOuter = refs.exists(r => r._3 || r._4)
-    def feedDeltas(t: DataFrame): org.apache.spark.sql.Dataset[ZDelta] =
-      upsertDeltas(Seq(t)).as[(Int, Long, Long, String)].map {
-        case (op, k, id, v) =>
-          // a live row carrying the pad sentinel would be misread as a
-          // pad in the served view, or join pad rows at a later stage
-          // where SQL NULL matches nothing — fail loudly
-          if (anyOuter && (k == -1L || id == -1L))
-            throw new IllegalStateException(
-              "changelog feed key/id -1 is reserved for outer-join pad " +
-                "sentinels and cannot be a live row identity in an " +
-                "outer join cascade")
-          ZDelta(op, ZRow(Seq(k), Seq(id), Seq(v)))
+    def zEvents(feeds: Seq[DataFrame])(
+        side: StatefulOps.UpsertDelta => (Long, Boolean)): Dataset[ZEvent] =
+      upsertDeltas(feeds).map { d =>
+        // a live row carrying the pad sentinel would be misread as a
+        // pad in the served view, or join pad rows at a later stage
+        // where SQL NULL matches nothing — fail loudly
+        if (anyOuter && (d.key == -1L || d.id == -1L))
+          throw new IllegalStateException(
+            "changelog feed key/id -1 is reserved for outer-join pad " +
+              "sentinels and cannot be a live row identity in an " +
+              "outer join cascade")
+        val (jkey, left) = side(d)
+        ZEvent(jkey, left, ZRow(Seq(d.key), Seq(d.id), Seq(d.value)),
+          if (d.op == 0) 1 else -1)
       }
-    var acc = feedDeltas(feeds.head)
-    refs.zipWithIndex.foreach { case ((aIdx, isKey, lo, ro), i) =>
+    // the first stage reads feeds 0 and 1 from ONE upsert operator (its
+    // state is keyed by (feed, id)): each delta's feed index picks its
+    // join side, so an N-feed cascade runs 2N−2 stateful operators
+    val (_, firstIsKey, firstLo, firstRo) = refs.head
+    var acc: Dataset[ZDelta] = StatefulOps.zJoinStream(
+      zEvents(feeds.take(2)) { d =>
+        if (d.feed == 0) (if (firstIsKey) d.key else d.id, true)
+        else (d.key, false)
+      }, leftOuter = firstLo, rightOuter = firstRo)
+    refs.zipWithIndex.drop(1).foreach { case ((aIdx, isKey, lo, ro), i) =>
       val left = acc.map { d =>
         ZEvent(if (isKey) d.row.keys(aIdx) else d.row.ids(aIdx), true,
           d.row, if (d.op == 0) 1 else -1)
       }
-      val right = feedDeltas(feeds(i + 1)).map { d =>
-        ZEvent(d.row.keys.head, false, d.row, if (d.op == 0) 1 else -1)
-      }
+      val right = zEvents(Seq(feeds(i + 1)))(d => (d.key, false))
       acc = StatefulOps.zJoinStream(left.union(right), leftOuter = lo,
         rightOuter = ro, leftArity = i + 1, rightArity = 1)
     }
@@ -654,8 +725,6 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     val deltas = acc.toDF().select((col("op") +: sideCols): _*)
     val viewCols = aliases.flatMap(al =>
       Seq(s"${al}_key", s"${al}_id", s"${al}_value"))
-    val types: Seq[DataType] = aliases.flatMap(_ =>
-      Seq[DataType](LongType, LongType, StringType))
     val resolve: UnresolvedAttribute => Option[Int] = a => {
       val colName = a.nameParts match {
         case Seq(c) if viewCols.contains(c) => Some(c)
@@ -666,32 +735,36 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       }
       colName.map(viewCols.indexOf)
     }
-    DeltaSource(deltas, viewCols, types, resolve)
+    DeltaSource(deltas, viewCols, resolve)
   }
 
   /** A same-key cascade's view on ONE shared `key` column: `key` (the
     * coalesce of the side keys — equal on matched rows, the live side's
     * on a pad), then `<name>_id` / `<name>_value` per side, `names`
-    * parallel to `aliases`. `<alias>.key` resolves to the shared column,
-    * `<alias>.id` / `<alias>.value` to that side's. */
+    * parallel to `aliases`. `<alias>.id` / `<alias>.value` resolve to
+    * that side's columns, and so does `<alias>.key` on a `padded` (outer)
+    * view: that side's own key, NULL on its pads, carried as a hidden
+    * `<alias>_key` column `SELECT *` does not serve. Without pads every
+    * side key equals the shared `key`. */
   private def sharedKeyView(ds: DeltaSource, aliases: Seq[String],
-      names: Seq[String]): DeltaSource = {
+      names: Seq[String], padded: Boolean): DeltaSource = {
     import org.apache.spark.sql.functions.{coalesce, col}
     val sides = aliases.zip(names)
+    val sideKeys = if (padded) aliases.map(al => s"${al}_key") else Nil
+    val served = "key" +: names.flatMap(n => Seq(s"${n}_id", s"${n}_value"))
     val deltas = ds.deltas.select((col("op") +:
       coalesce(aliases.map(al => col(s"${al}_key")): _*).as("key") +:
-      sides.flatMap { case (al, n) =>
+      (sides.flatMap { case (al, n) =>
         Seq(col(s"${al}_id").as(s"${n}_id"),
           col(s"${al}_value").as(s"${n}_value"))
-      }): _*)
-    val viewCols = "key" +: names.flatMap(n => Seq(s"${n}_id", s"${n}_value"))
-    val types: Seq[DataType] =
-      LongType +: names.flatMap(_ => Seq[DataType](LongType, StringType))
+      } ++ sideKeys.map(col))): _*)
+    val viewCols = served ++ sideKeys
     val nameOf = sides.toMap
     val resolve: UnresolvedAttribute => Option[Int] = a => {
       val colName = a.nameParts match {
-        case Seq(c) if viewCols.contains(c) => Some(c)
-        case Seq(q, "key") if nameOf.contains(q) => Some("key")
+        case Seq(c) if served.contains(c) => Some(c)
+        case Seq(q, "key") if nameOf.contains(q) =>
+          Some(if (padded) s"${q}_key" else "key")
         case Seq(q, "id") if nameOf.contains(q) => Some(s"${nameOf(q)}_id")
         case Seq(q, "value") if nameOf.contains(q) =>
           Some(s"${nameOf(q)}_value")
@@ -699,7 +772,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       }
       colName.map(viewCols.indexOf)
     }
-    DeltaSource(deltas, viewCols, types, resolve)
+    DeltaSource(deltas, viewCols, resolve, hidden = sideKeys.length)
   }
 
   /** All continuous-join shapes: feed ⋈ static, then mixed feed/static
@@ -791,8 +864,8 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
 
   /** Project a delta source through deterministic scalar expressions,
     * EXECUTOR-side (Catalyst's full scalar algebra, codegen'd): each
-    * item rewrites its unresolved attributes onto the delta columns and
-    * the projected frame's analyzed schema supplies the new view types.
+    * item rewrites its unresolved attributes onto the delta columns, and
+    * the projected frame's analyzed schema types the new view.
     * None when an attribute does not resolve, an output name collides
     * (with `op` or another item), analysis fails, or any projection is
     * non-deterministic (a non-deterministic projection cannot commute
@@ -821,7 +894,6 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       }.forall(identity)
       if (!deterministic) None
       else {
-        val types = projected.schema.fields.drop(1).map(_.dataType).toSeq
         // duplicate output names are servable AS A VIEW (r10's projected
         // route served `SELECT a.id, b.id` — Spark selects carry
         // duplicate names fine) but are AMBIGUOUS to reference: the
@@ -834,7 +906,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
               Some(outNames.indexOf(c))
             case _ => None
           }
-        Some(DeltaSource(projected, outNames, types, resolve))
+        Some(DeltaSource(projected, outNames, resolve))
       }
     } catch {
       case _: org.apache.spark.sql.AnalysisException => None
@@ -971,8 +1043,8 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
           case _ => None
         }
         if (feedsOpt.exists(_.isEmpty)) None
-        else Some(viewStatement(DeltaSource(upsertDeltas(feedsOpt.flatten),
-          FeedViewCols, FeedViewTypes, _ => None), sql, name, properties))
+        else Some(viewStatement(DeltaSource(feedView(feedsOpt.flatten),
+          FeedViewCols, _ => None), sql, name, properties))
       // the composed continuous statement a reference user writes next:
       // JOIN → [WHERE] → GROUP BY in one statement (Flink-the-service
       // maintains it as one changelog; `spark.sql` alone cannot — a
@@ -982,35 +1054,20 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       // deterministic row predicate passes or rejects a joined row
       // identically on its +I and its -D, so filtering the deltas
       // equals filtering the view.
-      case agg: Aggregate => routeAgg(agg, None, sql, name, properties)
       // HAVING filters the AGGREGATE view: applied to the fold's emitted
       // snapshot, so a group crossing the boundary emits the -D / +I the
       // changelog wire expects (the complete-mode-diff transition)
-      case h: UnresolvedHaving =>
-        h.child match {
-          case agg: Aggregate =>
-            routeAgg(agg, Some(h.havingCondition), sql, name, properties)
-          // HAVING over an UNGROUPED aggregate: the child parses as a
-          // Project (same parser gap as below)
-          case p: Project if hasAggFunction(p.projectList) =>
-            routeAgg(Aggregate(Nil, p.projectList, p.child, None),
-              Some(h.havingCondition), sql, name, properties)
-          case _ => None
-        }
-      // an UNGROUPED aggregate (`SELECT count(*) AS c FROM feed`) parses
-      // as a plain Project — the parser cannot know count() aggregates;
-      // this is the same rewrite Catalyst's GlobalAggregates rule makes
-      // at analysis time
-      case p: Project if hasAggFunction(p.projectList) =>
-        routeAgg(Aggregate(Nil, p.projectList, p.child, None), None,
-          sql, name, properties)
+      case Aggregated(agg, having) =>
+        routeAgg(agg, having, sql, name, properties)
       // SELECT DISTINCT <cols> FROM <source> ≡ GROUP BY those columns
       // with no aggregates — the membership fold (rows live while their
       // multiplicity is positive)
       case Distinct(Project(projList, rel))
           if !projList.exists(_.isInstanceOf[UnresolvedStar]) =>
-        routeAgg(Aggregate(projList, projList, rel, None), None,
-          sql, name, properties)
+        routeAgg(Aggregate(projList.map {
+          case Alias(c, _) => c
+          case e => e
+        }, projList, rel, None), None, sql, name, properties)
       // `SELECT <scalar projections> FROM <source> [WHERE …]`: the
       // PROJECTED maintained view — a deterministic projection commutes
       // with retraction (a row's +I and its -D project identically), so
@@ -1041,21 +1098,8 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
           case Project(Seq(UnresolvedStar(None)), src) =>
             matchSource(src, sql)
               .map(topKViewStatement(_, order, k, sql, name, properties))
-          case agg: Aggregate =>
-            routeAgg(agg, None, sql, name, properties, Some((order, k)))
-          case h: UnresolvedHaving => h.child match {
-            case agg: Aggregate =>
-              routeAgg(agg, Some(h.havingCondition), sql, name, properties,
-                Some((order, k)))
-            case p: Project if hasAggFunction(p.projectList) =>
-              routeAgg(Aggregate(Nil, p.projectList, p.child, None),
-                Some(h.havingCondition), sql, name, properties,
-                Some((order, k)))
-            case _ => None
-          }
-          case p: Project if hasAggFunction(p.projectList) =>
-            routeAgg(Aggregate(Nil, p.projectList, p.child, None), None,
-              sql, name, properties, Some((order, k)))
+          case Aggregated(agg, having) =>
+            routeAgg(agg, having, sql, name, properties, Some((order, k)))
           case _ => None
         }
       case _ => None
@@ -1101,10 +1145,10 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     * between the IVM operator and the wire). */
   private def viewStatement(ds: DeltaSource, sql: String, name: String,
       properties: Map[String, String]): Statement = {
-    val handle = ChangelogStream.deltaPassthrough(ds.deltas, name)
+    val handle = ChangelogStream.deltaPassthrough(ds.served, name)
     // the statement's advertised schema is the maintained view's columns
     // (op travels as the record op, not a column)
-    new Statement(name, sql, ds.deltas.drop("op"), Some(handle), properties)
+    new Statement(name, sql, ds.served.drop("op"), Some(handle), properties)
   }
 
   /** Dispatch an `Aggregate over [Filter over] <source>` continuous
@@ -1125,7 +1169,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
         // WHERE applies to the source view and is DELTA-COMMUTING (a
         // deterministic row predicate passes a row's +I and its -D
         // identically) — it compiles through the executor-side Catalyst
-        // rewrite BEFORE any normalization projection, so it sees the
+        // rewrite BEFORE the fold's input projection, so it sees the
         // source's own columns; rejected rows never reach the driver
         val ds = where.map(filterDeltas(ds0, _, sql)).getOrElse(ds0)
         val (dsH, aggH, hopMeta) = rewriteHop(agg, ds, sql)
@@ -1133,8 +1177,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
         val (aggT, tumbleMeta) = rewriteTumble(aggS, dsH, sql)
         if (Seq(hopMeta, sessMeta, tumbleMeta).count(_.isDefined) > 1)
           unsupported(sql, "one event-time window per continuous statement")
-        val (dsN, aggN) = normalizeAgg(dsH, aggT, sql)
-        Some(aggOverDeltas(dsN, aggN, having, sql, name, properties, topK,
+        Some(aggOverDeltas(dsH, aggT, having, sql, name, properties, topK,
           hopMeta.orElse(sessMeta).orElse(tumbleMeta),
           sessionMode = sessMeta.isDefined))
       case None =>
@@ -1154,7 +1197,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     * TUMBLE(ts, INTERVAL …)` re-expressed for the feed's long event-time
     * domain; the batch twin is q18's window() aggregation). The call
     * rewrites to the window-start scalar `col - pmod(col, width)` (true
-    * floor alignment for any sign), which the normalization projection
+    * floor alignment for any sign), which the fold's input projection
     * evaluates executor-side like any grouping expression — and the
     * returned output-column name tells the fold to run WATERMARK
     * EVICTION over it: the watermark is the maximum window start any
@@ -1218,7 +1261,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
         val i = ds.resolve(a).getOrElse(
           bail(s"hop column ${a.nameParts.mkString(".")} does not resolve " +
             s"in the maintained view (${ds.viewCols.mkString(", ")})"))
-        if (kindOf(ds.types(i)) != Some(LongK))
+        if (!Integral(ds.typeOf(i)))
           bail(s"hop column ${ds.viewCols(i)} must be integral " +
             "(the feed's event-time domain)")
         (i, sl, wl)
@@ -1250,13 +1293,12 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
         (col("op") +: explode(sequence(first, last, lit(slide))).as(outName)
           +: ds.viewCols.map(ds.deltas(_))): _*)
       val viewCols = outName +: ds.viewCols
-      val types = LongType +: ds.types
       val resolve: UnresolvedAttribute => Option[Int] = a =>
         a.nameParts match {
           case Seq(c) if c == outName => Some(0)
           case _ => ds.resolve(a).map(_ + 1)
         }
-      DeltaSource(exploded, viewCols, types, resolve)
+      DeltaSource(exploded, viewCols, resolve, ds.hidden)
     }
     val winAttr = UnresolvedAttribute(Seq(outName))
     val newAgg = agg.copy(
@@ -1328,7 +1370,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
         val i = ds.resolve(a).getOrElse(
           bail(s"session column ${a.nameParts.mkString(".")} does not " +
             s"resolve in the maintained view (${ds.viewCols.mkString(", ")})"))
-        if (kindOf(ds.types(i)) != Some(LongK))
+        if (!Integral(ds.typeOf(i)))
           bail(s"session column ${ds.viewCols(i)} must be integral " +
             "(the feed's event-time domain)")
         (a, wl)
@@ -1385,7 +1427,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
         val i = ds.resolve(a).getOrElse(
           bail(s"tumble column ${a.nameParts.mkString(".")} does not " +
             s"resolve in the maintained view (${ds.viewCols.mkString(", ")})"))
-        if (kindOf(ds.types(i)) != Some(LongK))
+        if (!Integral(ds.typeOf(i)))
           bail(s"tumble column ${ds.viewCols(i)} must be integral " +
             "(the feed's event-time domain)")
         (a, wl)
@@ -1414,176 +1456,12 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     (newAgg, Some((outName, width)))
   }
 
-  /** Rewrite an Aggregate whose grouping expressions or aggregate
-    * arguments are SCALAR EXPRESSIONS over view columns into the
-    * column-only form the incremental fold maintains, by PRE-PROJECTING
-    * the expressions executor-side ([[projectSource]]) and re-pointing
-    * the Aggregate at the projected columns: `GROUP BY CASE …`,
-    * aggregates over arithmetic, and the inlined demo3 CTE shape all
-    * reduce to the bare-column fold this way. Deterministic projections
-    * commute with retraction (the projected-view proof), so exactness is
-    * untouched; column-only aggregates pass through with NO extra
-    * projection in the plan. Loud on anything unservable — the source IS
-    * feed(s) by the time this runs. */
-  private def normalizeAgg(ds: DeltaSource, agg: Aggregate,
-      sql: String): (DeltaSource, Aggregate) = {
-    def simpleArg(e: Expression): Boolean = e match {
-      case _: UnresolvedAttribute => true
-      case Cast(_: UnresolvedAttribute, DoubleType, _, _) => true
-      case UnresolvedStar(None) => true
-      case _: Literal => true
-      case _ => false
-    }
-    val simple =
-      agg.groupingExpressions.forall(_.isInstanceOf[UnresolvedAttribute]) &&
-        agg.aggregateExpressions.forall {
-          case _: UnresolvedAttribute => true
-          case Alias(_: UnresolvedAttribute, _) => true
-          case Alias(f: UnresolvedFunction, _) => f.arguments.forall(simpleArg)
-          case _ => false
-        }
-    if (simple) return (ds, agg)
-    def bail(what: String): Nothing = unsupported(sql, what)
-    val items = mutable.ArrayBuffer.empty[(String, Expression)]
-    // bare attributes compare by their RESOLVED view column, so `key`
-    // and `a.key` share one projected column; other expressions compare
-    // structurally (the parser emits equal trees for equal text)
-    def sameExpr(x: Expression, y: Expression): Boolean = (x, y) match {
-      case (a: UnresolvedAttribute, b: UnresolvedAttribute) =>
-        val ra = ds.resolve(a)
-        ra.isDefined && ra == ds.resolve(b)
-      case _ => x == y
-    }
-    def addItem(name: String, e: Expression): String =
-      items.find(_._1 == name) match {
-        case Some((_, ex)) if sameExpr(ex, e) => name
-        case Some(_) => bail(s"output column $name is defined twice with " +
-          "different expressions")
-        case None => items += ((name, e)); name
-      }
-    var synth = 0
-    // projection column carrying an AGGREGATE ARGUMENT: reuse any item
-    // already bound to the same expression; otherwise a bare column
-    // projects under its own name (unless an output item took it) and a
-    // compound expression under a synthesized internal name
-    def argItem(e: Expression): String =
-      items.find { case (_, ex) => sameExpr(ex, e) }.map(_._1).getOrElse {
-        val base = e match {
-          case a: UnresolvedAttribute if !items.exists(_._1 == a.nameParts.last) =>
-            a.nameParts.last
-          case _ => synth += 1; s"__arg$synth"
-        }
-        addItem(base, e)
-      }
-    def attrOf(n: String) = UnresolvedAttribute(Seq(n))
-    // pass 1: register every OUTPUT item's projection column FIRST, so
-    // an aggregate ARGUMENT never claims a name a later SELECT item
-    // owns (argItem would otherwise make acceptance depend on
-    // select-list order)
-    agg.aggregateExpressions.foreach {
-      case a: UnresolvedAttribute => addItem(a.nameParts.last, a); ()
-      case Alias(f: UnresolvedFunction, _)
-          if AggFns.contains(f.nameParts.map(_.toLowerCase).mkString(".")) =>
-        () // aggregate: no output projection column of its own
-      case Alias(child, n) if !hasAggFunction(Seq(child)) =>
-        addItem(n, child); ()
-      case other =>
-        bail(s"SELECT item $other must be a grouping column/expression " +
-          "or an aliased aggregate")
-    }
-    // pass 2: rewrite — scalars point at their projected column,
-    // aggregate functions re-point their arguments (reusing an output
-    // item bound to the same expression, else a fresh internal column)
-    val newSelect: Seq[org.apache.spark.sql.catalyst.expressions.NamedExpression] =
-      agg.aggregateExpressions.map {
-        case a: UnresolvedAttribute => attrOf(a.nameParts.last)
-        case Alias(f: UnresolvedFunction, n)
-            if AggFns.contains(f.nameParts.map(_.toLowerCase).mkString(".")) =>
-          val newArgs = f.arguments.map {
-            case s: UnresolvedStar => s
-            case l: Literal => l
-            case c @ Cast(a: UnresolvedAttribute, DoubleType, _, _) =>
-              c.copy(child = attrOf(argItem(a)))
-            case e => attrOf(argItem(e))
-          }
-          Alias(f.copy(arguments = newArgs), n)()
-        case Alias(child, n) => Alias(attrOf(n), n)()
-        case other =>
-          bail(s"SELECT item $other must be a grouping column/expression " +
-            "or an aliased aggregate")
-      }
-    // pass 3: GROUP BY — each grouping expression must be (or name, via
-    // an ordinal) a projected SELECT item: the changelog retracts groups
-    // by their visible key values
-    val newGroups: Seq[Expression] = agg.groupingExpressions.map { g =>
-      // GROUP BY <ordinal>: Spark's groupByOrdinal reading (the parser
-      // emits UnresolvedOrdinal in grouping position; honored only while
-      // the session's groupByOrdinal conf is on — off, the same literal
-      // means "group by a constant", which this route does not express
-      // and therefore rejects loudly below rather than mis-resolving)
-      val byOrdinal = spark.sessionState.conf.groupByOrdinal
-      val ordinal: Option[Int] = g match {
-        case o: org.apache.spark.sql.catalyst.analysis.UnresolvedOrdinal
-            if byOrdinal => Some(o.ordinal)
-        case Literal(i: Int, IntegerType) if byOrdinal => Some(i)
-        case _ => None
-      }
-      val named = (ordinal, g) match {
-        case (Some(i), _) if i >= 1 && i <= agg.aggregateExpressions.length =>
-          agg.aggregateExpressions(i - 1) match {
-            case a: UnresolvedAttribute => items.find(it => sameExpr(it._2, a))
-            case Alias(child, n) => items.find(_._1 == n)
-              .filter(it => sameExpr(it._2, child))
-            case _ => None
-          }
-        case (Some(_), _) => None // out-of-range ordinal
-        // the DISTINCT route passes its projection list as the grouping
-        // list verbatim, so a grouping item may arrive alias-wrapped
-        case (None, Alias(child, n)) =>
-          items.find(it => it._1 == n && sameExpr(it._2, child))
-        case (None, other) => items.find(it => sameExpr(it._2, other))
-      }
-      named match {
-        case Some((n, _)) => attrOf(n)
-        case None => bail(s"GROUP BY expression $g must appear in the " +
-          "SELECT list (the changelog retracts groups by their visible " +
-          "key values)")
-      }
-    }
-    val pds = projectSource(ds, items.toSeq).getOrElse(
-      bail("the projected continuous view could not be built: a column " +
-        "does not resolve in the maintained view " +
-        s"(${ds.viewCols.mkString(", ")}), an output name collides, or " +
-        "an expression is non-deterministic (projections must commute " +
-        "with retraction)"))
-    (pds, Aggregate(newGroups, newSelect, agg.child, None))
-  }
-
   // ===== the continuous aggregate fold =====
 
-  /** Canonical value kinds the continuous fold can maintain exactly:
-    * integral (exact long arithmetic), fractional (exact decimal
-    * expansions — see [[exactNum]]), and string (compares; coerces to
-    * DOUBLE under SUM/AVG, Spark's lenient PromoteStrings discipline).
-    * Any other view-column type rejects at create() — folding it
-    * silently (the r9 `toNum` catch-all) hid type errors. */
-  private sealed trait ValKind
-  private case object LongK extends ValKind
-  private case object DoubleK extends ValKind
-  private case object StringK extends ValKind
-
-  private def kindOf(dt: DataType): Option[ValKind] = dt match {
-    case ByteType | ShortType | IntegerType | LongType => Some(LongK)
-    case FloatType | DoubleType | _: DecimalType => Some(DoubleK)
-    case StringType => Some(StringK)
-    case _ => None
-  }
-
-  /** The EXACT numeric value of a live cell, as an arbitrary-precision
-    * decimal: integral types exactly; float/double as the exact decimal
+  /** The EXACT value of a numeric aggregate input (a Catalyst value) as
+    * an arbitrary-precision decimal: float/double as the exact decimal
     * expansion of the binary value (`new BigDecimal(double)` — not the
-    * string rounding); DECIMAL exactly; strings via their lenient DOUBLE
-    * cast (unparseable → null, Spark's non-ANSI cast). Accumulating
+    * string rounding), integral and DECIMAL values exactly. Accumulating
     * these is associative and commutative with NO rounding, so the
     * incremental fold equals a from-scratch replay bit-for-bit for ANY
     * float input and ANY retraction order — the q51 exact-moments
@@ -1591,309 +1469,290 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     * accumulators drifted across group rebirth). NaN/Infinity have no
     * decimal expansion and fold as null. */
   private def exactNum(v: Any): java.math.BigDecimal = v match {
-    case null => null
-    case b: java.math.BigDecimal => b
-    case l: java.lang.Long => java.math.BigDecimal.valueOf(l)
-    case i: java.lang.Integer => java.math.BigDecimal.valueOf(i.longValue)
-    case s: java.lang.Short => java.math.BigDecimal.valueOf(s.longValue)
-    case b: java.lang.Byte => java.math.BigDecimal.valueOf(b.longValue)
+    case d: Decimal => d.toJavaBigDecimal
     case d: java.lang.Double =>
       if (d.isNaN || d.isInfinite) null else new java.math.BigDecimal(d)
     case f: java.lang.Float =>
       if (f.isNaN || f.isInfinite) null
       else new java.math.BigDecimal(f.doubleValue)
-    case s: String =>
-      try {
-        val d = s.trim.toDouble
-        if (d.isNaN || d.isInfinite) null else new java.math.BigDecimal(d)
-      } catch { case _: NumberFormatException => null }
-    case _ => null
+    case n: Number => java.math.BigDecimal.valueOf(n.longValue)
   }
 
-  /** A cell canonicalized for MIN/MAX comparison under its kind. */
-  private def canon(v: Any, k: ValKind): AnyRef = (v, k) match {
-    case (null, _) => null
-    case (x, LongK) =>
-      java.lang.Long.valueOf(x.asInstanceOf[Number].longValue)
-    case (s: String, DoubleK) => // CAST(string AS DOUBLE), lenient
-      try java.lang.Double.valueOf(s.trim.toDouble)
-      catch { case _: NumberFormatException => null }
-    case (x, DoubleK) =>
-      java.lang.Double.valueOf(x.asInstanceOf[Number].doubleValue)
-    case (x, StringK) => x.asInstanceOf[String]
+  /** An exact sum as a SUM / AVG buffer value of type `dt`: LONG wraps
+    * like Spark's legacy long addition, DOUBLE is the exact sum rounded
+    * ONCE (so a DOUBLE SUM or AVG is the fold's documented value, not an
+    * order-dependent IEEE left fold), DECIMAL is exact. */
+  private def bufferSum(b: java.math.BigDecimal, dt: DataType): Any = dt match {
+    case LongType => b.longValue
+    case DoubleType => b.doubleValue
+    case _: DecimalType => Decimal(b)
   }
 
-  private def ordFor(k: ValKind): Ordering[AnyRef] = k match {
-    case LongK => Ordering.by((x: AnyRef) => x.asInstanceOf[java.lang.Long].longValue)
-    case DoubleK => Ordering.by((x: AnyRef) =>
-      x.asInstanceOf[java.lang.Double].doubleValue)(Ordering.Double.TotalOrdering)
-    case StringK => Ordering.by((x: AnyRef) => x.asInstanceOf[String])
+  /** One analyzed aggregate the fold maintains over the projected delta
+    * columns `args` (its inputs) and `filter` (its FILTER predicate).
+    * COUNT / SUM / AVG are ±-foldable: a live non-null count and an exact
+    * sum. MIN / MAX keep a per-group ORDERED COUNT-MULTISET (`bag`) of
+    * live values in Spark's ordering for the input type, so a retraction
+    * of the current extremum re-derives the next one exactly (the
+    * transition ±-foldable aggregates never face). COUNT(DISTINCT col)
+    * keys the same multiset by value: its count is the bag's key count,
+    * and it DECREASES exactly when the last duplicate of a value
+    * retracts. */
+  private final class FoldAgg(val fn: DeclarativeAggregate,
+      val args: Seq[Int], val filter: Option[Int], val distinct: Boolean) {
+    val bag: Option[Ordering[Any]] =
+      if (distinct || fn.isInstanceOf[Min] || fn.isInstanceOf[Max])
+        Some(TypeUtils.getInterpretedOrdering(fn.children.head.dataType))
+      else None
   }
-
-  /** The per-aggregate incremental state a retraction stream maintains
-    * exactly: COUNT(*) / COUNT(col) / SUM / AVG are ±-foldable scalars;
-    * MIN / MAX keep a per-group ORDERED COUNT-MULTISET of live values, so
-    * a retraction of the current extremum re-derives the next one exactly
-    * (the transition ±-foldable aggregates never face — r9's "falls
-    * through" gap, now closed). */
-  private sealed trait AggOp
-  private case object CountStar extends AggOp
-  private case class CountCol(idx: Int) extends AggOp
-  private case class SumCol(idx: Int, kind: ValKind) extends AggOp
-  private case class AvgCol(idx: Int, kind: ValKind) extends AggOp
-  private case class MinCol(idx: Int, kind: ValKind) extends AggOp
-  private case class MaxCol(idx: Int, kind: ValKind) extends AggOp
-  /** COUNT(DISTINCT col): the MIN/MAX count-multiset re-keyed as
-    * per-(group, value) membership counts — the distinct count is the
-    * bag's key count, and it DECREASES exactly when the last duplicate
-    * of a value retracts (the transition a plain ±-fold cannot see). */
-  private case class DistinctCol(idx: Int, kind: ValKind) extends AggOp
 
   /** The source-agnostic core of the composed continuous aggregate
     * statement: a matched [[DeltaSource]] plus the parsed Aggregate /
-    * WHERE / HAVING in — a running Statement out. By the time this is
-    * called the source IS changelog feed(s), so every unsupported
+    * HAVING / ORDER BY … LIMIT in — a running Statement out. By the time
+    * this is called the source IS changelog feed(s), so every unsupported
     * construct rejects loudly (see [[UnsupportedContinuousStatement]])
     * instead of falling through to a route that would mis-evaluate.
     *
+    * Typing is Catalyst's: the statement is bound onto a relation of the
+    * view's delta attributes (through the source's resolver) and analyzed
+    * ONCE, so output types, argument coercion (casts, `GROUP BY 1`, CASE,
+    * tumble's `pmod`) and finalization are Spark's own. One
+    * executor-side projection evaluates the analyzed grouping
+    * expressions and aggregate inputs over the delta stream; the driver
+    * folds exact accumulators per group and emits each group through its
+    * aggregate functions' `evaluateExpression` and the Aggregate's result
+    * expressions.
+    *
     * Fold state is O(output groups) driver-side (the dashboard-size
     * contract; heavy join/upsert state lives in the executor StateStore
-    * inside the IVM operators): per group a live-row count, exact sums
-    * (longs for integral columns, arbitrary-precision decimals for
-    * fractional — incremental ≡ replay bit-for-bit, see [[exactNum]]),
-    * and an ordered count-multiset per MIN/MAX. An UNGROUPED aggregate
-    * is the single always-live group: SQL semantics give one row even
-    * over an empty view (COUNT 0, others NULL), and the changelog keys
-    * every snapshot row to the empty key so transitions wire as -U/+U. */
+    * inside the IVM operators). An UNGROUPED aggregate is the single
+    * always-live group: SQL semantics give one row even over an empty
+    * view (COUNT 0, others NULL), and the changelog keys every snapshot
+    * row to the empty key so transitions wire as -U/+U. */
   private def aggOverDeltas(ds: DeltaSource, agg: Aggregate,
       having: Option[Expression],
       sql: String, name: String, properties: Map[String, String],
       topK: Option[(SortOrder, Int)] = None,
       tumble: Option[(String, Long)] = None,
       sessionMode: Boolean = false): Statement = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
     def bail(what: String): Nothing = unsupported(sql, what)
-    def viewCol(a: UnresolvedAttribute): Int =
+    // ---- ONE analysis, over a relation whose attributes ARE the delta
+    // stream's, so every analyzed expression also projects over it
+    val rel = LocalRelation(ds.deltas.queryExecution.analyzed.output.drop(1))
+    def viewAttr(a: UnresolvedAttribute): Attribute = rel.output(
       ds.resolve(a).getOrElse(bail(s"column ${a.nameParts.mkString(".")} " +
-        s"does not resolve in the maintained view (${ds.viewCols.mkString(", ")})"))
-    def colKind(i: Int): ValKind = kindOf(ds.types(i)).getOrElse(
-      bail(s"view column ${ds.viewCols(i)} has type ${ds.types(i)}, which " +
-        "the incremental fold cannot maintain (numeric and string only)"))
-    // aggregate argument: a view column, optionally under CAST(… AS
-    // DOUBLE) — other cast targets (INT truncation etc.) would change the
-    // value, so they reject rather than mis-evaluate
-    def aggArg(e: Expression): (Int, ValKind) = e match {
-      case a: UnresolvedAttribute =>
-        val i = viewCol(a); (i, colKind(i))
-      case Cast(a: UnresolvedAttribute, DoubleType, _, _) =>
-        val i = viewCol(a); colKind(i); (i, DoubleK)
-      case other =>
-        bail(s"aggregate argument $other is not a view column " +
-          "(optionally CAST(col AS DOUBLE))")
+        s"does not resolve in the maintained view (${ds.viewCols.mkString(", ")})")))
+    val select: Seq[NamedExpression] = agg.aggregateExpressions.map {
+      // a bare column keeps its SQL name, as in spark.sql (`a.key` → key)
+      case a: UnresolvedAttribute => Alias(viewAttr(a), a.nameParts.last)()
+      case al: Alias =>
+        al.transform { case a: UnresolvedAttribute => viewAttr(a) }
+          .asInstanceOf[Alias]
+      case other => bail(s"SELECT item $other must be a grouping column " +
+        "or an aliased aggregate (the engine-wide oracle discipline)")
     }
-    val groupIdx: Seq[Int] = agg.groupingExpressions.map {
-      case a: UnresolvedAttribute => viewCol(a)
-      case other => bail(s"GROUP BY expression $other is not a view column")
-    }
-    // SELECT list → (output name, Left(view col idx) | Right(agg op))
-    val outCols: Seq[(String, Either[Int, AggOp])] =
-      agg.aggregateExpressions.map {
-        case a: UnresolvedAttribute =>
-          val i = viewCol(a)
-          if (!groupIdx.contains(i))
-            bail(s"bare column ${a.nameParts.mkString(".")} is not in GROUP BY")
-          (a.nameParts.last, Left(i))
-        case Alias(child, outName) =>
-          child match {
-            case a: UnresolvedAttribute =>
-              val i = viewCol(a)
-              if (!groupIdx.contains(i))
-                bail(s"bare column ${a.nameParts.mkString(".")} is not in GROUP BY")
-              (outName, Left(i))
-            case f: UnresolvedFunction if f.isDistinct =>
-              val op = (f.nameParts.map(_.toLowerCase).mkString("."),
-                f.arguments) match {
-                case ("count", Seq(arg)) =>
-                  (DistinctCol.apply _).tupled(aggArg(arg))
-                case (fn, _) =>
-                  bail(s"DISTINCT aggregate $fn is not maintainable on a " +
-                    "retraction stream here (COUNT(DISTINCT col) only)")
-              }
-              (outName, Right(op))
-            case f: UnresolvedFunction if !f.isDistinct =>
-              val op = (f.nameParts.map(_.toLowerCase).mkString("."),
-                f.arguments) match {
-                case ("count", Seq(UnresolvedStar(None))) => CountStar
-                // count over a non-null literal counts rows; count(NULL)
-                // is always 0 and must not take the row-count path
-                case ("count", Seq(Literal(v, _))) if v != null => CountStar
-                case ("count", Seq(arg)) => CountCol(aggArg(arg)._1)
-                case ("sum", Seq(arg)) =>
-                  val (i, k) = aggArg(arg)
-                  SumCol(i, if (k == LongK) LongK else DoubleK)
-                case ("avg", Seq(arg)) =>
-                  val (i, k) = aggArg(arg)
-                  AvgCol(i, if (k == LongK) LongK else DoubleK)
-                case ("min", Seq(arg)) => (MinCol.apply _).tupled(aggArg(arg))
-                case ("max", Seq(arg)) => (MaxCol.apply _).tupled(aggArg(arg))
-                case (fn, _) =>
-                  bail(s"aggregate $fn is not maintainable on a retraction " +
-                    "stream here (supported: COUNT/SUM/AVG/MIN/MAX and " +
-                    "COUNT(DISTINCT col))")
-              }
-              (outName, Right(op))
-            case other =>
-              bail(s"SELECT item $other must be a grouping column or an " +
-                "aliased aggregate over one")
-          }
-        case _: UnresolvedFunction =>
-          bail("aggregates must be aliased (the engine-wide oracle discipline)")
-        case other =>
-          bail(s"SELECT item $other must be a grouping column or an " +
-            "aliased aggregate")
-      }
-    // every grouping column must be in the SELECT list: the synthesizer
-    // retracts by value equality on the key columns, so two groups folding
-    // to identical visible rows would corrupt the changelog
-    if (!groupIdx.forall(i => outCols.exists(_._2 == Left(i))))
-      bail("every GROUP BY column must appear in the SELECT list (the " +
-        "changelog retracts groups by their visible key values)")
-    val ungrouped = groupIdx.isEmpty
-    // window eviction metadata: the position of the window-start column
-    // within the GROUP KEY and the window width (see rewriteTumble /
-    // rewriteHop — the fold watermarks and evicts over it)
-    val tumblePos: Option[(Int, Long)] = tumble.map { case (n, w) =>
-      outCols.find(_._1 == n) match {
-        case Some((_, Left(i))) if groupIdx.contains(i) =>
-          (groupIdx.indexOf(i), w)
-        case _ =>
-          bail("the event-time window must be a GROUP BY expression")
-      }
-    }
-    // output schema (also the rows HAVING and ORDER BY evaluate over)
-    def kindType(k: ValKind): DataType = k match {
-      case LongK => LongType
-      case DoubleK => DoubleType
-      case StringK => StringType
-    }
-    val fields = StructType(outCols.map {
-      case (n, Left(i)) => StructField(n, ds.types(i))
-      case (n, Right(CountStar)) => StructField(n, LongType)
-      case (n, Right(CountCol(_))) => StructField(n, LongType)
-      case (n, Right(SumCol(_, LongK))) => StructField(n, LongType)
-      case (n, Right(SumCol(_, _))) => StructField(n, DoubleType)
-      case (n, Right(AvgCol(_, _))) => StructField(n, DoubleType)
-      // MIN/MAX canonicalize under their kind (an INT dim column compares
-      // — and emits — as long)
-      case (n, Right(MinCol(_, k))) => StructField(n, kindType(k))
-      case (n, Right(MaxCol(_, k))) => StructField(n, kindType(k))
-      case (n, Right(DistinctCol(_, _))) => StructField(n, LongType)
+    val outNames = select.map(_.name)
+    val resolver = spark.sessionState.conf.resolver
+    def isOutput(a: UnresolvedAttribute): Boolean =
+      a.nameParts.length == 1 && outNames.exists(resolver(_, a.nameParts.head))
+    val groups = agg.groupingExpressions.map(_.transform {
+      // GROUP BY <alias>: left to the analyzer (Spark's groupByAliases)
+      case a: UnresolvedAttribute if ds.resolve(a).isEmpty && isOutput(a) => a
+      case a: UnresolvedAttribute => viewAttr(a)
     })
-    // WHERE was already applied executor-side in routeAgg. HAVING and
-    // ORDER BY act on the fold's EMITTED snapshots, as Spark's own bound
-    // expressions over Catalyst rows of the output schema. They resolve
-    // against the OUTPUT columns (aliases + group cols); the error names
-    // the resolving CLAUSE — an ORDER BY typo must not be blamed on a
-    // HAVING the statement doesn't have
-    def outIdx(clause: String)(a: UnresolvedAttribute): Int =
-      a.nameParts match {
-        case Seq(n) if outCols.exists(_._1 == n) =>
-          outCols.indexWhere(_._1 == n)
-        case _ => bail(s"$clause column ${a.nameParts.mkString(".")} does " +
-          "not resolve among the output columns " +
-          s"(${outCols.map(_._1).mkString(", ")})")
+    // HAVING and ORDER BY name OUTPUT columns first, as in spark.sql; a
+    // view column binds as such. The error names the resolving CLAUSE —
+    // an ORDER BY typo must not be blamed on a HAVING the statement
+    // doesn't have
+    def bindClause(clause: String)(e: Expression): Expression = e.transform {
+      case a: UnresolvedAttribute if isOutput(a) => a
+      case a: UnresolvedAttribute => rel.output(ds.resolve(a).getOrElse(
+        bail(s"$clause column ${a.nameParts.mkString(".")} does not " +
+          s"resolve among the output columns (${outNames.mkString(", ")})")))
+    }
+    val aggPlan = Aggregate(groups, select, rel, None)
+    val havingPlan = having.fold[LogicalPlan](aggPlan)(c =>
+      UnresolvedHaving(bindClause("HAVING")(c), aggPlan))
+    val plan = topK.fold(havingPlan) { case (order, k) =>
+      if (k <= 0) bail("a maintained top-k needs a positive LIMIT")
+      Sort(Seq(bindClause("ORDER BY")(order).asInstanceOf[SortOrder]),
+        global = true, havingPlan, None)
+    }
+    val analyzed = try {
+      val qe = spark.sessionState.executePlan(plan)
+      qe.assertAnalyzed()
+      qe.analyzed
+    } catch { case e: AnalysisException =>
+      bail("the statement does not analyze over the maintained view " +
+        s"(${ds.viewCols.mkString(", ")}), so the fold cannot maintain it: " +
+        e.getMessage)
+    }
+    val (a, cond, order) = analyzed match {
+      case Sort(Seq(o), true, Filter(c, a: Aggregate), _) => (a, Some(c), Some(o))
+      case Sort(Seq(o), true, a: Aggregate, _) => (a, None, Some(o))
+      case Filter(c, a: Aggregate) => (a, Some(c), None)
+      case a: Aggregate => (a, None, None)
+      // the analyzer added a hidden column the emitted rows do not carry
+      case _ => bail("HAVING and ORDER BY may name only the output columns " +
+        s"(${outNames.mkString(", ")}) and the aggregates they carry")
+    }
+    // a non-deterministic projection cannot commute with retraction (the
+    // analyzer pulls a non-deterministic GROUP BY below the Aggregate)
+    if (!a.child.isInstanceOf[LocalRelation] ||
+        !a.expressions.forall(_.deterministic))
+      bail("the projected continuous view could not be built: an " +
+        "expression is non-deterministic (projections must commute with " +
+        "retraction)")
+    if (!cond.forall(_.deterministic))
+      bail("a non-deterministic HAVING cannot filter a maintained view " +
+        "(a group must pass or fail identically on every snapshot)")
+    // the output column carrying each grouping expression: the
+    // synthesizer retracts groups by their visible key values, so two
+    // groups folding to identical visible rows would corrupt the changelog
+    val keyOut: Seq[Int] = a.groupingExpressions.zip(groupingOutputs(a)).map {
+      case (_, Some(i)) => i
+      case (g, None) => bail(s"GROUP BY expression ${g.sql} must appear in " +
+        "the SELECT list (the changelog retracts groups by their visible " +
+        "key values)")
+    }
+    val ungrouped = keyOut.isEmpty
+    // window eviction metadata: the window-start column's position within
+    // the GROUP KEY and the window width (see rewriteTumble / rewriteHop /
+    // rewriteSession — the fold watermarks and evicts over it)
+    val tumblePos: Option[(Int, Long)] = tumble.map { case (n, w) =>
+      keyOut.indexWhere(i => a.output(i).name == n) match {
+        case -1 => bail("the event-time window must be a GROUP BY expression")
+        case p => (p, w)
       }
-    // HAVING filters the fold's emitted snapshot — a group crossing the
-    // boundary emits the -D / +I the complete-mode diff produces. The
-    // condition is analyzed ONCE, as a Filter over a relation carrying
-    // the output schema (Spark's type coercion and function resolution)
-    val havingPred: Option[BasePredicate] = having.map { cond =>
-      val rel = LocalRelation(
-        fields.map(f => AttributeReference(f.name, f.dataType)()))
-      val bound = cond.transform {
-        case a: UnresolvedAttribute => rel.output(outIdx("HAVING")(a))
+    }
+    val aggExprs = a.aggregateExpressions.flatMap(_.collect {
+      case ae: AggregateExpression => ae
+    }).foldLeft(Vector.empty[AggregateExpression]) { (acc, ae) =>
+      if (acc.exists(_.semanticEquals(ae))) acc else acc :+ ae
+    }
+    // ---- ONE executor-side projection: op, the grouping expressions,
+    // then every aggregate input and FILTER predicate
+    val inputs = mutable.ArrayBuffer[Expression](a.groupingExpressions: _*)
+    def input(e: Expression): Int = // position in the projected row
+      1 + (inputs.indexWhere(_.semanticEquals(e)) match {
+        case -1 => inputs += e; inputs.length - 1
+        case i => i
+      })
+    val aggs = aggExprs.map { ae =>
+      val fn = ae.aggregateFunction match {
+        case c: Count if !ae.isDistinct || c.children.length == 1 => c
+        case f @ (_: Min | _: Max) if !ae.isDistinct => f
+        case f @ (_: Sum | _: Average) if !ae.isDistinct =>
+          f.aggBufferAttributes.head.dataType match {
+            case LongType | DoubleType | _: DecimalType => f
+            case t => bail(s"${f.prettyName} accumulates as ${t.sql}, " +
+              "which the incremental fold cannot maintain (numeric only)")
+          }
+        case f if ae.isDistinct =>
+          bail(s"DISTINCT aggregate ${f.prettyName} is not maintainable on " +
+            "a retraction stream here (COUNT(DISTINCT col) only)")
+        case f =>
+          bail(s"aggregate ${f.prettyName} is not maintainable on a " +
+            "retraction stream here (supported: COUNT/SUM/AVG/MIN/MAX and " +
+            "COUNT(DISTINCT col))")
       }
-      val f = try {
-        val qe = spark.sessionState.executePlan(Filter(bound, rel))
-        qe.assertAnalyzed()
-        qe.analyzed.collectFirst { case x: Filter => x }.get
-      } catch { case e: AnalysisException =>
-        bail(s"HAVING does not analyze over the output columns: ${e.getMessage}")
-      }
-      if (!f.condition.deterministic)
-        bail("a non-deterministic HAVING cannot filter a maintained view " +
-          "(a group must pass or fail identically on every snapshot)")
-      // the optimizer's substitutions that make an analyzed condition
-      // evaluable: a RuntimeReplaceable (BETWEEN, …) becomes its
-      // replacement, and a With (a shared operand) inlines its
-      // definitions — sound, as the condition is deterministic
-      def evaluable(e: Expression): Expression = e match {
-        case r: RuntimeReplaceable => evaluable(r.replacement)
+      new FoldAgg(fn.asInstanceOf[DeclarativeAggregate], fn.children.map(input),
+        ae.filter.map(input), ae.isDistinct)
+    }
+    val projected = ds.deltas.select((ds.deltas("op") +:
+      inputs.toSeq.zipWithIndex.map { case (e, i) =>
+        ColumnBridge.column(e).as(s"_$i")
+      }): _*)
+    // ---- driver-side evaluation over emitted groups, as Spark's own
+    // bound expressions. The optimizer's substitutions make an analyzed
+    // expression evaluable: a RuntimeReplaceable (BETWEEN, …) becomes its
+    // replacement, and a With (a shared operand) inlines its definitions
+    // — sound, as every expression here is deterministic
+    def evaluable(clause: String, e: Expression): Expression = {
+      def go(x: Expression): Expression = x match {
+        case r: RuntimeReplaceable => go(r.replacement)
         case With(child, defs) =>
-          val byId = defs.map(d => d.id -> evaluable(d.child)).toMap
-          evaluable(child).transform {
+          val byId = defs.map(d => d.id -> go(d.child)).toMap
+          go(child).transform {
             case r: CommonExpressionRef if byId.contains(r.id) => byId(r.id)
           }
-        case other => other.mapChildren(evaluable)
+        case other => other.mapChildren(go)
       }
-      val pred = evaluable(f.condition)
-      // (an attribute is unevaluable only until Predicate.create binds it)
-      pred.find(e => e.isInstanceOf[Unevaluable] &&
-          !e.isInstanceOf[Attribute]).foreach { e =>
-        bail(s"HAVING expression ${e.sql} cannot be evaluated over the " +
-          "fold's snapshots")
-      }
-      val p = Predicate.create(pred, rel.output)
+      val out = go(e)
+      // (an attribute is unevaluable only until it is bound)
+      out.find(n => n.isInstanceOf[Unevaluable] && !n.isInstanceOf[Attribute])
+        .foreach { n =>
+          bail(s"$clause expression ${n.sql} cannot be evaluated over the " +
+            "fold's snapshots")
+        }
+      out
+    }
+    // each aggregate finalizes through its own evaluateExpression over a
+    // buffer built from the group's accumulators …
+    val finals = aggs.map(f => evaluable("SELECT", BindReferences
+      .bindReference(f.fn.evaluateExpression, f.fn.aggBufferAttributes)))
+    // … and the Aggregate's result expressions read (group key, results)
+    val groupAttrs = a.groupingExpressions.map(g =>
+      AttributeReference("group", g.dataType, g.nullable)())
+    val aggAttrs = aggExprs.map(_.resultAttribute)
+    val results = a.aggregateExpressions.map(e => evaluable("SELECT",
+      BindReferences.bindReference(e.transformDown {
+        case ae: AggregateExpression =>
+          aggAttrs(aggExprs.indexWhere(_.semanticEquals(ae)))
+        case x if !x.foldable &&
+            a.groupingExpressions.exists(_.semanticEquals(x)) =>
+          groupAttrs(a.groupingExpressions.indexWhere(_.semanticEquals(x)))
+      }, AttributeSeq(groupAttrs ++ aggAttrs))))
+    // HAVING filters the fold's emitted snapshot — a group crossing the
+    // boundary emits the -D / +I the complete-mode diff produces
+    val havingPred: Option[BasePredicate] = cond.map { c =>
+      val p = Predicate.create(evaluable("HAVING", c), a.output)
       p.initialize(0)
       p
     }
     // ORDER BY … LIMIT k over the AGGREGATE view — Flink's Top-N over a
     // grouped aggregate (the leaderboard statement): the emitted
-    // snapshot sorts by the output column and keeps k rows, so groups
-    // crossing the k-boundary wire the same +I/-D membership
-    // transitions as the feed-level top-k. Ties break by the group-key
-    // columns ascending — deterministic for any arrival order.
-    val topOrder: Option[(Ordering[InternalRow], Int)] = topK.map {
-      case (order, k) =>
-        if (k <= 0) bail("a maintained top-k needs a positive LIMIT")
-        val sIdx = order.child match {
-          case a: UnresolvedAttribute => outIdx("ORDER BY")(a)
-          case other =>
-            bail(s"ORDER BY expression $other is not an output column")
-        }
-        val keyIdxs = outCols.zipWithIndex.collect {
-          case ((_, Left(i)), at) if groupIdx.contains(i) => at
-        }
-        (topKOrdering(fields, sIdx, order, keyIdxs, sql), k)
+    // snapshot sorts and keeps k rows, so groups crossing the k-boundary
+    // wire the same +I/-D membership transitions as the feed-level
+    // top-k. Ties break by the group-key columns ascending —
+    // deterministic for any arrival order.
+    val topOrder: Option[(Ordering[InternalRow], Int)] = order.map { o =>
+      (topKOrdering(BindReferences.bindReference(
+        o.copy(child = evaluable("ORDER BY", o.child)), AttributeSeq(a.output)),
+        a.schema, keyOut), topK.get._2)
     }
-    // without HAVING or ORDER BY the snapshot passes through unconverted
-    val presentation: Seq[Vector[Any]] => Seq[Vector[Any]] =
-      if (havingPred.isEmpty && topOrder.isEmpty) identity
-      else {
-        val toRow = catalystRows(fields)
-        rows => {
-          val all = rows.map(r => (toRow(r), r))
-          val kept = havingPred.fold(all)(p => all.filter(x => p.eval(x._1)))
-          topOrder.fold(kept) { case (ord, k) =>
-            kept.sortBy(_._1)(ord).take(k)
-          }.map(_._2)
-        }
-      }
+    val toCatalyst =
+      CatalystTypeConverters.createToCatalystConverter(projected.schema)
+    val toScala = CatalystTypeConverters.createToScalaConverter(a.schema)
     // ---- driver-side incremental fold over the source's retraction
     // deltas; the heavy join/upsert state stays in the executor StateStore
-    val aggOps = outCols.collect { case (_, Right(op)) => op }
-    val nAgg = aggOps.length
     final class GState {
       var rows: Long = 0L
-      val counts = new Array[Long](nAgg)
-      val lsums = new Array[Long](nAgg)
-      val dsums: Array[java.math.BigDecimal] =
-        Array.fill(nAgg)(java.math.BigDecimal.ZERO)
-      val bags: Array[mutable.TreeMap[AnyRef, Long]] = aggOps.map {
-        case MinCol(_, k) => mutable.TreeMap.empty[AnyRef, Long](ordFor(k))
-        case MaxCol(_, k) => mutable.TreeMap.empty[AnyRef, Long](ordFor(k))
-        case DistinctCol(_, k) => mutable.TreeMap.empty[AnyRef, Long](ordFor(k))
-        case _ => null
-      }.toArray
+      val counts = new Array[Long](aggs.length)
+      val sums: Array[java.math.BigDecimal] =
+        Array.fill(aggs.length)(java.math.BigDecimal.ZERO)
+      val bags: Array[mutable.TreeMap[Any, Long]] =
+        aggs.map(_.bag.map(mutable.TreeMap.empty[Any, Long](_)).orNull).toArray
+    }
+    // the aggregate's Catalyst buffer for one group's accumulators
+    def buffer(k: Int, g: GState): InternalRow = aggs(k).fn match {
+      case _: Count =>
+        InternalRow(if (aggs(k).distinct) g.bags(k).size.toLong else g.counts(k))
+      case _: Min => InternalRow(if (g.bags(k).isEmpty) null else g.bags(k).firstKey)
+      case _: Max => InternalRow(if (g.bags(k).isEmpty) null else g.bags(k).lastKey)
+      case fn =>
+        val sum = if (g.counts(k) == 0L && fn.isInstanceOf[Sum]) null
+          else bufferSum(g.sums(k), fn.aggBufferAttributes.head.dataType)
+        // a DECIMAL SUM's second slot is isEmpty, an AVG's its count
+        if (fn.aggBufferAttributes.length == 1) InternalRow(sum)
+        else InternalRow(sum,
+          if (fn.isInstanceOf[Sum]) g.counts(k) == 0L else g.counts(k))
+    }
+    def emit(gkey: Vector[Any], g: GState): InternalRow = {
+      val in = new GenericInternalRow(
+        (gkey ++ aggs.indices.map(k => finals(k).eval(buffer(k, g)))).toArray)
+      new GenericInternalRow(results.map(_.eval(in)).toArray)
     }
     val state = mutable.LinkedHashMap.empty[Vector[Any], GState]
     // the fail-fast bound on this fold's driver state: groups and bag
@@ -1901,8 +1760,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     // BEFORE the next value is stored — so a high-cardinality stream dies
     // via the documented error, never a silent driver OOM
     val budget = new FoldStateBudget
-    def bagUpdate(bag: mutable.TreeMap[AnyRef, Long], x: AnyRef,
-        sign: Long): Unit = {
+    def bagUpdate(bag: mutable.TreeMap[Any, Long], x: Any, sign: Long): Unit = {
       val prev = bag.getOrElse(x, 0L)
       val next = prev + sign
       if (next < 0L)
@@ -1936,16 +1794,18 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     def fold(deltas: Seq[Vector[Any]]): Seq[Seq[Vector[Any]]] = {
       val wmAtStart = watermark
       var batchMax = Long.MinValue
-      deltas.foreach { row =>
-        // delta rows lead with the changelog op; view columns follow
+      deltas.foreach { d =>
+        // projected delta rows lead with the changelog op; the group key
+        // and the aggregate inputs follow, as Catalyst values
+        val row = toCatalyst(Row.fromSeq(d)).asInstanceOf[InternalRow]
+          .toSeq(projected.schema).toVector
         val sign = row(0).asInstanceOf[Int] match {
           case 0 | 2 => 1L // +I / +U add
           case 1 | 3 => -1L // -U / -D retract
           case other => throw new IllegalStateException(
             s"delta carried an invalid changelog op: $other")
         }
-        val view = row.drop(1)
-        val gkey = groupIdx.map(view).toVector
+        val gkey = row.slice(1, 1 + groupAttrs.length)
         val late = tumblePos.exists { case (p, w) =>
           gkey(p) match {
             // a NULL event time belongs to no window: the row leaves the
@@ -1982,7 +1842,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
               }
           }
         }
-        if (!late) foldRow(sign, view, gkey)
+        if (!late) foldRow(sign, row, gkey)
       }
       watermark = math.max(watermark, batchMax)
       // eviction: every window whose end the watermark has passed leaves
@@ -2034,58 +1894,27 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
         }
       }
     }
-    def foldRow(sign: Long, view: Vector[Any], gkey: Vector[Any]): Unit = {
-        val g = state.getOrElseUpdate(gkey, { budget.grow(); new GState })
-        g.rows += sign
-        var k = 0
-        aggOps.foreach { op =>
-          op match {
-            case CountStar => ()
-            case CountCol(i) =>
-              if (view(i) != null) g.counts(k) += sign
-            case SumCol(i, LongK) =>
-              val x = view(i)
-              if (x != null) {
-                g.lsums(k) += sign * x.asInstanceOf[Number].longValue
-                g.counts(k) += sign
-              }
-            case SumCol(i, _) =>
-              val b = exactNum(view(i))
-              if (b != null) {
-                g.dsums(k) =
-                  if (sign > 0) g.dsums(k).add(b) else g.dsums(k).subtract(b)
-                g.counts(k) += sign
-              }
-            case AvgCol(i, LongK) =>
-              val x = view(i)
-              if (x != null) {
-                g.lsums(k) += sign * x.asInstanceOf[Number].longValue
-                g.counts(k) += sign
-              }
-            case AvgCol(i, _) =>
-              val b = exactNum(view(i))
-              if (b != null) {
-                g.dsums(k) =
-                  if (sign > 0) g.dsums(k).add(b) else g.dsums(k).subtract(b)
-                g.counts(k) += sign
-              }
-            case MinCol(i, kind) =>
-              val x = canon(view(i), kind)
-              if (x != null) { bagUpdate(g.bags(k), x, sign); g.counts(k) += sign }
-            case MaxCol(i, kind) =>
-              val x = canon(view(i), kind)
-              if (x != null) { bagUpdate(g.bags(k), x, sign); g.counts(k) += sign }
-            case DistinctCol(i, kind) =>
-              val x = canon(view(i), kind)
-              if (x != null) { bagUpdate(g.bags(k), x, sign); g.counts(k) += sign }
-          }
-          k += 1
+    def foldRow(sign: Long, row: Vector[Any], gkey: Vector[Any]): Unit = {
+      val g = state.getOrElseUpdate(gkey, { budget.grow(); new GState })
+      g.rows += sign
+      aggs.zipWithIndex.foreach { case (f, k) =>
+        val xs = f.args.map(row)
+        if (f.filter.forall(row(_) == true) && !xs.contains(null)) f.fn match {
+          case _: Count if !f.distinct => g.counts(k) += sign
+          case _: Sum | _: Average =>
+            val b = exactNum(xs.head)
+            if (b != null) {
+              g.sums(k) = if (sign > 0) g.sums(k).add(b) else g.sums(k).subtract(b)
+              g.counts(k) += sign
+            }
+          case _ => bagUpdate(g.bags(k), xs.head, sign)
         }
-        // a grouped group dies with its last row; the UNGROUPED group
-        // always lives (SQL: one row even over an empty input). Its bags
-        // are necessarily empty at rows == 0 (every bag count is bounded
-        // by the group's live non-null rows), so one shrink per group.
-        if (!ungrouped && g.rows <= 0) { state.remove(gkey); budget.shrink() }
+      }
+      // a grouped group dies with its last row; the UNGROUPED group
+      // always lives (SQL: one row even over an empty input). Its bags
+      // are necessarily empty at rows == 0 (every bag count is bounded
+      // by the group's live non-null rows), so one shrink per group.
+      if (!ungrouped && g.rows <= 0) { state.remove(gkey); budget.shrink() }
     }
     // SESSION support: group the per-(keys, time) buckets by their
     // static-key part (insertion order — deterministic), sort each
@@ -2122,16 +1951,13 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       val m = new GState
       run.foreach { case (_, g) =>
         m.rows += g.rows
-        var k = 0
-        while (k < nAgg) {
+        aggs.indices.foreach { k =>
           m.counts(k) += g.counts(k)
-          m.lsums(k) += g.lsums(k)
-          m.dsums(k) = m.dsums(k).add(g.dsums(k))
+          m.sums(k) = m.sums(k).add(g.sums(k))
           if (m.bags(k) != null)
             g.bags(k).foreach { case (x, c) =>
               m.bags(k).update(x, m.bags(k).getOrElse(x, 0L) + c)
             }
-          k += 1
         }
       }
       m
@@ -2147,87 +1973,38 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
         state.getOrElseUpdate(Vector.empty, { budget.grow(); new GState })
       snapshotOf(state.iterator)
     }
+    // HAVING and ORDER BY … LIMIT act on the emitted rows; the survivors
+    // convert to the external values the changelog wire carries
     def snapshotOf(
         entries: Iterator[(Vector[Any], GState)]): Seq[Vector[Any]] = {
-      val snapshot = entries.map { case (gkey, g) =>
-        var k = -1
-        outCols.map {
-          case (_, Left(i)) => gkey(groupIdx.indexOf(i))
-          case (_, Right(op)) =>
-            k += 1
-            op match {
-              case CountStar => java.lang.Long.valueOf(g.rows)
-              case CountCol(_) => java.lang.Long.valueOf(g.counts(k))
-              case SumCol(_, LongK) =>
-                if (g.counts(k) > 0) java.lang.Long.valueOf(g.lsums(k)) else null
-              case SumCol(_, _) =>
-                if (g.counts(k) > 0)
-                  java.lang.Double.valueOf(g.dsums(k).doubleValue) else null
-              case AvgCol(_, LongK) =>
-                if (g.counts(k) > 0)
-                  java.lang.Double.valueOf(g.lsums(k).toDouble / g.counts(k))
-                else null
-              case AvgCol(_, _) =>
-                // the correctly-rounded double of the EXACT sum, divided
-                // once — order-independent, so incremental ≡ replay
-                if (g.counts(k) > 0)
-                  java.lang.Double.valueOf(g.dsums(k).doubleValue / g.counts(k))
-                else null
-              case MinCol(_, _) =>
-                if (g.bags(k).nonEmpty) g.bags(k).firstKey else null
-              case MaxCol(_, _) =>
-                if (g.bags(k).nonEmpty) g.bags(k).lastKey else null
-              // COUNT(DISTINCT): the bag's key count — 0 (never null)
-              // over an empty group, per SQL COUNT semantics
-              case DistinctCol(_, _) =>
-                java.lang.Long.valueOf(g.bags(k).size.toLong)
-            }
-        }.toVector
-      }.toSeq
-      presentation(snapshot)
+      val rows: Vector[InternalRow] = entries.map { case (k, g) => emit(k, g) }.toVector
+      val kept = havingPred.fold(rows)(p => rows.filter(p.eval))
+      topOrder.fold(kept) { case (ord, k) => kept.sorted(ord).take(k) }
+        .map(r => toScala(r).asInstanceOf[Row].toSeq.toVector)
     }
-    val outNames = outCols.map(_._1)
-    val keyNames = outCols.collect {
-      case (n, Left(i)) if groupIdx.contains(i) => n
-    }
-    // ungrouped: keyNames is empty — the synthesizer keys every snapshot
+    // ungrouped: no key columns — the synthesizer keys every snapshot
     // row to the EMPTY key, i.e. the one always-live row, so its
     // transitions wire as -U/+U (never a spurious +I/-D pair)
-    val handle = ChangelogStream.foldingSnapshot(ds.deltas, name,
-      outNames, keyNames, fold)
-    // advertised schema ("traits.schema") is the aggregate view's — an
+    val handle = ChangelogStream.foldingSnapshot(projected, name,
+      a.output.map(_.name), keyOut.map(a.output(_).name), fold)
+    // advertised schema ("traits.schema") is the analyzed Aggregate's — an
     // empty typed frame carries it; results flow through the handle
     val schemaDf = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fields)
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], a.schema)
     new Statement(name, sql, schemaDf, Some(handle), properties)
   }
 
-  /** Fold rows (external values, positionally typed by `schema`) as
-    * Catalyst rows, for the bound HAVING / ORDER BY expressions. */
-  private def catalystRows(schema: StructType): Vector[Any] => InternalRow = {
-    val conv = CatalystTypeConverters.createToCatalystConverter(schema)
-    v => conv(Row.fromSeq(v)).asInstanceOf[InternalRow]
-  }
-
-  /** Spark's ordering for maintained top-k rows of `schema`: the sort
-    * column first (direction + null placement from the SQL), then the
-    * `tiebreak` columns ascending nulls-first — so the served k-set is
-    * identical for any arrival interleaving. A tiebreak column Spark
+  /** Spark's ordering for maintained top-k rows of `schema`: the bound
+    * sort order first (direction + null placement from the SQL), then
+    * the `tiebreak` columns ascending nulls-first — so the served k-set
+    * is identical for any arrival interleaving. A tiebreak column Spark
     * cannot order (a MAP) cannot break ties and is skipped. */
-  private def topKOrdering(schema: StructType, sortIdx: Int, order: SortOrder,
-      tiebreak: Seq[Int], sql: String): Ordering[InternalRow] = {
-    val sortCol = schema(sortIdx)
-    if (!RowOrdering.isOrderable(sortCol.dataType))
-      unsupported(sql, s"ORDER BY column ${sortCol.name} of type " +
-        s"${sortCol.dataType.sql} is not orderable")
-    def by(i: Int, dir: SortDirection, nulls: NullOrdering): SortOrder =
-      SortOrder(BoundReference(i, schema(i).dataType, nullable = true),
-        dir, nulls, Seq.empty)
-    new InterpretedOrdering(
-      by(sortIdx, order.direction, order.nullOrdering) +:
-        tiebreak.filter(i => RowOrdering.isOrderable(schema(i).dataType))
-          .map(by(_, Ascending, NullsFirst)))
-  }
+  private def topKOrdering(order: SortOrder, schema: StructType,
+      tiebreak: Seq[Int]): Ordering[InternalRow] =
+    new InterpretedOrdering(order +: tiebreak
+      .filter(i => RowOrdering.isOrderable(schema(i).dataType))
+      .map(i => SortOrder(BoundReference(i, schema(i).dataType,
+        nullable = true), Ascending, NullsFirst, Seq.empty)))
 
   /** `SELECT * FROM <source> [WHERE …] ORDER BY <col> [ASC|DESC] LIMIT
     * k` over ANY matched delta source (a feed's maintained view, a feed
@@ -2244,8 +2021,9 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     * multiset (O(live rows), driver-side): a retraction of the k-th row
     * must know the (k+1)-th, so the full order is the operator's
     * irreducible state — Flink's Top-N keeps the same. Dashboard-sized
-    * by the facade contract; the executor-side bounded-state variant is
-    * [[graft.streaming.StatefulOps.topKPerKey]]. */
+    * by the facade contract. ([[graft.streaming.StatefulOps.topKPerKey]]
+    * is no variant of it: it keeps each key's best k of an append-only
+    * stream and never retracts a row.) */
   private def topKViewStatement(ds: DeltaSource, order: SortOrder, k: Int,
       sql: String, name: String,
       properties: Map[String, String]): Statement = {
@@ -2259,12 +2037,17 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       case other =>
         unsupported(sql, s"ORDER BY expression $other is not a view column")
     }
-    val schema = StructType(ds.viewCols.zip(ds.types).map {
-      case (n, t) => StructField(n, t)
-    })
-    val ord = topKOrdering(schema, sortIdx, order,
-      ds.viewCols.indices.filterNot(_ == sortIdx), sql)
-    val toRow = catalystRows(schema)
+    val schema = StructType(ds.deltas.schema.fields.drop(1))
+    val sortCol = schema(sortIdx)
+    if (!RowOrdering.isOrderable(sortCol.dataType))
+      unsupported(sql, s"ORDER BY column ${sortCol.name} of type " +
+        s"${sortCol.dataType.sql} is not orderable")
+    val ord = topKOrdering(SortOrder(BoundReference(sortIdx,
+      sortCol.dataType, nullable = true), order.direction,
+      order.nullOrdering, Seq.empty), schema,
+      schema.indices.filterNot(_ == sortIdx))
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    val served = ds.servedCols.length
     // live VIEW rows as a counted multiset. Pure-feed views cannot hold
     // duplicates (rows carry their ids), but a static dim with fully
     // duplicate rows duplicates joined rows — so the k-selection COUNTS
@@ -2299,17 +2082,20 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
         }
       }
       Seq(live.toVector
-        .map { case (row, n) => (toRow(row), row, n) }
+        .map { case (row, n) =>
+          (toCatalyst(Row.fromSeq(row)).asInstanceOf[InternalRow], row, n)
+        }
         .sortBy(_._1)(ord)
         .flatMap { case (_, row, n) =>
           Iterator.fill(math.min(n, k.toLong).toInt)(row)
         }
-        .take(k).distinct)
+        .take(k).map(_.take(served)).distinct)
     }
     val handle = ChangelogStream.foldingSnapshot(ds.deltas, name,
-      ds.viewCols, ds.viewCols, fold)
+      ds.servedCols, ds.servedCols, fold)
     val schemaDf = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(schema.take(served)))
     new Statement(name, sql, schemaDf, Some(handle), properties)
   }
 
@@ -2331,8 +2117,11 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
 
   /** Create (or return the memoized) statement for this SQL. Streaming
     * plans start immediately with a changelog-synthesizing sink keyed on
-    * `keyCols` — or, when omitted, on the grouping columns derived from
-    * the analyzed plan; batch plans are complete on arrival. A cached
+    * `keyCols` — or, when omitted, on the output columns carrying the
+    * analyzed plan's grouping expressions (a grouping expression no output
+    * column carries rejects); an aggregate under a HAVING diffs complete
+    * snapshots, so a group leaving the HAVING retracts. Batch plans are
+    * complete on arrival. A cached
     * statement that has failed (or whose streaming query is no longer
     * active) is evicted and re-created rather than returned dead.
     *
@@ -2371,9 +2160,10 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
               val handle =
                 if (df.isStreaming) {
                   val keys = if (keyCols.nonEmpty) keyCols else derivedKeys(df)
-                  if (keys.nonEmpty)
-                    Some(ChangelogStream.updating(df, name, keys))
-                  else Some(ChangelogStream.appending(df, name))
+                  if (keys.isEmpty) Some(ChangelogStream.appending(df, name))
+                  else if (filtersAggregate(df.queryExecution.analyzed))
+                    Some(ChangelogStream.snapshotting(df, name, keys))
+                  else Some(ChangelogStream.updating(df, name, keys))
                 } else None
               new Statement(name, sql, df, handle, properties)
             }

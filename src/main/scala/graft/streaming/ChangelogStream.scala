@@ -293,7 +293,9 @@ object ChangelogStream {
   /** Start a complete-mode query with full-snapshot diffing: each batch
     * carries the entire result, and groups that leave it (e.g. crossing a
     * HAVING-style threshold) emit `-D` — the transition update mode cannot
-    * express. Only for small (dashboard-sized) results: the snapshot is
+    * express. `graft.api.Statements` starts one for a streaming statement
+    * on its default route whose plan has a HAVING (a Filter above its top
+    * aggregate). Only for small (dashboard-sized) results: the snapshot is
     * O(result), though never O(input). */
   def snapshotting(df: DataFrame, queryName: String, keyCols: Seq[String],
                    trigger: Trigger = Trigger.ProcessingTime(0),

@@ -6,8 +6,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 /** Custom keyed streaming state via flatMapGroupsWithState — the escape
   * hatch for semantics the built-in aggregates can't express (the Flink
   * runtime underlying the reference exposes the same power as keyed
-  * process functions). Used here for a running per-key counter with
-  * last-seen tracking; the shape generalizes to any per-key state machine.
+  * process functions). The statement facade runs its continuous views on
+  * two of these operators: the id-keyed upsert view of changelog feeds
+  * ([[changelogUnionUpsertStream]]) and the Z-set join between them
+  * ([[zJoinStream]]); the others are keyed state machines for streaming
+  * twins of batch queries.
   *
   * Scale: state lives in the executor StateStore partitioned by key —
   * the same sharding as a streaming aggregate; nothing accumulates on the
@@ -382,8 +385,10 @@ object StatefulOps extends Serializable {
   case class UpsertEvent(key: Long, id: Long, value: String, delete: Boolean)
 
   /** An emitted delta of a maintained feed view: `op` uses the changelog
-    * codes (0 = +I, 3 = -D, matching [[graft.changelog.Op]]). */
-  case class UpsertDelta(op: Int, key: Long, id: Long, value: String)
+    * codes (0 = +I, 3 = -D, matching [[graft.changelog.Op]]); `feed` is
+    * the index of the feed the row lives in. */
+  case class UpsertDelta(op: Int, key: Long, id: Long, value: String,
+                         feed: Int)
 
   /** Latest live row of one id — the state a feed view keeps. */
   case class UpsertState(key: Long, value: String)
@@ -418,13 +423,13 @@ object StatefulOps extends Serializable {
         OutputMode.Append, GroupStateTimeout.NoTimeout()) {
         (k: (Int, Long), rows: Iterator[(Long, Int, UpsertEvent)],
          state: GroupState[UpsertState]) =>
-          val id = k._2
+          val (feed, id) = k
           var cur = state.getOption
           val out = Seq.newBuilder[UpsertDelta]
           rows.toSeq.sortBy(_._1).foreach { case (_, _, e) =>
-            cur.foreach(s => out += UpsertDelta(3, s.key, id, s.value))
+            cur.foreach(s => out += UpsertDelta(3, s.key, id, s.value, feed))
             cur = if (e.delete) None else Some(UpsertState(e.key, e.value))
-            if (!e.delete) out += UpsertDelta(0, e.key, id, e.value)
+            if (!e.delete) out += UpsertDelta(0, e.key, id, e.value, feed)
           }
           cur match {
             case Some(s) => state.update(s)

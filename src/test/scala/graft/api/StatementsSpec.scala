@@ -764,4 +764,52 @@ class StatementsSpec extends AnyFunSuite {
       } finally stmt.stop()
     }
   }
+
+  test("default-route aggregates: a group leaving HAVING retracts, and a " +
+    "grouping column missing from the SELECT list rejects — both shapes " +
+    "replayed against spark.sql over the fed rows") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val stmts = new Statements(s)
+    def feed(name: String): MemoryStream[(String, String)] = {
+      val m = MemoryStream[(String, String)]
+      m.toDF().toDF("color", "city").createOrReplaceTempView(name)
+      m
+    }
+    val pages = Seq(
+      Seq(("brown", "oslo"), ("brown", "rome"), ("blue", "oslo")),
+      Seq(("brown", "oslo")), // brown's third row: it leaves HAVING
+      Seq(("green", "rome"), ("blue", "rome"), ("blue", "oslo")))
+    def replay(sql: String, keyCols: Seq[String], view: String,
+        mem: MemoryStream[(String, String)]): Unit = {
+      val stmt = stmts.create(sql.replace("$t", view), keyCols)
+      try {
+        assert(stmts.waitForStatus(stmt, Set(Phase.Running)).isDefined)
+        val cl = stmt.handle.get.changelog()
+        val fed = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+        pages.zipWithIndex.foreach { case (pg, i) =>
+          mem.addData(pg)
+          stmt.handle.get.processAllAvailable()
+          fed ++= pg
+          fed.toSeq.toDF("color", "city").createOrReplaceTempView(s"${view}_fed")
+          while (cl.consume(1).nonEmpty) ()
+          val expected = spark.sql(sql.replace("$t", s"${view}_fed")).collect()
+            .map(_.toSeq.toVector).toSet
+          assert(cl.collapse().rows.toSet == expected,
+            s"page $i [$sql]: collapse ${cl.collapse().rows} != spark.sql $expected")
+        }
+      } finally stmt.stop()
+    }
+    replay("SELECT color, count(*) AS c FROM $t GROUP BY color " +
+      "HAVING count(*) <= 2", Nil, "dr_having", feed("dr_having"))
+    feed("dr_keys")
+    val ex = intercept[IllegalArgumentException](stmts.create(
+      "SELECT color, count(*) AS c FROM dr_keys GROUP BY color, city"))
+    assert(ex.getMessage.contains("city"),
+      s"the error must name the missing grouping column: ${ex.getMessage}")
+    replay("SELECT color, city, count(*) AS c FROM $t GROUP BY color, city",
+      Nil, "dr_keys2", feed("dr_keys2"))
+  }
 }
