@@ -6,12 +6,12 @@ import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 
 import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedHaving, UnresolvedRelation, UnresolvedStar}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeReference, AttributeSeq, BasePredicate, BindReferences, BoundReference, CommonExpressionRef, EqualTo, Expression, GenericInternalRow, InterpretedOrdering, Literal, NamedExpression, NullsFirst, Predicate, RowOrdering, RuntimeReplaceable, SortOrder, Unevaluable, With}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, DeclarativeAggregate, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct, Filter, GlobalLimit, Join, LocalLimit, LocalRelation, LogicalPlan, Project, Sort, SubqueryAlias}
-import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftOuter, RightOuter}
+import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, JoinType, LeftOuter, RightOuter}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.types._
 
@@ -234,15 +234,16 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
   private val FeedCols = Seq("seq", "key", "id", "value", "delete")
 
   /** A registered changelog feed: a STREAMING view whose schema is
-    * EXACTLY the five feed columns. Exact — not "contains" — so a
-    * streaming view that merely happens to carry these names among
-    * others cannot silently lose its extra columns under `SELECT *` or
-    * flip from append to upsert-collapsed semantics (r9 advice). */
+    * EXACTLY the five feed columns (under the resolver). Exact — not
+    * "contains" — so a streaming view that merely happens to carry these
+    * names among others cannot silently lose its extra columns under
+    * `SELECT *` or flip from append to upsert-collapsed semantics (r9
+    * advice). */
   private def changelogFeed(name: String): Option[DataFrame] =
     try {
       val t = spark.table(name)
-      if (t.isStreaming && t.schema.fieldNames.toSet == FeedCols.toSet &&
-          t.schema.fieldNames.length == FeedCols.length)
+      if (t.isStreaming && t.schema.length == FeedCols.length &&
+          FeedCols.forall(c => t.schema.fieldNames.exists(resolver(_, c))))
         Some(t)
       else None
     } catch { case _: Exception => None }
@@ -262,13 +263,16 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     p.collect { case u: UnresolvedRelation => u.multipartIdentifier.last }
       .exists(n => changelogFeed(n).isDefined)
 
-  /** The aggregate functions the fold maintains — used to spot an
-    * ungrouped aggregate still parsed as a Project. */
-  private val AggFns = Set("count", "sum", "avg", "min", "max")
+  /** Does any expression call an aggregate function, as the session's
+    * function registry classifies it? Spots an ungrouped aggregate still
+    * parsed as a Project, whichever aggregate it calls: the fold then
+    * maintains it or rejects it by name. */
   private def hasAggFunction(es: Seq[Expression]): Boolean =
     es.exists(_.exists {
       case f: UnresolvedFunction =>
-        AggFns.contains(f.nameParts.map(_.toLowerCase).mkString("."))
+        try spark.sessionState.catalog.lookupFunctionInfo(FunctionIdentifier(
+            f.nameParts.last, f.nameParts.init.lastOption)).getGroup == "agg_funcs"
+        catch { case _: AnalysisException => false }
       case _ => false
     })
 
@@ -297,26 +301,71 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
         "mis-evaluate it (deletes read as rows, upserts double-count), " +
         s"so the statement is rejected at create(). SQL: $sql")
 
+  /** The session's identifier comparison (`spark.sql.caseSensitive`):
+    * every SQL name a continuous statement matches — view columns,
+    * relation aliases, CTE names — compares through it, as `spark.sql`
+    * does for the statement's batch twin. */
+  private def resolver: (String, String) => Boolean =
+    spark.sessionState.conf.resolver
+
+  /** One column of a maintained view: its name in the delta stream and
+    * the SQL name paths it answers to — `left_id` answers to `left_id`
+    * and `a.id`; a same-key view's `key` to `key` and, unpadded, to
+    * `a.key` / `b.key`; a padded side's hidden key only to `a.key`. */
+  private case class ViewCol(name: String, paths: Seq[Seq[String]]) {
+    /** The path `parts` names under the resolver, in the view's spelling. */
+    def pathOf(parts: Seq[String]): Option[Seq[String]] =
+      paths.find(p => p.length == parts.length &&
+        p.zip(parts).forall { case (x, y) => resolver(x, y) })
+  }
+
+  /** A relation's scope: each column answers to its name, bare and
+    * qualified by the relation's alias. */
+  private def relationCols(alias: String, names: Seq[String]): Seq[ViewCol] =
+    names.map(n => ViewCol(n, Seq(Seq(n), Seq(alias, n))))
+
+  /** The one binding from a SQL name to a column of a scope: the column
+    * with a path `a` names — None when no column does, or when several
+    * do (ambiguous, as in Catalyst). */
+  private def bind(cols: Seq[ViewCol], a: UnresolvedAttribute): Option[Int] =
+    cols.indices.filter(i => cols(i).pathOf(a.nameParts).isDefined) match {
+      case Seq(i) => Some(i)
+      case _ => None
+    }
+
   /** A matched continuous source: its exact-retraction delta stream
-    * (leading `op` column + the view columns), the maintained view's
-    * column names (positionally aligned; their types are the delta
-    * stream's own), and the resolver mapping an UNRESOLVED SQL attribute
-    * onto a view column index. The last `hidden` view columns resolve
+    * (leading `op` column + the view columns, whose types are the delta
+    * stream's own) and the view's columns with the SQL names each answers
+    * to — the source's name scope. The last `hidden` view columns resolve
     * but are not served by `SELECT *`. */
-  private case class DeltaSource(deltas: DataFrame, viewCols: Seq[String],
-                                 resolve: UnresolvedAttribute => Option[Int],
+  private case class DeltaSource(deltas: DataFrame, cols: Seq[ViewCol],
                                  hidden: Int = 0) {
+    def viewCols: Seq[String] = cols.map(_.name)
     def typeOf(i: Int): DataType = deltas.schema(i + 1).dataType
     def servedCols: Seq[String] = viewCols.dropRight(hidden)
     /** The delta stream as `SELECT *` serves it: op + the served columns. */
     def served: DataFrame =
       if (hidden == 0) deltas
       else deltas.select(("op" +: servedCols).map(deltas(_)): _*)
+    def resolve(a: UnresolvedAttribute): Option[Int] = bind(cols, a)
+    /** The SQL name view column `i` carries when a bare `a` selects it:
+      * the last part of the path `a` names, in the view's spelling
+      * (`SELECT KEY` serves a `key` column, as spark.sql does). */
+    def sqlName(i: Int, a: UnresolvedAttribute): String =
+      cols(i).pathOf(a.nameParts).fold(viewCols(i))(_.last)
+    /** The view under a subquery alias, scoped as spark.sql scopes it:
+      * each column answers to its bare name and to `q.<name>`; the inner
+      * qualifiers are out of scope. */
+    def under(q: String): DeltaSource = copy(cols = cols.map(c =>
+      c.copy(paths = c.paths.filter(_.length == 1).flatMap(p => Seq(p, q +: p)))))
   }
 
   /** Columns of a single feed's maintained view, in delta-row order
-    * after the leading op column. */
+    * after the leading op column; join conditions bind the feed's `key`
+    * and `id` by their positions. */
   private val FeedViewCols = Seq("key", "id", "value")
+  private val KeyCol = 0
+  private val IdCol = 1
 
   /** The integral types: join keys and event times over the feeds' long
     * domain. */
@@ -332,24 +381,6 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     case _ => None
   }
 
-  /** `<one side>.key = <other side>.key` with qualifiers REQUIRED and one
-    * per side: `ON a.key = a.key` is a per-key tautology (a cross join
-    * per non-null key in SQL) and must not route to the equi-join IVM
-    * (r9 advice — the old name-only check accepted it). */
-  private def keyEquality(cond: Expression, la: String, ra: String): Boolean =
-    cond match {
-      case EqualTo(a: UnresolvedAttribute, b: UnresolvedAttribute) =>
-        def qual(x: UnresolvedAttribute): Option[String] = x.nameParts match {
-          case Seq(q, "key") => Some(q)
-          case _ => None
-        }
-        (qual(a), qual(b)) match {
-          case (Some(x), Some(y)) => x != y && Set(x, y) == Set(la, ra)
-          case _ => false
-        }
-      case _ => false
-    }
-
   /** The single-feed maintained view: one feed's wire rows through the
     * exact-retraction upsert IVM
     * ([[graft.streaming.StatefulOps.changelogUnionUpsertStream]]). */
@@ -359,17 +390,8 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       feed <- changelogFeed(relName)
     } yield singleFeedSource(feed, alias)
 
-  private def singleFeedSource(feed: DataFrame, alias: String): DeltaSource = {
-    val resolve: UnresolvedAttribute => Option[Int] = a => {
-      val colName = a.nameParts match {
-        case Seq(c) if FeedViewCols.contains(c) => Some(c)
-        case Seq(q, c) if q == alias && FeedViewCols.contains(c) => Some(c)
-        case _ => None
-      }
-      colName.map(FeedViewCols.indexOf)
-    }
-    DeltaSource(feedView(Seq(feed)), FeedViewCols, resolve)
-  }
+  private def singleFeedSource(feed: DataFrame, alias: String): DeltaSource =
+    DeltaSource(feedView(Seq(feed)), relationCols(alias, FeedViewCols))
 
   /** Feeds' wire rows → the exact retraction deltas of their maintained
     * multiset union in one id-keyed upsert operator, state keyed by
@@ -392,275 +414,173 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
   private def feedView(feeds: Seq[DataFrame]): DataFrame =
     upsertDeltas(feeds).toDF().drop("feed")
 
-  /** Extend a delta source with a broadcast STATIC dim, INNER-joined on
-    * the view's `key`: the static side never changes, so a `+I` delta
-    * joins to `+I` rows and a `-D` to the identical `-D` rows —
-    * retractions cancel exactly. Dim columns append to the view by
-    * name; a dim column shadowing an existing view column rejects
-    * loudly with a rename hint (the view would be ambiguous and the
-    * shape HAS matched). */
-  private def attachStatic(ds: DeltaSource, sAlias: String,
-      static: DataFrame, jcol: String, sql: String): DeltaSource = {
+  /** Extend a delta source with a broadcast STATIC dim joined on the
+    * view's `key` = the dim's `jcol`: INNER, or LEFT with the view
+    * preserved (`outer`). The static side never changes, so a `+I` delta
+    * joins to `+I` rows (or its stable pad) and a `-D` to the identical
+    * `-D` rows — retractions cancel exactly. (A dim-preserving outer join
+    * would need pad transitions only a feed delta could drive, so it
+    * never routes.) The dim is broadcast — the dimension-table contract:
+    * at 100 TB the fact side is the feed, and a dim too big to broadcast
+    * belongs in a second feed. Dim columns append to the view, answering
+    * to their names bare and under `sAlias`; a dim column shadowing a
+    * view column rejects loudly with a rename hint (the view would be
+    * ambiguous and the shape HAS matched). */
+  private def attachStatic(ds: DeltaSource, sAlias: String, static: DataFrame,
+      jcol: String, outer: Boolean, sql: String): DeltaSource = {
     import org.apache.spark.sql.functions.broadcast
     val staticCols = static.schema.fieldNames.toSeq
-    val clash = staticCols.filter(c => (ds.viewCols :+ "op").contains(c))
+    val clash = staticCols.filter(c => ("op" +: ds.viewCols).exists(resolver(_, c)))
     if (clash.nonEmpty)
       unsupported(sql, s"static table $sAlias columns " +
         s"${clash.mkString(", ")} shadow maintained-view columns — " +
         "rename them (e.g. SELECT them under aliases into a temp view)")
     val joined = ds.deltas
-      .join(broadcast(static), ds.deltas("key") === static(jcol), "inner")
+      .join(broadcast(static), ds.deltas("key") === static(jcol),
+        if (outer) "left_outer" else "inner")
       .select((("op" +: ds.viewCols).map(ds.deltas(_)) ++
         staticCols.map(static(_))): _*)
-    val resolve: UnresolvedAttribute => Option[Int] = a => {
-      a.nameParts match {
-        case Seq(q, c) if q == sAlias && staticCols.contains(c) =>
-          Some(ds.viewCols.length + staticCols.indexOf(c))
-        case Seq(c) if staticCols.contains(c) && !ds.viewCols.contains(c) =>
-          Some(ds.viewCols.length + staticCols.indexOf(c))
-        case _ => ds.resolve(a)
-      }
-    }
-    DeltaSource(joined, ds.viewCols ++ staticCols, resolve)
+    DeltaSource(joined, ds.cols ++ relationCols(sAlias, staticCols))
   }
 
-  /** Match a left-deep all-INNER tree mixing changelog feeds (a
-    * same-key group) with one or more broadcast static dims — the
-    * enrichment statement (`a JOIN b ON a.key = b.key JOIN dims d ON
-    * a.key = d.k …`) the single-dim and pure-feed cascade matchers do
-    * not cover. The FIRST leaf must be a feed (fact first, dims after);
-    * every further feed must key-equate with a previous feed, and every
-    * dim must equate some previous feed's `key` with one of its own
-    * integral columns. The feed group is a same-key Z-set cascade under
-    * the shared-key view (`key`, `<alias>_id`/`<alias>_value`). INNER
-    * only: a pad over a static side cannot transition, and outer feed
-    * joins belong to the cascade. */
-  private def matchFeedTree(j: Join, sql: String): Option[DeltaSource] = {
-    val (rels, conds) = flattenInnerJoins(j).getOrElse(return None)
-    if (rels.length < 2) return None
-    val infos = rels.map(relInfo)
-    if (infos.exists(_.isEmpty)) return None
-    val classified: Seq[(String, Either[DataFrame, DataFrame])] =
-      infos.map(_.get).map { case (n, a) =>
-        changelogFeed(n) match {
-          case Some(f) => (a, Left(f))
-          case None => staticTable(n) match {
-            case Some(st) => (a, Right(st))
-            case None => return None
-          }
-        }
-      }
-    val aliases = classified.map(_._1)
-    if (aliases.distinct.length != aliases.length) return None
-    val feedLeaves = classified.collect { case (a, Left(f)) => (a, f) }
-    val staticLeaves = classified.collect { case (a, Right(st)) => (a, st) }
-    // pure-feed trees and single-feed⋈single-dim (incl. outer) belong to
-    // the cascade and static matchers; this one exists for the MIXED shapes
-    if (feedLeaves.isEmpty || staticLeaves.isEmpty) return None
-    if (!classified.head._2.isLeft) return None // fact first
-    val staticJoinCol = mutable.Map.empty[String, String]
-    conds.zipWithIndex.foreach { case (c, i) =>
-      val prefixFeeds = classified.take(i + 1)
-        .collect { case (a, Left(_)) => a }
-      classified(i + 1) match {
-        case (na, Left(_)) =>
-          if (!prefixFeeds.exists(pa => keyEquality(c, pa, na))) return None
-        case (na, Right(st)) =>
-          val cols = st.schema.fieldNames.toSet
-          val jc: Option[String] = c match {
-            case EqualTo(a: UnresolvedAttribute, b: UnresolvedAttribute) =>
-              def feedKey(x: UnresolvedAttribute): Boolean = x.nameParts match {
-                case Seq(q, "key") => prefixFeeds.contains(q)
-                case _ => false
-              }
-              def stCol(x: UnresolvedAttribute): Option[String] =
-                x.nameParts match {
-                  case Seq(q, col) if q == na && cols.contains(col) => Some(col)
-                  case _ => None
-                }
-              if (feedKey(a)) stCol(b)
-              else if (feedKey(b)) stCol(a)
-              else None
-            case _ => None
-          }
-          jc match {
-            case Some(col) if Integral(st.schema(col).dataType) =>
-              staticJoinCol(na) = col
-            case _ => return None
-          }
-      }
-    }
-    val feedAliases = feedLeaves.map(_._1)
-    // every feed key-equates with a previous one, so each stage can
-    // join on feed 0's key
-    var ds =
-      if (feedLeaves.length == 1)
-        singleFeedSource(feedLeaves.head._2, feedLeaves.head._1)
-      else sharedKeyView(cascadeSource(feedLeaves.map(_._2), feedAliases,
-        feedAliases.tail.map(_ => (0, true, false, false))),
-        feedAliases, feedAliases, padded = false)
-    staticLeaves.foreach { case (a, st) =>
-      ds = attachStatic(ds, a, st, staticJoinCol(a), sql)
-    }
-    Some(ds)
+  /** A leaf of a continuous join: a changelog feed or a registered BATCH
+    * dim, under its alias. Its scope is the feed's view columns or the
+    * dim's own. */
+  private case class JoinLeaf(alias: String, table: DataFrame, feed: Boolean) {
+    def cols: Seq[ViewCol] = relationCols(alias,
+      if (feed) FeedViewCols else table.schema.fieldNames.toSeq)
   }
 
-  /** Match `feed [AS a] JOIN dim [AS s] ON a.key = s.<col>` — a
-    * changelog feed equi-joined to a registered BATCH table. Because the
-    * static side never changes, IVM is a stream-static join of the
-    * feed's retraction deltas: a `+I` delta joins to `+I` rows, a `-D`
-    * to the identical `-D` rows, so retractions cancel exactly. The
-    * static side is broadcast (the dimension-table contract — at 100 TB
-    * the fact side is the feed; a dim too big to broadcast belongs in a
-    * second feed). INNER either way around; outer only on the FEED side
-    * (LEFT with the feed left / RIGHT with the feed right): pads are
-    * stable because the static side never gains or loses rows, whereas a
-    * static-side outer would need pad transitions only a feed delta
-    * could drive, so it does not route. */
-  private def matchFeedStatic(j: Join, sql: String): Option[DeltaSource] = {
-    val li = relInfo(j.left); val ri = relInfo(j.right)
-    if (li.isEmpty || ri.isEmpty || j.condition.isEmpty) return None
-    val (ln, la) = li.get; val (rn, ra) = ri.get
-    val arranged = (changelogFeed(ln), changelogFeed(rn)) match {
-      case (Some(f), None) => staticTable(rn).flatMap { st =>
-        j.joinType match {
-          case Inner => Some((f, la, st, ra, false))
-          case LeftOuter => Some((f, la, st, ra, true))
-          case _ => None
-        }
-      }
-      case (None, Some(f)) => staticTable(ln).flatMap { st =>
-        j.joinType match {
-          case Inner => Some((f, ra, st, la, false))
-          case RightOuter => Some((f, ra, st, la, true))
-          case _ => None
-        }
-      }
-      case _ => None // feed⋈feed is the cascade's
+  /** One side of a join condition bound to (leaf, column) through the
+    * leaves' scopes. */
+  private def joinRef(leaves: Seq[JoinLeaf], e: Expression): Option[(Int, Int)] =
+    e match {
+      case a: UnresolvedAttribute =>
+        val at = leaves.indices.flatMap(l => leaves(l).cols.indices.map((l, _)))
+        bind(leaves.flatMap(_.cols), a).map(at)
+      case _ => None
     }
-    val (feed, fAlias, static, sAlias, feedOuter) =
-      arranged.getOrElse(return None)
-    val staticCols = static.schema.fieldNames.toSeq
-    val jcol: String = j.condition.get match {
-      case EqualTo(a: UnresolvedAttribute, b: UnresolvedAttribute) =>
-        def feedKey(x: UnresolvedAttribute) = x.nameParts == Seq(fAlias, "key")
-        def staticCol(x: UnresolvedAttribute): Option[String] =
-          x.nameParts match {
-            case Seq(q, c) if q == sAlias && staticCols.contains(c) => Some(c)
-            case _ => None
-          }
-        (if (feedKey(a)) staticCol(b)
-         else if (feedKey(b)) staticCol(a)
-         else None).getOrElse(return None)
-      case _ => return None
-    }
-    // the feed's key is a long: the static join column must be integral
-    if (!Integral(static.schema(jcol).dataType)) return None
-    // the view's columns are the feed's three plus the dim's, by name —
-    // a dim column shadowing op/key/id/value would make the view
-    // ambiguous, and the shape HAS matched, so reject loudly (rename the
-    // dim column) rather than fall through to a mis-evaluating route
-    val clash = staticCols.filter(c => (FeedViewCols :+ "op").contains(c))
-    if (clash.nonEmpty)
-      unsupported(sql, s"static table $sAlias columns ${clash.mkString(", ")} " +
-        "shadow the maintained view's op/key/id/value — rename them " +
-        "(e.g. SELECT them under aliases into a temp view) to join a feed")
-    import org.apache.spark.sql.functions.broadcast
-    val fd = feedView(Seq(feed))
-    val joined = fd
-      .join(broadcast(static), fd("key") === static(jcol),
-        if (feedOuter) "left_outer" else "inner")
-      .select((Seq("op", "key", "id", "value").map(fd(_)) ++
-        staticCols.map(static(_))): _*)
-    val viewCols = FeedViewCols ++ staticCols
-    val resolve: UnresolvedAttribute => Option[Int] = a => {
-      val colName = a.nameParts match {
-        case Seq(c) if viewCols.count(_ == c) == 1 => Some(c)
-        case Seq(q, c) if q == fAlias && FeedViewCols.contains(c) => Some(c)
-        case Seq(q, c) if q == sAlias && staticCols.contains(c) => Some(c)
+
+  /** Match a left-deep join (`x JOIN y ON … [LEFT] JOIN z ON …`) whose
+    * leaves are changelog feeds and registered BATCH dims — every
+    * continuous join statement. Each condition `l = r` binds once
+    * ([[joinRef]]): one side to the stage's new leaf, the other to an
+    * earlier leaf, so `ON a.key = a.key` (a per-key cross join) never
+    * routes.
+    *  - All feeds: a CASCADE of Z-set binary joins ([[cascadeSource]]),
+    *    one stage per condition, each equating the NEW feed's `key` with
+    *    an earlier feed's `key` or `id`; stages may be INNER, LEFT, RIGHT
+    *    or FULL OUTER. View columns: `<alias>_key` / `<alias>_id` /
+    *    `<alias>_value` per side in join order, except where every
+    *    condition equates keys ([[sharedKeyView]]): two feeds of any join
+    *    type (`key, left_id, left_value, right_id, right_value`) and
+    *    all-INNER chains of three or more (`key`, `<alias>_id`,
+    *    `<alias>_value` …).
+    *  - Feeds and dims, fact first (a two-leaf join with the dim first
+    *    swaps sides): the feeds form a same-key group — one feed's view,
+    *    or an INNER same-key cascade under the shared-key view with
+    *    `<alias>_id` names — that each dim extends ([[attachStatic]]) on
+    *    a feed's `key` = an integral dim column. Feed stages are INNER
+    *    (outer feed joins belong to the cascade); dim stages are INNER or
+    *    the feed-preserving LEFT. */
+  private def matchJoinSource(j: Join, sql: String): Option[DeltaSource] = {
+    val (rels, stages) = flattenJoins(j).getOrElse(return None)
+    val found = rels.map(r => relInfo(r).flatMap { case (n, al) =>
+      changelogFeed(n).map(JoinLeaf(al, _, feed = true))
+        .orElse(staticTable(n).map(JoinLeaf(al, _, feed = false)))
+    }.getOrElse(return None))
+    val aliases = found.map(_.alias)
+    if (aliases.indices.exists(i =>
+        aliases.indices.exists(k => i < k && resolver(aliases(i), aliases(k)))))
+      return None
+    val (leaves, types) =
+      if (found.length == 2 && !found.head.feed && found(1).feed)
+        (found.reverse, stages.map(_._2 match {
+          case LeftOuter => RightOuter
+          case RightOuter => LeftOuter
+          case jt => jt
+        }))
+      else (found, stages.map(_._2))
+    if (!leaves.head.feed) return None // fact first
+    // each stage's condition, bound once: (earlier leaf, its column) =
+    // the new leaf's column
+    case class Stage(prev: Int, prevCol: Int, col: Int, jt: JoinType)
+    val bound = stages.map(_._1).zip(types).zipWithIndex.map { case ((cond, jt), i) =>
+      val scope = leaves.take(i + 2)
+      (cond match {
+        case EqualTo(x, y) =>
+          for {
+            (lx, cx) <- joinRef(scope, x)
+            (ly, cy) <- joinRef(scope, y)
+            if lx != ly && (lx == i + 1 || ly == i + 1)
+          } yield if (lx == i + 1) Stage(ly, cy, cx, jt) else Stage(lx, cx, cy, jt)
         case _ => None
-      }
-      colName.map(viewCols.indexOf)
+      }).getOrElse(return None)
     }
-    Some(DeltaSource(joined, viewCols, resolve))
-  }
-
-  /** Match a left-deep tree of changelog feeds (`a JOIN b ON a.key =
-    * b.key [LEFT] JOIN c ON b.id = c.key …`) — every feed ⋈ feed
-    * statement — and build it as a CASCADE of Z-set binary joins
-    * ([[graft.streaming.StatefulOps.zJoinStream]]) over each feed's
-    * id-keyed upsert deltas, one stage per condition, each keyed
-    * (shuffled) by its own join column: exactly how Flink plans a
-    * multi-way continuous join as two-input joins. Every condition must
-    * equate the NEW feed's `key` with a previous feed's `key` or `id`
-    * (the view's long columns); stage i's left input is stage i−1's
-    * emitted delta stream. Stages may be INNER, LEFT, RIGHT, or FULL
-    * OUTER — the preserved side's rows survive null-padded (the Z-set
-    * pad algebra), and the facade converts the operator's (-1, null)
-    * pad sentinels into true SQL NULLs on the padded side's columns.
-    * View columns: `<alias>_key` / `<alias>_id` / `<alias>_value` per
-    * side in join order, except where every condition equates keys and
-    * the view has one shared `key` column ([[sharedKeyView]]): two feeds
-    * of any join type (`key, left_id, left_value, right_id,
-    * right_value`) and all-INNER chains of three or more (`key`,
-    * `<alias>_id`, `<alias>_value` …). */
-  private def matchFeedCascade(j: Join): Option[DeltaSource] =
-    for {
-      (rels, conds) <- flattenCascadeJoins(j)
-      if rels.length >= 2
-      infos <- sequenceOpts(rels.map(relInfo))
-      aliases = infos.map(_._2)
-      if aliases.distinct.length == aliases.length
-      feeds <- sequenceOpts(infos.map { case (n, _) => changelogFeed(n) })
-      refs <- sequenceOpts(conds.zipWithIndex.map { case ((c, jt), i) =>
-        cascadeRef(c, aliases.take(i + 1), aliases(i + 1)).map {
-          case (aIdx, isKey) =>
-            (aIdx, isKey, jt == LeftOuter || jt == FullOuter,
-              jt == RightOuter || jt == FullOuter)
-        }
-      })
-    } yield {
-      val ds = cascadeSource(feeds, aliases, refs)
+    val feeds = leaves.filter(_.feed)
+    val feedAliases = feeds.map(_.alias)
+    if (feeds.length == leaves.length) {
+      if (!bound.forall(st => st.col == KeyCol &&
+            (st.prevCol == KeyCol || st.prevCol == IdCol)))
+        return None
+      val refs = bound.map(st => (st.prev, st.prevCol == KeyCol,
+        st.jt == LeftOuter || st.jt == FullOuter,
+        st.jt == RightOuter || st.jt == FullOuter))
+      val ds = cascadeSource(feeds.map(_.table), feedAliases, refs)
       val sameKey = refs.forall(_._2)
-      val allInner = refs.forall(r => !r._3 && !r._4)
-      if (sameKey && feeds.length == 2)
-        sharedKeyView(ds, aliases, Seq("left", "right"), padded = !allInner)
+      val allInner = types.forall(_ == Inner)
+      Some(if (sameKey && feeds.length == 2)
+        sharedKeyView(ds, feedAliases, Seq("left", "right"), padded = !allInner)
       else if (sameKey && allInner)
-        sharedKeyView(ds, aliases, aliases, padded = false)
-      else ds
+        sharedKeyView(ds, feedAliases, feedAliases, padded = false)
+      else ds)
+    } else {
+      val dims = bound.zip(leaves.tail).filterNot(_._2.feed)
+      val routes = bound.zip(leaves.tail).forall { case (st, leaf) =>
+        leaves(st.prev).feed && st.prevCol == KeyCol && (
+          if (leaf.feed) st.jt == Inner && st.col == KeyCol
+          else (st.jt == Inner || st.jt == LeftOuter) &&
+            Integral(leaf.table.schema(st.col).dataType))
+      }
+      if (!routes) return None
+      // every feed key-equates with an earlier one, so each cascade stage
+      // can join on feed 0's key
+      val group =
+        if (feeds.length == 1) singleFeedSource(feeds.head.table, feedAliases.head)
+        else sharedKeyView(cascadeSource(feeds.map(_.table), feedAliases,
+          feedAliases.tail.map(_ => (0, true, false, false))),
+          feedAliases, feedAliases, padded = false)
+      Some(dims.foldLeft(group) { case (ds, (st, dim)) =>
+        attachStatic(ds, dim.alias, dim.table, dim.table.schema(st.col).name,
+          outer = st.jt == LeftOuter, sql)
+      })
     }
+  }
 
   /** Flatten a LEFT-DEEP tree of INNER/LEFT/RIGHT/FULL joins into
-    * (leaves, per-stage (condition, joinType)) — the cascade's shape. */
-  private def flattenCascadeJoins(p: LogicalPlan)
-      : Option[(Seq[LogicalPlan], Seq[(Expression,
-        org.apache.spark.sql.catalyst.plans.JoinType)])] = p match {
+    * (leaves, per-stage (condition, joinType)): stage i joins leaf i+1 to
+    * the leaves before it. */
+  private def flattenJoins(p: LogicalPlan)
+      : Option[(Seq[LogicalPlan], Seq[(Expression, JoinType)])] = p match {
     case jj: Join if jj.joinType == Inner || jj.joinType == LeftOuter ||
         jj.joinType == RightOuter || jj.joinType == FullOuter =>
       for {
         c <- jj.condition
-        (rels, conds) <- flattenCascadeJoins(jj.left)
+        (rels, conds) <- flattenJoins(jj.left)
       } yield (rels :+ jj.right, conds :+ ((c, jj.joinType)))
     case rel => Some((Seq(rel), Nil))
   }
 
-  /** `<new>.key = <prev>.key|id` → (previous-side alias index, isKey). */
-  private def cascadeRef(cond: Expression, prev: Seq[String],
-      na: String): Option[(Int, Boolean)] = cond match {
-    case EqualTo(a: UnresolvedAttribute, b: UnresolvedAttribute) =>
-      def newKey(x: UnresolvedAttribute) = x.nameParts == Seq(na, "key")
-      def prevRef(x: UnresolvedAttribute): Option[(Int, Boolean)] =
-        x.nameParts match {
-          case Seq(q, "key") if prev.contains(q) => Some((prev.indexOf(q), true))
-          case Seq(q, "id") if prev.contains(q) => Some((prev.indexOf(q), false))
-          case _ => None
-        }
-      if (newKey(a)) prevRef(b)
-      else if (newKey(b)) prevRef(a)
-      else None
-    case _ => None
-  }
-
+  /** A left-deep feed ⋈ feed tree as a CASCADE of Z-set binary joins
+    * ([[graft.streaming.StatefulOps.zJoinStream]]) over each feed's
+    * id-keyed upsert deltas, one stage per condition, each keyed
+    * (shuffled) by its own join column — exactly how Flink plans a
+    * multi-way continuous join as two-input joins. `refs(i)` joins feed
+    * i+1's key to (earlier feed index, its key (true) or id, left outer,
+    * right outer); stage i's left input is stage i−1's emitted delta
+    * stream. The preserved side's rows survive null-padded (the Z-set pad
+    * algebra), and the facade converts the operator's (-1, null) pad
+    * sentinels into true SQL NULLs on the padded side's columns. */
   private def cascadeSource(feeds: Seq[DataFrame], aliases: Seq[String],
       refs: Seq[(Int, Boolean, Boolean, Boolean)]): DeltaSource = {
     import spark.implicits._
@@ -723,19 +643,8 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       }
     }
     val deltas = acc.toDF().select((col("op") +: sideCols): _*)
-    val viewCols = aliases.flatMap(al =>
-      Seq(s"${al}_key", s"${al}_id", s"${al}_value"))
-    val resolve: UnresolvedAttribute => Option[Int] = a => {
-      val colName = a.nameParts match {
-        case Seq(c) if viewCols.contains(c) => Some(c)
-        case Seq(q, "key") if aliases.contains(q) => Some(s"${q}_key")
-        case Seq(q, "id") if aliases.contains(q) => Some(s"${q}_id")
-        case Seq(q, "value") if aliases.contains(q) => Some(s"${q}_value")
-        case _ => None
-      }
-      colName.map(viewCols.indexOf)
-    }
-    DeltaSource(deltas, viewCols, resolve)
+    DeltaSource(deltas, aliases.flatMap(al => FeedViewCols.map(c =>
+      ViewCol(s"${al}_$c", Seq(Seq(s"${al}_$c"), Seq(al, c))))))
   }
 
   /** A same-key cascade's view on ONE shared `key` column: `key` (the
@@ -745,46 +654,30 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     * that side's columns, and so does `<alias>.key` on a `padded` (outer)
     * view: that side's own key, NULL on its pads, carried as a hidden
     * `<alias>_key` column `SELECT *` does not serve. Without pads every
-    * side key equals the shared `key`. */
+    * side key equals the shared `key`, which `<alias>.key` names. */
   private def sharedKeyView(ds: DeltaSource, aliases: Seq[String],
       names: Seq[String], padded: Boolean): DeltaSource = {
     import org.apache.spark.sql.functions.{coalesce, col}
     val sides = aliases.zip(names)
-    val sideKeys = if (padded) aliases.map(al => s"${al}_key") else Nil
-    val served = "key" +: names.flatMap(n => Seq(s"${n}_id", s"${n}_value"))
+    val sideKeys = if (padded) aliases else Nil
     val deltas = ds.deltas.select((col("op") +:
       coalesce(aliases.map(al => col(s"${al}_key")): _*).as("key") +:
       (sides.flatMap { case (al, n) =>
         Seq(col(s"${al}_id").as(s"${n}_id"),
           col(s"${al}_value").as(s"${n}_value"))
-      } ++ sideKeys.map(col))): _*)
-    val viewCols = served ++ sideKeys
-    val nameOf = sides.toMap
-    val resolve: UnresolvedAttribute => Option[Int] = a => {
-      val colName = a.nameParts match {
-        case Seq(c) if served.contains(c) => Some(c)
-        case Seq(q, "key") if nameOf.contains(q) =>
-          Some(if (padded) s"${q}_key" else "key")
-        case Seq(q, "id") if nameOf.contains(q) => Some(s"${nameOf(q)}_id")
-        case Seq(q, "value") if nameOf.contains(q) =>
-          Some(s"${nameOf(q)}_value")
-        case _ => None
-      }
-      colName.map(viewCols.indexOf)
+      } ++ sideKeys.map(al => col(s"${al}_key")))): _*)
+    val key = ViewCol("key",
+      Seq("key") +: (if (padded) Nil else aliases.map(Seq(_, "key"))))
+    val sideCols = sides.flatMap { case (al, n) =>
+      Seq("id", "value").map(c => ViewCol(s"${n}_$c", Seq(Seq(s"${n}_$c"), Seq(al, c))))
     }
-    DeltaSource(deltas, viewCols, resolve, hidden = sideKeys.length)
+    val hiddenKeys = sideKeys.map(al => ViewCol(s"${al}_key", Seq(Seq(al, "key"))))
+    DeltaSource(deltas, key +: (sideCols ++ hiddenKeys), hidden = sideKeys.length)
   }
-
-  /** All continuous-join shapes: feed ⋈ static, then mixed feed/static
-    * trees, then the feed ⋈ feed cascade. */
-  private def matchJoinSource(j: Join, sql: String): Option[DeltaSource] =
-    matchFeedStatic(j, sql)
-      .orElse(matchFeedTree(j, sql))
-      .orElse(matchFeedCascade(j))
 
   /** A matched continuous source for ANY FROM shape — the one dispatch
     * every route goes through (so a new source shape lands everywhere
-    * at once): joins through the join matchers, projected subqueries /
+    * at once): joins through the join matcher, projected subqueries /
     * inlined CTE bodies through the projection matcher, plain relations
     * through the single-feed matcher. */
   private def matchSource(p: LogicalPlan, sql: String): Option[DeltaSource] =
@@ -792,24 +685,10 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       case j: Join => matchJoinSource(j, sql)
       case sa @ SubqueryAlias(id, child) =>
         matchSingleFeed(sa).orElse(
-          matchProjectedPlan(child, sql).map(aliased(_, id.name)))
+          matchProjectedPlan(child, sql).map(_.under(id.name)))
       case pj: Project => matchProjectedPlan(pj, sql)
       case rel => matchSingleFeed(rel)
     }
-
-  /** Re-qualify a delta source under a subquery alias: `v.col` resolves
-    * wherever bare `col` does (the inner source's own qualifiers keep
-    * working — a CTE body's aliases stay visible only inside it, which
-    * matches SQL scoping since the outer query can only name `v`). */
-  private def aliased(ds: DeltaSource, alias: String): DeltaSource =
-    ds.copy(resolve = a => ds.resolve(a).orElse(a.nameParts match {
-      // case-INSENSITIVE, like every other identifier in this resolver
-      // (and Catalyst's default): `SELECT V.x FROM (…) v` must serve the
-      // projected view, not silently fall back to the append route
-      case Seq(q, rest @ _*) if q.equalsIgnoreCase(alias) && rest.nonEmpty =>
-        ds.resolve(UnresolvedAttribute(rest))
-      case _ => None
-    }))
 
   /** `(SELECT <scalar items> FROM <source> [WHERE …])` — a subquery (or
     * inlined CTE body) over matched feed source(s) as a PROJECTED delta
@@ -825,10 +704,11 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     * visible wire form. */
   private def matchProjectedPlan(p: LogicalPlan,
       sql: String): Option[DeltaSource] = {
-    def items(projList: Seq[org.apache.spark.sql.catalyst.expressions.NamedExpression])
+    def items(ds: DeltaSource, projList: Seq[NamedExpression])
         : Option[Seq[(String, Expression)]] =
       sequenceOpts(projList.map {
-        case a: UnresolvedAttribute => Some((a.nameParts.last, a: Expression))
+        // a bare column keeps its SQL name, in the view's spelling
+        case a: UnresolvedAttribute => ds.resolve(a).map(i => (ds.sqlName(i, a), a))
         case Alias(child, n) => Some((n, child))
         case _ => None
       })
@@ -849,13 +729,13 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
         for {
           ds <- matchSource(src, sql)
           fds <- quiet(ds, cond)
-          is <- items(projList)
+          is <- items(fds, projList)
           out <- projectSource(fds, is)
         } yield out
       case Project(projList, src) =>
         for {
           ds <- matchSource(src, sql)
-          is <- items(projList)
+          is <- items(ds, projList)
           out <- projectSource(ds, is)
         } yield out
       case _ => None
@@ -867,14 +747,13 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     * item rewrites its unresolved attributes onto the delta columns, and
     * the projected frame's analyzed schema types the new view.
     * None when an attribute does not resolve, an output name collides
-    * (with `op` or another item), analysis fails, or any projection is
-    * non-deterministic (a non-deterministic projection cannot commute
-    * with retraction). */
+    * with `op`, analysis fails, or any projection is non-deterministic
+    * (a non-deterministic projection cannot commute with retraction). */
   private def projectSource(ds: DeltaSource,
       items: Seq[(String, Expression)]): Option[DeltaSource] = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val outNames = items.map(_._1)
-    if (outNames.contains("op")) return None
+    if (outNames.exists(resolver(_, "op"))) return None
     var ok = true
     def rewrite(e: Expression): Expression = e.transform {
       case a: UnresolvedAttribute => ds.resolve(a) match {
@@ -892,38 +771,16 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
         case pr: Project => pr.projectList.forall(_.deterministic)
         case f: Filter => f.condition.deterministic
       }.forall(identity)
+      // duplicate output names are servable AS A VIEW (r10's projected
+      // route served `SELECT a.id, b.id` — Spark selects carry
+      // duplicate names fine) but are AMBIGUOUS to reference, so a
+      // downstream aggregate over the duplicate rejects loudly via its
+      // own unresolved-column path instead of picking one silently
       if (!deterministic) None
-      else {
-        // duplicate output names are servable AS A VIEW (r10's projected
-        // route served `SELECT a.id, b.id` — Spark selects carry
-        // duplicate names fine) but are AMBIGUOUS to reference: the
-        // resolver answers only names that occur exactly once, so a
-        // downstream aggregate over the duplicate rejects loudly via its
-        // own unresolved-column path instead of picking one silently
-        val resolve: UnresolvedAttribute => Option[Int] = a =>
-          a.nameParts match {
-            case Seq(c) if outNames.count(_ == c) == 1 =>
-              Some(outNames.indexOf(c))
-            case _ => None
-          }
-        Some(DeltaSource(projected, outNames, resolve))
-      }
+      else Some(DeltaSource(projected, outNames.map(n => ViewCol(n, Seq(Seq(n))))))
     } catch {
       case _: org.apache.spark.sql.AnalysisException => None
     }
-  }
-
-  /** Flatten a LEFT-DEEP all-INNER join tree into (leaves, conditions):
-    * conds(i) joins leaves(i+1) to the prefix — the mixed-tree matcher's
-    * shape. */
-  private def flattenInnerJoins(p: LogicalPlan)
-      : Option[(Seq[LogicalPlan], Seq[Expression])] = p match {
-    case jj: Join if jj.joinType == Inner =>
-      for {
-        c <- jj.condition
-        (rels, conds) <- flattenInnerJoins(jj.left)
-      } yield (rels :+ jj.right, conds :+ c)
-    case rel => Some((Seq(rel), Nil))
   }
 
   private def sequenceOpts[A](xs: Seq[Option[A]]): Option[Seq[A]] =
@@ -980,7 +837,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       ctes: Seq[(String, LogicalPlan)]): LogicalPlan =
     p.transformUp {
       case u: UnresolvedRelation if u.multipartIdentifier.length == 1 =>
-        ctes.find(_._1.equalsIgnoreCase(u.multipartIdentifier.head))
+        ctes.find(c => resolver(c._1, u.multipartIdentifier.head))
           .map(_._2).getOrElse(u)
     }
 
@@ -1044,7 +901,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
         }
         if (feedsOpt.exists(_.isEmpty)) None
         else Some(viewStatement(DeltaSource(feedView(feedsOpt.flatten),
-          FeedViewCols, _ => None), sql, name, properties))
+          FeedViewCols.map(ViewCol(_, Nil))), sql, name, properties))
       // the composed continuous statement a reference user writes next:
       // JOIN → [WHERE] → GROUP BY in one statement (Flink-the-service
       // maintains it as one changelog; `spark.sql` alone cannot — a
@@ -1192,6 +1049,12 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     }
   }
 
+  /** A call of the facade's window function `fn`. Function names are not
+    * identifiers: Spark matches them case-insensitively under every
+    * `spark.sql.caseSensitive` setting, and so does this. */
+  private def windowCall(f: UnresolvedFunction, fn: String): Boolean =
+    f.nameParts.map(_.toLowerCase(java.util.Locale.ROOT)) == Seq(fn)
+
   /** `TUMBLE(col, width)` — the event-time tumbling window as a grouping
     * function over an integral view column (Flink SQL's `GROUP BY
     * TUMBLE(ts, INTERVAL …)` re-expressed for the feed's long event-time
@@ -1230,7 +1093,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       sql: String): (DeltaSource, Aggregate, Option[(String, Long)]) = {
     def bail(what: String): Nothing = unsupported(sql, what)
     def isHop(f: UnresolvedFunction): Boolean =
-      f.nameParts.map(_.toLowerCase) == Seq("hop")
+      windowCall(f, "hop")
     def containsHop(es: Seq[Expression]): Boolean =
       es.exists(_.exists {
         case f: UnresolvedFunction => isHop(f)
@@ -1268,15 +1131,15 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       case _ => bail("hop(col, slide, width) needs a view column and two " +
         "integer literal arguments")
     }
-    if (ds.viewCols.contains(outName))
+    if (ds.viewCols.exists(resolver(_, outName)))
       bail(s"hop output name $outName shadows a view column — alias it " +
         "differently")
     // the fan-out below selects source columns BY NAME, which a raw
     // AnalysisException would reject if the projected source carries
     // duplicate output names (a shape projectSource permits) — turn
     // that into the loud documented rejection every other limit uses
-    val dupCols = ds.viewCols.groupBy(identity)
-      .collect { case (n, g) if g.size > 1 => n }
+    val dupCols = ds.viewCols
+      .filter(c => ds.viewCols.count(resolver(_, c)) > 1).distinct
     if (dupCols.nonEmpty)
       bail(s"hop over a view with duplicate column names " +
         s"(${dupCols.mkString(", ")}) — alias the subquery's items to " +
@@ -1292,13 +1155,8 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       val exploded = ds.deltas.select(
         (col("op") +: explode(sequence(first, last, lit(slide))).as(outName)
           +: ds.viewCols.map(ds.deltas(_))): _*)
-      val viewCols = outName +: ds.viewCols
-      val resolve: UnresolvedAttribute => Option[Int] = a =>
-        a.nameParts match {
-          case Seq(c) if c == outName => Some(0)
-          case _ => ds.resolve(a).map(_ + 1)
-        }
-      DeltaSource(exploded, viewCols, resolve, ds.hidden)
+      DeltaSource(exploded, ViewCol(outName, Seq(Seq(outName))) +: ds.cols,
+        ds.hidden)
     }
     val winAttr = UnresolvedAttribute(Seq(outName))
     val newAgg = agg.copy(
@@ -1341,7 +1199,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       sql: String): (Aggregate, Option[(String, Long)]) = {
     def bail(what: String): Nothing = unsupported(sql, what)
     def isSession(f: UnresolvedFunction): Boolean =
-      f.nameParts.map(_.toLowerCase) == Seq("session")
+      windowCall(f, "session")
     def containsSession(es: Seq[Expression]): Boolean =
       es.exists(_.exists {
         case f: UnresolvedFunction => isSession(f)
@@ -1398,7 +1256,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       sql: String): (Aggregate, Option[(String, Long)]) = {
     def bail(what: String): Nothing = unsupported(sql, what)
     def isTumble(f: UnresolvedFunction): Boolean =
-      f.nameParts.map(_.toLowerCase) == Seq("tumble")
+      windowCall(f, "tumble")
     def containsTumble(es: Seq[Expression]): Boolean =
       es.exists(_.exists {
         case f: UnresolvedFunction => isTumble(f)
@@ -1540,12 +1398,15 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     // ---- ONE analysis, over a relation whose attributes ARE the delta
     // stream's, so every analyzed expression also projects over it
     val rel = LocalRelation(ds.deltas.queryExecution.analyzed.output.drop(1))
-    def viewAttr(a: UnresolvedAttribute): Attribute = rel.output(
+    def viewIdx(a: UnresolvedAttribute): Int =
       ds.resolve(a).getOrElse(bail(s"column ${a.nameParts.mkString(".")} " +
-        s"does not resolve in the maintained view (${ds.viewCols.mkString(", ")})")))
+        s"does not resolve in the maintained view (${ds.viewCols.mkString(", ")})"))
+    def viewAttr(a: UnresolvedAttribute): Attribute = rel.output(viewIdx(a))
     val select: Seq[NamedExpression] = agg.aggregateExpressions.map {
-      // a bare column keeps its SQL name, as in spark.sql (`a.key` → key)
-      case a: UnresolvedAttribute => Alias(viewAttr(a), a.nameParts.last)()
+      // a bare column keeps its SQL name, as in spark.sql (`A.KEY` → key)
+      case a: UnresolvedAttribute =>
+        val i = viewIdx(a)
+        Alias(rel.output(i), ds.sqlName(i, a))()
       case al: Alias =>
         al.transform { case a: UnresolvedAttribute => viewAttr(a) }
           .asInstanceOf[Alias]
@@ -1553,7 +1414,6 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
         "or an aliased aggregate (the engine-wide oracle discipline)")
     }
     val outNames = select.map(_.name)
-    val resolver = spark.sessionState.conf.resolver
     def isOutput(a: UnresolvedAttribute): Boolean =
       a.nameParts.length == 1 && outNames.exists(resolver(_, a.nameParts.head))
     val groups = agg.groupingExpressions.map(_.transform {
@@ -1621,7 +1481,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     // the GROUP KEY and the window width (see rewriteTumble / rewriteHop /
     // rewriteSession — the fold watermarks and evicts over it)
     val tumblePos: Option[(Int, Long)] = tumble.map { case (n, w) =>
-      keyOut.indexWhere(i => a.output(i).name == n) match {
+      keyOut.indexWhere(i => resolver(a.output(i).name, n)) match {
         case -1 => bail("the event-time window must be a GROUP BY expression")
         case p => (p, w)
       }

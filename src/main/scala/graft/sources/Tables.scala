@@ -154,6 +154,12 @@ object Tables {
     *    `checkpoint()` — same lineage truncation, HDFS-backed blocks. The
     *    local bench/verify paths never set one, so fixture behavior (and
     *    every measured number) is unchanged.
+    *  - Reliable checkpoint files OUTLIVE their DataFrame: Spark deletes
+    *    them only when `spark.cleaner.referenceTracking.cleanCheckpoints`
+    *    is on. Without it the iterative callers leak one checkpoint dir
+    *    per round (Dedup's star-contraction loop, Similarity's k-means
+    *    centroid loop), so a deployment that sets a checkpoint dir either
+    *    turns that cleaner on or cleans the dir itself.
     */
   private[graft] def stage(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()

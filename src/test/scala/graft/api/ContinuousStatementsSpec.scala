@@ -239,6 +239,16 @@ class ContinuousStatementsSpec extends AnyFunSuite {
     Seq((1L, 9L)).toDF("k", "id").createOrReplaceTempView("lt_dims_clash")
     rejects("SELECT a.key, count(*) AS c FROM lt_feed a JOIN lt_dims_clash d " +
       "ON a.key = d.k GROUP BY a.key", "shadow")
+    // any aggregate the session's function registry knows makes an
+    // ungrouped aggregate, and the fold rejects the ones it cannot
+    // maintain by name
+    rejects("SELECT stddev(CAST(value AS DOUBLE)) AS s FROM lt_feed",
+      "is not maintainable")
+    rejects("SELECT count_if(key > 0) AS c FROM lt_feed", "is not maintainable")
+    // a subquery alias scopes the subquery's columns as spark.sql does:
+    // the inner qualifier `a` is out of scope outside it
+    rejects("SELECT a.key, count(*) AS c FROM (SELECT * FROM lt_feed a) v " +
+      "GROUP BY a.key", "does not resolve")
   }
 
   test("agg WHERE runs Spark's OWN semantics executor-side: try_cast " +
@@ -2329,5 +2339,213 @@ class ContinuousStatementsSpec extends AnyFunSuite {
         }
       } finally running.foreach(_.stop())
     }
+  }
+
+  /** Feeds every statement of `runs` — each over its own feed pair — the
+    * same delete-heavy random pages, and after every page checks each
+    * collapse against spark.sql's answer to its reference SQL over batch
+    * views `<live>_a` / `<live>_b` of the id-keyed live rows (keys 0–2,
+    * ids 10–13 on side a and 20–23 on side b). */
+  private def collapsesMatchSparkSql(stmts: Statements,
+      runs: Seq[(Statement, (Seq[Feed] => Unit, Seq[Feed] => Unit))],
+      ref: (String, String) => String, live: String, seed: Int): Unit = {
+    val s = spark
+    import s.implicits._
+    for ((st, _) <- runs)
+      assert(stmts.waitForStatus(st, Set(Phase.Running)).isDefined, st.sql)
+    val cls = runs.map(_._1.handle.get.changelog())
+    val a = scala.collection.mutable.Map.empty[Long, (Long, String)]
+    val b = scala.collection.mutable.Map.empty[Long, (Long, String)]
+    val rnd = new scala.util.Random(seed)
+    var seq = 0L
+    for (pg <- 0 until 5) {
+      def evs(base: Long): Seq[Feed] = (0 until 1 + rnd.nextInt(7)).map { _ =>
+        seq += 1
+        (seq, rnd.nextInt(3).toLong, base + rnd.nextInt(4),
+          s"v${rnd.nextInt(3)}", rnd.nextInt(3) == 0)
+      }
+      val (ea, eb) = (evs(10L), evs(20L))
+      for ((_, (addA, addB)) <- runs) { addA(ea); addB(eb) }
+      runs.foreach(_._1.handle.get.processAllAvailable())
+      ea.foreach(applyById(a, _)); eb.foreach(applyById(b, _))
+      for ((m, side) <- Seq((a, "a"), (b, "b")))
+        m.toSeq.map { case (id, (k, v)) => (k, id, v) }
+          .toDF("key", "id", "value").createOrReplaceTempView(s"${live}_$side")
+      val want = spark.sql(ref(s"${live}_a", s"${live}_b")).collect()
+        .map(_.toSeq.toVector).toSeq.sorted(rowOrder)
+      cls.zip(runs).foreach { case (cl, (st, _)) =>
+        while (cl.consume(1).nonEmpty) ()
+        val got = cl.collapse()
+        assert(got.rows.sorted(rowOrder) == want,
+          s"seed $seed page $pg [${st.sql}]: collapse ${got.rows} != spark.sql $want")
+        assert(got.missedRetractions == 0, st.sql)
+      }
+    }
+  }
+
+  /** Feeds `<name>_a` and `<name>_b`, as page adders. */
+  private def feedPair(name: String): (Seq[Feed] => Unit, Seq[Feed] => Unit) = {
+    val (a, b) = (newFeed(s"${name}_a"), newFeed(s"${name}_b"))
+    (evs => a.addData(evs), evs => b.addData(evs))
+  }
+
+  test("names bind under the session's case rules: mixed-case spellings " +
+    "route like their lowercase twins and collapse to spark.sql after " +
+    "every page; under spark.sql.caseSensitive=true they reject, as " +
+    "spark.sql rejects their batch twins") {
+    val s = spark
+    import s.implicits._
+    Seq((0L, "east"), (1L, "west"), (2L, "east")).toDF("k", "region")
+      .createOrReplaceTempView("cp_dims")
+    val join5 = (a: String, b: String) =>
+      s"SELECT a.key, a.id, a.value, b.id, b.value FROM $a a JOIN $b b " +
+        "ON a.key = b.key"
+    // (mixed-case statement, lowercase twin, spark.sql reference when it
+    // is not the twin itself), each over the relations (a, b)
+    val probes: Seq[((String, String) => String, (String, String) => String,
+        Option[(String, String) => String])] = Seq(
+      ((a, _) => s"SELECT KEY, count(*) AS c FROM $a GROUP BY KEY",
+        (a, _) => s"SELECT key, count(*) AS c FROM $a GROUP BY key", None),
+      ((a, _) => s"SELECT P.key, count(*) AS c FROM $a p GROUP BY P.key",
+        (a, _) => s"SELECT p.key, count(*) AS c FROM $a p GROUP BY p.key", None),
+      ((a, b) => s"SELECT a.key, count(*) AS c, max(B.id) AS mb FROM $a A " +
+        s"JOIN $b B ON A.key = B.key GROUP BY a.key",
+        (a, b) => s"SELECT a.key, count(*) AS c, max(b.id) AS mb FROM $a a " +
+          s"JOIN $b b ON a.key = b.key GROUP BY a.key", None),
+      ((a, _) => s"SELECT d.region, count(*) AS c FROM $a a JOIN cp_dims d " +
+        "ON a.key = d.K GROUP BY d.region",
+        (a, _) => s"SELECT d.region, count(*) AS c FROM $a a JOIN cp_dims d " +
+          "ON a.key = d.k GROUP BY d.region", None),
+      ((a, b) => s"SELECT D.region, count(*) AS c FROM $a a JOIN $b b " +
+        "ON a.key = b.key JOIN cp_dims d ON A.key = d.K GROUP BY D.region",
+        (a, b) => s"SELECT d.region, count(*) AS c FROM $a a JOIN $b b " +
+          "ON a.key = b.key JOIN cp_dims d ON a.key = d.k GROUP BY d.region",
+        None),
+      ((a, _) => s"SELECT * FROM $a WHERE VALUE = 'v1'",
+        (a, _) => s"SELECT * FROM $a WHERE value = 'v1'", None),
+      ((a, _) => s"SELECT * FROM $a ORDER BY ID DESC LIMIT 2",
+        (a, _) => s"SELECT * FROM $a ORDER BY id DESC LIMIT 2", None),
+      // keys 0–2 share the window starting at 0, which never closes
+      ((a, _) => s"SELECT TUMBLE(KEY, 10) AS w, count(*) AS c FROM $a " +
+        "GROUP BY TUMBLE(KEY, 10)",
+        (a, _) => s"SELECT tumble(key, 10) AS w, count(*) AS c FROM $a " +
+          "GROUP BY tumble(key, 10)",
+        Some((a, _) => s"SELECT key - pmod(key, 10) AS w, count(*) AS c " +
+          s"FROM $a GROUP BY key - pmod(key, 10)")),
+      ((a, b) => s"SELECT * FROM $a A JOIN $b B ON a.key = b.key",
+        (a, b) => s"SELECT * FROM $a a JOIN $b b ON a.key = b.key", Some(join5)),
+      ((a, b) => s"SELECT * FROM $a A JOIN $b B ON a.KEY = b.KEY",
+        (a, b) => s"SELECT * FROM $a a JOIN $b b ON a.key = b.key", Some(join5)))
+    probes.zipWithIndex.foreach { case ((mixed, lower, ref), i) =>
+      val (m, l) = (feedPair(s"cp${i}_m"), feedPair(s"cp${i}_l"))
+      val stmts = new Statements(s)
+      val ms = stmts.create(mixed(s"cp${i}_m_a", s"cp${i}_m_b"))
+      val ls = stmts.create(lower(s"cp${i}_l_a", s"cp${i}_l_b"))
+      try {
+        assert(ms.isStreaming && ls.isStreaming)
+        assert(ms.columns == ls.columns,
+          s"${ms.sql}: columns ${ms.columns} != the twin's ${ls.columns}")
+        if (ref.contains(join5))
+          assert(ms.columns ==
+            Seq("key", "left_id", "left_value", "right_id", "right_value"),
+            s"${ms.sql} must serve the maintained equi-join view")
+        collapsesMatchSparkSql(stmts, Seq((ms, m), (ls, l)),
+          ref.getOrElse(lower), s"cp_live$i", seed = 7 + i)
+      } finally { ms.stop(); ls.stop() }
+    }
+    val prev = spark.conf.get("spark.sql.caseSensitive")
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try {
+      val stmts = new Statements(s)
+      probes.zipWithIndex.foreach { case ((mixed, _, _), i) =>
+        val sql = mixed(s"cp${i}_m_a", s"cp${i}_m_b")
+        val ex = intercept[Exception](stmts.create(sql))
+        assert(ex.isInstanceOf[UnsupportedContinuousStatement] ||
+          ex.isInstanceOf[org.apache.spark.sql.AnalysisException],
+          s"[$sql] must reject under caseSensitive=true: $ex")
+        intercept[org.apache.spark.sql.AnalysisException](
+          spark.sql(mixed(s"cp_live${i}_a", s"cp_live${i}_b")))
+      }
+    } finally spark.conf.set("spark.sql.caseSensitive", prev)
+  }
+
+  test("join shapes the one join matcher keeps: a dim-first INNER or " +
+    "RIGHT join routes, a.key = a.key never serves the equi-join view, a " +
+    "dim-preserving outer join rejects, and a dim between two feeds " +
+    "collapses to spark.sql") {
+    val s = spark
+    import s.implicits._
+    Seq((1L, "east"), (2L, "west")).toDF("k", "region")
+      .createOrReplaceTempView("js_dims")
+    val stmts = new Statements(s)
+    val (fi, fr) = (newFeed("js_fi"), newFeed("js_fr"))
+    val inner = stmts.create("SELECT * FROM js_dims d JOIN js_fi a ON a.key = d.k")
+    val right = stmts.create(
+      "SELECT * FROM js_dims d RIGHT JOIN js_fr a ON a.key = d.k")
+    try {
+      for (st <- Seq(inner, right)) {
+        assert(st.isStreaming, s"${st.sql} must route")
+        assert(st.columns == Seq("key", "id", "value", "k", "region"), st.sql)
+        assert(stmts.waitForStatus(st, Set(Phase.Running)).isDefined)
+      }
+      val evs = Seq((0L, 1L, 10L, "x", false), (1L, 9L, 11L, "y", false))
+      fi.addData(evs); fr.addData(evs)
+      val got = Seq(inner, right).map { st =>
+        st.handle.get.processAllAvailable()
+        val cl = st.handle.get.changelog()
+        while (cl.consume(1).nonEmpty) ()
+        cl.collapse().rows.toSet
+      }
+      assert(got == Seq(Set(Vector[Any](1L, 10L, "x", 1L, "east")),
+        Set(Vector[Any](1L, 10L, "x", 1L, "east"),
+          Vector[Any](9L, 11L, "y", null, null))), s"$got")
+    } finally { inner.stop(); right.stop() }
+    newFeed("js_t_a"); newFeed("js_t_b")
+    val taut = stmts.create("SELECT * FROM js_t_a a JOIN js_t_b b ON a.key = a.key")
+    try {
+      assert(taut.columns != Seq("key", "left_id", "left_value", "right_id",
+        "right_value"), "a.key = a.key is no equi-join of the two feeds")
+      assert(taut.columns == Seq("seq", "key", "id", "value", "delete",
+        "seq", "key", "id", "value", "delete"), s"${taut.columns}")
+    } finally taut.stop()
+    def rejects(sql: String): Unit = {
+      val ex = intercept[UnsupportedContinuousStatement](stmts.create(sql))
+      assert(ex.getMessage.contains("no IVM route matches"), ex.getMessage)
+    }
+    rejects("SELECT a.key, count(*) AS c FROM js_t_a a JOIN js_t_b b " +
+      "ON a.key = a.key GROUP BY a.key")
+    rejects("SELECT d.region, count(*) AS c FROM js_fi a RIGHT JOIN js_dims d " +
+      "ON a.key = d.k GROUP BY d.region")
+    val mid = feedPair("js_mid")
+    val between = stmts.create("SELECT * FROM js_mid_a a JOIN js_dims d " +
+      "ON a.key = d.k JOIN js_mid_b b ON a.key = b.key")
+    try {
+      assert(between.columns == Seq("key", "a_id", "a_value", "b_id",
+        "b_value", "k", "region"))
+      collapsesMatchSparkSql(stmts, Seq((between, mid)), (a, b) =>
+        s"SELECT a.key, a.id, a.value, b.id, b.value, d.k, d.region FROM $a a " +
+          s"JOIN js_dims d ON a.key = d.k JOIN $b b ON a.key = b.key",
+        "js_live", seed = 3)
+    } finally between.stop()
+  }
+
+  test("a feed-preserving LEFT dim stage after a same-key feed group " +
+    "routes and pads the dim's columns with NULLs") {
+    val s = spark
+    import s.implicits._
+    Seq((1L, "east"), (2L, "west")).toDF("k", "region")
+      .createOrReplaceTempView("jl_dims")
+    val stmts = new Statements(s)
+    val pair = feedPair("jl")
+    val st = stmts.create("SELECT * FROM jl_a a JOIN jl_b b ON a.key = b.key " +
+      "LEFT JOIN jl_dims d ON a.key = d.k")
+    try {
+      assert(st.columns == Seq("key", "a_id", "a_value", "b_id", "b_value",
+        "k", "region"))
+      collapsesMatchSparkSql(stmts, Seq((st, pair)), (a, b) =>
+        s"SELECT a.key, a.id, a.value, b.id, b.value, d.k, d.region FROM $a a " +
+          s"JOIN $b b ON a.key = b.key LEFT JOIN jl_dims d ON a.key = d.k",
+        "jl_live", seed = 11)
+    } finally st.stop()
   }
 }
