@@ -124,6 +124,11 @@ final class ChangelogSynthesizer(schema: Seq[String], keyCols: Seq[String],
   * fails fast with a clear error instead of silently exhausting driver
   * memory. Route large results through a real sink (parquet/Kafka), not
   * this facade.
+  *
+  * The sinks change one thing on the caller's session: when
+  * `spark.sql.streaming.checkpointFileManagerClass` is unset, they set it
+  * to [[LocalCheckpointFileManager]], so every micro-batch's checkpoint
+  * writes skip Hadoop's forking local FS. A manager the caller set is kept.
   */
 object ChangelogStream {
 
@@ -229,6 +234,29 @@ object ChangelogStream {
       }
       .filter(_ > 0L)
 
+  /** Spark's session conf naming the class that writes a streaming
+    * query's offset log, commit log and state-store deltas. */
+  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Start `df` as a `foreachBatch` query: every sink reaches Spark here.
+    * Spark reads the checkpoint manager class from the session's Hadoop
+    * conf when `start()` builds the query's logs and state stores, and no
+    * writer option carries it, so it is set on `df`'s session — only when
+    * neither the session nor its Hadoop conf names one. */
+  private def start(df: DataFrame, outputMode: String, queryName: String,
+                    trigger: Trigger)(sink: DataFrame => Unit): StreamingQuery = {
+    val session = df.sparkSession
+    if (session.conf.getOption(CheckpointManagerKey).isEmpty &&
+        session.sparkContext.hadoopConfiguration.get(CheckpointManagerKey) == null)
+      session.conf.set(CheckpointManagerKey, classOf[LocalCheckpointFileManager].getName)
+    df.writeStream
+      .outputMode(outputMode)
+      .queryName(queryName)
+      .trigger(trigger)
+      .foreachBatch((batch: DataFrame, _: Long) => sink(batch))
+      .start()
+  }
+
   /** Start an updating (grouped-aggregate) query with `-U/+U` synthesis.
     * `keyCols` are the grouping columns identifying a result row.
     * `evictBy` optionally names a timestamp output column (a group's
@@ -265,27 +293,21 @@ object ChangelogStream {
     // a -D can be DELAYED, never falsified.
     val ownerSession = df.sparkSession
     @volatile var queryRef: StreamingQuery = null
-    val query = df.writeStream
-      .outputMode("update")
-      .queryName(queryName)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // one bounded pass, checked before any state mutation (see
-        // boundedCollect): a high-cardinality grouping in a catch-up
-        // micro-batch must error via the documented cap, not OOM the driver
-        val rows = log.boundedCollect(batch, Some(synth))
-        val q = Option(queryRef).orElse(
-          ownerSession.streams.active.find(_.name == queryName))
-        val recs = synth.synchronized {
-          val upserts = synth.onUpsert(rows)
-          val evicted = q.flatMap(watermarkMillis(_))
-            .map(synth.evictBefore).getOrElse(Seq.empty)
-          upserts ++ evicted
-        }
-        log.append(recs.map(r => RawRecord(r.op.map(_.code), r.values)))
-        ()
+    val query = start(df, "update", queryName, trigger) { batch =>
+      // one bounded pass, checked before any state mutation (see
+      // boundedCollect): a high-cardinality grouping in a catch-up
+      // micro-batch must error via the documented cap, not OOM the driver
+      val rows = log.boundedCollect(batch, Some(synth))
+      val q = Option(queryRef).orElse(
+        ownerSession.streams.active.find(_.name == queryName))
+      val recs = synth.synchronized {
+        val upserts = synth.onUpsert(rows)
+        val evicted = q.flatMap(watermarkMillis(_))
+          .map(synth.evictBefore).getOrElse(Seq.empty)
+        upserts ++ evicted
       }
-      .start()
+      log.append(recs.map(r => RawRecord(r.op.map(_.code), r.values)))
+    }
     queryRef = query
     new Handle(() => query, schema, log)
   }
@@ -303,19 +325,13 @@ object ChangelogStream {
     val schema = df.schema.fieldNames.toSeq
     val synth = new ChangelogSynthesizer(schema, keyCols)
     val log = new RecordLog(maxBufferedRecords)
-    val query = df.writeStream
-      .outputMode("complete")
-      .queryName(queryName)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // same bounded single pass as `updating` — a complete-mode
-        // snapshot larger than the log's remaining capacity cannot fit
-        val rows = log.boundedCollect(batch, Some(synth))
-        val recs = synth.synchronized(synth.onSnapshot(rows))
-        log.append(recs.map(r => RawRecord(r.op.map(_.code), r.values)))
-        ()
-      }
-      .start()
+    val query = start(df, "complete", queryName, trigger) { batch =>
+      // same bounded single pass as `updating` — a complete-mode
+      // snapshot larger than the log's remaining capacity cannot fit
+      val rows = log.boundedCollect(batch, Some(synth))
+      val recs = synth.synchronized(synth.onSnapshot(rows))
+      log.append(recs.map(r => RawRecord(r.op.map(_.code), r.values)))
+    }
     new Handle(() => query, schema, log)
   }
 
@@ -348,19 +364,13 @@ object ChangelogStream {
     // are append streams — which is also what lets several of them chain
     // in one query: Spark permits multiple flatMapGroupsWithState only
     // when all are append and the query is append)
-    val query = df.writeStream
-      .outputMode("append")
-      .queryName(queryName)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val deltas = log.boundedCollect(batch, Some(synth))
-        // fold + diff under one lock: foreachBatch invocations are serial
-        // per query, but cursor replays may race the append
-        val recs = synth.synchronized(fold(deltas).flatMap(synth.onSnapshot))
-        log.append(recs.map(r => RawRecord(r.op.map(_.code), r.values)))
-        ()
-      }
-      .start()
+    val query = start(df, "append", queryName, trigger) { batch =>
+      val deltas = log.boundedCollect(batch, Some(synth))
+      // fold + diff under one lock: foreachBatch invocations are serial
+      // per query, but cursor replays may race the append
+      val recs = synth.synchronized(fold(deltas).flatMap(synth.onSnapshot))
+      log.append(recs.map(r => RawRecord(r.op.map(_.code), r.values)))
+    }
     new Handle(() => query, outSchema, log)
   }
 
@@ -376,18 +386,12 @@ object ChangelogStream {
     val schema = df.schema.fieldNames.toSeq.patch(opIdx, Nil, 1)
     val log = new RecordLog(maxBufferedRecords)
     // append mode: see foldingSnapshot — delta streams are append streams
-    val query = df.writeStream
-      .outputMode("append")
-      .queryName(queryName)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // each input row is exactly one record (see boundedCollect)
-        log.append(log.boundedCollect(batch).map { vs =>
-          RawRecord(Some(vs(opIdx).asInstanceOf[Int]), vs.patch(opIdx, Nil, 1))
-        })
-        ()
-      }
-      .start()
+    val query = start(df, "append", queryName, trigger) { batch =>
+      // each input row is exactly one record (see boundedCollect)
+      log.append(log.boundedCollect(batch).map { vs =>
+        RawRecord(Some(vs(opIdx).asInstanceOf[Int]), vs.patch(opIdx, Nil, 1))
+      })
+    }
     new Handle(() => query, schema, log)
   }
 
@@ -400,17 +404,11 @@ object ChangelogStream {
                 maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle = {
     val schema = df.schema.fieldNames.toSeq
     val log = new RecordLog(maxBufferedRecords)
-    val query = df.writeStream
-      .outputMode("append")
-      .queryName(queryName)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // append-only: one record per input row (see boundedCollect)
-        log.append(log.boundedCollect(batch)
-          .map(vs => RawRecord(Some(Op.Insert.code), vs)))
-        ()
-      }
-      .start()
+    val query = start(df, "append", queryName, trigger) { batch =>
+      // append-only: one record per input row (see boundedCollect)
+      log.append(log.boundedCollect(batch)
+        .map(vs => RawRecord(Some(Op.Insert.code), vs)))
+    }
     new Handle(() => query, schema, log)
   }
 }

@@ -61,6 +61,48 @@ class StatementsSpec extends AnyFunSuite {
     }
   }
 
+  test("streaming statements set the checkpoint manager only when the caller has not") {
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val local = classOf[graft.streaming.LocalCheckpointFileManager].getName
+    val callers = "org.apache.spark.sql.execution.streaming.checkpointing." +
+      "FileSystemBasedCheckpointFileManager"
+    val saved = spark.conf.getOption(key)
+    val dirPath = java.nio.file.Files.createTempDirectory("stmt-ckpt-conf")
+    java.nio.file.Files.writeString(dirPath.resolve("b1.json"),
+      """{"guid":"u1","eyeColor":"brown","age":41,"balance":"$10.00"}
+        |""".stripMargin)
+    graft.sources.UserStream.file(spark, dirPath.toString)
+      .createOrReplaceTempView("user_stream_ckpt")
+    Tables.registerAll(spark, SparkTestSession.sf0001)
+    def runStreaming(sql: String): Unit = {
+      val stmt = new Statements(spark).create(sql)
+      try {
+        assert(stmt.isStreaming)
+        stmt.handle.get.processAllAvailable()
+        assert(stmt.results().next().isDefined)
+      } finally stmt.stop()
+    }
+    try {
+      spark.conf.unset(key)
+      assert(new Statements(spark).create("SELECT count(*) AS n FROM nation")
+        .phase == Phase.Completed)
+      assert(spark.conf.getOption(key).isEmpty, "a batch statement starts no sink")
+      runStreaming("SELECT eyeColor, count(*) AS n FROM user_stream_ckpt GROUP BY eyeColor")
+      assert(spark.conf.getOption(key).contains(local))
+      spark.conf.set(key, callers)
+      runStreaming("SELECT guid, age FROM user_stream_ckpt")
+      assert(spark.conf.get(key) == callers)
+      // a manager set in the Hadoop conf wins over an unset session conf too
+      spark.conf.unset(key)
+      spark.sparkContext.hadoopConfiguration.set(key, callers)
+      runStreaming("SELECT guid, age AS a FROM user_stream_ckpt")
+      assert(spark.conf.getOption(key).isEmpty)
+    } finally {
+      spark.sparkContext.hadoopConfiguration.unset(key)
+      saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
+
   test("statement properties route sql.current-database: the same " +
     "unqualified table name resolves per-statement (api/statements.py:27-31)") {
     val stmts = new Statements(spark)
