@@ -1881,9 +1881,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     * multiset (O(live rows), driver-side): a retraction of the k-th row
     * must know the (k+1)-th, so the full order is the operator's
     * irreducible state — Flink's Top-N keeps the same. Dashboard-sized
-    * by the facade contract. ([[graft.streaming.StatefulOps.topKPerKey]]
-    * is no variant of it: it keeps each key's best k of an append-only
-    * stream and never retracts a row.) */
+    * by the facade contract. */
   private def topKViewStatement(ds: DeltaSource, order: SortOrder, k: Int,
       sql: String, name: String,
       properties: Map[String, String]): Statement = {

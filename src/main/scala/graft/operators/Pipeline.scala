@@ -903,9 +903,11 @@ object Pipeline {
     *
     * Scale shape: keyed state is BOUNDED at quota (md5, id) pairs per
     * language no matter how long the stream runs; each micro-batch folds
-    * in one dedup+sort+truncate per touched stratum (topKPerKey's
-    * amortization). The quota table is the fitted p12 model, collected
-    * once (≤ n_langs rows) like p19's threshold. */
+    * in one dedup+sort+truncate per touched stratum: the batch's arrivals
+    * merge with the kept pairs and the quota-sized head is kept, so the
+    * fold is O((B+q) log(B+q)) per stratum, not one insertion per event.
+    * The quota table is the fitted p12 model, collected once (≤ n_langs
+    * rows) like p19's threshold. */
   def mixtureStream(stream: DataFrame,
                     quotas: Map[String, Long]): org.apache.spark.sql.Dataset[MixDelta] = {
     import stream.sparkSession.implicits._

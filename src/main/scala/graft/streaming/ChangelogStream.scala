@@ -23,16 +23,8 @@ import graft.changelog.{Changelog, ChangelogRecord, Op, RawRecord}
   * e.g. 5 eye colors), not per input row — the heavy aggregation state lives
   * in Spark's StateStore on the executors. The sink only sees the per-batch
   * delta, so its cost is O(changed groups per micro-batch).
-  *
-  * `evictIdx`, when set, names the output column holding a group's
-  * event-time upper bound (e.g. `window.end`): [[evictBefore]] then emits
-  * `-D` with the group's final value once the watermark passes it — the
-  * deletion the reference's wire format carries
-  * (`/root/reference/api/statements.py:168`) but Spark's update mode never
-  * surfaces.
   */
-final class ChangelogSynthesizer(schema: Seq[String], keyCols: Seq[String],
-                                 evictIdx: Option[Int] = None) {
+final class ChangelogSynthesizer(schema: Seq[String], keyCols: Seq[String]) {
   private val keyIdx: Seq[Int] = keyCols.map(schema.indexOf)
   require(!keyIdx.contains(-1),
     s"key columns $keyCols not all present in schema $schema")
@@ -56,35 +48,6 @@ final class ChangelogSynthesizer(schema: Seq[String], keyCols: Seq[String],
           ChangelogRecord(Some(Op.UpdateBefore), old),
           ChangelogRecord(Some(Op.UpdateAfter), r))
       }
-    }
-
-  private def epochMillis(v: Any): Long = v match {
-    case t: java.sql.Timestamp => t.getTime
-    case i: java.time.Instant => i.toEpochMilli
-    // TIMESTAMP_NTZ rows collect as LocalDateTime; the engine pins the
-    // session to UTC (EngineSession/Bench), so NTZ values are UTC instants
-    case d: java.time.LocalDateTime => d.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-    case l: java.lang.Long => l.longValue()
-    case other => throw new IllegalArgumentException(
-      s"eviction column must be a timestamp, got: $other")
-  }
-
-  /** Emit `-D` (with the final value) for every group whose event-time
-    * bound is strictly before the watermark, and forget it. Strictly-before
-    * keeps the `-D` non-spurious: a group AT the watermark can still
-    * legally update. A group whose eviction value is null is treated as
-    * not-yet-evictable (kept), never as a crash. No-op when no eviction
-    * column was configured. */
-  def evictBefore(watermarkMillis: Long): Seq[ChangelogRecord] =
-    evictIdx match {
-      case None => Seq.empty
-      case Some(i) =>
-        val dead = state.iterator
-          .filter { case (_, row) =>
-            row(i) != null && epochMillis(row(i)) < watermarkMillis
-          }
-          .map(_._1).toVector
-        dead.map(k => ChangelogRecord(Some(Op.Delete), state.remove(k).get))
     }
 
   /** One complete-mode micro-batch: rows are the *entire* result. Diffs
@@ -221,19 +184,6 @@ object ChangelogStream {
     def stop(): Unit = query.stop()
   }
 
-  /** Current watermark of a running query in epoch millis, if one exists.
-    * Read from the last progress event, so it reflects the previous batch
-    * — eviction therefore lags one micro-batch, which only delays (never
-    * falsifies) a `-D`. */
-  private def watermarkMillis(q: StreamingQuery): Option[Long] =
-    Option(q).flatMap(q => Option(q.lastProgress))
-      .flatMap(p => Option(p.eventTime.get("watermark")))
-      .flatMap { iso =>
-        try Some(java.time.Instant.parse(iso).toEpochMilli)
-        catch { case _: java.time.format.DateTimeParseException => None }
-      }
-      .filter(_ > 0L)
-
   /** Spark's session conf naming the class that writes a streaming
     * query's offset log, commit log and state-store deltas. */
   private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
@@ -258,57 +208,21 @@ object ChangelogStream {
   }
 
   /** Start an updating (grouped-aggregate) query with `-U/+U` synthesis.
-    * `keyCols` are the grouping columns identifying a result row.
-    * `evictBy` optionally names a timestamp output column (a group's
-    * event-time upper bound, e.g. the aggregation window's `end`): once the
-    * query's watermark passes it, the sink emits a single `-D` carrying the
-    * group's final value — mirroring state eviction as the deletion the
-    * changelog wire format expects. */
+    * `keyCols` are the grouping columns identifying a result row. */
   def updating(df: DataFrame, queryName: String, keyCols: Seq[String],
                trigger: Trigger = Trigger.ProcessingTime(0),
-               evictBy: Option[String] = None,
                maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle = {
     val schema = df.schema.fieldNames.toSeq
-    val evictIdx = evictBy.map { c =>
-      val i = schema.indexOf(c)
-      require(i >= 0, s"evictBy column $c not in output schema $schema")
-      // fail at setup, not per-row inside a running foreachBatch: the
-      // eviction comparison needs an event-time-comparable type
-      import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-      val dt = df.schema.fields(i).dataType
-      require(dt == TimestampType || dt == TimestampNTZType || dt == LongType,
-        s"evictBy column $c must be timestamp or epoch-millis long, got $dt")
-      i
-    }
-    val synth = new ChangelogSynthesizer(schema, keyCols, evictIdx)
+    val synth = new ChangelogSynthesizer(schema, keyCols)
     val log = new RecordLog(maxBufferedRecords)
-    // the closure needs the query for watermark lookup, but the query only
-    // exists after start(): late-bound reference, with a by-name registry
-    // fallback for batches that complete before start() returns (batch 0
-    // would otherwise see null and silently skip eviction). The lookup
-    // goes through the ORIGINAL session's StreamingQueryManager — inside
-    // foreachBatch, `batch.sparkSession` is the cloned micro-batch
-    // session whose manager holds no registered queries. Eviction still
-    // lags one micro-batch (lastProgress semantics, see watermarkMillis) —
-    // a -D can be DELAYED, never falsified.
-    val ownerSession = df.sparkSession
-    @volatile var queryRef: StreamingQuery = null
     val query = start(df, "update", queryName, trigger) { batch =>
       // one bounded pass, checked before any state mutation (see
       // boundedCollect): a high-cardinality grouping in a catch-up
       // micro-batch must error via the documented cap, not OOM the driver
       val rows = log.boundedCollect(batch, Some(synth))
-      val q = Option(queryRef).orElse(
-        ownerSession.streams.active.find(_.name == queryName))
-      val recs = synth.synchronized {
-        val upserts = synth.onUpsert(rows)
-        val evicted = q.flatMap(watermarkMillis(_))
-          .map(synth.evictBefore).getOrElse(Seq.empty)
-        upserts ++ evicted
-      }
+      val recs = synth.synchronized(synth.onUpsert(rows))
       log.append(recs.map(r => RawRecord(r.op.map(_.code), r.values)))
     }
-    queryRef = query
     new Handle(() => query, schema, log)
   }
 

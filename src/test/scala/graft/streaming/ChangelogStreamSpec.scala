@@ -34,34 +34,6 @@ class ChangelogStreamSpec extends AnyFunSuite {
     assert(s.onUpsert(Seq(Vector("brown", 2L))).isEmpty)
   }
 
-  test("eviction skips null event-time values instead of crashing") {
-    val s = new ChangelogSynthesizer(Seq("color", "end_ts", "n"),
-      Seq("color"), evictIdx = Some(1))
-    val t = (ms: Long) => new java.sql.Timestamp(ms)
-    s.onUpsert(Seq(
-      Vector("brown", t(1000L), 1L),
-      Vector("blue", null, 2L), // open-ended group: no eviction bound yet
-      Vector("green", t(5000L), 3L)))
-    val evicted = s.evictBefore(2000L)
-    assert(evicted == Seq(
-      ChangelogRecord(Some(Op.Delete), Vector("brown", t(1000L), 1L))),
-      s"only the watermark-passed group may evict: $evicted")
-    // the null-bound group is still live and can still update
-    assert(s.onUpsert(Seq(Vector("blue", t(9000L), 4L))).head.op
-      .contains(Op.UpdateBefore))
-  }
-
-  test("eviction understands TIMESTAMP_NTZ (LocalDateTime) bounds") {
-    val s = new ChangelogSynthesizer(Seq("color", "end_ts", "n"),
-      Seq("color"), evictIdx = Some(1))
-    val ntz = java.time.LocalDateTime.ofEpochSecond(1L, 0,
-      java.time.ZoneOffset.UTC) // 1000 ms as an NTZ (UTC-pinned session)
-    s.onUpsert(Seq(Vector("brown", ntz, 1L)))
-    assert(s.evictBefore(2000L) ==
-      Seq(ChangelogRecord(Some(Op.Delete), Vector("brown", ntz, 1L))))
-    assert(s.evictBefore(2000L).isEmpty, "evicted group must be forgotten")
-  }
-
   test("snapshot diff emits -D for dropped groups") {
     val s = new ChangelogSynthesizer(Seq("color", "n"), Seq("color"))
     s.onSnapshot(Seq(Vector("brown", 1L), Vector("blue", 2L)))

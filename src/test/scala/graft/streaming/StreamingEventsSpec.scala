@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
-import graft.changelog.{Op, ResultTable}
+import graft.changelog.ResultTable
 import graft.sources.Tables
 
 case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
@@ -166,76 +166,6 @@ class StreamingEventsSpec extends AnyFunSuite {
     } finally handle.stop()
   }
 
-  test("flatMapGroupsWithState keeps running per-key state across batches") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val mem = MemoryStream[Ev]
-    val counts = StatefulOps.runningCounts[Ev](
-      mem.toDS(), _.event_type, _.value)
-    val q = counts.writeStream.outputMode("update")
-      .format("memory").queryName("stateful_test").start()
-    try {
-      val evs = Tables.load(s, SparkTestSession.sf0001, "events")
-        .as[Ev].collect().take(60).toSeq
-      mem.addData(evs.take(30)); q.processAllAvailable()
-      mem.addData(evs.drop(30)); q.processAllAvailable()
-      val last = s.sql(
-        """SELECT key, max(n) AS n FROM stateful_test GROUP BY key""")
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val expected = evs.groupBy(_.event_type).view.mapValues(_.size.toLong).toMap
-      assert(last == expected, s"state must survive across batches: $last vs $expected")
-    } finally q.stop()
-  }
-
-  test("streaming per-key top-k: bounded state converges to the batch answer " +
-    "regardless of arrival order") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val k = 3
-    val evs = Tables.load(s, SparkTestSession.sf0001, "events")
-      .as[Ev].collect().take(90).toSeq
-    // the last-emission selection below keys on (length, scores), which is
-    // only strictly monotone when no two events of a key tie on value —
-    // guard the assumption explicitly so a fixture change fails loudly
-    // here instead of flaking on sink row order
-    assert(evs.groupBy(e => (e.event_type, e.value)).forall(_._2.size == 1),
-      "fixture slice must have no (key, score) ties for this test's " +
-        "latest-emission selection to be well-defined")
-    // out-of-order feed across three micro-batches
-    val shuffled = evs.sortBy(e => e.event_id * 2654435761L % 97)
-    val mem = MemoryStream[Ev]
-    val top = StatefulOps.topKPerKey[Ev](
-      mem.toDS(), _.event_type, _.event_id, _.value, k)
-    val q = top.writeStream.outputMode("update")
-      .format("memory").queryName("topk_test").start()
-    try {
-      shuffled.grouped(30).foreach { b =>
-        mem.addData(b); q.processAllAvailable()
-      }
-      // the final emission per key: under insert-only updates the sorted-
-      // desc score sequence strictly grows in (length, lexicographic)
-      // order, so the max such emission IS the last one — no reliance on
-      // sink row order
-      implicit val seqOrd: Ordering[Seq[Double]] =
-        math.Ordering.Implicits.seqOrdering
-      val rows = s.table("topk_test")
-        .collect()
-        .map(r => (r.getString(0), r.getSeq[Long](1), r.getSeq[Double](2)))
-        .groupBy(_._1)
-        .map { case (key, es) =>
-          key -> es.maxBy(e => (e._3.length, e._3))._2
-        }
-      val expected = evs.groupBy(_.event_type).view.mapValues { es =>
-        es.map(e => (e.value, e.event_id))
-          .sortBy { case (v, id) => (-v, id) }.take(k).map(_._2).toSeq
-      }.toMap
-      assert(rows == expected,
-        s"streaming leaderboard must equal batch top-k: $rows vs $expected")
-    } finally q.stop()
-  }
-
   test("streaming classifier scoring collapses to the batch decisions") {
     val s = spark
     import s.implicits._
@@ -268,136 +198,6 @@ class StreamingEventsSpec extends AnyFunSuite {
         s"stream decisions diverge from batch for ${
           got.keySet.filter(k => got(k) != batch(k))}")
       assert(got.size == testDocs.size, "every fed doc must be scored")
-    } finally q.stop()
-  }
-
-  test("streaming SCD2 closes exactly the batch q40 intervals with O(1) state") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val evs = Tables.load(s, SparkTestSession.sf0001, "events")
-      .as[Ev].collect().sortBy(e => (e.ts.getTime, e.event_id)).take(300)
-    // global ts order implies per-key order — the CDC delivery contract
-    val feed = evs.map(e =>
-      (e.user_id, e.event_id, e.ts.getTime * 1000L, e.event_type))
-    val mem = MemoryStream[(Long, Long, Long, String)]
-    val closed = StatefulOps.scd2Stream(mem.toDS())
-    val q = closed.writeStream.outputMode("append")
-      .format("memory").queryName("scd2_test").start()
-    try {
-      feed.grouped(100).foreach { b => mem.addData(b.toSeq); q.processAllAvailable() }
-      val got = s.table("scd2_test").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
-          r.getLong(3), r.getLong(4))).toSet
-      // batch expectation: q40's change-compression + lead() intervals
-      // over the same slice, CLOSED rows only (open intervals live in
-      // keyed state until their closing event arrives)
-      val expected = evs.groupBy(_.user_id).toSeq.flatMap { case (u, es) =>
-        val ch = es.sortBy(e => (e.ts.getTime, e.event_id))
-          .foldLeft(Vector.empty[Ev]) { (acc, e) =>
-            if (acc.nonEmpty && acc.last.event_type == e.event_type) acc
-            else acc :+ e
-          }
-        ch.sliding(2).collect { case Vector(a, b) =>
-          (u, a.event_id, a.event_type,
-            a.ts.getTime * 1000L, b.ts.getTime * 1000L)
-        }
-      }.toSet
-      assert(got == expected,
-        s"streaming SCD2 must equal batch closed intervals " +
-          s"(got ${got.size}, want ${expected.size})")
-    } finally q.stop()
-  }
-
-  test("streaming gap-fill audit folds to the batch q48 rows with O(1) state") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val dir = SparkTestSession.sf0001
-    // the finalized-hour feed a watermark-closed windowed agg would emit:
-    // one (user, hr, cents) row per observed hour, quantized exactly as
-    // q48 quantizes (round(v·100) over the decimal-summed hourly value)
-    val hourly = Tables.load(s, dir, "events")
-      .filter($"event_type" === "purchase")
-      .withColumn("hr", expr("unix_micros(ts) DIV 3600000000"))
-      .groupBy($"user_id", $"hr")
-      .agg(sum($"value".cast("decimal(18,2)")).cast("double").as("v"))
-      .select($"user_id", $"hr", round($"v" * 100).cast("long").as("cents"))
-      .as[(Long, Long, Long)].collect().sortBy(r => (r._2, r._1))
-    // global hr order implies per-user hr order — watermark delivery
-    val mem = MemoryStream[(Long, Long, Long)]
-    val q = StatefulOps.gapFillStream(mem.toDS()).writeStream
-      .outputMode("update").format("memory").queryName("gapfill_test")
-      .start()
-    try {
-      hourly.grouped(hourly.length / 3 + 1).foreach { b =>
-        mem.addData(b.toSeq); q.processAllAvailable()
-      }
-      // latest emission per user = max n_hours (strictly increasing per
-      // emission: every accepted observation advances the last hour)
-      val got = s.table("gapfill_test").collect()
-        .map(r => (r.getLong(0),
-          (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))))
-        .groupBy(_._1).map { case (u, rows) => u -> rows.map(_._2).maxBy(_._1) }
-      val want = graft.operators.Relational.q48GapFillSparse(s, dir).collect()
-        .map(r => r.getLong(0) ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))))
-        .toMap
-      assert(got == want,
-        s"streaming gap-fill must equal batch q48 " +
-          s"(got ${got.size} users, want ${want.size})")
-    } finally q.stop()
-  }
-
-  test("streaming gap-fill fails fast on a non-advancing hour (the " +
-    "double-count guard)") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val mem = MemoryStream[(Long, Long, Long)]
-    val q = StatefulOps.gapFillStream(mem.toDS()).writeStream
-      .outputMode("update").format("memory").queryName("gapfill_ooo")
-      .start()
-    try {
-      mem.addData(Seq((1L, 10L, 100L), (1L, 12L, 200L)))
-      q.processAllAvailable()
-      // hour 12 redelivered: absorbing it silently would double-count
-      // carried cents, so the contract violation must kill the query
-      mem.addData(Seq((1L, 12L, 200L)))
-      val ex = intercept[Exception](q.processAllAvailable())
-      def messages(t: Throwable): Seq[String] =
-        Option(t).toSeq.flatMap(e =>
-          Option(e.getMessage).toSeq ++ messages(e.getCause))
-      assert(messages(ex).exists(_.contains("ordering contract")),
-        s"must fail via the contract guard: ${messages(ex)}")
-    } finally q.stop()
-  }
-
-  test("streaming SCD2 drops ordering-contract violations instead of " +
-    "emitting inverted intervals") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val mem = MemoryStream[(Long, Long, Long, String)]
-    val q = StatefulOps.scd2Stream(mem.toDS()).writeStream
-      .outputMode("append").format("memory").queryName("scd2_ooo").start()
-    try {
-      mem.addData(Seq((1L, 1L, 100L, "a"), (1L, 2L, 200L, "b")))
-      q.processAllAvailable()
-      // eid=3 arrives late: ts 150 predates the open interval's start 200.
-      // Closing with it would emit the inverted [200, 150); the guard
-      // drops it instead, so eid=4 closes b at its true end.
-      mem.addData(Seq((1L, 3L, 150L, "c")))
-      q.processAllAvailable()
-      mem.addData(Seq((1L, 4L, 300L, "a")))
-      q.processAllAvailable()
-      val got = s.table("scd2_ooo").collect()
-        .map(r => (r.getLong(1), r.getString(2), r.getLong(3), r.getLong(4)))
-        .toSet
-      assert(got == Set((1L, "a", 100L, 200L), (2L, "b", 200L, 300L)),
-        s"out-of-order close must be dropped, got $got")
-      assert(got.forall { case (_, _, f, t) => f < t },
-        "no inverted intervals may ever be emitted")
     } finally q.stop()
   }
 
@@ -464,50 +264,6 @@ class StreamingEventsSpec extends AnyFunSuite {
       assert(sessions > evs.map(_.user_id).distinct.size,
         "gap-based splitting must produce multiple sessions per user")
     } finally q.stop()
-  }
-
-  // the update-mode twin of the reference's delete op
-  // (/root/reference/api/statements.py:168): once the watermark passes a
-  // window's end, its group is final — the sink emits exactly one -D
-  // carrying the final value, mirroring state eviction on the wire.
-  test("update-mode sink emits one -D with the final value on watermark eviction") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val mem = MemoryStream[Ev]
-    val agg = mem.toDF()
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window($"ts", "1 hour").as("w"), $"event_type")
-      .agg(count(lit(1)).as("n"))
-      .select($"w.end".as("w_end"), $"event_type", $"n")
-    val handle = ChangelogStream.updating(agg, "eviction-test",
-      Seq("w_end", "event_type"), evictBy = Some("w_end"))
-    val changelog = handle.changelog()
-    try {
-      def ev(id: Long, t: String) =
-        Ev(id, Timestamp.valueOf(t), 1L, "click", 1.0, "{}")
-      // three events in the 00:00 window → group reaches n=3
-      mem.addData(Seq(ev(1, "2024-01-01 00:05:00"), ev(2, "2024-01-01 00:10:00"),
-        ev(3, "2024-01-01 00:20:00")))
-      handle.processAllAvailable()
-      // far-future event advances the watermark past 01:00 (recorded after
-      // this batch)...
-      mem.addData(Seq(ev(4, "2024-01-01 09:00:00")))
-      handle.processAllAvailable()
-      // ...and the next batch's sink pass observes it and evicts
-      mem.addData(Seq(ev(5, "2024-01-01 09:30:00")))
-      handle.processAllAvailable()
-      changelog.consume()
-      val deletes = changelog.history.filter(_.op.contains(Op.Delete))
-      assert(deletes.size == 1, s"exactly one -D expected, got $deletes")
-      assert(deletes.head.values(1) == "click" && deletes.head.values(2) == 3L,
-        s"-D must carry the group's final value: ${deletes.head}")
-      // and it is non-spurious: the still-open 09:00 window has no -D
-      val openWindow = changelog.history.filter(r =>
-        r.op.contains(Op.Delete) &&
-          r.values.head.toString.contains("09:00:00"))
-      assert(openWindow.isEmpty)
-    } finally handle.stop()
   }
 
   test("streaming dedup within watermark drops replayed events") {
@@ -594,86 +350,80 @@ class StreamingEventsSpec extends AnyFunSuite {
   }
 
   test("keyed state survives a stop/restart from the checkpoint") {
+    import StatefulOps.{UpsertDelta, UpsertEvent}
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
 
-    val events = Tables.load(s, SparkTestSession.sf0001, "events")
-      .as[Ev].collect().toSeq.sortBy(_.event_id)
-    val (first, second) = events.splitAt(events.size / 2)
+    // two feeds; the same id in both is two independent rows
+    val before = Seq(
+      (0, UpsertEvent(10L, 1L, "a1", delete = false)),
+      (0, UpsertEvent(10L, 2L, "a2", delete = false)),
+      (0, UpsertEvent(20L, 3L, "a3", delete = false)),
+      (1, UpsertEvent(10L, 1L, "b1", delete = false)),
+      (1, UpsertEvent(20L, 2L, "b2", delete = false)))
+    // after the restart: re-key and re-value feed 0's id 2, delete feed
+    // 1's id 1, insert a new id — the first two need pre-restart state
+    val after = Seq(
+      (0, UpsertEvent(30L, 2L, "a2'", delete = false)),
+      (1, UpsertEvent(10L, 1L, "", delete = true)),
+      (1, UpsertEvent(30L, 4L, "b4", delete = false)))
+    def stamped(evs: Seq[(Int, UpsertEvent)], from: Long) =
+      evs.zipWithIndex.map { case ((f, e), i) => (from + i, f, e) }
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft-ckpt").toFile.getPath
     // foreachBatch sink that tolerates batch REPLAY (idempotent by
     // batchId) — the sink contract a recovering query actually requires
-    val seen = scala.collection.mutable.Map.empty[Long, Array[(String, Long)]]
-    def start(mem: MemoryStream[Ev]) =
-      StatefulOps.runningCounts[Ev](mem.toDS(), _.event_type, _.value)
+    val seen = scala.collection.mutable.Map.empty[Long, Array[UpsertDelta]]
+    def start(mem: MemoryStream[(Long, Int, UpsertEvent)]) =
+      StatefulOps.changelogUnionUpsertStream(mem.toDS())
         .writeStream
-        .outputMode("update")
+        .outputMode("append")
         .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[StatefulOps.KeyedCount],
+        .foreachBatch { (df: org.apache.spark.sql.Dataset[UpsertDelta],
                          batchId: Long) =>
-          seen(batchId) = df.collect().map(kc => kc.key -> kc.n)
+          seen(batchId) = df.collect()
           ()
         }
         .start()
 
-    val mem = MemoryStream[Ev]
+    val mem = MemoryStream[(Long, Int, UpsertEvent)]
     val q1 = start(mem)
     try {
-      mem.addData(first)
+      mem.addData(stamped(before, 0L))
       q1.processAllAvailable()
     } finally q1.stop()
+    val firstBatches = seen.keySet.toSet
     // cold restart: a NEW query object recovers offsets + keyed state
     // from the checkpoint directory, not from the old query instance
     val q2 = start(mem)
     try {
-      mem.addData(second)
+      mem.addData(stamped(after, before.size.toLong))
       q2.processAllAvailable()
     } finally q2.stop()
 
-    // the last emission per key must reflect ALL events across both
-    // incarnations — i.e. the per-key counter state crossed the restart
-    val lastPerKey = seen.toSeq.sortBy(_._1).flatMap(_._2.toSeq)
-      .foldLeft(Map.empty[String, Long]) { case (m, (k, n)) => m + (k -> n) }
-    val expected = events.groupBy(_.event_type).view.mapValues(_.size.toLong).toMap
-    assert(lastPerKey == expected,
-      s"recovered counts $lastPerKey != uninterrupted $expected")
-  }
-
-  test("streaming LSH near-dup detection converges to the batch d4 pair set") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val dir = SparkTestSession.sf0001
-
-    val docs = Tables.load(s, dir, "documents").as[Doc].collect().toSeq
-    // out-of-order feed: a dup pair's members arrive in different batches
-    // in both orders across the corpus
-    val shuffled = docs.sortBy(d => d.doc_id * 2654435761L % 101)
-    val mem = MemoryStream[Doc]
-    val matches = StatefulOps.nearDupStream(
-      mem.toDF().select($"doc_id", $"text"))
-    val q = matches.writeStream.outputMode("update")
-      .format("memory").queryName("neardup_test").start()
-    try {
-      shuffled.grouped(shuffled.size / 3 + 1).foreach { b =>
-        mem.addData(b); q.processAllAvailable()
-      }
-      // a pair colliding in several bands emits once per band — consumers
-      // dedupe on (d1, d2); the estimate is the same from every band
-      val streamed = s.table("neardup_test").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      // nearDupStream mirrors the ENGINE-hash twin (one-pass ShingleHashes
-      // + xxhash64 buckets, the 100 TB default); the registry row is the
-      // md5 family, a different random hash family with different pairs
-      val batch = graft.operators.Dedup.d4MinHashLsh(s, dir)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .toSet
-      assert(batch.nonEmpty, "fixture should contain near-dup pairs")
-      assert(streamed == batch,
-        s"streaming near-dup != batch d4 (${streamed.size} vs ${batch.size})")
-    } finally q.stop()
+    // the restarted incarnation retracts pre-restart rows with the key
+    // and value the checkpointed state stored for them
+    val restarted = seen.toSeq.filterNot(b => firstBatches(b._1))
+      .flatMap(_._2).toSet
+    assert(restarted.contains(UpsertDelta(3, 10L, 2L, "a2", 0)),
+      s"re-keyed id must retract its stored row: $restarted")
+    assert(restarted.contains(UpsertDelta(3, 10L, 1L, "b1", 1)),
+      s"deleted id must retract its stored row: $restarted")
+    // the collapse of every delta across both incarnations is the
+    // feeds' live rows: nothing lost, nothing counted twice
+    val counts = seen.toSeq.sortBy(_._1).flatMap(_._2)
+      .groupBy(d => (d.feed, d.key, d.id, d.value))
+      .view.mapValues(_.map(d => if (d.op == 0) 1 else -1).sum).toMap
+    assert(counts.values.forall(c => c == 0 || c == 1),
+      s"collapse must never go negative or double-insert: $counts")
+    val live = scala.collection.mutable.Map.empty[(Int, Long), (Long, String)]
+    (before ++ after).foreach { case (f, e) =>
+      if (e.delete) live.remove((f, e.id)) else live((f, e.id)) = (e.key, e.value)
+    }
+    assert(counts.filter(_._2 == 1).keySet ==
+      live.map { case ((f, id), (k, v)) => (f, k, id, v) }.toSet,
+      s"recovered view $counts != the feeds' live rows $live")
   }
 
   test("one-feed changelogUnionUpsertStream property: collapsing the " +
@@ -719,39 +469,6 @@ class StreamingEventsSpec extends AnyFunSuite {
           s"maintained view diverged at prefix ${prefix.size}")
       }
     } finally q.stop()
-  }
-
-  test("nearDupStream bucket saturation is observable via the overflow " +
-    "accumulator") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val dir = SparkTestSession.sf0001
-    val docs = Tables.load(s, dir, "documents").as[Doc].collect().toSeq
-
-    // ample cap: no eviction may occur, and the counter must say so
-    val cleanAcc = s.sparkContext.longAccumulator("neardup.overflow.clean")
-    val mem1 = MemoryStream[Doc]
-    val q1 = StatefulOps.nearDupStream(
-        mem1.toDF().select($"doc_id", $"text"), overflowAcc = Some(cleanAcc))
-      .writeStream.outputMode("update")
-      .format("memory").queryName("neardup_ovf_clean").start()
-    try { mem1.addData(docs); q1.processAllAvailable() } finally q1.stop()
-    assert(cleanAcc.value == 0L,
-      s"default cap must absorb the fixture without eviction (${cleanAcc.value})")
-
-    // bucketCap=1 forces every second resident of any shared bucket out —
-    // recall degradation the accumulator must surface as a non-zero count
-    val tightAcc = s.sparkContext.longAccumulator("neardup.overflow.tight")
-    val mem2 = MemoryStream[Doc]
-    val q2 = StatefulOps.nearDupStream(
-        mem2.toDF().select($"doc_id", $"text"),
-        bucketCap = 1, overflowAcc = Some(tightAcc))
-      .writeStream.outputMode("update")
-      .format("memory").queryName("neardup_ovf_tight").start()
-    try { mem2.addData(docs); q2.processAllAvailable() } finally q2.stop()
-    assert(tightAcc.value > 0L,
-      "a saturating cap must be visible in the overflow accumulator")
   }
 
   test("streaming ANN answers equal batch v4 through the shared persisted " +
@@ -1164,44 +881,6 @@ class StreamingEventsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming sessionization closes exactly the batch q21 sessions " +
-    "with O(1) state") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val dir = SparkTestSession.sf0001
-    // true-microsecond feed (getTime*1000 would truncate sub-ms and
-    // diverge from batch q21's unix_micros math)
-    val feed = Tables.load(s, dir, "events")
-      .selectExpr("user_id", "event_id", "unix_micros(ts) AS ts_us")
-      .as[(Long, Long, Long)].collect()
-      .sortBy(e => (e._3, e._2)) // global ts order ⇒ per-key order
-    val mem = MemoryStream[(Long, Long, Long)]
-    val q = StatefulOps.sessionStream(mem.toDS()).writeStream
-      .outputMode("append").format("memory").queryName("sess_test").start()
-    try {
-      feed.grouped(feed.length / 3 + 1).foreach { b =>
-        mem.addData(b.toSeq); q.processAllAvailable()
-      }
-      val got = s.table("sess_test").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSet
-      // batch q21 over the same fixture; each user's LAST session is
-      // still open in keyed state, so drop it from the expectation
-      val batch = graft.operators.Relational
-        .q21Sessionize(s, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      val expected = batch.groupBy(_._1).values
-        .flatMap(ss => ss.sortBy(_._2).init).toSet
-      assert(got == expected,
-        s"streaming sessions diverge from batch q21 closed sessions " +
-          s"(got ${got.size}, want ${expected.size})")
-      // the open tails exist: every user's max batch session is absent
-      assert(batch.groupBy(_._1).values
-        .forall(ss => !got.contains(ss.maxBy(_._2))))
-    } finally q.stop()
-  }
-
   test("streaming incremental dedup admits exactly the batch d15 " +
     "verdicts against the persisted snapshot index") {
     val s = spark
@@ -1271,58 +950,6 @@ class StreamingEventsSpec extends AnyFunSuite {
         s"an all-hot-shingle doc must emit exactly one admitting " +
           s"verdict, got ${tail.mkString(";")}")
     } finally q3.stop()
-  }
-
-  test("streaming sequence packing folds to batch p15 on one shard and " +
-    "to independent per-shard walks on many") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val dir = SparkTestSession.sf0001
-    val seqLen = graft.operators.Pipeline.SeqLen.toLong
-    val docs = Tables.load(s, dir, "documents")
-      .selectExpr("doc_id", "CAST(size(split(text, ' ')) AS LONG) nt")
-      .as[(Long, Long)].collect().sortBy(_._1)
-    // single shard, doc_id order: the global pack == batch p15
-    val mem = MemoryStream[(Int, Long, Long)]
-    val q = StatefulOps.packStream(mem.toDS(), seqLen).writeStream
-      .outputMode("append").format("memory").queryName("pack_test").start()
-    try {
-      docs.map { case (id, nt) => (0, id, nt) }
-        .grouped(docs.length / 3 + 1)
-        .foreach { b => mem.addData(b.toSeq); q.processAllAvailable() }
-      val got = s.table("pack_test").collect()
-        .map(r => r.getLong(1) -> ((r.getLong(3), r.getLong(4), r.getLong(5))))
-        .toMap
-      val batch = graft.operators.Pipeline.p15SequencePack(s, dir).collect()
-        .map(r => r.getLong(0) -> ((r.getLong(3), r.getLong(5), r.getLong(4))))
-        .toMap
-      assert(got == batch, s"single-shard stream pack diverges from batch " +
-        s"p15 (got ${got.size} rows, want ${batch.size})")
-    } finally q.stop()
-    // three shards: each folds its own walk, states never interleave
-    val mem2 = MemoryStream[(Int, Long, Long)]
-    val q2 = StatefulOps.packStream(mem2.toDS(), seqLen).writeStream
-      .outputMode("append").format("memory").queryName("pack_test2").start()
-    try {
-      docs.map { case (id, nt) => ((id % 3).toInt, id, nt) }
-        .grouped(docs.length / 3 + 1)
-        .foreach { b => mem2.addData(b.toSeq); q2.processAllAvailable() }
-      val got = s.table("pack_test2").collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(3), r.getLong(4),
-          r.getLong(5))).toSet
-      val expect = docs.groupBy { case (id, _) => (id % 3).toInt }
-        .iterator.flatMap { case (shard, ds) =>
-          var cum = 0L
-          ds.sortBy(_._1).map { case (id, nt) =>
-            val row = (shard, id, cum / seqLen, cum % seqLen,
-              (cum + nt - 1) / seqLen)
-            cum += nt
-            row
-          }
-        }.toSet
-      assert(got == expect, "per-shard walks diverge from driver recompute")
-    } finally q2.stop()
   }
 
   test("hot-key churn microbench: a 40k-live-row join key absorbs a " +
