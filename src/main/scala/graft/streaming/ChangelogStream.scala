@@ -2,7 +2,11 @@ package graft.streaming
 
 import scala.collection.mutable
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.changelog.{Changelog, ChangelogRecord, Op, RawRecord}
@@ -32,8 +36,8 @@ final class ChangelogSynthesizer(schema: Seq[String], keyCols: Seq[String]) {
   private val state = mutable.LinkedHashMap.empty[Vector[Any], Vector[Any]]
 
   /** Live group count — the bound on how many `-D`s a snapshot diff can
-    * emit beyond its batch rows, which the sinks' single bounded collect
-    * reserves room for (see RecordLog.boundedCollect). */
+    * emit beyond its batch rows, which the synthesizer sinks subtract
+    * before they size their batch's row cap (see RecordLog.boundedCollect). */
   def size: Int = state.size
 
   private def key(row: Vector[Any]): Vector[Any] = keyIdx.map(row).toVector
@@ -99,13 +103,39 @@ object ChangelogStream {
     * results are thousands of rows; a million signals misuse). */
   val DefaultMaxBufferedRecords: Int = 1 << 20
 
-  /** Append-only, bounded record log. Every sink moves its micro-batch to
-    * the driver through [[boundedCollect]], one Spark pass per batch.
-    * Cursors read at their own offset and never steal from each other
-    * (unlike a shared destructive queue); records appended after a cursor
-    * is created are still seen by it. */
-  private final class RecordLog(maxRecords: Int) {
+  /** A sink's task over one partition of its micro-batch: copies at most
+    * `limit` rows, and drains the partition when it holds fewer. A named
+    * class rather than a lambda, so Spark's `ClosureCleaner` has no
+    * closure bytecode to read on every job. */
+  private final class TakeRows(limit: Long)
+      extends ((TaskContext, Iterator[InternalRow]) => Array[InternalRow])
+      with Serializable {
+    def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Array[InternalRow] = {
+      val out = Array.newBuilder[InternalRow]
+      var n = 0L
+      while (n < limit && rows.hasNext) { out += rows.next().copy(); n += 1 }
+      out.result()
+    }
+  }
+
+  /** Append-only, bounded record log over the rows of `df`'s micro-batches.
+    * Every sink moves its micro-batch to the driver through
+    * [[boundedCollect]], one Spark job per batch. Cursors read at their
+    * own offset and never steal from each other (unlike a shared
+    * destructive queue); records appended after a cursor is created are
+    * still seen by it. */
+  private final class RecordLog(maxRecords: Int, df: DataFrame) {
     private val buf = mutable.ArrayBuffer.empty[RawRecord]
+
+    /** Turns a batch's internal rows into the values `Dataset.collect()`
+      * returns: the same deserializer, under the conf the query clones
+      * from `df`'s session at start (so `spark.sql.datetime.java8API.enabled`
+      * picks the same date/time classes). Built once per sink. */
+    private val fromRow =
+      SQLConf.withExistingConf(df.sparkSession.sessionState.conf) {
+        ExpressionEncoder(RowEncoder.encoderFor(df.schema))
+          .resolveAndBind().createDeserializer()
+      }
 
     def append(recs: Seq[RawRecord]): Unit = synchronized {
       if (buf.length + recs.length > maxRecords)
@@ -117,14 +147,18 @@ object ChangelogStream {
       buf ++= recs
     }
 
-    /** The micro-batch's rows, collected in ONE pass whose driver
-      * transfer is fail-fast-bounded: `limit(cap + 1).collect()` moves at
-      * most one row past `cap` — enough to raise the documented over-cap
-      * error — so a catch-up batch larger than driver memory can never
-      * OOM the driver. An under-cap batch is never truncated: the limit
-      * only stops the scan early once cap+1 rows arrived, so every
-      * partition, and the state-store stage under it (which loads and
-      * commits its state per task), runs exactly once per batch.
+    /** The micro-batch's rows, moved to the driver by ONE Spark job over
+      * the batch's already-planned RDD, on all its partitions: no plan is
+      * built on top of the batch, so no Catalyst pass and no second job
+      * runs per batch. The transfer is fail-fast-bounded: each partition
+      * sends at most `cap + 1` rows, so an over-cap batch raises the
+      * documented error after at most P·(cap + 1) rows reached the driver
+      * (P = the batch's partition count), however large the batch is;
+      * `spark.driver.maxResultSize` still aborts a job whose partitions
+      * together send more than it allows. An under-cap
+      * batch is never truncated: every partition, and the state-store
+      * stage under it (which loads and commits its state per task), is
+      * drained exactly once per batch.
       *
       * The append sinks (appending / deltaPassthrough) emit one record
       * per row, so their cap is the log's remaining capacity. A
@@ -141,16 +175,17 @@ object ChangelogStream {
       val remaining = synchronized(maxRecords - buf.length)
       val cap = synth.fold(remaining)(s =>
         math.max(0, (remaining - s.synchronized(s.size)) / 2))
-      val rows = batch.limit(cap + 1).collect()
-      if (rows.length > cap)
+      val parts = batch.sparkSession.sparkContext
+        .runJob(batch.queryExecution.toRdd, new TakeRows(cap + 1L))
+      if (parts.iterator.map(_.length.toLong).sum > cap)
         throw new IllegalStateException(
           s"changelog sink micro-batch exceeds remaining capacity $cap of " +
-            s"maxBufferedRecords=$maxRecords, stopped at ${cap + 1} rows " +
-            "before collecting the rest: these sinks retain results " +
-            "driver-side for cursor replay and are meant for " +
-            "dashboard-sized result consumption, not ETL — consume a " +
+            s"maxBufferedRecords=$maxRecords, stopped each partition at " +
+            s"${cap + 1} rows before collecting the rest: these sinks " +
+            "retain results driver-side for cursor replay and are meant " +
+            "for dashboard-sized result consumption, not ETL — consume a " +
             "bounded query, or write large results to a real sink")
-      rows.toSeq.map(_.toSeq.toVector)
+      parts.iterator.flatten.map(r => fromRow(r).toSeq.toVector).toSeq
     }
 
     private def logSize: Int = synchronized(buf.length)
@@ -214,9 +249,9 @@ object ChangelogStream {
                maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle = {
     val schema = df.schema.fieldNames.toSeq
     val synth = new ChangelogSynthesizer(schema, keyCols)
-    val log = new RecordLog(maxBufferedRecords)
+    val log = new RecordLog(maxBufferedRecords, df)
     val query = start(df, "update", queryName, trigger) { batch =>
-      // one bounded pass, checked before any state mutation (see
+      // one bounded Spark job, checked before any state mutation (see
       // boundedCollect): a high-cardinality grouping in a catch-up
       // micro-batch must error via the documented cap, not OOM the driver
       val rows = log.boundedCollect(batch, Some(synth))
@@ -238,9 +273,9 @@ object ChangelogStream {
                    maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle = {
     val schema = df.schema.fieldNames.toSeq
     val synth = new ChangelogSynthesizer(schema, keyCols)
-    val log = new RecordLog(maxBufferedRecords)
+    val log = new RecordLog(maxBufferedRecords, df)
     val query = start(df, "complete", queryName, trigger) { batch =>
-      // same bounded single pass as `updating` — a complete-mode
+      // same bounded single job as `updating` — a complete-mode
       // snapshot larger than the log's remaining capacity cannot fit
       val rows = log.boundedCollect(batch, Some(synth))
       val recs = synth.synchronized(synth.onSnapshot(rows))
@@ -266,14 +301,15 @@ object ChangelogStream {
     * sees only the TRUE OUTPUT DELTA of the join (not a rescan), and the
     * fold's state is O(output groups) — dashboard-sized by the same
     * contract as [[ChangelogSynthesizer]]. The deltas reach the driver in
-    * one fail-fast-bounded pass ([[RecordLog.boundedCollect]]). */
+    * one fail-fast-bounded Spark job per micro-batch
+    * ([[RecordLog.boundedCollect]]). */
   def foldingSnapshot(df: DataFrame, queryName: String,
                       outSchema: Seq[String], keyCols: Seq[String],
                       fold: Seq[Vector[Any]] => Seq[Seq[Vector[Any]]],
                       trigger: Trigger = Trigger.ProcessingTime(0),
                       maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle = {
     val synth = new ChangelogSynthesizer(outSchema, keyCols)
-    val log = new RecordLog(maxBufferedRecords)
+    val log = new RecordLog(maxBufferedRecords, df)
     // the IVM operators emit their deltas in APPEND mode (delta streams
     // are append streams — which is also what lets several of them chain
     // in one query: Spark permits multiple flatMapGroupsWithState only
@@ -298,7 +334,7 @@ object ChangelogStream {
                        maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle = {
     val opIdx = df.schema.fieldIndex(opCol)
     val schema = df.schema.fieldNames.toSeq.patch(opIdx, Nil, 1)
-    val log = new RecordLog(maxBufferedRecords)
+    val log = new RecordLog(maxBufferedRecords, df)
     // append mode: see foldingSnapshot — delta streams are append streams
     val query = start(df, "append", queryName, trigger) { batch =>
       // each input row is exactly one record (see boundedCollect)
@@ -317,7 +353,7 @@ object ChangelogStream {
                 trigger: Trigger = Trigger.ProcessingTime(0),
                 maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle = {
     val schema = df.schema.fieldNames.toSeq
-    val log = new RecordLog(maxBufferedRecords)
+    val log = new RecordLog(maxBufferedRecords, df)
     val query = start(df, "append", queryName, trigger) { batch =>
       // append-only: one record per input row (see boundedCollect)
       log.append(log.boundedCollect(batch)

@@ -1,12 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.Column
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 import graft.changelog.{ChangelogRecord, Op}
+import graft.streaming.StatefulOps.UpsertEvent
 
 /** The `user` fixture type — the four fields the reference's queries
   * contractually require (FIXTURES.md §1). */
@@ -190,13 +194,13 @@ class ChangelogStreamSpec extends AnyFunSuite {
   }
 
   // the cap must protect the driver BEFORE the transfer, not only after:
-  // the sink collects `limit(remainingCapacity + 1)`, so a catch-up
-  // micro-batch far larger than the budget still fails via the log's
-  // documented error while only ~cap+1 rows ever flow toward the driver.
-  // An accumulator in the projection feeding the collect counts executor-
-  // side row evaluations: executeTake pulls the projection at most
-  // limit times per scanned partition, so the count stays orders of
-  // magnitude below the batch size.
+  // each partition of the batch sends at most remainingCapacity + 1 rows,
+  // so a catch-up micro-batch far larger than the budget still fails via
+  // the log's documented error while only ~cap+1 rows per partition ever
+  // flow toward the driver. An accumulator in the projection feeding the
+  // collect counts executor-side row evaluations: the sink's task pulls
+  // the projection at most cap+1 times per partition, so the count stays
+  // orders of magnitude below the batch size.
   test("oversized micro-batch fails via the cap with a bounded collect") {
     val s = spark
     import s.implicits._
@@ -226,11 +230,11 @@ class ChangelogStreamSpec extends AnyFunSuite {
   // the synthesizer sinks (updating/snapshotting) must never fold a
   // truncated batch — it would corrupt synthesizer state (dropped groups
   // would later read as deletions) — so their bound is fail-fast: the
-  // single limit(cap+1) collect errors once more than cap rows arrive,
-  // BEFORE any synthesizer mutation. The nondeterministic instrumented
-  // projection (pruning-proof) counts row evaluations: the bounded pass
-  // stops each partition at cap+1 rows, so evals < R proves the full
-  // R-row transfer never happened.
+  // single bounded job errors once more than cap rows arrive, BEFORE any
+  // synthesizer mutation. The nondeterministic instrumented projection
+  // (pruning-proof) counts row evaluations: the bounded job stops each
+  // partition at cap+1 rows, so evals < R proves the full R-row transfer
+  // never happened.
   test("over-cap grouped micro-batch fails via the cap before collecting") {
     val s = spark
     import s.implicits._
@@ -303,6 +307,153 @@ class ChangelogStreamSpec extends AnyFunSuite {
             "micro-batch — the batch plan ran more than once")
       } finally handle.stop()
     }
+  }
+
+  // one Spark job per micro-batch: every sink moves its batch to the
+  // driver with a single job over the batch's planned RDD, whatever the
+  // batch's partition count (a `limit(n).collect()` reads partition 0 in
+  // one job and the other partitions in a second). A listener counts job
+  // starts per streaming batch id in each query's job group (its run id);
+  // the grouped, deduplicating and upsert plans end in the session's 4
+  // shuffle partitions.
+  test("every sink runs one Spark job per micro-batch") {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val marker = "one-job-per-batch-marker"
+    val markerSeen = new CountDownLatch(1)
+    val jobs = new ConcurrentHashMap[(String, String), Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        val group = prop("spark.jobGroup.id")
+        if (group.contains(marker)) markerSeen.countDown()
+        for (g <- group; b <- prop("streaming.sql.batchId"))
+          jobs.merge((g, b), 1, (a: Integer, c: Integer) => a + c)
+      }
+    }
+    type Sink = (String, () => ChangelogStream.Handle, Int => Unit)
+    def ints(sink: String)(start: MemoryStream[Int] => ChangelogStream.Handle): Sink = {
+      val mem = MemoryStream[Int]
+      (sink, () => start(mem), i => mem.addData(i * 10 until i * 10 + 20))
+    }
+    def grouped(mem: MemoryStream[Int]) =
+      mem.toDF().groupBy($"value").agg(count(lit(1)).as("n"))
+    val upserts = (0 until 20).map(i =>
+      UpsertEvent(i % 3L, i % 7L, s"v$i", delete = i % 5 == 4))
+    val sinks = Seq[Sink](
+      ints("updating")(m => ChangelogStream.updating(
+        grouped(m), "one-job-updating", Seq("value"))),
+      ints("snapshotting")(m => ChangelogStream.snapshotting(
+        grouped(m), "one-job-snapshotting", Seq("value"))),
+      ints("foldingSnapshot")(m => ChangelogStream.foldingSnapshot(
+        m.toDF().dropDuplicates("value"), "one-job-folding",
+        Seq("value"), Seq("value"), deltas => Seq(deltas))),
+      ints("appending")(m => ChangelogStream.appending(m.toDF(), "one-job-appending")), {
+        val mem = MemoryStream[(Long, Int, UpsertEvent)]
+        ("deltaPassthrough", () => ChangelogStream.deltaPassthrough(
+          StatefulOps.changelogUnionUpsertStream(mem.toDS()).toDF(), "one-job-delta"),
+          i => mem.addData(upserts.zipWithIndex.map { case (e, j) =>
+            ((i * upserts.size + j).toLong, 0, e) }))
+      })
+    s.sparkContext.addSparkListener(listener)
+    try {
+      val batches = sinks.map { case (sink, start, feed) =>
+        val handle = start()
+        try {
+          (0 until 3).foreach { i => feed(i); handle.processAllAvailable() }
+          val withInput = handle.query.recentProgress
+            .filter(_.numInputRows > 0).map(_.batchId.toString).toSeq
+          assert(withInput.nonEmpty, s"$sink: no micro-batch had input")
+          (sink, handle.query.runId.toString, withInput)
+        } finally handle.stop()
+      }
+      // the listener bus delivers events in order: once a later job's
+      // start arrives, every sink job's start has been counted
+      s.sparkContext.setJobGroup(marker, marker)
+      try s.sparkContext.parallelize(Seq(1), 1).count()
+      finally s.sparkContext.clearJobGroup()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "listener never caught up")
+      val perBatch = batches.map { case (sink, runId, withInput) =>
+        sink -> withInput.map(b => b -> Option(jobs.get((runId, b))).fold(0)(_.intValue))
+      }
+      assert(perBatch.forall(_._2.forall(_._2 == 1)),
+        s"Spark jobs per micro-batch (sink -> batch id -> jobs): $perBatch")
+    } finally s.sparkContext.removeSparkListener(listener)
+  }
+
+  // the sinks decode a batch's rows themselves, so every type must come
+  // back exactly as `Dataset.collect()` returns it: the synthesizer and
+  // the consumers compare rows by value, and the date/time classes follow
+  // spark.sql.datetime.java8API.enabled. Row 0 is null in every column.
+  test("sink records equal collect() of the same rows for every column type") {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    def typed(ids: DataFrame): DataFrame = {
+      val v = $"value"
+      def col(e: Column, name: String) = when(v =!= 0, e).as(name)
+      ids.select(
+        col(concat(lit("s"), v), "str"),
+        col(v, "i"),
+        col(v.cast("long") * 10000000000L, "l"),
+        col(v / 3.0, "d"),
+        col(concat(v.cast("string"), lit(".123456789012345678")).cast("decimal(38,18)"), "dec"),
+        col(date_add(lit("2024-02-28").cast("date"), v), "dt"),
+        col(timestamp_micros(lit(1710035999123456L) + v.cast("long") * 3600000000L), "ts"),
+        col(timestamp_micros(lit(1710035999123456L) + v.cast("long") * 60000000L)
+          .cast("timestamp_ntz"), "ntz"),
+        col(concat(lit("b"), v.cast("string")).cast("binary"), "bin"),
+        col(array(v, v + 1, lit(null).cast("int")), "arr"),
+        col(map(concat(lit("k"), v.cast("string")), v * 2), "m"),
+        col(struct(v.as("a"), concat(lit("x"), v.cast("string")).as("b")), "st"))
+    }
+    def norm(row: Seq[Any]): Seq[Any] = row.map {
+      case b: Array[Byte] => b.toSeq
+      case other => other
+    }
+    val java8 = "spark.sql.datetime.java8API.enabled"
+    val before = s.conf.getOption(java8)
+    try Seq("false", "true").foreach { on =>
+      s.conf.set(java8, on)
+      val mem = MemoryStream[Int]
+      val handle = ChangelogStream.appending(typed(mem.toDF()), s"types-java8-$on")
+      try {
+        mem.addData(0 until 6)
+        handle.processAllAvailable()
+        val recs = handle.changelog().consume()
+        assert(recs.forall(_.op.contains(Op.Insert)))
+        val expected = typed((0 until 6).toDF("value")).collect().map(r => norm(r.toSeq))
+        val got = recs.map(r => norm(r.values))
+        assert(got.toSet == expected.toSet && got.size == expected.length,
+          s"java8API=$on: sink records\n$got\ndiffer from collect()\n${expected.toSeq}")
+        assert(got.flatten.collectFirst {
+          case d: java.time.LocalDate => d
+          case d: java.sql.Date => d
+        }.map(_.isInstanceOf[java.time.LocalDate]).contains(on.toBoolean),
+          s"java8API=$on: wrong date class in $got")
+      } finally handle.stop()
+    } finally before match {
+      case Some(v) => s.conf.set(java8, v)
+      case None => s.conf.unset(java8)
+    }
+  }
+
+  // the per-partition row limit is cap + 1, which must not wrap around
+  // when a caller lifts the budget to its largest value
+  test("a sink with maxBufferedRecords = Int.MaxValue keeps every row") {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val mem = MemoryStream[Int]
+    val handle = ChangelogStream.appending(mem.toDF(), "max-budget-test",
+      maxBufferedRecords = Int.MaxValue)
+    try {
+      mem.addData(1 to 5)
+      handle.processAllAvailable()
+      assert(handle.changelog().consume().map(_.values).toSet ==
+        (1 to 5).map(i => Vector[Any](i)).toSet)
+    } finally handle.stop()
   }
 
   test("append-only streaming query passes rows through as +I") {
