@@ -83,8 +83,10 @@ final class Statement private[api] (
     * copy per cursor); batch statements produce `+I` rows (a bounded
     * query's entire changelog is its result set).
     *
-    * The streaming iterator never exhausts (the query is continuous), so
-    * consumers must pass a bounded `limit` to `Changelog.consume`. Each
+    * The streaming iterator exhausts once its query has stopped and every
+    * record in the log has been read; while the query runs it never
+    * does, so a consumer of a running statement must pass a bounded
+    * `limit` to `Changelog.consume`. Each
     * empty poll sleeps `heartbeatMs` before yielding its heartbeat —
     * the in-process stand-in for the reference's per-page HTTP round trip,
     * without which a drained cursor busy-spins.
@@ -99,7 +101,9 @@ final class Statement private[api] (
     streamHandle match {
       case Some(h) => new Iterator[Option[RawRecord]] {
         private val log = h.records()
-        override def hasNext: Boolean = true // continuous: never exhausts
+        // isActive first: a last micro-batch appended just before the
+        // query ends is then still seen through log.hasNext
+        override def hasNext: Boolean = h.query.isActive || log.hasNext
         override def next(): Option[RawRecord] =
           if (log.hasNext) log.next().map { raw =>
             Changelog.validate(h.schema, raw); raw
@@ -1049,11 +1053,90 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     }
   }
 
+  /** The checked call of one of the facade's window functions (`tumble`,
+    * `hop`, `session`): `call` is the direct `fn(col, …) AS outName`
+    * SELECT item, `colIdx` the integral view column `col` binds to, and
+    * `lits` the call's positive integer-literal arguments in order. */
+  private case class WindowCall(fn: String, usage: String,
+      call: UnresolvedFunction, outName: String, col: UnresolvedAttribute,
+      colIdx: Int, lits: Seq[Long])
+
   /** A call of the facade's window function `fn`. Function names are not
     * identifiers: Spark matches them case-insensitively under every
     * `spark.sql.caseSensitive` setting, and so does this. */
   private def windowCall(f: UnresolvedFunction, fn: String): Boolean =
     f.nameParts.map(_.toLowerCase(java.util.Locale.ROOT)) == Seq(fn)
+
+  /** Whether the aggregate calls `fn` anywhere in its SELECT list or
+    * GROUP BY. */
+  private def callsWindow(agg: Aggregate, fn: String): Boolean =
+    (agg.aggregateExpressions ++ agg.groupingExpressions).exists(_.exists {
+      case f: UnresolvedFunction => windowCall(f, fn)
+      case _ => false
+    })
+
+  /** The frame every window rewrite shares: the aggregate's one call of
+    * `fn(col, <litNames>)`, None when it makes none. The call must be a
+    * direct aliased SELECT item (the changelog retracts windows by their
+    * visible start), appear once, take positive integer literals, and
+    * name an integral view column (the feed's event-time domain); any
+    * other shape rejects loudly. */
+  private def windowCallOf(agg: Aggregate, ds: DeltaSource, sql: String,
+      fn: String, litNames: Seq[String]): Option[WindowCall] = {
+    def bail(what: String): Nothing = unsupported(sql, what)
+    if (!callsWindow(agg, fn)) return None
+    val usage = s"$fn(col, ${litNames.mkString(", ")})"
+    val calls = agg.aggregateExpressions.collect {
+      case Alias(f: UnresolvedFunction, n) if windowCall(f, fn) => (f, n)
+    }
+    if (calls.isEmpty)
+      bail(s"$usage must appear as a direct aliased SELECT item (the " +
+        "changelog retracts windows by their visible start)")
+    if (calls.length > 1) bail(s"one $fn window per continuous statement")
+    val (f, outName) = calls.head
+    f.arguments match {
+      case (a: UnresolvedAttribute) +: args if args.length == litNames.length =>
+        val lits = args.zip(litNames).map {
+          case (Literal(i: java.lang.Integer, _), _) => i.longValue
+          case (Literal(l: java.lang.Long, _), _) => l.longValue
+          case (_, what) => bail(s"$fn $what must be an integer literal")
+        }
+        lits.zip(litNames).foreach { case (v, what) =>
+          if (v <= 0) bail(s"$fn $what must be positive")
+        }
+        val i = ds.resolve(a).getOrElse(
+          bail(s"$fn column ${a.nameParts.mkString(".")} does not resolve " +
+            s"in the maintained view (${ds.viewCols.mkString(", ")})"))
+        if (!Integral(ds.typeOf(i)))
+          bail(s"$fn column ${ds.viewCols(i)} must be integral " +
+            "(the feed's event-time domain)")
+        Some(WindowCall(fn, usage, f, outName, a, i, lits))
+      case _ => bail(s"$usage needs a view column and integer literal " +
+        litNames.mkString(" and "))
+    }
+  }
+
+  /** `agg` with `w`'s call replaced by `repl` in its SELECT item and its
+    * matching GROUP BY expression. A call left over after that was nested
+    * in another expression, and rejects: it would silently lose watermark
+    * eviction. */
+  private def substituteWindow(agg: Aggregate, w: WindowCall,
+      repl: Expression, sql: String): Aggregate = {
+    val newAgg = agg.copy(
+      aggregateExpressions = agg.aggregateExpressions.map {
+        case Alias(f: UnresolvedFunction, n) if f == w.call => Alias(repl, n)()
+        case other => other
+      },
+      groupingExpressions = agg.groupingExpressions.map {
+        case f: UnresolvedFunction if f == w.call => repl
+        case other => other
+      })
+    if (callsWindow(newAgg, w.fn))
+      unsupported(sql, s"${w.usage} may appear only as a direct aliased " +
+        "SELECT item and a matching GROUP BY expression — nesting it in " +
+        "another expression would silently lose watermark eviction")
+    newAgg
+  }
 
   /** `TUMBLE(col, width)` — the event-time tumbling window as a grouping
     * function over an integral view column (Flink SQL's `GROUP BY
@@ -1072,6 +1155,18 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     * direct `tumble(col, w) AS name` SELECT-item + matching GROUP BY
     * form routes; a tumble nested in another expression rejects loudly
     * (it would silently lose eviction). */
+  private def rewriteTumble(agg: Aggregate, ds: DeltaSource,
+      sql: String): (Aggregate, Option[(String, Long)]) =
+    windowCallOf(agg, ds, sql, "tumble", Seq("width")) match {
+      case None => (agg, None)
+      case Some(w) =>
+        val width = w.lits.head
+        val start = org.apache.spark.sql.catalyst.expressions.Subtract(w.col,
+          UnresolvedFunction(Seq("pmod"), Seq(w.col, Literal(width)),
+            isDistinct = false))
+        (substituteWindow(agg, w, start, sql), Some((w.outName, width)))
+    }
+
   /** `HOP(col, slide, width)` — the event-time SLIDING window as a
     * grouping function (Flink SQL's `GROUP BY HOP(ts, INTERVAL slide,
     * INTERVAL width)`): every row belongs to the ⌈width/slide⌉ windows
@@ -1090,91 +1185,45 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     * discipline). Width must be a positive multiple-or-more of slide
     * (width < slide would leave rows belonging to no window). */
   private def rewriteHop(agg: Aggregate, ds: DeltaSource,
-      sql: String): (DeltaSource, Aggregate, Option[(String, Long)]) = {
-    def bail(what: String): Nothing = unsupported(sql, what)
-    def isHop(f: UnresolvedFunction): Boolean =
-      windowCall(f, "hop")
-    def containsHop(es: Seq[Expression]): Boolean =
-      es.exists(_.exists {
-        case f: UnresolvedFunction => isHop(f)
-        case _ => false
-      })
-    if (!containsHop(agg.aggregateExpressions) &&
-        !containsHop(agg.groupingExpressions))
-      return (ds, agg, None)
-    val hops = agg.aggregateExpressions.collect {
-      case Alias(f: UnresolvedFunction, n) if isHop(f) => (f, n)
+      sql: String): (DeltaSource, Aggregate, Option[(String, Long)]) =
+    windowCallOf(agg, ds, sql, "hop", Seq("slide", "width")) match {
+      case None => (ds, agg, None)
+      case Some(w) =>
+        def bail(what: String): Nothing = unsupported(sql, what)
+        val Seq(slide, width) = w.lits
+        val outName = w.outName
+        if (width < slide) bail("hop width must be >= slide (a smaller " +
+          "width would leave rows belonging to no window)")
+        if (ds.viewCols.exists(resolver(_, outName)))
+          bail(s"hop output name $outName shadows a view column — alias " +
+            "it differently")
+        // the fan-out below selects source columns BY NAME, which a raw
+        // AnalysisException would reject if the projected source carries
+        // duplicate output names (a shape projectSource permits) — turn
+        // that into the loud documented rejection every other limit uses
+        val dupCols = ds.viewCols
+          .filter(c => ds.viewCols.count(resolver(_, c)) > 1).distinct
+        if (dupCols.nonEmpty)
+          bail(s"hop over a view with duplicate column names " +
+            s"(${dupCols.mkString(", ")}) — alias the subquery's items to " +
+            "unique names")
+        // the window-start fan-out, executor-side: one delta row per
+        // window the event falls in
+        val dsH: DeltaSource = {
+          import org.apache.spark.sql.functions.{col, explode, lit, pmod, sequence}
+          val v = ds.deltas(ds.viewCols(w.colIdx))
+          val last = v - pmod(v, lit(slide))
+          val vw = v - lit(width)
+          val first = vw - pmod(vw, lit(slide)) + lit(slide)
+          val exploded = ds.deltas.select(
+            (col("op") +: explode(sequence(first, last, lit(slide))).as(outName)
+              +: ds.viewCols.map(ds.deltas(_))): _*)
+          DeltaSource(exploded, ViewCol(outName, Seq(Seq(outName))) +: ds.cols,
+            ds.hidden)
+        }
+        (dsH, substituteWindow(agg, w, UnresolvedAttribute(Seq(outName)), sql),
+          Some((outName, width)))
     }
-    if (hops.isEmpty)
-      bail("hop(col, slide, width) must appear as a direct aliased SELECT " +
-        "item (the changelog retracts windows by their visible start)")
-    if (hops.length > 1) bail("one hop window per continuous statement")
-    val (f, outName) = hops.head
-    def longLit(e: Expression, what: String): Long = e match {
-      case Literal(i: java.lang.Integer, _) => i.longValue
-      case Literal(l: java.lang.Long, _) => l.longValue
-      case _ => bail(s"hop $what must be an integer literal")
-    }
-    val (colIdx, slide, width) = f.arguments match {
-      case Seq(a: UnresolvedAttribute, s, w) =>
-        val sl = longLit(s, "slide"); val wl = longLit(w, "width")
-        if (sl <= 0) bail("hop slide must be positive")
-        if (wl < sl) bail("hop width must be >= slide (a smaller width " +
-          "would leave rows belonging to no window)")
-        val i = ds.resolve(a).getOrElse(
-          bail(s"hop column ${a.nameParts.mkString(".")} does not resolve " +
-            s"in the maintained view (${ds.viewCols.mkString(", ")})"))
-        if (!Integral(ds.typeOf(i)))
-          bail(s"hop column ${ds.viewCols(i)} must be integral " +
-            "(the feed's event-time domain)")
-        (i, sl, wl)
-      case _ => bail("hop(col, slide, width) needs a view column and two " +
-        "integer literal arguments")
-    }
-    if (ds.viewCols.exists(resolver(_, outName)))
-      bail(s"hop output name $outName shadows a view column — alias it " +
-        "differently")
-    // the fan-out below selects source columns BY NAME, which a raw
-    // AnalysisException would reject if the projected source carries
-    // duplicate output names (a shape projectSource permits) — turn
-    // that into the loud documented rejection every other limit uses
-    val dupCols = ds.viewCols
-      .filter(c => ds.viewCols.count(resolver(_, c)) > 1).distinct
-    if (dupCols.nonEmpty)
-      bail(s"hop over a view with duplicate column names " +
-        s"(${dupCols.mkString(", ")}) — alias the subquery's items to " +
-        "unique names")
-    // the window-start fan-out, executor-side: one delta row per window
-    // the event falls in
-    val dsH: DeltaSource = {
-      import org.apache.spark.sql.functions.{col, explode, lit, pmod, sequence}
-      val v = ds.deltas(ds.viewCols(colIdx))
-      val last = v - pmod(v, lit(slide))
-      val vw = v - lit(width)
-      val first = vw - pmod(vw, lit(slide)) + lit(slide)
-      val exploded = ds.deltas.select(
-        (col("op") +: explode(sequence(first, last, lit(slide))).as(outName)
-          +: ds.viewCols.map(ds.deltas(_))): _*)
-      DeltaSource(exploded, ViewCol(outName, Seq(Seq(outName))) +: ds.cols,
-        ds.hidden)
-    }
-    val winAttr = UnresolvedAttribute(Seq(outName))
-    val newAgg = agg.copy(
-      aggregateExpressions = agg.aggregateExpressions.map {
-        case Alias(ff: UnresolvedFunction, n) if ff == f => Alias(winAttr, n)()
-        case other => other
-      },
-      groupingExpressions = agg.groupingExpressions.map {
-        case ff: UnresolvedFunction if ff == f => winAttr
-        case other => other
-      })
-    if (containsHop(newAgg.aggregateExpressions) ||
-        containsHop(newAgg.groupingExpressions))
-      bail("hop(col, slide, width) may appear only as a direct aliased " +
-        "SELECT item and a matching GROUP BY expression — nesting it in " +
-        "another expression would silently lose watermark eviction")
-    (dsH, newAgg, Some((outName, width)))
-  }
 
   /** `SESSION(col, gap)` — the event-time session window as a grouping
     * function (Flink SQL's `GROUP BY SESSION(ts, INTERVAL gap)`): a
@@ -1196,123 +1245,12 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     * State is O(live (keys, time) buckets), counted by the fold
     * budget. */
   private def rewriteSession(agg: Aggregate, ds: DeltaSource,
-      sql: String): (Aggregate, Option[(String, Long)]) = {
-    def bail(what: String): Nothing = unsupported(sql, what)
-    def isSession(f: UnresolvedFunction): Boolean =
-      windowCall(f, "session")
-    def containsSession(es: Seq[Expression]): Boolean =
-      es.exists(_.exists {
-        case f: UnresolvedFunction => isSession(f)
-        case _ => false
-      })
-    if (!containsSession(agg.aggregateExpressions) &&
-        !containsSession(agg.groupingExpressions))
-      return (agg, None)
-    val sessions = agg.aggregateExpressions.collect {
-      case Alias(f: UnresolvedFunction, n) if isSession(f) => (f, n)
+      sql: String): (Aggregate, Option[(String, Long)]) =
+    windowCallOf(agg, ds, sql, "session", Seq("gap")) match {
+      case None => (agg, None)
+      case Some(w) =>
+        (substituteWindow(agg, w, w.col, sql), Some((w.outName, w.lits.head)))
     }
-    if (sessions.isEmpty)
-      bail("session(col, gap) must appear as a direct aliased SELECT " +
-        "item (the changelog retracts windows by their visible start)")
-    if (sessions.length > 1)
-      bail("one session window per continuous statement")
-    val (f, outName) = sessions.head
-    val (col, gap) = f.arguments match {
-      case Seq(a: UnresolvedAttribute, Literal(w, _)) =>
-        val wl = w match {
-          case i: java.lang.Integer => i.longValue
-          case l: java.lang.Long => l.longValue
-          case _ => bail("session gap must be an integer literal")
-        }
-        if (wl <= 0) bail("session gap must be positive")
-        val i = ds.resolve(a).getOrElse(
-          bail(s"session column ${a.nameParts.mkString(".")} does not " +
-            s"resolve in the maintained view (${ds.viewCols.mkString(", ")})"))
-        if (!Integral(ds.typeOf(i)))
-          bail(s"session column ${ds.viewCols(i)} must be integral " +
-            "(the feed's event-time domain)")
-        (a, wl)
-      case _ =>
-        bail("session(col, gap) needs a view column and an integer " +
-          "literal gap")
-    }
-    val newAgg = agg.copy(
-      aggregateExpressions = agg.aggregateExpressions.map {
-        case Alias(ff: UnresolvedFunction, n) if ff == f => Alias(col, n)()
-        case other => other
-      },
-      groupingExpressions = agg.groupingExpressions.map {
-        case ff: UnresolvedFunction if ff == f => col
-        case other => other
-      })
-    if (containsSession(newAgg.aggregateExpressions) ||
-        containsSession(newAgg.groupingExpressions))
-      bail("session(col, gap) may appear only as a direct aliased " +
-        "SELECT item and a matching GROUP BY expression")
-    (newAgg, Some((outName, gap)))
-  }
-
-  private def rewriteTumble(agg: Aggregate, ds: DeltaSource,
-      sql: String): (Aggregate, Option[(String, Long)]) = {
-    def bail(what: String): Nothing = unsupported(sql, what)
-    def isTumble(f: UnresolvedFunction): Boolean =
-      windowCall(f, "tumble")
-    def containsTumble(es: Seq[Expression]): Boolean =
-      es.exists(_.exists {
-        case f: UnresolvedFunction => isTumble(f)
-        case _ => false
-      })
-    if (!containsTumble(agg.aggregateExpressions) &&
-        !containsTumble(agg.groupingExpressions))
-      return (agg, None)
-    val tumbles = agg.aggregateExpressions.collect {
-      case Alias(f: UnresolvedFunction, n) if isTumble(f) => (f, n)
-    }
-    if (tumbles.isEmpty)
-      bail("tumble(col, width) must appear as a direct aliased SELECT " +
-        "item (the changelog retracts windows by their visible start)")
-    if (tumbles.length > 1)
-      bail("one tumble window per continuous statement")
-    val (f, outName) = tumbles.head
-    val (col, width) = f.arguments match {
-      case Seq(a: UnresolvedAttribute, Literal(w, _)) =>
-        val wl = w match {
-          case i: java.lang.Integer => i.longValue
-          case l: java.lang.Long => l.longValue
-          case _ => bail("tumble width must be an integer literal")
-        }
-        if (wl <= 0) bail("tumble width must be positive")
-        val i = ds.resolve(a).getOrElse(
-          bail(s"tumble column ${a.nameParts.mkString(".")} does not " +
-            s"resolve in the maintained view (${ds.viewCols.mkString(", ")})"))
-        if (!Integral(ds.typeOf(i)))
-          bail(s"tumble column ${ds.viewCols(i)} must be integral " +
-            "(the feed's event-time domain)")
-        (a, wl)
-      case _ =>
-        bail("tumble(col, width) needs a view column and an integer " +
-          "literal width")
-    }
-    import org.apache.spark.sql.catalyst.expressions.Subtract
-    val start: Expression = Subtract(col,
-      UnresolvedFunction(Seq("pmod"), Seq(col, Literal(width)),
-        isDistinct = false))
-    val newAgg = agg.copy(
-      aggregateExpressions = agg.aggregateExpressions.map {
-        case Alias(ff: UnresolvedFunction, n) if ff == f => Alias(start, n)()
-        case other => other
-      },
-      groupingExpressions = agg.groupingExpressions.map {
-        case ff: UnresolvedFunction if ff == f => start
-        case other => other
-      })
-    if (containsTumble(newAgg.aggregateExpressions) ||
-        containsTumble(newAgg.groupingExpressions))
-      bail("tumble(col, width) may appear only as a direct aliased " +
-        "SELECT item and a matching GROUP BY expression — nesting it in " +
-        "another expression would silently lose watermark eviction")
-    (newAgg, Some((outName, width)))
-  }
 
   // ===== the continuous aggregate fold =====
 

@@ -96,7 +96,9 @@ final class Changelog(val schema: Seq[String],
   def opsReceived: Set[Op] = opsSeen.toSet
 
   /** Pull up to `limit` valid records; heartbeats (`None`) are skipped and
-    * do not count toward the limit. Returns only the new records. */
+    * do not count toward the limit. Returns only the new records. The
+    * default limit reads until the source exhausts: a running streaming
+    * statement's cursor never does, so pass it a bounded limit. */
   def consume(limit: Int = Int.MaxValue): Seq[ChangelogRecord] = {
     val start = historyBuf.length
     var consumed = 0

@@ -1168,101 +1168,6 @@ object Dedup {
       .orderBy($"doc_id")
   }
 
-  /** Ingest-time deployment of d15: a STREAM of arriving documents
-    * admits against the persisted snapshot artifacts ([[baseIndexModel]]
-    * posting index + [[baseHotModel]] stop-shingles) via stream-static
-    * joins — the moment-of-arrival version of the batch delta pass, and
-    * the shape a 100 TB ingest actually runs (the index is static
-    * between snapshots; the stream never re-scans the base).
-    *
-    * Plumbing: shingles explode in-stream (all of a doc's rows stay in
-    * its micro-batch), the hot set drops via stream-static LEFT ANTI,
-    * postings attach via stream-static LEFT OUTER (n2 pre-joined onto
-    * the static side, so the group function needs no second
-    * aggregation — Structured Streaming allows only one stateful op
-    * here), and one flatMapGroupsWithState per doc computes n1/shared/
-    * jaccard and emits the verdict row once (append mode). Keyed state
-    * is a seen-marker (1 bit/doc) that absorbs at-least-once
-    * redelivery; it is bounded by the DELTA EPOCH, not the corpus — an
-    * admission stream lives until the next snapshot rotation swaps in a
-    * new index (and a fresh query), so markers never outlive their
-    * epoch. (A processing-time timeout was measured and rejected:
-    * registered timeouts make the engine schedule continuous
-    * timeout-check batches, each re-executing the stream-static joins —
-    * the query never quiesces.)
-    * Stream == batch d15 row-for-row (StreamingEventsSpec). */
-  def incrementalDedupStream(spark: SparkSession, dir: String,
-                             docs: DataFrame,
-                             hotOverride: Option[DataFrame] = None,
-                             postingsOverride: Option[DataFrame] = None)
-      : DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    // the snapshot artifacts are INPUTS: default to this repo's
-    // ModelStore copies, but a caller holding its own index location
-    // (or a spec driving an adversarial hot set) supplies its own
-    val hot = hotOverride.getOrElse(baseHotModel(spark, dir))
-    val postings = postingsOverride.getOrElse(baseIndexModel(spark, dir))
-    val baseSizes = postings.groupBy($"doc_id")
-      .agg(count(lit(1)).cast("long").as("n2"))
-      .select($"doc_id".as("base_id"), $"n2")
-    val idx = postings.select($"h", $"doc_id".as("base_id"))
-      .join(baseSizes, "base_id")
-    docs
-      // explode_outer: a doc too short to shingle still carries one
-      // null-h row through to its (vacuously admitting) verdict — the
-      // batch path emits a row for every delta doc, so must the stream
-      .select($"doc_id", explode_outer(shingleHashes($"text", ShingleN)).as("h"))
-      // hot shingles NULL OUT rather than anti-join away: an anti join
-      // would drop an all-hot-shingle doc's every row, so its key never
-      // reaches the group function and no verdict is emitted — the batch
-      // path's trailing left_outer admits such a doc. A nulled h keeps
-      // the row, contributes nothing to n1, and matches no posting in
-      // the equi-join (null never equi-matches) — exactly the batch
-      // semantics of an excluded shingle.
-      .join(hot.withColumn("is_hot", lit(true)), Seq("h"), "left_outer")
-      .select($"doc_id",
-        when($"is_hot", lit(null).cast("long")).otherwise($"h").as("h"))
-      .join(idx, Seq("h"), "left_outer")
-      .select($"doc_id", $"h", $"base_id", $"n2")
-      .as[(Long, Option[Long], Option[Long], Option[Long])]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Boolean,
-        (Long, Long, Option[Long], Option[Double], Boolean)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout()) {
-        (doc: Long,
-         rows: Iterator[(Long, Option[Long], Option[Long], Option[Long])],
-         state) =>
-          if (state.exists) Iterator.empty // redelivered doc
-          else {
-            state.update(true)
-            val rs = rows.toVector
-            val n1 = rs.iterator.flatMap(_._2).toSet.size
-            // distinct (h, base) pairs, not row counts: the cross-batch
-            // seen-marker cannot absorb the SAME doc delivered twice
-            // inside ONE micro-batch — rows double, and a row-count
-            // `shared` would double against a set-valued n1 (jaccard > 1
-            // / negative denominator). ShingleHashes is per-doc distinct,
-            // so distinct here is idempotent in the clean case and makes
-            // in-batch duplication as harmless as cross-batch redelivery.
-            val matches = rs.iterator
-              .collect { case (_, Some(h), Some(b), Some(n2)) => (h, b, n2) }
-              .toVector.distinct
-              .groupBy { case (_, b, n2) => (b, n2) }.toVector
-              .map { case ((b, n2), g) =>
-                (b, g.size.toDouble / (n1 + n2 - g.size)) }
-              .filter(_._2 >= JaccardThreshold)
-            val out = if (matches.isEmpty) (doc, 0L, None, None, true)
-            else {
-              val best = matches.minBy { case (b, j) => (-j, b) }
-              (doc, matches.size.toLong, Some(best._1), Some(best._2), false)
-            }
-            Iterator.single(out)
-          }
-      }
-      .toDF("doc_id", "n_matches", "best_base", "best_jaccard", "admit")
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "d15_incremental_dedup" -> d15IncrementalDedup _,
     "d14_span_removal" -> d14SpanRemoval _,

@@ -27,8 +27,7 @@ import graft.sources.Tables
 object Pipeline {
 
   /** Most-frequent-token count via a run-length scan over array_sort —
-    * the shuffle-free formulation shared by p1 and the ingest-time
-    * repetition filter in [[prepStream]]. */
+    * p1's shuffle-free formulation. */
   private def topCount(toks: Column): Column = {
     val init = struct(lit("").as("prev"), lit(0).as("run"), lit(0).as("mx"))
     aggregate(
@@ -256,8 +255,8 @@ object Pipeline {
       .orderBy($"doc_id")
   }
 
-  /** Static benchmark n-gram set for the streaming contamination check:
-    * the distinct ContamN-grams of the benchmark documents. */
+  /** Static benchmark n-gram set p31 excises against: the distinct
+    * ContamN-grams of the benchmark documents. */
   def benchmarkGrams(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.load(spark, dir, "documents")
@@ -334,8 +333,7 @@ object Pipeline {
     * contamination hit is found; false positives can only inflate counts
     * (rows-only registry entry; the superset + fp-budget invariants are
     * spec-tested against exact p4 in PipelineSpec). */
-  /** The serialized benchmark-gram bloom (p14's build phase, factored so
-    * [[decontaminateStream]] deploys the SAME fitted sketch at ingest). */
+  /** The serialized benchmark-gram bloom: p14's build phase. */
   def benchmarkBloomBytes(spark: SparkSession, dir: String,
       expectedItems: Long = BloomExpectedItems,
       fpp: Double = BloomFpp): Array[Byte] = {
@@ -344,7 +342,7 @@ object Pipeline {
     // grams set the same bits, the serialized sketch is byte-identical —
     // and stat.bloomFilter is a map-side-merged aggregate, so skipping
     // benchmarkGrams' distinct removes the build's only full exchange
-    // (benchmarkGrams keeps its distinct for the JOIN consumers, where
+    // (benchmarkGrams keeps its distinct for p31's join, where
     // multiplicity changes row counts)
     val bf = Tables.load(spark, dir, "documents")
       .filter($"source" === BenchmarkSource)
@@ -449,34 +447,6 @@ object Pipeline {
       .groupBy($"doc_id")
       .agg(countDistinct($"s").as("n_hit_ngrams"))
       .orderBy($"doc_id")
-  }
-
-  /** Streaming twin of p4: documents arrive as a stream and are checked
-    * against the static benchmark n-gram set via a stream-static broadcast
-    * join — contamination flagged as data lands, not in a nightly batch.
-    * Per-doc shingles are distinct and the bench set is deduped, so
-    * count(*) equals the batch p4's count(DISTINCT s). Update-mode
-    * streaming aggregation keyed by doc_id. */
-  def contaminationStream(stream: DataFrame, benchGrams: DataFrame): DataFrame = {
-    import stream.sparkSession.implicits._
-    stream
-      .select($"doc_id", explode(shingleHashes($"text", ContamN)).as("s"))
-      .join(broadcast(benchGrams), "s")
-      .groupBy($"doc_id")
-      .agg(count(lit(1)).as("n_shared_ngrams"))
-  }
-
-  /** Streaming incremental dedup: documents arrive as a stream and are
-    * dropped if their fingerprint is already in the known (static) set —
-    * the ingest-time twin of d2: history stays a compact fingerprint
-    * table, new data never rescans old text. Stream-static LEFT ANTI join;
-    * append mode, no aggregation state. */
-  def incrementalDedup(stream: DataFrame, knownFps: DataFrame): DataFrame = {
-    import stream.sparkSession.implicits._
-    stream
-      .withColumn("fp", graft.functions.TextFunctions.fingerprint($"text"))
-      .join(broadcast(knownFps), Seq("fp"), "left_anti")
-      .select($"doc_id", $"fp")
   }
 
   /** Vocabulary top-k per language (p5). */
@@ -611,8 +581,8 @@ object Pipeline {
       .orderBy($"doc_id", $"chunk_idx")
   }
 
-  /** The chunk explode shared by p10 (batch) and [[prepStream]] (ingest):
-    * (doc_id, toks) → one row per sliding-window chunk with its digest. */
+  /** p10's chunk explode, its one caller: (doc_id, toks) → one row per
+    * sliding-window chunk with its digest. */
   private def chunked(df: DataFrame): DataFrame = {
     import df.sparkSession.implicits._
     val nChunks = when($"n" <= ChunkSize, lit(1L))
@@ -624,24 +594,6 @@ object Pipeline {
       .select($"doc_id", $"pos".cast("int").as("chunk_idx"),
         size($"col").as("chunk_tokens"),
         md5(concat_ws(" ", $"col")).as("chunk_md5"))
-  }
-
-  /** Max most-frequent-token fraction admitted by the ingest filter. */
-  val PrepMaxTopWordFrac = 0.2
-
-  /** Streaming corpus prep — the ingest-time twin of the p1→p10 batch
-    * path: documents arrive as a stream, keyword-stuffed ones (top-word
-    * fraction above PrepMaxTopWordFrac) are dropped, survivors are split
-    * into training chunks — all append-mode map work, so it runs with
-    * zero state at any ingest rate; chunks land in shard storage as data
-    * arrives instead of waiting for a nightly batch. Collapses to the
-    * batch answer (StreamingEventsSpec). */
-  def prepStream(stream: DataFrame): DataFrame = {
-    import stream.sparkSession.implicits._
-    chunked(stream
-      .select($"doc_id", tokens($"text").as("toks"))
-      .filter(topCount($"toks").cast(DoubleType) / size($"toks")
-        <= PrepMaxTopWordFrac))
   }
 
   /** P11 — training-shard writer: the terminal step of the corpus pipeline.
@@ -774,8 +726,8 @@ object Pipeline {
   }
 
   /** p12's fitted quota table (lang → quota): the ≤n_langs-row model the
-    * batch resample and the streaming admitter both consume — one tiny
-    * groupBy(lang) aggregate joined to the literal weight table. */
+    * resample joins — one tiny groupBy(lang) aggregate joined to the
+    * literal weight table. */
   private[graft] def mixtureQuotas(spark: SparkSession,
                                    dir: String): DataFrame = {
     import spark.implicits._
@@ -788,159 +740,6 @@ object Pipeline {
     counts.join(broadcast(wdf), "lang")
       .crossJoin(broadcast(feasible))
       .select($"lang", expr(s"(tot * w) DIV $W").as("quota"))
-  }
-
-  case class MixDelta(lang: String, doc_id: Long, op: Int)
-  case class MixState(rks: Seq[String], ids: Seq[Long])
-
-  /** Streaming sketch maintenance — the ingest-time twin of the engine's
-    * mergeable sketches (q23's HLL++ distinct counting, p18's CMS heavy
-    * hitters): per SOURCE, a live approximate distinct-token count and
-    * the CMS top-k tokens, folded in update mode. The COUNTER state is
-    * an ORDER-INDEPENDENT merge (the row count sums, HLL registers take
-    * maxes, CMS counters take sums), so once the same documents have
-    * been delivered — in any batching, any order — n_tokens_seen, the
-    * HLL estimate, and every CMS count estimate equal the batch
-    * aggregate EXACTLY. The top-k CANDIDATE LIST is weaker by
-    * construction: CmsTopKAggregate prunes candidates at serialize time
-    * against partial-local counters (its scaladoc calls this out), so
-    * under adversarially skewed batchings the stream's candidate set can
-    * differ from batch — the list is exact with high probability, not
-    * guaranteed. The spec asserts counters bit-exact always, and top-k
-    * equality on the fixture's (benign) distribution. State per source
-    * is the fixed sketch size — the 100 TB dashboard shape: cardinality
-    * and heavy-hitter monitors that never hold the vocabulary. */
-  def vocabSketchStream(stream: DataFrame, k: Int = VocabK): DataFrame = {
-    import stream.sparkSession.implicits._
-    stream
-      .select($"source", explode(tokens($"text")).as("token"))
-      .groupBy($"source")
-      // n_tokens_seen is monotone across updates — consumers identify a
-      // source's LATEST state by max(n_tokens_seen), not sink row order
-      .agg(count(lit(1)).as("n_tokens_seen"),
-        approx_count_distinct($"token", 0.02).as("approx_vocab"),
-        graft.plans.CmsTopKAggregate.cmsTopK($"token", k).as("top"))
-  }
-
-  /** Streaming reservoir sample: a uniform k-subset of an unbounded
-    * document stream in O(k) state, DETERMINISTIC — the reservoir is not
-    * "k random survivors" but THE k smallest salted-md5 priorities seen
-    * so far, so any arrival order, any batching, and a full driver
-    * recompute all agree exactly (p2's salted-rank trick as a streaming
-    * fold). Priority is the value of the first 12 md5 hex digits (< 2⁴⁸,
-    * exactly representable in a double); the fold is the mergeable
-    * [[graft.plans.TopKAggregate]] in DISTINCT mode, so a re-delivered
-    * document re-inserts its identical (priority, id) pair as a no-op —
-    * at-least-once tolerant without a seen-marker bit per doc.
-    *
-    * Emits one row per update: (n_seen, reservoir array sorted by
-    * priority). n_seen counts DELIVERED rows — it identifies the latest
-    * update (max n_seen); under re-delivery it counts deliveries while
-    * the reservoir itself stays exact. Weighted sampling
-    * (Efraimidis–Spirakis u^{1/w}) is
-    * the same fold with priority/w-scaled keys; the uniform form keeps
-    * the arithmetic exact. */
-  def reservoirStream(stream: DataFrame, k: Int): DataFrame = {
-    import stream.sparkSession.implicits._
-    stream
-      .select($"doc_id",
-        // negated: TopK keeps LARGEST scores; the reservoir keeps the
-        // smallest priorities
-        (-expr("CAST(conv(substring(md5(concat('res', CAST(doc_id AS STRING))" +
-          "), 1, 12), 16, 10) AS DOUBLE)")).as("pri"))
-      .groupBy()
-      .agg(count(lit(1)).as("n_seen"),
-        graft.plans.TopKAggregate.topKDistinct($"pri", $"doc_id", k).as("res"))
-      .select($"n_seen",
-        expr("transform(res, x -> x.id)").as("reservoir"))
-  }
-
-  /** Weighted streaming reservoir (Efraimidis–Spirakis A-ES, 2006):
-    * inclusion probability ∝ weight, via key = u^(1/w) with u a
-    * deterministic salted-md5 uniform in (0, 1] — the reservoir is THE k
-    * largest keys seen, so any batching/arrival order and a driver
-    * recompute agree exactly (u and the pow evaluate identically in one
-    * JVM; this contract is spec-level, not a cross-engine oracle — pow is
-    * not correctly-rounded across engines, which is why the UNIFORM
-    * reservoir is the oracle-friendly form). Weight here is n_chars —
-    * the document's size in CHARACTERS, the cheap already-materialized
-    * proxy for token count — so inclusion probability is ∝ chars: a
-    * size-weighted draw that APPROXIMATES per-token balance for a
-    * token-budget holdout (exactly-per-token would weight by a real
-    * tokenizer count, e.g. p25's n_bpe_tokens, at the cost of encoding
-    * every arrival). Same O(k)
-    * distinct-mode fold as [[reservoirStream]]. Zero-weight docs are
-    * FILTERED at the source (weight 0 means "never draw"; letting them
-    * reach the fold would let key 0 occupy reservoir slots while fewer
-    * than k rows have been seen). u maps the 48 md5 bits to (0, 1)
-    * EXCLUSIVE — (v + 0.5) / 2⁴⁸, exact in a double — because u = 1.0
-    * with a fractional exponent is the NaN trap (pow(1, ∞)) and u = 0
-    * would tie every zero-key doc. */
-  def weightedReservoirStream(stream: DataFrame, k: Int): DataFrame = {
-    import stream.sparkSession.implicits._
-    val u = (expr("CAST(conv(substring(md5(concat('wres', " +
-      "CAST(doc_id AS STRING))), 1, 12), 16, 10) AS DOUBLE)") + lit(0.5)) /
-      lit(math.pow(2, 48))
-    stream
-      .filter($"n_chars" > 0)
-      .select($"doc_id",
-        pow(u, lit(1.0) / $"n_chars".cast("double")).as("key"))
-      .groupBy()
-      .agg(count(lit(1)).as("n_seen"),
-        graft.plans.TopKAggregate.topKDistinct($"key", $"doc_id", k).as("res"))
-      .select($"n_seen",
-        expr("transform(res, x -> x.id)").as("reservoir"))
-  }
-
-  /** Streaming twin of p12's resampler — ingest-time mixture admission:
-    * documents arrive as a stream and each language stratum maintains its
-    * quota-best admitted set by the SAME salted-md5 rank the batch
-    * resample uses. A newly arrived doc that out-ranks an admitted one
-    * EVICTS it, so the output is a changelog (`op` +1 admit / −1 evict —
-    * the reference's +I/−D shape): downstream sinks fold it and, once the
-    * same documents have been seen, hold exactly the batch p12 keep set
-    * regardless of arrival order — spec-asserted.
-    *
-    * Scale shape: keyed state is BOUNDED at quota (md5, id) pairs per
-    * language no matter how long the stream runs; each micro-batch folds
-    * in one dedup+sort+truncate per touched stratum: the batch's arrivals
-    * merge with the kept pairs and the quota-sized head is kept, so the
-    * fold is O((B+q) log(B+q)) per stratum, not one insertion per event.
-    * The quota table is the fitted p12 model, collected once (≤ n_langs
-    * rows) like p19's threshold. */
-  def mixtureStream(stream: DataFrame,
-                    quotas: Map[String, Long]): org.apache.spark.sql.Dataset[MixDelta] = {
-    import stream.sparkSession.implicits._
-    stream
-      .select($"lang", $"doc_id",
-        md5(concat(lit("mix"), $"doc_id".cast("string"))).as("rk"))
-      .as[(String, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[MixState, MixDelta](
-        org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()) {
-        (lang, rows, state) =>
-          val quota = quotas.getOrElse(lang, 0L).toInt
-          if (quota <= 0) Iterator.empty
-          else {
-            val cur = state.getOption
-              .map(s => s.rks.zip(s.ids).toVector).getOrElse(Vector.empty)
-            // distinct: at-least-once redelivery must not occupy two slots
-            val merged = (cur ++ rows.map(r => (r._3, r._2))).distinct
-              .sorted.take(quota)
-            if (merged == cur) Iterator.empty
-            else {
-              val curSet = cur.toSet
-              val nextSet = merged.toSet
-              state.update(MixState(merged.map(_._1), merged.map(_._2)))
-              (merged.filterNot(curSet).map { case (_, id) =>
-                MixDelta(lang, id, 1)
-              } ++ cur.filterNot(nextSet).map { case (_, id) =>
-                MixDelta(lang, id, -1)
-              }).iterator
-            }
-          }
-      }
   }
 
   /** P13 thresholds: minimum tokens, minimum composite quality (t2's
@@ -1158,8 +957,8 @@ object Pipeline {
   }
 
   /** p17's fitted importance model: the ≤[[DsirBuckets]]-row bucket
-    * weight table — shared by the batch selector and the streaming
-    * scorer (the p19 `classifierModel` pattern). */
+    * weight table the selector joins back broadcast (the p19
+    * `classifierModel` pattern). */
   private[graft] def dsirModel(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val toks = Tables.load(spark, dir, "documents")
@@ -1175,47 +974,6 @@ object Pipeline {
       .select($"bucket",
         expr(s"((coalesce(tgt_c, 0) + 1) * $DsirScale) DIV (raw_c + 1)")
           .as("wq"))
-  }
-
-  /** The selection boundary p17's top-quota cut implies: the worst
-    * selected document's (avg_q, md5 tiebreak) — a two-field scalar
-    * model, collected once like p19's threshold, that turns the batch
-    * top-k into a pointwise admission rule a stream can apply. */
-  private[graft] def dsirBoundary(spark: SparkSession,
-                                  dir: String): (Long, String) = {
-    val last = p17DsirSelect(spark, dir)
-      .select(col("avg_q"), md5(col("doc_id").cast("string")).as("tb"))
-      .orderBy(col("avg_q").asc, col("tb").desc)
-      .limit(1).head()
-    (last.getLong(0), last.getString(1))
-  }
-
-  /** Streaming twin of p17's scorer — ingest-time DSIR selection, the
-    * production deployment of a fitted importance model: documents
-    * arrive as a stream, tokens bucket map-side, the (static, ≤256-row)
-    * weight table attaches via a stream-static BROADCAST join, per-doc
-    * (count, sum) aggregates in update mode, and the fitted boundary
-    * decides admission pointwise — `selected` is true exactly when the
-    * doc would have made the batch top-quota cut (avg_q above the
-    * boundary, or at it and winning the md5 tiebreak). Unseen-in-fit
-    * buckets score neutral (odds 1 → 2²⁰), the p19 smoothing rule.
-    * Collapses to the batch p17 selection — spec-asserted. */
-  def dsirStream(stream: DataFrame, weights: DataFrame,
-                 boundAvg: Long, boundMd5: String): DataFrame = {
-    import stream.sparkSession.implicits._
-    stream
-      .filter($"source" =!= DsirTarget)
-      .select($"doc_id", explode(tokens($"text")).as("token"))
-      .withColumn("bucket", expr(dsirBucketSql("token")))
-      .join(broadcast(weights), Seq("bucket"), "left")
-      .groupBy($"doc_id")
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(coalesce($"wq", lit(DsirScale))).as("score"))
-      .withColumn("avg_q", expr("score DIV n_tokens"))
-      .withColumn("tb", md5($"doc_id".cast("string")))
-      .select($"doc_id", $"n_tokens", $"score", $"avg_q",
-        ($"avg_q" > boundAvg ||
-          ($"avg_q" === boundAvg && $"tb" <= boundMd5)).as("selected"))
   }
 
   /** P19 — model-free hashed linear quality classifier (the fastText-style
@@ -1319,14 +1077,14 @@ object Pipeline {
   }
 
   /** p19's fitted model: the ≤256-row bucket weight table and the prior
-    * threshold — factored out so the streaming scorer consumes the SAME
-    * training artifact the batch confusion matrix is computed from.
+    * threshold — factored out so p19's confusion matrix and p33's
+    * calibration curve score through the SAME training artifact.
     *
     * PERSISTED via ModelStore like every other fitted artifact in the
     * engine (IVF/PQ/assignment/posting-index precedent — the r9 verdict
     * flagged this as the one model that re-fit per invocation): the fit
     * scans the train split once per corpus snapshot; every later
-    * p19/p33/classifierStream invocation reads a ≤256-row parquet table
+    * p19/p33 invocation reads a ≤256-row parquet table
     * and a 1-row threshold instead of re-scanning the corpus. The names
     * embed the fit hyperparameters (bucket count, weight scale), so a
     * changed recipe fits fresh rather than serving a stale model. Integer
@@ -1369,28 +1127,6 @@ object Pipeline {
         sum(when(!$"is_clean", 1L).otherwise(0L)).as("t_n"))
       .select(expr(s"((t_c + $DsirBuckets) * $DsirScale)" +
         s" DIV (t_n + $DsirBuckets)").as("thr"))
-  }
-
-  /** Streaming twin of p19's scorer — ingest-time quality filtering, the
-    * production deployment of a trained corpus classifier: documents
-    * arrive as a stream, tokens bucket map-side, the (static, ≤256-row)
-    * weight table attaches via a stream-static BROADCAST join, and the
-    * per-doc verdict aggregates in update mode keyed by doc_id. The
-    * threshold is a literal (driver-collected once from the fitted
-    * model); state per doc is one (count, sum) pair. Collapses to the
-    * batch p19 decision for every doc — spec-asserted. */
-  def classifierStream(stream: DataFrame, weights: DataFrame,
-                       thr: Long): DataFrame = {
-    import stream.sparkSession.implicits._
-    stream
-      .select($"doc_id", explode(tokens($"text")).as("token"))
-      .withColumn("bucket", expr(dsirBucketSql("token")))
-      .join(broadcast(weights), Seq("bucket"), "left")
-      .groupBy($"doc_id")
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(coalesce($"wq", lit(DsirScale))).as("score"))
-      .select($"doc_id", $"n_tokens",
-        ($"score" >= lit(thr) * $"n_tokens").as("pred_clean"))
   }
 
   /** P20 — deterministic training-order interleave: assign every document
@@ -1691,215 +1427,6 @@ object Pipeline {
       .withColumn("chars_per_token",
         $"n_chars".cast(DoubleType) / $"n_bpe_tokens".cast(DoubleType))
       .orderBy($"doc_id")
-  }
-
-  /** p24's reference model for the streaming monitor: the full
-    * [[DsirBuckets]]-long histogram of the reference source, collected
-    * once (≤256 rows — the p19 threshold pattern). */
-  private[graft] def refDistribution(spark: SparkSession,
-                                     dir: String): (Array[Long], Long) = {
-    import spark.implicits._
-    val arr = new Array[Long](DsirBuckets)
-    Tables.load(spark, dir, "documents")
-      .filter($"source" === DsirTarget)
-      .select(explode(tokens($"text")).as("token"))
-      .withColumn("bucket", expr(dsirBucketSql("token")))
-      .groupBy($"bucket").agg(count(lit(1)).as("c"))
-      .collect().foreach(r => arr(r.getInt(0)) = r.getLong(1))
-    (arr, arr.sum)
-  }
-
-  case class DriftState(counts: Seq[Long])
-  case class DriftRow(source: String, n_src: Long, l1_num: Long, tvd: Double)
-
-  /** Streaming twin of p24 — the drift MONITOR deployment: documents
-    * stream in, tokens bucket map-side, and per-source keyed state holds
-    * the running 256-bucket histogram (state bounded at [[DsirBuckets]]
-    * longs per source forever); every micro-batch re-emits each touched
-    * source's cumulative TVD against the fitted reference histogram —
-    * the live dashboard number an ingest pipeline alarms on. Once the
-    * same documents have been seen, the emission equals the batch p24
-    * row exactly (same integer numerator, same single IEEE division) —
-    * spec-asserted. */
-  def driftStream(stream: DataFrame, ref: Array[Long],
-                  nRef: Long): org.apache.spark.sql.Dataset[DriftRow] = {
-    import stream.sparkSession.implicits._
-    stream
-      .filter($"source" =!= DsirTarget)
-      .select($"source", explode(tokens($"text")).as("token"))
-      .withColumn("bucket", expr(dsirBucketSql("token")))
-      .select($"source", $"bucket").as[(String, Int)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[DriftState, DriftRow](
-        org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()) {
-        (src, rows, state) =>
-          val counts = state.getOption.map(_.counts.toArray)
-            .getOrElse(new Array[Long](DsirBuckets))
-          rows.foreach { case (_, b) => counts(b) += 1 }
-          state.update(DriftState(counts.toIndexedSeq))
-          val nSrc = counts.sum
-          var l1 = 0L
-          var b = 0
-          while (b < DsirBuckets) {
-            l1 += math.abs(counts(b) * nRef - ref(b) * nSrc); b += 1
-          }
-          // same shape as the batch tvd: exact-int numerator over the
-          // exact-int denominator, ONE IEEE division
-          Iterator.single(
-            DriftRow(src, nSrc, l1, l1.toDouble / (nSrc * nRef * 2L).toDouble))
-      }
-  }
-
-  /** noveltyStream geometry: the gram space shards [[NoveltyShards]]
-    * ways (each shard an independent keyed-state group — novelty is
-    * corpus-global, and a single global key would serialize the stream),
-    * each shard holding a [[NoveltyBloomBits]]-bit bloom filter with
-    * [[NoveltyBloomK]] Kirsch–Mitzenmacher probe positions (p14's
-    * double-hashing rule) — 8 KB of state per shard, 512 KB total,
-    * bounded FOREVER regardless of corpus size. */
-  val NoveltyShards = 64
-  val NoveltyBloomBits = 1 << 16
-  val NoveltyBloomK = 4
-
-  case class NoveltyBloomState(words: Seq[Long])
-  case class NoveltyShardRow(doc_id: Long, n_grams: Long, n_novel: Long)
-
-  /** Streaming twin of p22 — novelty scoring at the moment of ingest:
-    * each arriving document reports how many of its distinct 3-grams the
-    * corpus has never seen before, the admission signal an ordered-
-    * ingestion pipeline reads BEFORE storing the document (batch p22
-    * can only say it after the fact). Grams scatter to
-    * [[NoveltyShards]] keyed-state shards by the hash's HIGH bits
-    * (48-53 — disjoint from the bits the bloom probes consume, see the
-    * inline note); each shard
-    * replays its rows in doc_id order (so two same-batch docs sharing a
-    * new gram resolve exactly like batch p22's min(doc_id) rule) against
-    * its bloom filter, emitting per-(doc, shard) partial counts the
-    * consumer sums by doc_id — the p3-shard-stats shape, which keeps
-    * this a SINGLE stateful operator (the per-doc rollup is stateless
-    * arithmetic downstream).
-    *
-    * The bloom is the bounded-state trade, and its error is ONE-SIDED by
-    * construction (p14's property, load-bearing here): a false positive
-    * marks a genuinely-first gram "seen", so the stream can only
-    * UNDER-report novelty, never invent it — an admission rule keyed on
-    * "novelty ≥ τ" never admits recombined boilerplate it would have
-    * rejected with exact state. Deterministic end to end: same feed,
-    * same verdicts, any engine. Fed in doc_id order with zero bloom
-    * collisions the emissions equal batch p22 exactly; both properties
-    * (driver-replay equality including collisions, and one-sided
-    * subset-of-batch) are spec-asserted.
-    *
-    * Delivery contract: exactly-once from a replayable source (the
-    * annStream convention) — a REDELIVERED document would find its own
-    * grams in the bloom and score zero novelty, and a membership-only
-    * sketch cannot tell "seen from a duplicate delivery" from "seen in
-    * an earlier document" (the marker-bit absorption the exact-state
-    * twins use is unavailable precisely because state here is bounded
-    * below per-doc size). */
-  def noveltyStream(stream: DataFrame)
-      : org.apache.spark.sql.Dataset[NoveltyShardRow] = {
-    import stream.sparkSession.implicits._
-    val nWords = NoveltyBloomBits / 64
-    stream
-      .select($"doc_id", explode(shingleHashes($"text", 3)).as("g"))
-      // shard on bits 48-53: the KM probes consume g's bits 0-15 (h1
-      // mod 2^16) and 32-47 (the step's low 16 bits) — sharding on the
-      // LOW bits would pin every gram's probe-0 position to the 1/64 of
-      // the filter congruent to the shard id, saturating that slice and
-      // silently degrading k=4 to k=3 as the shard fills
-      .select($"doc_id", $"g",
-        pmod(shiftrightunsigned($"g", 48), lit(NoveltyShards.toLong))
-          .cast("int").as("shard"))
-      .as[(Long, Long, Int)]
-      .groupByKey(_._3)
-      .flatMapGroupsWithState[NoveltyBloomState, NoveltyShardRow](
-        org.apache.spark.sql.streaming.OutputMode.Update,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()) {
-        (_, rows, state) =>
-          val words = state.getOption.map(_.words.toArray)
-            .getOrElse(new Array[Long](nWords))
-          // doc_id order within the shard reproduces batch min(doc_id)
-          // semantics for same-batch sharers (within a doc, gram order
-          // is irrelevant — each gram probes independently); per-shard
-          // batch volume is (batch grams)/shards — the bounded per-key
-          // sort this buys is the price of exact ordering, stated here
-          val out = rows.toSeq.groupBy(_._1).toSeq
-            .sortBy(_._1).map { case (doc, docRows) =>
-              var novel = 0L
-              docRows.foreach { case (_, g, _) =>
-                // Kirsch–Mitzenmacher: pos_j = h1 + j·step (step odd ⇒
-                // positions distinct mod the power-of-two m), p14's rule
-                val h1 = g
-                val step = (g >>> 32) | 1L
-                var unseen = false
-                var j = 0
-                while (j < NoveltyBloomK) {
-                  val pos = java.lang.Long.remainderUnsigned(
-                    h1 + j * step, NoveltyBloomBits)
-                  if ((words((pos / 64).toInt) &
-                    (1L << (pos % 64))) == 0L) unseen = true
-                  j += 1
-                }
-                if (unseen) {
-                  novel += 1
-                  j = 0
-                  while (j < NoveltyBloomK) {
-                    val pos = java.lang.Long.remainderUnsigned(
-                      h1 + j * step, NoveltyBloomBits)
-                    words((pos / 64).toInt) |= 1L << (pos % 64)
-                    j += 1
-                  }
-                }
-              }
-              NoveltyShardRow(doc, docRows.size.toLong, novel)
-            }
-          state.update(NoveltyBloomState(words.toIndexedSeq))
-          out.iterator
-      }
-  }
-
-  /** Streaming twin of p31 — decontamination at the moment of ingest:
-    * each arriving document is excised against the FITTED benchmark
-    * bloom ([[benchmarkBloomBytes]] — p14's sketch, the fit/apply split
-    * deployed to the stream) before it is ever stored. Pure map work:
-    * positional gram hashes probe the bloom-literal inside a zip_with
-    * lambda, contaminated spans flatten to the cut set, and the rebuild
-    * is the same native FilterPositions walk p31/d14 use — ZERO keyed
-    * state, no shuffle, append mode, any ingest rate.
-    *
-    * Error is one-sided in the SAFE direction: a bloom false positive
-    * can only OVER-excise (cut a span that wasn't actually shared) —
-    * a decontamination pass that occasionally trims a clean 5-gram is
-    * acceptable; one that leaks a benchmark answer into training is
-    * not. No false negatives by construction, so everything batch p31
-    * cuts, this cuts too (kept_stream ⊆ kept_batch positionally,
-    * spec-asserted along with a driver bloom replay). */
-  def decontaminateStream(stream: DataFrame,
-                          bloomBytes: Array[Byte]): DataFrame = {
-    import stream.sparkSession.implicits._
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-    def mightContain(h: Column): Column = column(
-      new org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        expression(lit(bloomBytes)), expression(h)))
-    val hashes = shingleHashesPos($"text", ContamN)
-    val spans = zip_with(hashes, sequence(lit(1), size(hashes)),
-      (h, i) => when(mightContain(h), sequence(i, i + (ContamN - 1)))
-        .otherwise(expr("CAST(array() AS array<int>)")))
-    val cut = when(size(hashes) > 0,
-      array_distinct(flatten(spans)).cast("array<bigint>"))
-      .otherwise(expr("CAST(array() AS array<bigint>)"))
-    stream
-      .filter($"source" =!= BenchmarkSource)
-      .select($"doc_id", tokens($"text").as("w"), cut.as("cut"))
-      .select($"doc_id", size($"w").as("n_tokens"),
-        graft.plans.VectorExpressions.filterPositions($"w", $"cut")
-          .as("kept"))
-      .select($"doc_id", $"n_tokens",
-        size($"kept").cast("long").as("n_kept"),
-        ($"n_tokens" - size($"kept")).cast("long").as("n_removed"),
-        md5(concat_ws(" ", $"kept")).as("cleaned_digest"))
   }
 
   /** p26 keeps 1/[[TempTargetDen]] of the corpus, split by tempered weight. */

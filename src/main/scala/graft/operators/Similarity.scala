@@ -2083,56 +2083,6 @@ object Similarity {
       .orderBy($"bucket")
   }
 
-  /** Streaming ANN — v4's ONLINE twin: query vectors arrive as a stream
-    * and are answered against the static corpus through the SAME
-    * persisted IVF model ([[ivfCentroids]] → ModelStore), so a query
-    * submitted at ingest time and the nightly batch v4 give identical
-    * answers. The stream side does map-side cell assignment (the one
-    * broadcast centroid row, no state), equi-joins the cent_id-keyed
-    * corpus (stream-static inner join — stateless by construction), and
-    * folds candidates through the mergeable [[graft.plans.TopKAggregate]]
-    * in update mode, whose per-query state is EXACTLY k (score, id)
-    * pairs — bounded regardless of how many cells a query touches.
-    *
-    * Delivery contract: relies on Structured Streaming's exactly-once
-    * processing from replayable sources (a re-delivered query row would
-    * double its candidates into the heap); the at-least-once-tolerant
-    * twins (d15/mixture) pay a seen-marker state bit for that tolerance,
-    * which a stateless retrieval answer does not warrant.
-    *
-    * Input schema: (query_id: long, v: array<double>). Output per update:
-    * (query_id, rk, vec_id, cos_sim) — v4's row shape. `excludeSelf`
-    * (default true) matches v4's CORPUS-DRAWN query convention (a query
-    * must not retrieve itself); pass false for an EXTERNAL query stream,
-    * whose ids are unrelated to corpus ids — the default would silently
-    * drop the corpus vector that happens to share the id. */
-  def annStream(queries: DataFrame, dir: String, nprobe: Int = 2,
-                excludeSelf: Boolean = true): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val cents = centArray(ivfCentroids(spark, dir, 1)).cache()
-    // corpus cells from the persisted assignment artifact, and cached: a
-    // stream-static join re-executes the static plan every micro-batch
-    val corpus = normalizedEmbeddings(spark, dir)
-      .join(ivfCellAssignment(spark, dir), "vec_id")
-      .select($"vec_id", $"v", $"nrm", $"cent_id")
-      .cache()
-    val q = ivfAssign(
-        queries.select($"query_id".as("vec_id"), $"v")
-          .withColumn("nrm", norm($"v")), cents, nprobe)
-      .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"),
-        $"cent_id")
-    q.join(corpus, Seq("cent_id"))
-      .filter(if (excludeSelf) $"vec_id" =!= $"query_id" else lit(true))
-      .select($"query_id",
-        (dot($"qv", $"v") / ($"qn" * $"nrm")).as("cos"), $"vec_id")
-      .groupBy($"query_id")
-      .agg(graft.plans.TopKAggregate.topK($"cos", $"vec_id", K).as("top"))
-      .select($"query_id", posexplode($"top"))
-      .select($"query_id", ($"pos" + 1).cast("int").as("rk"),
-        $"col.id".as("vec_id"), round($"col.score", 6).as("cos_sim"))
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "v23_random_projection" -> v23RandomProjection _,
     "v22_range_search" -> v22RangeSearch _,

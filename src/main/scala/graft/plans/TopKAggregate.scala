@@ -29,7 +29,6 @@ case class TopKAggregate(
     scoreExpr: Expression,
     idExpr: Expression,
     k: Int,
-    distinct: Boolean = false,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[mutable.ArrayBuffer[(Double, Long)]] {
@@ -50,17 +49,6 @@ case class TopKAggregate(
 
   private def insert(buf: mutable.ArrayBuffer[(Double, Long)],
                      s: Double, id: Long): Unit = {
-    // distinct mode: an element already resident is a no-op, which makes
-    // the aggregate IDEMPOTENT under re-delivered input rows — the
-    // property a streaming reservoir needs from an at-least-once source
-    // (k is small; the linear scan is cheaper than hashing pairs)
-    if (distinct) {
-      var i = 0
-      while (i < buf.size) {
-        if (buf(i)._1 == s && buf(i)._2 == id) return
-        i += 1
-      }
-    }
     if (buf.size < k) {
       buf += ((s, id))
     } else {
@@ -128,12 +116,4 @@ object TopKAggregate {
     ColumnBridge.column(
       TopKAggregate(ColumnBridge.expression(score),
         ColumnBridge.expression(id), k).toAggregateExpression())
-
-  /** Distinct variant: re-inserting a resident (score, id) is a no-op —
-    * idempotent under at-least-once delivery (streaming reservoir). */
-  def topKDistinct(score: Column, id: Column, k: Int): Column =
-    ColumnBridge.column(
-      TopKAggregate(ColumnBridge.expression(score),
-        ColumnBridge.expression(id), k, distinct = true)
-        .toAggregateExpression())
 }

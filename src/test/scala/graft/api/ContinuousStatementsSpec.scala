@@ -228,6 +228,36 @@ class ContinuousStatementsSpec extends AnyFunSuite {
     rejects("SELECT tumble(key, 10) AS t, session(key, 5) AS w, " +
       "count(*) AS c FROM lt_feed GROUP BY tumble(key, 10), session(key, 5)",
       "one event-time window")
+    // every window call shares one frame: integer-literal positive
+    // arguments, one direct aliased call, a resolving view column, and
+    // no call left nested after the substitution
+    for ((fn, argsFmt) <- Seq("tumble" -> "%s", "hop" -> "%s, 10",
+        "session" -> "%s")) {
+      def call(col: String, arg: String): String =
+        s"$fn($col, ${argsFmt.format(arg)})"
+      rejects(s"SELECT ${call("key", "id")} AS w, count(*) AS c FROM " +
+        s"lt_feed GROUP BY ${call("key", "id")}", "integer literal")
+      rejects(s"SELECT ${call("key", "0")} AS w, count(*) AS c FROM " +
+        s"lt_feed GROUP BY ${call("key", "0")}", "must be positive")
+      rejects(s"SELECT count(*) AS c FROM lt_feed GROUP BY " +
+        call("key", "10"), "direct aliased SELECT item")
+      rejects(s"SELECT ${call("key", "10")} AS a, ${call("key", "5")} AS b, " +
+        s"count(*) AS c FROM lt_feed GROUP BY ${call("key", "10")}, " +
+        call("key", "5"), s"one $fn window")
+      rejects(s"SELECT ${call("nope", "10")} AS w, count(*) AS c FROM " +
+        s"lt_feed GROUP BY ${call("nope", "10")}", "does not resolve")
+      rejects(s"SELECT ${call("key", "10")} AS w, count(*) AS c FROM " +
+        s"lt_feed GROUP BY ${call("key", "10")} + 1", "may appear only")
+    }
+    rejects("SELECT hop(key, 10, id) AS w, count(*) AS c FROM lt_feed " +
+      "GROUP BY hop(key, 10, id)", "integer literal")
+    // hop fans out by name: its output must not shadow a view column,
+    // and the view's columns must carry unique names
+    rejects("SELECT hop(key, 10, 10) AS value, count(*) AS c FROM lt_feed " +
+      "GROUP BY hop(key, 10, 10)", "shadows a view column")
+    rejects("SELECT hop(key, 10, 10) AS w, count(*) AS c FROM " +
+      "(SELECT key, id AS v, value AS v FROM lt_feed) " +
+      "GROUP BY hop(key, 10, 10)", "duplicate column names")
     // a PROJECTED/star subquery routes as of r11, but an aggregate
     // nested INSIDE the subquery still matches no route — the default
     // route would fold delete markers as data rows

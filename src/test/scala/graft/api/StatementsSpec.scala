@@ -59,6 +59,17 @@ class StatementsSpec extends AnyFunSuite {
       stmt.stop()
       assert(stmt.phase == Phase.Completed)
     }
+    // a stopped statement's cursor exhausts after its last record, so
+    // consume() with the default limit returns
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val cl = new Changelog(stmt.columns, stmt.results())
+    val all = Await.result(Future(cl.consume()),
+      scala.concurrent.duration.Duration(60, "s"))
+    assert(all.size == stmt.handle.get.records().flatten.size)
+    assert(all.size == 4, all) // +I brown, +I blue, -U/+U brown
+    assert(cl.collapse().toMultiset ==
+      Map(Vector("brown", 2L) -> 1, Vector("blue", 1L) -> 1))
   }
 
   test("streaming statements set the checkpoint manager only when the caller has not") {

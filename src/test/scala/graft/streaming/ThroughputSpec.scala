@@ -201,40 +201,4 @@ class ThroughputSpec extends AnyFunSuite {
         f"cascade rate $rate%.0f changes/s below 10x the baseline")
     } finally stmt.stop()
   }
-
-  test("ingest-twin pipeline (classify + drift) sustains well over the " +
-      "20 docs/s baseline") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    val dir = SparkTestSession.sf0001
-    // both fitted models, as the production deployment would hold them
-    val (weights, thrDf) = graft.operators.Pipeline.classifierModel(s, dir)
-    val thr = thrDf.head.getLong(0)
-    val (ref, nRef) = graft.operators.Pipeline.refDistribution(s, dir)
-    val docs = Tables.load(s, dir, "documents").as[Doc].collect().toSeq
-    val total = 10 * docs.size
-
-    val mem = MemoryStream[Doc]
-    val memD = MemoryStream[Doc]
-    val qc = graft.operators.Pipeline.classifierStream(mem.toDF(), weights, thr)
-      .writeStream.outputMode("update").format("noop").start()
-    val qd = graft.operators.Pipeline.driftStream(memD.toDF(), ref, nRef)
-      .writeStream.outputMode("update").format("noop").start()
-    try {
-      mem.addData(docs.take(10)); qc.processAllAvailable() // warmup
-      memD.addData(docs.take(10)); qd.processAllAvailable()
-      val t0 = System.nanoTime()
-      (1 to 10).foreach { i =>
-        val b = docs.map(d => d.copy(doc_id = d.doc_id + i * 1000000L))
-        mem.addData(b); memD.addData(b)
-        qc.processAllAvailable(); qd.processAllAvailable()
-      }
-      val secs = (System.nanoTime() - t0) / 1e9
-      val rate = total / secs
-      info(f"sustained $rate%.0f docs/s through classify+drift (2 queries)")
-      assert(rate >= 20 * 10,
-        f"ingest rate $rate%.0f docs/s below 10x the baseline")
-    } finally { qc.stop(); qd.stop() }
-  }
 }
