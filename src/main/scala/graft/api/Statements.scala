@@ -15,7 +15,7 @@ import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, JoinType, LeftOute
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.types._
 
-import graft.changelog.{Changelog, Op, RawRecord}
+import graft.changelog.{Op, RawRecord}
 import graft.streaming.{ChangelogStream, StatefulOps}
 
 object Statements {
@@ -26,6 +26,12 @@ object Statements {
     * signals a statement whose state belongs in the executor StateStore
     * or an upstream pre-aggregation, not on the driver. */
   val DefaultMaxFoldStateEntries: Int = 1 << 20
+
+  /** Statement names are this prefix + 12 random hex chars, and
+    * `waitForStatus` polls every `PollMs`: the reference's values
+    * (`/root/reference/api/statements.py:11-13,24`). */
+  private val NamePrefix = "stmt-"
+  private val PollMs = 300L
 }
 
 /** Statement lifecycle phases, lowercase like the reference's
@@ -50,12 +56,13 @@ final class UnsupportedContinuousStatement(msg: String)
 
 /** A created statement: name, SQL, result schema ("traits.schema" in the
   * reference, read at `/root/reference/dashboard.py:201`), current phase,
-  * and a changelog-shaped result cursor. */
+  * and a changelog-shaped result cursor. Its result is either a batch
+  * `DataFrame`, paged on demand, or a started sink's handle. */
 final class Statement private[api] (
     val name: String,
     val sql: String,
-    val df: DataFrame,
-    streamHandle: Option[ChangelogStream.Handle],
+    val schema: StructType,
+    result: Either[DataFrame, ChangelogStream.Handle],
     /** The creation-time properties map — the reference posts
       * `{sql.current-catalog, sql.current-database}` with every create
       * (`/root/reference/api/statements.py:27-31,70-78`) and the
@@ -63,25 +70,25 @@ final class Statement private[api] (
       * complete. Empty for the default namespace. */
     val properties: Map[String, String] = Map.empty) {
 
-  val schema: StructType = df.schema
   val columns: Seq[String] = schema.fieldNames.toSeq
 
   @volatile private[api] var failure: Option[Throwable] = None
 
-  def isStreaming: Boolean = streamHandle.isDefined
+  def isStreaming: Boolean = result.isRight
 
-  def phase: String = streamHandle match {
-    case Some(h) =>
+  def phase: String = result match {
+    case Right(h) =>
       if (failure.isDefined || h.query.exception.isDefined) Phase.Failed
       else if (h.query.isActive) Phase.Running
       else Phase.Completed
-    case None => if (failure.isDefined) Phase.Failed else Phase.Completed
+    case Left(_) => if (failure.isDefined) Phase.Failed else Phase.Completed
   }
 
   /** Result pages as a raw-record iterator: streaming statements read the
-    * sink's record log directly (validated per record, with no history
-    * copy per cursor); batch statements produce `+I` rows (a bounded
-    * query's entire changelog is its result set).
+    * sink's record log directly, with no history copy per cursor (a
+    * consumer validates each record as `Changelog.consume` reads it);
+    * batch statements produce `+I` rows (a bounded query's entire
+    * changelog is its result set).
     *
     * The streaming iterator exhausts once its query has stopped and every
     * record in the log has been read; while the query runs it never
@@ -98,21 +105,20 @@ final class Statement private[api] (
     * surface lazily (on the `hasNext`/`next` that hits the bad partition)
     * and flip the statement to Failed, same as the eager path did. */
   def results(heartbeatMs: Long = 10L): Iterator[Option[RawRecord]] =
-    streamHandle match {
-      case Some(h) => new Iterator[Option[RawRecord]] {
+    result match {
+      case Right(h) => new Iterator[Option[RawRecord]] {
         private val log = h.records()
         // isActive first: a last micro-batch appended just before the
         // query ends is then still seen through log.hasNext
         override def hasNext: Boolean = h.query.isActive || log.hasNext
         override def next(): Option[RawRecord] =
-          if (log.hasNext) log.next().map { raw =>
-            Changelog.validate(h.schema, raw); raw
-          } else { // heartbeat — no data this poll; back off
+          if (log.hasNext) log.next()
+          else { // heartbeat — no data this poll; back off
             if (heartbeatMs > 0) Thread.sleep(heartbeatMs)
             None
           }
       }
-      case None => new Iterator[Option[RawRecord]] {
+      case Left(df) => new Iterator[Option[RawRecord]] {
         private val rows =
           try df.toLocalIterator()
           catch { case e: Throwable => failure = Some(e); throw e }
@@ -127,25 +133,22 @@ final class Statement private[api] (
       }
     }
 
-  def stop(): Unit = streamHandle.foreach(_.stop())
-  private[api] def handle: Option[ChangelogStream.Handle] = streamHandle
+  def stop(): Unit = result.foreach(_.stop())
+  private[api] def handle: Option[ChangelogStream.Handle] = result.toOption
 }
 
 /** The engine's public statement facade — the Spark re-host of the
   * reference's `StatementsEndpoint` (`/root/reference/api/statements.py`):
   * `create(sql)` replaces the POST (Catalyst parses/plans instead of the
   * remote Flink service), `waitForStatus` replaces the 300 ms status poll,
-  * `results` replaces the result-page generator. Statement names are a
-  * prefix + 12 random hex chars (`/root/reference/api/statements.py:11-13`).
+  * `results` replaces the result-page generator. Statement names are
+  * `stmt-` + 12 random hex chars (`/root/reference/api/statements.py:11-13`).
   *
-  * Statements are memoized by (SQL text, changelog keys), like the
+  * Statements are memoized by (SQL text, properties), like the
   * reference's one-statement-per-distinct-SQL cache
-  * (`/root/reference/dashboard.py:195-209`) — keying also on `keyCols` so
-  * the same SQL with different changelog keying gets its own statement
-  * rather than silently reusing the first keying.
+  * (`/root/reference/dashboard.py:195-209`).
   */
-final class Statements(spark: SparkSession, prefix: String = "stmt-",
-                       pollMs: Long = 300L,
+final class Statements(spark: SparkSession,
                        maxFoldStateEntries: Int =
                          Statements.DefaultMaxFoldStateEntries) {
 
@@ -178,7 +181,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
   private val rng = new SecureRandom()
   private val byName = TrieMap.empty[String, Statement]
   private val byQuery =
-    TrieMap.empty[(String, Seq[String], Map[String, String]), Statement]
+    TrieMap.empty[(String, Map[String, String]), Statement]
   private val createLock = new Object
 
   private def randomId(): String = {
@@ -214,7 +217,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
           .getOrElse(throw new IllegalArgumentException(
             s"GROUP BY expression ${g.sql} has no column in the " +
               "statement's output, so the changelog cannot key its groups " +
-              "— select it, or pass keyCols"))
+              "— select it"))
       }
     }
   }
@@ -1009,7 +1012,8 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     val handle = ChangelogStream.deltaPassthrough(ds.served, name)
     // the statement's advertised schema is the maintained view's columns
     // (op travels as the record op, not a column)
-    new Statement(name, sql, ds.served.drop("op"), Some(handle), properties)
+    new Statement(name, sql, StructType(ds.served.schema.filterNot(_.name == "op")),
+      Right(handle), properties)
   }
 
   /** Dispatch an `Aggregate over [Filter over] <source>` continuous
@@ -1785,11 +1789,8 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     // transitions wire as -U/+U (never a spurious +I/-D pair)
     val handle = ChangelogStream.foldingSnapshot(projected, name,
       a.output.map(_.name), keyOut.map(a.output(_).name), fold)
-    // advertised schema ("traits.schema") is the analyzed Aggregate's — an
-    // empty typed frame carries it; results flow through the handle
-    val schemaDf = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], a.schema)
-    new Statement(name, sql, schemaDf, Some(handle), properties)
+    // advertised schema ("traits.schema") is the analyzed Aggregate's
+    new Statement(name, sql, a.schema, Right(handle), properties)
   }
 
   /** Spark's ordering for maintained top-k rows of `schema`: the bound
@@ -1889,10 +1890,8 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     }
     val handle = ChangelogStream.foldingSnapshot(ds.deltas, name,
       ds.servedCols, ds.servedCols, fold)
-    val schemaDf = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(schema.take(served)))
-    new Statement(name, sql, schemaDf, Some(handle), properties)
+    new Statement(name, sql, StructType(schema.take(served)), Right(handle),
+      properties)
   }
 
   /** A memo hit is only served while the statement is still usable: a
@@ -1913,11 +1912,10 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
 
   /** Create (or return the memoized) statement for this SQL. Streaming
     * plans start immediately with a changelog-synthesizing sink keyed on
-    * `keyCols` — or, when omitted, on the output columns carrying the
-    * analyzed plan's grouping expressions (a grouping expression no output
-    * column carries rejects); an aggregate under a HAVING diffs complete
-    * snapshots, so a group leaving the HAVING retracts. Batch plans are
-    * complete on arrival. A cached
+    * the output columns carrying the analyzed plan's grouping expressions
+    * (a grouping expression no output column carries rejects); an
+    * aggregate under a HAVING diffs complete snapshots, so a group leaving
+    * the HAVING retracts. Batch plans are complete on arrival. A cached
     * statement that has failed (or whose streaming query is no longer
     * active) is evicted and re-created rather than returned dead.
     *
@@ -1931,9 +1929,9 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
     * session state does not affect the statement's later execution.
     * Properties participate in the memo key: the same SQL against two
     * databases is two statements. */
-  def create(sql: String, keyCols: Seq[String] = Nil,
+  def create(sql: String,
              properties: Map[String, String] = Map.empty): Statement = {
-    val cacheKey = (sql, keyCols, properties)
+    val cacheKey = (sql, properties)
     // creation is heavyweight (may start a live streaming query), so misses
     // serialize: concurrent creates of the same SQL must not race two
     // queries into existence with one silently leaked
@@ -1942,7 +1940,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
         // evicting a dead statement must also drop it from the by-name
         // index, or failed statements pile up for the facade's lifetime
         byQuery.get(cacheKey).foreach(dead => byName.remove(dead.name))
-        val name = prefix + randomId()
+        val name = Statements.NamePrefix + randomId()
         val prevCatalog = spark.catalog.currentCatalog()
         val prevDatabase = spark.catalog.currentDatabase
         properties.get(CurrentCatalogProp)
@@ -1953,15 +1951,15 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
           try {
             tryContinuousStatement(sql, name, properties).getOrElse {
               val df = spark.sql(sql)
-              val handle =
+              val result =
                 if (df.isStreaming) {
-                  val keys = if (keyCols.nonEmpty) keyCols else derivedKeys(df)
-                  if (keys.isEmpty) Some(ChangelogStream.appending(df, name))
-                  else if (filtersAggregate(df.queryExecution.analyzed))
-                    Some(ChangelogStream.snapshotting(df, name, keys))
-                  else Some(ChangelogStream.updating(df, name, keys))
-                } else None
-              new Statement(name, sql, df, handle, properties)
+                  val keys = derivedKeys(df)
+                  Right(if (keys.isEmpty) ChangelogStream.appending(df, name)
+                    else if (filtersAggregate(df.queryExecution.analyzed))
+                      ChangelogStream.snapshotting(df, name, keys)
+                    else ChangelogStream.updating(df, name, keys))
+                } else Left(df)
+              new Statement(name, sql, df.schema, result, properties)
             }
           } finally {
             spark.catalog.setCurrentCatalog(prevCatalog)
@@ -1977,8 +1975,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
   def get(name: String): Option[Statement] = byName.get(name)
 
   /** Block until the statement reaches one of `statuses`, polling at the
-    * reference's cadence (`poll_ms=300`, `api/statements.py:24,171-192`;
-    * overridable via the `pollMs` constructor parameter).
+    * reference's cadence (`poll_ms=300`, `api/statements.py:24,171-192`).
     * Returns None on `failed`; throws on timeout. */
   def waitForStatus(stmt: Statement, statuses: Set[String],
                     timeoutMs: Long = 120000L): Option[Statement] = {
@@ -1987,7 +1984,7 @@ final class Statements(spark: SparkSession, prefix: String = "stmt-",
       val p = stmt.phase
       if (p == Phase.Failed) return None
       if (statuses.contains(p)) return Some(stmt)
-      Thread.sleep(pollMs)
+      Thread.sleep(Statements.PollMs)
     }
     throw new java.util.concurrent.TimeoutException(
       s"statement ${stmt.name} did not reach $statuses in ${timeoutMs} ms")

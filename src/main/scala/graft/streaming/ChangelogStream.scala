@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.changelog.{Changelog, ChangelogRecord, Op, RawRecord}
 
@@ -42,39 +42,39 @@ final class ChangelogSynthesizer(schema: Seq[String], keyCols: Seq[String]) {
 
   private def key(row: Vector[Any]): Vector[Any] = keyIdx.map(row).toVector
 
-  /** One update-mode micro-batch: rows are the new values of changed keys. */
-  def onUpsert(rows: Seq[Vector[Any]]): Seq[ChangelogRecord] =
-    rows.flatMap { r =>
-      state.put(key(r), r) match {
-        case None => Seq(ChangelogRecord(Some(Op.Insert), r))
-        case Some(old) if old == r => Seq.empty // no-op update: emit nothing
-        case Some(old) => Seq(
-          ChangelogRecord(Some(Op.UpdateBefore), old),
-          ChangelogRecord(Some(Op.UpdateAfter), r))
-      }
+  /** Applies one row to the state: `+I` for a new key, an adjacent
+    * `-U old, +U new` pair for a changed value, nothing for a no-op
+    * update. Returns the row's key. */
+  private def upsert(r: Vector[Any],
+                     out: mutable.Growable[ChangelogRecord]): Vector[Any] = {
+    val k = key(r)
+    state.put(k, r) match {
+      case None => out += ChangelogRecord(Some(Op.Insert), r)
+      case Some(old) if old == r => ()
+      case Some(old) =>
+        out += ChangelogRecord(Some(Op.UpdateBefore), old)
+        out += ChangelogRecord(Some(Op.UpdateAfter), r)
     }
+    k
+  }
 
-  /** One complete-mode micro-batch: rows are the *entire* result. Diffs
-    * against previous snapshot, so dropped groups emit `-D` (the case
-    * update mode cannot express). */
+  /** One update-mode micro-batch: rows are the new values of changed keys. */
+  def onUpsert(rows: Seq[Vector[Any]]): Seq[ChangelogRecord] = {
+    val out = Vector.newBuilder[ChangelogRecord]
+    rows.foreach(upsert(_, out))
+    out.result()
+  }
+
+  /** One complete-mode micro-batch: rows are the *entire* result. Each row
+    * goes through [[onUpsert]]'s rule, then every live key the batch did
+    * not carry emits `-D` (the case update mode cannot express). */
   def onSnapshot(rows: Seq[Vector[Any]]): Seq[ChangelogRecord] = {
-    val seen = mutable.Set.empty[Vector[Any]]
-    val out = mutable.ArrayBuffer.empty[ChangelogRecord]
-    rows.foreach { r =>
-      val k = key(r)
-      seen += k
-      state.put(k, r) match {
-        case None => out += ChangelogRecord(Some(Op.Insert), r)
-        case Some(old) if old == r => ()
-        case Some(old) =>
-          out += ChangelogRecord(Some(Op.UpdateBefore), old)
-          out += ChangelogRecord(Some(Op.UpdateAfter), r)
-      }
-    }
+    val out = Vector.newBuilder[ChangelogRecord]
+    val seen = rows.iterator.map(upsert(_, out)).toSet
     state.keys.filterNot(seen).toVector.foreach { k =>
       out += ChangelogRecord(Some(Op.Delete), state.remove(k).get)
     }
-    out.toSeq
+    out.result()
   }
 }
 
@@ -83,6 +83,17 @@ final class ChangelogSynthesizer(schema: Seq[String], keyCols: Seq[String]) {
   * replacement for the reference's statement-results loop
   * (`/root/reference/api/statements.py:96-169` +
   * `/root/reference/lib/flink.py`): each micro-batch ≙ one result page.
+  *
+  * Every sink runs one lifecycle ([[sink]]): it builds the sink's
+  * [[RecordLog]], starts a `foreachBatch` query, and on each micro-batch
+  * moves the batch to the driver in one bounded Spark job
+  * ([[RecordLog.boundedCollect]], sized by the sink's synthesizer when it
+  * has one), turns the rows into records, and appends them to the log;
+  * the returned [[Handle]] holds the started query and the log. The five
+  * public sinks differ only in their output mode and their rows→records
+  * rule: `updating` upserts, `snapshotting` and `foldingSnapshot` diff
+  * snapshots, `deltaPassthrough` reads each row's op column, and
+  * `appending` emits `+I`.
   *
   * These sinks are **result consumption, not ETL**: emitted records are
   * retained driver-side so any number of cursors can replay them (the
@@ -203,10 +214,9 @@ object ChangelogStream {
   }
 
   final class Handle private[ChangelogStream] (
-      getQuery: () => StreamingQuery,
+      val query: StreamingQuery,
       val schema: Seq[String],
       log: RecordLog) {
-    def query: StreamingQuery = getQuery()
     /** Fresh independent cursor over everything this sink has emitted so
       * far (and live for whatever it emits later). Cursors replay from the
       * beginning and do not interfere with each other. */
@@ -223,43 +233,57 @@ object ChangelogStream {
     * query's offset log, commit log and state-store deltas. */
   private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
 
-  /** Start `df` as a `foreachBatch` query: every sink reaches Spark here.
+  /** The one sink lifecycle: start `df` as a `foreachBatch` query under
+    * Spark's default trigger (a micro-batch as soon as the previous one
+    * ends), whose every micro-batch is collected in one bounded job (sized
+    * by `synth` when the rule feeds one, see [[RecordLog.boundedCollect]]),
+    * turned into records by `toRecords` and appended to the sink's log.
+    *
     * Spark reads the checkpoint manager class from the session's Hadoop
     * conf when `start()` builds the query's logs and state stores, and no
     * writer option carries it, so it is set on `df`'s session — only when
     * neither the session nor its Hadoop conf names one. */
-  private def start(df: DataFrame, outputMode: String, queryName: String,
-                    trigger: Trigger)(sink: DataFrame => Unit): StreamingQuery = {
+  private def sink(df: DataFrame, outputMode: String, queryName: String,
+                   schema: Seq[String], maxBufferedRecords: Int,
+                   synth: Option[ChangelogSynthesizer])(
+                   toRecords: Seq[Vector[Any]] => Seq[RawRecord]): Handle = {
     val session = df.sparkSession
     if (session.conf.getOption(CheckpointManagerKey).isEmpty &&
         session.sparkContext.hadoopConfiguration.get(CheckpointManagerKey) == null)
       session.conf.set(CheckpointManagerKey, classOf[LocalCheckpointFileManager].getName)
-    df.writeStream
+    val log = new RecordLog(maxBufferedRecords, df)
+    val query = df.writeStream
       .outputMode(outputMode)
       .queryName(queryName)
-      .trigger(trigger)
-      .foreachBatch((batch: DataFrame, _: Long) => sink(batch))
+      .foreachBatch((batch: DataFrame, _: Long) =>
+        log.append(toRecords(log.boundedCollect(batch, synth))))
       .start()
+    new Handle(query, schema, log)
+  }
+
+  /** A sink whose rule runs a [[ChangelogSynthesizer]] keyed on `keyCols`
+    * of `schema`. The rule runs under the synthesizer's lock:
+    * `foreachBatch` invocations are serial per query, but cursor replays
+    * may race the append. The batch's row cap is checked before the rule
+    * runs, so a failed batch never leaves synthesizer state ahead of the
+    * log. */
+  private def synthesizing(df: DataFrame, outputMode: String, queryName: String,
+                           schema: Seq[String], keyCols: Seq[String],
+                           maxBufferedRecords: Int)(
+      rule: (ChangelogSynthesizer, Seq[Vector[Any]]) => Seq[ChangelogRecord]): Handle = {
+    val synth = new ChangelogSynthesizer(schema, keyCols)
+    sink(df, outputMode, queryName, schema, maxBufferedRecords, Some(synth)) { rows =>
+      synth.synchronized(rule(synth, rows))
+        .map(r => RawRecord(r.op.map(_.code), r.values))
+    }
   }
 
   /** Start an updating (grouped-aggregate) query with `-U/+U` synthesis.
     * `keyCols` are the grouping columns identifying a result row. */
   def updating(df: DataFrame, queryName: String, keyCols: Seq[String],
-               trigger: Trigger = Trigger.ProcessingTime(0),
-               maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle = {
-    val schema = df.schema.fieldNames.toSeq
-    val synth = new ChangelogSynthesizer(schema, keyCols)
-    val log = new RecordLog(maxBufferedRecords, df)
-    val query = start(df, "update", queryName, trigger) { batch =>
-      // one bounded Spark job, checked before any state mutation (see
-      // boundedCollect): a high-cardinality grouping in a catch-up
-      // micro-batch must error via the documented cap, not OOM the driver
-      val rows = log.boundedCollect(batch, Some(synth))
-      val recs = synth.synchronized(synth.onUpsert(rows))
-      log.append(recs.map(r => RawRecord(r.op.map(_.code), r.values)))
-    }
-    new Handle(() => query, schema, log)
-  }
+               maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle =
+    synthesizing(df, "update", queryName, df.schema.fieldNames.toSeq, keyCols,
+      maxBufferedRecords)(_.onUpsert(_))
 
   /** Start a complete-mode query with full-snapshot diffing: each batch
     * carries the entire result, and groups that leave it (e.g. crossing a
@@ -267,22 +291,12 @@ object ChangelogStream {
     * express. `graft.api.Statements` starts one for a streaming statement
     * on its default route whose plan has a HAVING (a Filter above its top
     * aggregate). Only for small (dashboard-sized) results: the snapshot is
-    * O(result), though never O(input). */
+    * O(result), though never O(input). This is [[foldingSnapshot]]'s rule
+    * with the identity fold, in complete mode. */
   def snapshotting(df: DataFrame, queryName: String, keyCols: Seq[String],
-                   trigger: Trigger = Trigger.ProcessingTime(0),
-                   maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle = {
-    val schema = df.schema.fieldNames.toSeq
-    val synth = new ChangelogSynthesizer(schema, keyCols)
-    val log = new RecordLog(maxBufferedRecords, df)
-    val query = start(df, "complete", queryName, trigger) { batch =>
-      // same bounded single job as `updating` — a complete-mode
-      // snapshot larger than the log's remaining capacity cannot fit
-      val rows = log.boundedCollect(batch, Some(synth))
-      val recs = synth.synchronized(synth.onSnapshot(rows))
-      log.append(recs.map(r => RawRecord(r.op.map(_.code), r.values)))
-    }
-    new Handle(() => query, schema, log)
-  }
+                   maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle =
+    synthesizing(df, "complete", queryName, df.schema.fieldNames.toSeq, keyCols,
+      maxBufferedRecords)(_.onSnapshot(_))
 
   /** Start a query whose rows are exact deltas (changelog-op-carrying,
     * e.g. the IVM join's retraction stream) feeding a DRIVER-SIDE
@@ -302,47 +316,33 @@ object ChangelogStream {
     * fold's state is O(output groups) — dashboard-sized by the same
     * contract as [[ChangelogSynthesizer]]. The deltas reach the driver in
     * one fail-fast-bounded Spark job per micro-batch
-    * ([[RecordLog.boundedCollect]]). */
+    * ([[RecordLog.boundedCollect]]).
+    *
+    * The IVM operators emit their deltas in APPEND mode (delta streams
+    * are append streams — which is also what lets several of them chain
+    * in one query: Spark permits multiple flatMapGroupsWithState only
+    * when all are append and the query is append). */
   def foldingSnapshot(df: DataFrame, queryName: String,
                       outSchema: Seq[String], keyCols: Seq[String],
                       fold: Seq[Vector[Any]] => Seq[Seq[Vector[Any]]],
-                      trigger: Trigger = Trigger.ProcessingTime(0),
-                      maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle = {
-    val synth = new ChangelogSynthesizer(outSchema, keyCols)
-    val log = new RecordLog(maxBufferedRecords, df)
-    // the IVM operators emit their deltas in APPEND mode (delta streams
-    // are append streams — which is also what lets several of them chain
-    // in one query: Spark permits multiple flatMapGroupsWithState only
-    // when all are append and the query is append)
-    val query = start(df, "append", queryName, trigger) { batch =>
-      val deltas = log.boundedCollect(batch, Some(synth))
-      // fold + diff under one lock: foreachBatch invocations are serial
-      // per query, but cursor replays may race the append
-      val recs = synth.synchronized(fold(deltas).flatMap(synth.onSnapshot))
-      log.append(recs.map(r => RawRecord(r.op.map(_.code), r.values)))
-    }
-    new Handle(() => query, outSchema, log)
-  }
+                      maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle =
+    synthesizing(df, "append", queryName, outSchema, keyCols,
+      maxBufferedRecords)((synth, deltas) => fold(deltas).flatMap(synth.onSnapshot))
 
   /** Start a query whose rows ALREADY ARE exact changelog deltas — the
     * IVM operators ([[StatefulOps.changelogUnionUpsertStream]],
     * [[StatefulOps.zJoinStream]]) emit their own retractions, so no
-    * synthesizer state sits between the operator and the wire: each row's `opCol` (changelog code) becomes the record op
-    * and the remaining columns the record values, in schema order. */
-  def deltaPassthrough(df: DataFrame, queryName: String, opCol: String = "op",
-                       trigger: Trigger = Trigger.ProcessingTime(0),
+    * synthesizer state sits between the operator and the wire: each row's
+    * `op` column (changelog code) becomes the record op and the remaining
+    * columns the record values, in schema order. Append mode, like
+    * [[foldingSnapshot]]: delta streams are append streams. */
+  def deltaPassthrough(df: DataFrame, queryName: String,
                        maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle = {
-    val opIdx = df.schema.fieldIndex(opCol)
-    val schema = df.schema.fieldNames.toSeq.patch(opIdx, Nil, 1)
-    val log = new RecordLog(maxBufferedRecords, df)
-    // append mode: see foldingSnapshot — delta streams are append streams
-    val query = start(df, "append", queryName, trigger) { batch =>
-      // each input row is exactly one record (see boundedCollect)
-      log.append(log.boundedCollect(batch).map { vs =>
-        RawRecord(Some(vs(opIdx).asInstanceOf[Int]), vs.patch(opIdx, Nil, 1))
-      })
+    val opIdx = df.schema.fieldIndex("op")
+    sink(df, "append", queryName, df.schema.fieldNames.toSeq.patch(opIdx, Nil, 1),
+        maxBufferedRecords, None) { rows =>
+      rows.map(vs => RawRecord(Some(vs(opIdx).asInstanceOf[Int]), vs.patch(opIdx, Nil, 1)))
     }
-    new Handle(() => query, schema, log)
   }
 
   /** Start an append-only query (no aggregation): rows pass through as
@@ -350,15 +350,7 @@ object ChangelogStream {
     * matters most here — an unbounded append stream would otherwise
     * accumulate every row on the driver. */
   def appending(df: DataFrame, queryName: String,
-                trigger: Trigger = Trigger.ProcessingTime(0),
-                maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle = {
-    val schema = df.schema.fieldNames.toSeq
-    val log = new RecordLog(maxBufferedRecords, df)
-    val query = start(df, "append", queryName, trigger) { batch =>
-      // append-only: one record per input row (see boundedCollect)
-      log.append(log.boundedCollect(batch)
-        .map(vs => RawRecord(Some(Op.Insert.code), vs)))
-    }
-    new Handle(() => query, schema, log)
-  }
+                maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle =
+    sink(df, "append", queryName, df.schema.fieldNames.toSeq,
+        maxBufferedRecords, None)(_.map(vs => RawRecord(Some(Op.Insert.code), vs)))
 }

@@ -153,22 +153,33 @@ class StatementsSpec extends AnyFunSuite {
   }
 
   test("statements are memoized by SQL text") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
     Tables.registerAll(spark, SparkTestSession.sf0001)
     val stmts = new Statements(spark)
     val a = stmts.create("SELECT count(*) AS n FROM nation")
     val b = stmts.create("SELECT count(*) AS n FROM nation")
     assert(a eq b)
-  }
-
-  test("same SQL with different keyCols is a distinct statement") {
-    Tables.registerAll(spark, SparkTestSession.sf0001)
-    val stmts = new Statements(spark)
-    val sql = "SELECT n_regionkey, n_name, count(*) AS n FROM nation " +
-      "GROUP BY n_regionkey, n_name"
-    val a = stmts.create(sql)
-    val b = stmts.create(sql, keyCols = Seq("n_regionkey", "n_name"))
-    assert(!(a eq b), "different changelog keying must not reuse the memo")
-    assert(stmts.create(sql, keyCols = Seq("n_regionkey", "n_name")) eq b)
+    // a streaming statement on the default route (an updating sink) and
+    // one on a feed route (the IVM fold): each is served from the memo
+    // while its query runs, and re-created once it is stopped
+    MemoryStream[Int].toDF().createOrReplaceTempView("memo_stream")
+    MemoryStream[(Long, Long, Long, String, Boolean)].toDF()
+      .toDF("seq", "key", "id", "value", "delete")
+      .createOrReplaceTempView("memo_feed")
+    Seq("SELECT value, count(*) AS n FROM memo_stream GROUP BY value",
+        "SELECT key, count(*) AS n FROM memo_feed GROUP BY key").foreach { sql =>
+      val first = stmts.create(sql)
+      try {
+        assert(first.isStreaming)
+        assert(stmts.create(sql) eq first, s"memo miss while running: $sql")
+      } finally first.stop()
+      val again = stmts.create(sql)
+      try assert(!(again eq first), s"a stopped statement was served: $sql")
+      finally again.stop()
+    }
   }
 
   test("all three reference queries run end-to-end through the facade") {
@@ -835,9 +846,9 @@ class StatementsSpec extends AnyFunSuite {
       Seq(("brown", "oslo"), ("brown", "rome"), ("blue", "oslo")),
       Seq(("brown", "oslo")), // brown's third row: it leaves HAVING
       Seq(("green", "rome"), ("blue", "rome"), ("blue", "oslo")))
-    def replay(sql: String, keyCols: Seq[String], view: String,
+    def replay(sql: String, view: String,
         mem: MemoryStream[(String, String)]): Unit = {
-      val stmt = stmts.create(sql.replace("$t", view), keyCols)
+      val stmt = stmts.create(sql.replace("$t", view))
       try {
         assert(stmts.waitForStatus(stmt, Set(Phase.Running)).isDefined)
         val cl = stmt.handle.get.changelog()
@@ -856,13 +867,13 @@ class StatementsSpec extends AnyFunSuite {
       } finally stmt.stop()
     }
     replay("SELECT color, count(*) AS c FROM $t GROUP BY color " +
-      "HAVING count(*) <= 2", Nil, "dr_having", feed("dr_having"))
+      "HAVING count(*) <= 2", "dr_having", feed("dr_having"))
     feed("dr_keys")
     val ex = intercept[IllegalArgumentException](stmts.create(
       "SELECT color, count(*) AS c FROM dr_keys GROUP BY color, city"))
     assert(ex.getMessage.contains("city"),
       s"the error must name the missing grouping column: ${ex.getMessage}")
     replay("SELECT color, city, count(*) AS c FROM $t GROUP BY color, city",
-      Nil, "dr_keys2", feed("dr_keys2"))
+      "dr_keys2", feed("dr_keys2"))
   }
 }
