@@ -3,12 +3,13 @@
 
 Usage:
     python3 scripts/perf_pairs.py --parent DIR --change DIR \\
-        --workload dashboard --seeds 71-80 [--json OUT]
+        --workload dashboard --seeds 71-80 [--trace 0|1] [--json OUT]
 
 For each seed it runs the benchmark's own command (`command` in the
-change's BENCHMARK.json, with `--workload W --seed S --seconds N --trace 0`
-appended, N being its `run_seconds`) once in each checkout (DIR is a
-repository root, e.g. a `git archive` of the parent commit), alternating
+change's BENCHMARK.json, with `--workload W --seed S --seconds N --trace T`
+appended, N being its `run_seconds` and T this script's `--trace`, 0 by
+default) once in each checkout (DIR is a repository root, e.g. a `git
+archive` of the parent commit), alternating
 which side runs first: the first seed runs the parent first, the next the
 change first, and so on. Every run's exit code and its `correct` and
 `failed` fields are printed as it finishes. A run succeeds when it exits 0
@@ -29,6 +30,12 @@ and `bound` taken from the change's BENCHMARK.json:
   beats every parent run; otherwise `ok` when the change's median is no
   worse than the parent's by more than `bound` of the parent's median,
   else `WORSE`.
+
+With `--trace 1` the runs report BENCHMARK.json's `per_layer` metrics
+(counts such as `exec.tasks`, layer times), which are summarised the same
+way — medians, quartiles, parent IQR, wins and ratio — but carry no
+verdicts: they have no bound, and a gain is claimed only on an end-to-end
+metric. Their gain and bound columns read `-`.
 
 The exit code is 1 when any run failed. The script reads perfbench/ and
 BENCHMARK.json and changes neither.
@@ -72,10 +79,11 @@ def failures(code, result):
     return result.get("failed") or 0
 
 
-def summarize(pairs, spec):
+def summarize(pairs, spec, verdicts=True):
     """Per-metric summary of `pairs`, one (parent, change) pair of runs per
     seed, each run an (exit code, result JSON or None). `spec` maps a
-    metric name to its BENCHMARK.json entry."""
+    metric name to its BENCHMARK.json entry. Without `verdicts` (per-layer
+    metrics) every row's gain and bound are None."""
     complete = [(p[1]["metrics"], c[1]["metrics"]) for p, c in pairs
                 if ok(*p) and ok(*c)]
     failed_more = sum(1 for p, c in pairs if failures(*c) > failures(*p))
@@ -97,7 +105,9 @@ def summarize(pairs, spec):
         worse_by = -gain_by / pmed if pmed else 0.0
         separated = (len(both) == len(pairs)
                      and all(beats(c, p) for c in chg for p in par))
-        if separated:
+        if not verdicts:
+            bound = None
+        elif separated:
             bound = "ok"
         elif pmed and iqr / abs(pmed) > entry["bound"]:
             bound = "unresolved"
@@ -114,17 +124,17 @@ def summarize(pairs, spec):
             "ratio": cmed / pmed if pmed else None,
             "failed_more": failed_more,
             "gain": (wins * 10 >= 9 * len(pairs) and gain_by > iqr
-                     and failed_more == 0),
+                     and failed_more == 0) if verdicts else None,
             "bound": bound,
         })
     return out
 
 
-def run_once(root, command, workload, seed, seconds):
+def run_once(root, command, workload, seed, seconds, trace=0):
     """One benchmark run in checkout `root` → (exit code, result or None)."""
     proc = subprocess.run(
         command + ["--workload", workload, "--seed", str(seed),
-                   "--seconds", str(seconds), "--trace", "0"],
+                   "--seconds", str(seconds), "--trace", str(trace)],
         cwd=root, stdin=subprocess.DEVNULL, stdout=subprocess.PIPE,
         text=True)
     lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
@@ -154,7 +164,8 @@ def report(rows):
             f"{fmt(c['median'])} [{fmt(c['q1'])}-{fmt(c['q3'])}]",
             fmt(r["parent_iqr"]), f"{r['wins']}/{r['pairs']}",
             "-" if r["ratio"] is None else f"{r['ratio']:.3f}",
-            "yes" if r["gain"] else "no", r["bound"]))
+            {True: "yes", False: "no", None: "-"}[r["gain"]],
+            r["bound"] or "-"))
     widths = [max(len(row[i]) for row in table) for i in range(len(head))]
     return "\n".join("  ".join(cell.ljust(w) for cell, w in zip(row, widths))
                      for row in table)
@@ -166,12 +177,15 @@ def main():
     ap.add_argument("--change", required=True, help="change checkout root")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="e.g. 71-80 or 1,3,5")
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0,
+                    help="1: per-layer metrics, summarised without verdicts")
     ap.add_argument("--json", help="also write every run and the summary here")
     a = ap.parse_args()
 
     with open(os.path.join(a.change, "BENCHMARK.json")) as fh:
         bench = json.load(fh)
-    spec = {m["name"]: m for m in bench["end_to_end"]}
+    section = "per_layer" if a.trace else "end_to_end"
+    spec = {m["name"]: m for m in bench[section]}
     sides = {"parent": os.path.abspath(a.parent),
              "change": os.path.abspath(a.change)}
     runs, pairs = [], []
@@ -180,7 +194,7 @@ def main():
         got = {}
         for side in order:
             code, result = run_once(sides[side], bench["command"], a.workload,
-                                    seed, bench["run_seconds"])
+                                    seed, bench["run_seconds"], a.trace)
             got[side] = (code, result)
             runs.append({"seed": seed, "side": side, "first": order[0],
                          "exit": code, "result": result})
@@ -189,13 +203,13 @@ def main():
                   f"{result and result.get('failed')}", flush=True)
         pairs.append((got["parent"], got["change"]))
 
-    rows = summarize(pairs, spec)
+    rows = summarize(pairs, spec, verdicts=not a.trace)
     bad = [r for r in runs if not ok(r["exit"], r["result"])]
     print(f"\n{a.workload}: {len(pairs)} pairs run, {len(bad)} runs failed")
     print(report(rows))
     if a.json:
         with open(a.json, "w") as fh:
-            json.dump({"workload": a.workload, "runs": runs,
+            json.dump({"workload": a.workload, "trace": a.trace, "runs": runs,
                        "summary": rows}, fh, indent=1)
     sys.exit(1 if bad else 0)
 

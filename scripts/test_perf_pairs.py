@@ -142,6 +142,48 @@ class SummaryTest(unittest.TestCase):
         self.assertIn("1/1", text)
 
 
+class PerLayerTest(unittest.TestCase):
+    LAYER = {"exec.tasks": {"better": "lower"},
+             "api.poll_hit_ratio": {"better": "higher"}}
+
+    def test_per_layer_rows_have_statistics_but_no_verdicts(self):
+        ps = [(run({"exec.tasks": p, "api.poll_hit_ratio": 1.0}),
+               run({"exec.tasks": c, "api.poll_hit_ratio": 2.0}))
+              for p, c in zip([286.0, 290, 280, 284, 288],
+                              [130.0, 131, 129, 130, 132])]
+        rows = {r["metric"]: r for r in
+                perf_pairs.summarize(ps, self.LAYER, verdicts=False)}
+        tasks = rows["exec.tasks"]
+        self.assertEqual(tasks["wins"], 5)
+        self.assertAlmostEqual(tasks["parent"]["median"], 286.0)
+        self.assertAlmostEqual(tasks["change"]["median"], 130.0)
+        self.assertAlmostEqual(tasks["ratio"], 130.0 / 286.0)
+        self.assertAlmostEqual(tasks["parent_iqr"], 4.0)
+        self.assertEqual(rows["api.poll_hit_ratio"]["wins"], 5)  # higher wins
+        for r in rows.values():
+            self.assertIsNone(r["gain"])
+            self.assertIsNone(r["bound"])
+
+    def test_report_prints_dashes_for_missing_verdicts(self):
+        ps = [(run({"exec.tasks": 286.0}), run({"exec.tasks": 130.0}))]
+        text = perf_pairs.report(
+            perf_pairs.summarize(ps, self.LAYER, verdicts=False))
+        row = [ln for ln in text.splitlines() if ln.startswith("exec.tasks")]
+        self.assertEqual(row[0].split()[-2:], ["-", "-"])
+        self.assertNotIn("yes", text)
+
+    def test_run_once_passes_the_trace_flag_to_the_command(self):
+        echo = [sys.executable, "-c",
+                "import json, sys; print(json.dumps({'argv': sys.argv[1:]}))"]
+        for trace in (0, 1):
+            code, result = perf_pairs.run_once(".", echo, "dashboard", 7, 10,
+                                               trace)
+            self.assertEqual(code, 0)
+            self.assertEqual(result["argv"],
+                             ["--workload", "dashboard", "--seed", "7",
+                              "--seconds", "10", "--trace", str(trace)])
+
+
 class OkTest(unittest.TestCase):
     def test_a_run_counts_only_when_correct_and_nothing_failed(self):
         good = {"correct": True, "failed": 0}

@@ -36,7 +36,7 @@ final class ChangelogSynthesizer(schema: Seq[String], keyCols: Seq[String]) {
   private val state = mutable.LinkedHashMap.empty[Vector[Any], Vector[Any]]
 
   /** Live group count — the bound on how many `-D`s a snapshot diff can
-    * emit beyond its batch rows, which the synthesizer sinks subtract
+    * emit beyond its batch rows, which the snapshot-diff sinks subtract
     * before they size their batch's row cap (see RecordLog.boundedCollect). */
   def size: Int = state.size
 
@@ -103,10 +103,17 @@ final class ChangelogSynthesizer(schema: Seq[String], keyCols: Seq[String]) {
   * memory. Route large results through a real sink (parquet/Kafka), not
   * this facade.
   *
-  * The sinks change one thing on the caller's session: when
-  * `spark.sql.streaming.checkpointFileManagerClass` is unset, they set it
-  * to [[LocalCheckpointFileManager]], so every micro-batch's checkpoint
-  * writes skip Hadoop's forking local FS. A manager the caller set is kept.
+  * The sinks touch the caller's session in two ways, both in [[sink]].
+  * One lasts: when `spark.sql.streaming.checkpointFileManagerClass` is
+  * unset, they set it to [[LocalCheckpointFileManager]], so every
+  * micro-batch's checkpoint writes skip Hadoop's forking local FS; a
+  * manager the caller set is kept. The other is held only while `start()`
+  * runs: `spark.sql.shuffle.partitions` reads 1, because the query's own
+  * session clone, taken inside `start()`, fixes its state-partition count
+  * for the query's lifetime, and a dashboard-sized statement moving a few
+  * rows per micro-batch should load and commit one state store per
+  * stateful operator, not one per core. The caller's value (or its
+  * absence) is restored as soon as `start()` returns.
   */
 object ChangelogStream {
 
@@ -131,11 +138,12 @@ object ChangelogStream {
 
   /** Append-only, bounded record log over the rows of `df`'s micro-batches.
     * Every sink moves its micro-batch to the driver through
-    * [[boundedCollect]], one Spark job per batch. Cursors read at their
+    * [[boundedCollect]], one Spark job per batch, its row cap given by
+    * the sink's `capOf` (remaining capacity → rows). Cursors read at their
     * own offset and never steal from each other (unlike a shared
     * destructive queue); records appended after a cursor is created are
     * still seen by it. */
-  private final class RecordLog(maxRecords: Int, df: DataFrame) {
+  private final class RecordLog(maxRecords: Int, df: DataFrame, capOf: Int => Int) {
     private val buf = mutable.ArrayBuffer.empty[RawRecord]
 
     /** Turns a batch's internal rows into the values `Dataset.collect()`
@@ -171,21 +179,20 @@ object ChangelogStream {
       * stage under it (which loads and commits its state per task), is
       * drained exactly once per batch.
       *
-      * The append sinks (appending / deltaPassthrough) emit one record
-      * per row, so their cap is the log's remaining capacity. A
-      * synthesizer sink passes its `synth`: N rows can emit up to 2N
-      * records (a `-U/+U` pair per changed group) plus one `-D` per live
-      * group dropped from a snapshot diff, so its batch is bounded by
-      * `(remaining − synth.size) / 2` rows — emissions ≤ 2·cap +
-      * synth.size ≤ remaining. That makes this guard the ONLY failure
-      * point: it fires before any synthesizer mutation or log append, so
-      * a failed batch never leaves synthesizer state ahead of the log. */
-    def boundedCollect(batch: DataFrame,
-                       synth: Option[ChangelogSynthesizer] = None)
-        : Seq[Vector[Any]] = {
-      val remaining = synchronized(maxRecords - buf.length)
-      val cap = synth.fold(remaining)(s =>
-        math.max(0, (remaining - s.synchronized(s.size)) / 2))
+      * The cap is `capOf(remaining)`, the most rows whose records still
+      * fit the log. The append sinks (appending / deltaPassthrough) emit
+      * one record per row: `remaining`. `updating` emits at most a
+      * `-U/+U` pair per row and never a `-D`: `remaining / 2`.
+      * `snapshotting` also emits one `-D` per live group its snapshot
+      * drops: `(remaining − synth.size) / 2`, so emissions ≤ 2·cap +
+      * synth.size ≤ remaining. For those three rules this guard is the
+      * only failure point, and it fires before any synthesizer mutation
+      * or log append, so a failed batch never leaves synthesizer state
+      * ahead of the log. `foldingSnapshot` is capped like `snapshotting`,
+      * but its fold's snapshots are not bounded by the batch's delta
+      * rows, so [[append]]'s check stays its backstop. */
+    def boundedCollect(batch: DataFrame): Seq[Vector[Any]] = {
+      val cap = capOf(synchronized(maxRecords - buf.length))
       val parts = batch.sparkSession.sparkContext
         .runJob(batch.queryExecution.toRdd, new TakeRows(cap + 1L))
       if (parts.iterator.map(_.length.toLong).sum > cap)
@@ -233,31 +240,58 @@ object ChangelogStream {
     * query's offset log, commit log and state-store deltas. */
   private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
 
+  /** Spark's session conf for the partition count of a query's shuffles —
+    * for a streaming query, of its stateful operators' state. */
+  private val ShufflePartitionsKey = SQLConf.SHUFFLE_PARTITIONS.key
+
+  /** Held while a sink changes and restores the caller's session conf, so
+    * two concurrent starts cannot restore each other's value. */
+  private val startLock = new Object
+
   /** The one sink lifecycle: start `df` as a `foreachBatch` query under
     * Spark's default trigger (a micro-batch as soon as the previous one
-    * ends), whose every micro-batch is collected in one bounded job (sized
-    * by `synth` when the rule feeds one, see [[RecordLog.boundedCollect]]),
+    * ends), whose every micro-batch is collected in one bounded job (at
+    * most `capOf(remaining)` rows, see [[RecordLog.boundedCollect]]),
     * turned into records by `toRecords` and appended to the sink's log.
     *
     * Spark reads the checkpoint manager class from the session's Hadoop
     * conf when `start()` builds the query's logs and state stores, and no
     * writer option carries it, so it is set on `df`'s session — only when
-    * neither the session nor its Hadoop conf names one. */
+    * neither the session nor its Hadoop conf names one.
+    *
+    * `start()` clones `df`'s session for the query synchronously (in the
+    * `StreamExecution` constructor); after that the stream thread reads
+    * its state-partition count only from the clone and from the offset
+    * log. So `spark.sql.shuffle.partitions` is set to 1 on `df`'s session
+    * just for `start()`, then restored to the caller's explicit value, or
+    * unset if it had none; the caller's batch queries keep their own
+    * count. A batch query another thread plans during that span sees 1.
+    * The query is not built on a cloned session: a clone has its own
+    * `StreamingQueryManager`, and the statement would drop out of the
+    * caller's `spark.streams.active`. */
   private def sink(df: DataFrame, outputMode: String, queryName: String,
                    schema: Seq[String], maxBufferedRecords: Int,
-                   synth: Option[ChangelogSynthesizer])(
+                   capOf: Int => Int)(
                    toRecords: Seq[Vector[Any]] => Seq[RawRecord]): Handle = {
     val session = df.sparkSession
-    if (session.conf.getOption(CheckpointManagerKey).isEmpty &&
-        session.sparkContext.hadoopConfiguration.get(CheckpointManagerKey) == null)
-      session.conf.set(CheckpointManagerKey, classOf[LocalCheckpointFileManager].getName)
-    val log = new RecordLog(maxBufferedRecords, df)
-    val query = df.writeStream
+    val log = new RecordLog(maxBufferedRecords, df, capOf)
+    val writer = df.writeStream
       .outputMode(outputMode)
       .queryName(queryName)
       .foreachBatch((batch: DataFrame, _: Long) =>
-        log.append(toRecords(log.boundedCollect(batch, synth))))
-      .start()
+        log.append(toRecords(log.boundedCollect(batch))))
+    val query = startLock.synchronized {
+      if (session.conf.getOption(CheckpointManagerKey).isEmpty &&
+          session.sparkContext.hadoopConfiguration.get(CheckpointManagerKey) == null)
+        session.conf.set(CheckpointManagerKey, classOf[LocalCheckpointFileManager].getName)
+      val conf = session.sessionState.conf
+      val prior = Option.when(conf.contains(ShufflePartitionsKey))(
+        conf.getConfString(ShufflePartitionsKey))
+      conf.setConfString(ShufflePartitionsKey, "1")
+      try writer.start()
+      finally prior.fold(conf.unsetConf(ShufflePartitionsKey))(
+        conf.setConfString(ShufflePartitionsKey, _))
+    }
     new Handle(query, schema, log)
   }
 
@@ -265,14 +299,16 @@ object ChangelogStream {
     * of `schema`. The rule runs under the synthesizer's lock:
     * `foreachBatch` invocations are serial per query, but cursor replays
     * may race the append. The batch's row cap is checked before the rule
-    * runs, so a failed batch never leaves synthesizer state ahead of the
-    * log. */
+    * runs; a rule that `diffs` snapshots reserves one `-D` per live group
+    * in it (see [[RecordLog.boundedCollect]]). */
   private def synthesizing(df: DataFrame, outputMode: String, queryName: String,
                            schema: Seq[String], keyCols: Seq[String],
-                           maxBufferedRecords: Int)(
+                           maxBufferedRecords: Int, diffs: Boolean)(
       rule: (ChangelogSynthesizer, Seq[Vector[Any]]) => Seq[ChangelogRecord]): Handle = {
     val synth = new ChangelogSynthesizer(schema, keyCols)
-    sink(df, outputMode, queryName, schema, maxBufferedRecords, Some(synth)) { rows =>
+    val reserved = () => if (diffs) synth.synchronized(synth.size) else 0
+    sink(df, outputMode, queryName, schema, maxBufferedRecords,
+        remaining => math.max(0, (remaining - reserved()) / 2)) { rows =>
       synth.synchronized(rule(synth, rows))
         .map(r => RawRecord(r.op.map(_.code), r.values))
     }
@@ -283,7 +319,7 @@ object ChangelogStream {
   def updating(df: DataFrame, queryName: String, keyCols: Seq[String],
                maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle =
     synthesizing(df, "update", queryName, df.schema.fieldNames.toSeq, keyCols,
-      maxBufferedRecords)(_.onUpsert(_))
+      maxBufferedRecords, diffs = false)(_.onUpsert(_))
 
   /** Start a complete-mode query with full-snapshot diffing: each batch
     * carries the entire result, and groups that leave it (e.g. crossing a
@@ -296,7 +332,7 @@ object ChangelogStream {
   def snapshotting(df: DataFrame, queryName: String, keyCols: Seq[String],
                    maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle =
     synthesizing(df, "complete", queryName, df.schema.fieldNames.toSeq, keyCols,
-      maxBufferedRecords)(_.onSnapshot(_))
+      maxBufferedRecords, diffs = true)(_.onSnapshot(_))
 
   /** Start a query whose rows are exact deltas (changelog-op-carrying,
     * e.g. the IVM join's retraction stream) feeding a DRIVER-SIDE
@@ -327,7 +363,7 @@ object ChangelogStream {
                       fold: Seq[Vector[Any]] => Seq[Seq[Vector[Any]]],
                       maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle =
     synthesizing(df, "append", queryName, outSchema, keyCols,
-      maxBufferedRecords)((synth, deltas) => fold(deltas).flatMap(synth.onSnapshot))
+      maxBufferedRecords, diffs = true)((synth, deltas) => fold(deltas).flatMap(synth.onSnapshot))
 
   /** Start a query whose rows ALREADY ARE exact changelog deltas — the
     * IVM operators ([[StatefulOps.changelogUnionUpsertStream]],
@@ -340,7 +376,7 @@ object ChangelogStream {
                        maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle = {
     val opIdx = df.schema.fieldIndex("op")
     sink(df, "append", queryName, df.schema.fieldNames.toSeq.patch(opIdx, Nil, 1),
-        maxBufferedRecords, None) { rows =>
+        maxBufferedRecords, identity) { rows =>
       rows.map(vs => RawRecord(Some(vs(opIdx).asInstanceOf[Int]), vs.patch(opIdx, Nil, 1)))
     }
   }
@@ -352,5 +388,5 @@ object ChangelogStream {
   def appending(df: DataFrame, queryName: String,
                 maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle =
     sink(df, "append", queryName, df.schema.fieldNames.toSeq,
-        maxBufferedRecords, None)(_.map(vs => RawRecord(Some(Op.Insert.code), vs)))
+        maxBufferedRecords, identity)(_.map(vs => RawRecord(Some(Op.Insert.code), vs)))
 }

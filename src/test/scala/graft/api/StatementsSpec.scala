@@ -114,6 +114,79 @@ class StatementsSpec extends AnyFunSuite {
     }
   }
 
+  // a continuous statement's state partitioning is fixed when its query
+  // starts; the sinks start it under spark.sql.shuffle.partitions = 1 and
+  // give the caller's session back its own value, or none. Three routes:
+  // a default-route GROUP BY (updating), a default-route HAVING
+  // (snapshotting) and a 2-feed join (deltaPassthrough over zJoinStream).
+  test("streaming statements run one state partition per stateful operator " +
+    "and leave the caller's spark.sql.shuffle.partitions as it was") {
+    import java.util.concurrent.{Executors, TimeUnit}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val key = "spark.sql.shuffle.partitions"
+    def explicit: Option[String] = s.conf.getAll.get(key)
+    val saved = explicit
+    val colors = MemoryStream[(String, String)]
+    colors.toDF().toDF("color", "city").createOrReplaceTempView("sp_colors")
+    colors.addData(("brown", "oslo"), ("brown", "rome"), ("blue", "oslo"))
+    val lmem = MemoryStream[(Long, Long, Long, String, Boolean)]
+    val rmem = MemoryStream[(Long, Long, Long, String, Boolean)]
+    lmem.toDF().toDF("seq", "key", "id", "value", "delete")
+      .createOrReplaceTempView("sp_l")
+    rmem.toDF().toDF("seq", "key", "id", "value", "delete")
+      .createOrReplaceTempView("sp_r")
+    lmem.addData((0L, 1L, 100L, "a", false), (1L, 2L, 101L, "b", false))
+    rmem.addData((0L, 1L, 200L, "x", false))
+    def onePartition(stmt: Statement, stateful: Int): Unit = {
+      stmt.handle.get.processAllAvailable()
+      assert(s.streams.active.exists(_.name == stmt.name),
+        s"${stmt.sql}: not in the caller's spark.streams.active")
+      val ops = stmt.handle.get.query.lastProgress.stateOperators
+      assert(ops.length == stateful && ops.forall(_.numShufflePartitions == 1),
+        s"${stmt.sql}: state partitions ${ops.map(_.numShufflePartitions).toSeq}")
+      assert(s.conf.get(key) == "4", "the caller's batch count must stay 4")
+    }
+    def running(sql: String)(check: Statement => Unit): Unit = {
+      val stmt = new Statements(s).create(sql)
+      try check(stmt) finally stmt.stop()
+    }
+    try {
+      s.conf.set(key, "4")
+      running("SELECT color, count(*) AS c FROM sp_colors GROUP BY color")(
+        onePartition(_, 1))
+      running("SELECT color, count(*) AS c FROM sp_colors GROUP BY color " +
+        "HAVING count(*) <= 2")(onePartition(_, 1))
+      running("SELECT * FROM sp_l AS a JOIN sp_r AS b ON a.key = b.key")(
+        onePartition(_, 2))
+      // an explicit value is kept exactly; an unset conf stays unset
+      s.conf.set(key, "3")
+      running("SELECT color, count(*) AS c3 FROM sp_colors GROUP BY color")(_ => ())
+      assert(explicit.contains("3"))
+      s.conf.unset(key)
+      running("SELECT color, count(*) AS cu FROM sp_colors GROUP BY color")(_ => ())
+      assert(explicit.isEmpty, s"an unset conf came back as $explicit")
+      // concurrent starts, each from its own facade (no shared create lock)
+      s.conf.set(key, "3")
+      val pool = Executors.newFixedThreadPool(8)
+      val stmts =
+        try (0 until 8).map(i => pool.submit(() => new Statements(s).create(
+          s"SELECT color, count(*) AS c$i FROM sp_colors GROUP BY color")))
+          .map(_.get(120, TimeUnit.SECONDS))
+        finally pool.shutdown()
+      try {
+        assert(explicit.contains("3"), s"8 concurrent starts left $explicit")
+        stmts.foreach { stmt =>
+          stmt.handle.get.processAllAvailable()
+          assert(stmt.handle.get.query.lastProgress.stateOperators
+            .forall(_.numShufflePartitions == 1), stmt.sql)
+        }
+      } finally stmts.foreach(_.stop())
+    } finally saved.fold(s.conf.unset(key))(s.conf.set(key, _))
+  }
+
   test("statement properties route sql.current-database: the same " +
     "unqualified table name resolves per-statement (api/statements.py:27-31)") {
     val stmts = new Statements(spark)

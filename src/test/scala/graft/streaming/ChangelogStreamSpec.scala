@@ -303,6 +303,31 @@ class ChangelogStreamSpec extends AnyFunSuite {
     } finally handle.stop()
   }
 
+  // an update-mode batch emits at most a -U/+U pair per row and never a
+  // -D, so `updating` caps a batch at remaining / 2 rows; only the
+  // snapshot-diff rules also reserve one -D per live group. With 8
+  // records of room, batch 1 brings 3 groups (3 +I) and batch 2 updates 2
+  // of them: 4 records into the 5 left, a cap of 2 rows. Reserving the 3
+  // live groups too would cap it at 1 row and fail the batch.
+  test("updating caps a batch by its -U/+U pairs alone") {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val mem = MemoryStream[Int]
+    val handle = ChangelogStream.updating(
+      mem.toDF().groupBy($"value").agg(count(lit(1)).as("n")),
+      "updating-cap-test", Seq("value"), maxBufferedRecords = 8)
+    try {
+      mem.addData(1, 2, 3)
+      handle.processAllAvailable()
+      mem.addData(1, 2)
+      handle.processAllAvailable()
+      val recs = handle.changelog().consume()
+      assert(recs.map(_.op.get).groupBy(identity).view.mapValues(_.size).toMap ==
+        Map(Op.Insert -> 3, Op.UpdateBefore -> 2, Op.UpdateAfter -> 2), recs)
+    } finally handle.stop()
+  }
+
   // one Spark pass per micro-batch: each synthesizer sink must run its
   // batch plan once, so the state-store stage under it loads and commits
   // its state once. The nondeterministic instrumented projection above the
@@ -348,9 +373,13 @@ class ChangelogStreamSpec extends AnyFunSuite {
   // driver with a single job over the batch's planned RDD, whatever the
   // batch's partition count (a `limit(n).collect()` reads partition 0 in
   // one job and the other partitions in a second). A listener counts job
-  // starts per streaming batch id in each query's job group (its run id);
-  // the grouped, deduplicating and upsert plans end in the session's 4
-  // shuffle partitions.
+  // starts per streaming batch id in each query's job group (its run id),
+  // and the tasks of each job's last stage. The grouped, deduplicating
+  // and upsert plans end in the query's one state partition; each int
+  // sink reads a 2-partition memory stream, so its input (and the
+  // appending sink's whole batch) spans 2 partitions. (Two `addData`
+  // pages would race the running query: it may take them as two
+  // batches.)
   test("every sink runs one Spark job per micro-batch") {
     val s = spark
     import s.implicits._
@@ -358,18 +387,21 @@ class ChangelogStreamSpec extends AnyFunSuite {
     val marker = "one-job-per-batch-marker"
     val markerSeen = new CountDownLatch(1)
     val jobs = new ConcurrentHashMap[(String, String), Integer]()
+    val lastStageTasks = new ConcurrentHashMap[(String, String), Integer]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
         val group = prop("spark.jobGroup.id")
         if (group.contains(marker)) markerSeen.countDown()
-        for (g <- group; b <- prop("streaming.sql.batchId"))
+        for (g <- group; b <- prop("streaming.sql.batchId")) {
           jobs.merge((g, b), 1, (a: Integer, c: Integer) => a + c)
+          lastStageTasks.put((g, b), e.stageInfos.maxBy(_.stageId).numTasks)
+        }
       }
     }
     type Sink = (String, () => ChangelogStream.Handle, Int => Unit)
     def ints(sink: String)(start: MemoryStream[Int] => ChangelogStream.Handle): Sink = {
-      val mem = MemoryStream[Int]
+      val mem = MemoryStream[Int](2)
       (sink, () => start(mem), i => mem.addData(i * 10 until i * 10 + 20))
     }
     def grouped(mem: MemoryStream[Int]) =
@@ -414,6 +446,11 @@ class ChangelogStreamSpec extends AnyFunSuite {
       }
       assert(perBatch.forall(_._2.forall(_._2 == 1)),
         s"Spark jobs per micro-batch (sink -> batch id -> jobs): $perBatch")
+      val appendTasks = batches.collect { case ("appending", runId, withInput) =>
+        withInput.map(b => Option(lastStageTasks.get((runId, b))).fold(0)(_.intValue))
+      }.flatten
+      assert(appendTasks.nonEmpty && appendTasks.forall(_ >= 2),
+        s"appending's 2-partition batches must end in >= 2 tasks: $appendTasks")
     } finally s.sparkContext.removeSparkListener(listener)
   }
 
