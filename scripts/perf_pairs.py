@@ -4,6 +4,7 @@
 Usage:
     python3 scripts/perf_pairs.py --parent DIR --change DIR \\
         --workload dashboard --seeds 71-80 [--trace 0|1] [--json OUT]
+    python3 scripts/perf_pairs.py --merge A.json B.json ... [--json OUT]
 
 For each seed it runs the benchmark's own command (`command` in the
 change's BENCHMARK.json, with `--workload W --seed S --seconds N --trace T`
@@ -36,6 +37,12 @@ With `--trace 1` the runs report BENCHMARK.json's `per_layer` metrics
 way — medians, quartiles, parent IQR, wins and ratio — but carry no
 verdicts: they have no bound, and a gain is claimed only on an end-to-end
 metric. Their gain and bound columns read `-`.
+
+With `--merge` it runs nothing: it reads the runs of several `--json`
+files (e.g. the seeds measured while building plus a fresh-seed set) and
+summarises them as one set of pairs, with the same verdicts, taking
+`better` and `bound` from this repository's BENCHMARK.json. It refuses
+files whose workload or trace mode differ, and a seed that appears twice.
 
 The exit code is 1 when any run failed. The script reads perfbench/ and
 BENCHMARK.json and changes neither.
@@ -130,6 +137,31 @@ def summarize(pairs, spec, verdicts=True):
     return out
 
 
+def merge(docs):
+    """The runs of several `--json` outputs as one set → (workload, trace,
+    runs, pairs). Raises ValueError when the files' workloads or trace
+    modes differ, a seed appears twice, or a seed lacks one side's run."""
+    for key in ("workload", "trace"):
+        values = {d.get(key, 0) for d in docs}
+        if len(values) > 1:
+            raise ValueError(f"the files differ in {key}: {sorted(map(str, values))}")
+    runs, pairs, seen = [], [], set()
+    for doc in docs:
+        sides = {}
+        for r in doc["runs"]:
+            got = sides.setdefault(r["seed"], {})
+            if r["seed"] in seen or r["side"] in got:
+                raise ValueError(f"seed {r['seed']} appears twice")
+            got[r["side"]] = (r["exit"], r["result"])
+        for seed, got in sides.items():
+            if set(got) != {"parent", "change"}:
+                raise ValueError(f"seed {seed} lacks a parent or change run")
+            pairs.append((got["parent"], got["change"]))
+        seen.update(sides)
+        runs.extend(doc["runs"])
+    return docs[0]["workload"], docs[0].get("trace", 0), runs, pairs
+
+
 def run_once(root, command, workload, seed, seconds, trace=0):
     """One benchmark run in checkout `root` → (exit code, result or None)."""
     proc = subprocess.run(
@@ -171,21 +203,9 @@ def report(rows):
                      for row in table)
 
 
-def main():
-    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--parent", required=True, help="parent checkout root")
-    ap.add_argument("--change", required=True, help="change checkout root")
-    ap.add_argument("--workload", required=True)
-    ap.add_argument("--seeds", required=True, help="e.g. 71-80 or 1,3,5")
-    ap.add_argument("--trace", type=int, choices=(0, 1), default=0,
-                    help="1: per-layer metrics, summarised without verdicts")
-    ap.add_argument("--json", help="also write every run and the summary here")
-    a = ap.parse_args()
-
-    with open(os.path.join(a.change, "BENCHMARK.json")) as fh:
-        bench = json.load(fh)
-    section = "per_layer" if a.trace else "end_to_end"
-    spec = {m["name"]: m for m in bench[section]}
+def run_pairs(a, bench):
+    """Runs every seed of `a.seeds` once per side, alternating which side
+    goes first → (runs, pairs)."""
     sides = {"parent": os.path.abspath(a.parent),
              "change": os.path.abspath(a.change)}
     runs, pairs = [], []
@@ -202,14 +222,53 @@ def main():
                   f"{result and result.get('correct')}, failed "
                   f"{result and result.get('failed')}", flush=True)
         pairs.append((got["parent"], got["change"]))
+    return runs, pairs
 
-    rows = summarize(pairs, spec, verdicts=not a.trace)
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--parent", help="parent checkout root")
+    ap.add_argument("--change", help="change checkout root")
+    ap.add_argument("--workload")
+    ap.add_argument("--seeds", help="e.g. 71-80 or 1,3,5")
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0,
+                    help="1: per-layer metrics, summarised without verdicts")
+    ap.add_argument("--merge", nargs="+", metavar="JSON",
+                    help="summarise these --json outputs instead of running")
+    ap.add_argument("--json", help="also write every run and the summary here")
+    a = ap.parse_args()
+
+    if a.merge:
+        docs = []
+        for path in a.merge:
+            with open(path) as fh:
+                docs.append(json.load(fh))
+        try:
+            workload, trace, runs, pairs = merge(docs)
+        except ValueError as e:
+            ap.error(str(e))
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    else:
+        if not (a.parent and a.change and a.workload and a.seeds):
+            ap.error("--parent, --change, --workload and --seeds are "
+                     "required unless --merge is given")
+        workload, trace, root = a.workload, a.trace, a.change
+
+    with open(os.path.join(root, "BENCHMARK.json")) as fh:
+        bench = json.load(fh)
+    section = "per_layer" if trace else "end_to_end"
+    spec = {m["name"]: m for m in bench[section]}
+    if not a.merge:
+        runs, pairs = run_pairs(a, bench)
+
+    rows = summarize(pairs, spec, verdicts=not trace)
     bad = [r for r in runs if not ok(r["exit"], r["result"])]
-    print(f"\n{a.workload}: {len(pairs)} pairs run, {len(bad)} runs failed")
+    print(f"\n{workload}: {len(pairs)} pairs run, {len(bad)} runs failed")
     print(report(rows))
     if a.json:
         with open(a.json, "w") as fh:
-            json.dump({"workload": a.workload, "trace": a.trace, "runs": runs,
+            json.dump({"workload": workload, "trace": trace, "runs": runs,
                        "summary": rows}, fh, indent=1)
     sys.exit(1 if bad else 0)
 

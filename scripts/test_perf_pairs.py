@@ -184,6 +184,86 @@ class PerLayerTest(unittest.TestCase):
                               "--seconds", "10", "--trace", str(trace)])
 
 
+def doc(seeds, workload="dashboard", trace=0, parent=160.0, change=120.0):
+    """A `--json` output whose every seed ran both sides."""
+    runs = []
+    for seed in seeds:
+        for side, value in (("parent", parent), ("change", change)):
+            code, result = run({"freshness_p50_ms": value})
+            runs.append({"seed": seed, "side": side, "first": "parent",
+                         "exit": code, "result": result})
+    return {"workload": workload, "trace": trace, "runs": runs, "summary": []}
+
+
+class MergeTest(unittest.TestCase):
+    def test_files_merge_into_one_set_of_pairs(self):
+        workload, trace, runs, ps = perf_pairs.merge(
+            [doc(range(41, 49)), doc([90, 91], change=150.0)])
+        self.assertEqual((workload, trace), ("dashboard", 0))
+        self.assertEqual(len(runs), 20)
+        self.assertEqual(len(ps), 10)
+        r = perf_pairs.summarize(ps, SPEC)[0]
+        self.assertEqual(r["pairs"], 10)
+        self.assertEqual(r["wins"], 10)
+        self.assertTrue(r["gain"])
+
+    def test_merged_verdicts_equal_one_run_of_the_same_pairs(self):
+        one = doc(range(1, 11), change=155.0)
+        _, _, _, merged = perf_pairs.merge(
+            [doc(range(1, 6), change=155.0), doc(range(6, 11), change=155.0)])
+        _, _, _, single = perf_pairs.merge([one])
+        self.assertEqual(perf_pairs.summarize(merged, SPEC),
+                         perf_pairs.summarize(single, SPEC))
+
+    def test_refuses_mixed_workloads_or_trace_modes(self):
+        with self.assertRaisesRegex(ValueError, "workload"):
+            perf_pairs.merge([doc([1]), doc([2], workload="registry")])
+        with self.assertRaisesRegex(ValueError, "trace"):
+            perf_pairs.merge([doc([1]), doc([2], trace=1)])
+
+    def test_refuses_a_repeated_seed(self):
+        with self.assertRaisesRegex(ValueError, "seed 3 appears twice"):
+            perf_pairs.merge([doc([1, 3]), doc([3, 4])])
+        with self.assertRaisesRegex(ValueError, "seed 5 appears twice"):
+            perf_pairs.merge([doc([5, 5])])
+
+    def test_refuses_a_seed_without_both_sides(self):
+        d = doc([1, 2])
+        d["runs"] = d["runs"][:-1]
+        with self.assertRaisesRegex(ValueError, "seed 2 lacks"):
+            perf_pairs.merge([d])
+
+    def test_command_line_merge_writes_the_summary(self):
+        import json
+        import subprocess
+        import tempfile
+        script = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                              "perf_pairs.py")
+        with tempfile.TemporaryDirectory() as tmp:
+            paths = []
+            for i, d in enumerate([doc([1, 2]), doc([3])]):
+                paths.append(os.path.join(tmp, f"{i}.json"))
+                with open(paths[-1], "w") as fh:
+                    json.dump(d, fh)
+            out = os.path.join(tmp, "merged.json")
+            proc = subprocess.run(
+                [sys.executable, script, "--merge", *paths, "--json", out],
+                stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
+            self.assertEqual(proc.returncode, 0, proc.stderr)
+            self.assertIn("3 pairs run, 0 runs failed", proc.stdout)
+            with open(out) as fh:
+                merged = json.load(fh)
+            row = [r for r in merged["summary"]
+                   if r["metric"] == "freshness_p50_ms"][0]
+            self.assertEqual((row["pairs"], row["wins"]), (3, 3))
+            self.assertEqual(len(merged["runs"]), 6)
+            bad = subprocess.run(
+                [sys.executable, script, "--merge", paths[0], paths[0]],
+                stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
+            self.assertEqual(bad.returncode, 2)
+            self.assertIn("appears twice", bad.stderr)
+
+
 class OkTest(unittest.TestCase):
     def test_a_run_counts_only_when_correct_and_nothing_failed(self):
         good = {"correct": True, "failed": 0}

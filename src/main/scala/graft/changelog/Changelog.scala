@@ -39,36 +39,66 @@ final case class ChangelogRecord(op: Option[Op], values: Vector[Any])
   * (`/root/reference/lib/flink.py:27-45`): `+I`/`+U`/no-op append; `-U`/`-D`
   * remove the first value-equal row; a missing retract target is tolerated
   * (logged + counted, not fatal).
+  *
+  * A retraction costs O(1): a removed row leaves a tombstone (`null`) in
+  * its insertion slot, and an index from each value to its live slots,
+  * ascending, names the first one. The index is built at the first
+  * retraction, so an append-only table keeps no more than its rows; the
+  * slots are compacted once tombstones outnumber live rows.
   */
 final class ResultTable(val columns: Seq[String]) {
-  private val buf = mutable.ArrayBuffer.empty[Vector[Any]]
+  private val slots = mutable.ArrayBuffer.empty[Vector[Any]]
+  private var live = 0
+  private var index: mutable.HashMap[Vector[Any], mutable.Queue[Int]] = null
   private var missed = 0
 
   /** Retractions whose target row was absent (tolerated, per reference). */
   def missedRetractions: Int = missed
 
+  private def indexSlot(row: Vector[Any], slot: Int): Unit =
+    index.getOrElseUpdate(row, mutable.Queue.empty[Int]) += slot
+
+  private def buildIndex(): Unit = {
+    index = mutable.HashMap.empty
+    slots.indices.foreach(i => if (slots(i) ne null) indexSlot(slots(i), i))
+  }
+
+  private def retract(row: Vector[Any]): Unit = {
+    if (index == null) buildIndex()
+    index.get(row) match {
+      case None =>
+        System.err.println(s"no corresponding row in table to remove: $row")
+        missed += 1
+      case Some(at) =>
+        slots(at.dequeue()) = null
+        if (at.isEmpty) index.remove(row)
+        live -= 1
+        if (slots.length - live > math.max(live, 16)) {
+          slots.filterInPlace(_ ne null)
+          buildIndex()
+        }
+    }
+  }
+
   def update(records: IterableOnce[ChangelogRecord]): this.type = {
     records.iterator.foreach { rec =>
       rec.op match {
-        case Some(Op.Insert) | Some(Op.UpdateAfter) | None => buf += rec.values
-        case Some(Op.UpdateBefore) | Some(Op.Delete) =>
-          val i = buf.indexOf(rec.values)
-          if (i < 0) {
-            System.err.println(
-              s"no corresponding row in table to remove: ${rec.values}")
-            missed += 1
-          } else buf.remove(i)
+        case Some(Op.Insert) | Some(Op.UpdateAfter) | None =>
+          if (index != null) indexSlot(rec.values, slots.length)
+          slots += rec.values
+          live += 1
+        case Some(Op.UpdateBefore) | Some(Op.Delete) => retract(rec.values)
       }
     }
     this
   }
 
-  def rows: Seq[Vector[Any]] = buf.toSeq
-  def size: Int = buf.size
+  def rows: Seq[Vector[Any]] = slots.iterator.filter(_ ne null).toSeq
+  def size: Int = live
   /** Order-insensitive view (a changelog determines a multiset, not an
     * order, once retractions interleave). */
   def toMultiset: Map[Vector[Any], Int] =
-    buf.groupBy(identity).view.mapValues(_.size).toMap
+    rows.groupBy(identity).view.mapValues(_.size).toMap
 }
 
 /** Incremental cursor over a changelog stream.

@@ -6,6 +6,8 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, Repartition}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -114,6 +116,18 @@ final class ChangelogSynthesizer(schema: Seq[String], keyCols: Seq[String]) {
   * rows per micro-batch should load and commit one state store per
   * stateful operator, not one per core. The caller's value (or its
   * absence) is restored as soon as `start()` returns.
+  *
+  * The sinks whose plans keep state (`updating`, `snapshotting`,
+  * `foldingSnapshot`, `deltaPassthrough`) start a rewritten plan, not the
+  * caller's `df`: every streaming source is read through `coalesce(1)`
+  * (see [[inStatePartition]]). Its one input partition already satisfies
+  * the stateful operators' one-partition distribution, so Spark plans no
+  * shuffle in front of the state store, and a micro-batch runs as one
+  * stage in one task. The caller's `df`, its session's conf and its temp
+  * views are left as they were; the log reads its rows through `df`'s
+  * schema. `appending` starts `df` itself: its plans normally keep no
+  * state, so there is no shuffle to remove, and a multi-partition source
+  * keeps its read parallelism.
   */
 object ChangelogStream {
 
@@ -172,7 +186,10 @@ object ChangelogStream {
       * runs per batch. The transfer is fail-fast-bounded: each partition
       * sends at most `cap + 1` rows, so an over-cap batch raises the
       * documented error after at most P·(cap + 1) rows reached the driver
-      * (P = the batch's partition count), however large the batch is;
+      * (P = the batch's partition count), however large the batch is. A
+      * stateful sink's batch is one partition (its sources are read in the
+      * one state partition, see [[sink]]), so its bound is `cap + 1` rows;
+      * P·(cap + 1) remains for `appending`.
       * `spark.driver.maxResultSize` still aborts a job whose partitions
       * together send more than it allows. An under-cap
       * batch is never truncated: every partition, and the state-store
@@ -268,14 +285,20 @@ object ChangelogStream {
     * count. A batch query another thread plans during that span sees 1.
     * The query is not built on a cloned session: a clone has its own
     * `StreamingQueryManager`, and the statement would drop out of the
-    * caller's `spark.streams.active`. */
+    * caller's `spark.streams.active`.
+    *
+    * A sink that `keepsState` starts [[inStatePartition]] of `df`, not
+    * `df`: with one state partition, a source read in one partition lets
+    * Spark's planner drop the shuffle it would otherwise put before the
+    * state store. Correctness does not rest on it: had the query more
+    * state partitions, the planner would put the shuffle back. */
   private def sink(df: DataFrame, outputMode: String, queryName: String,
                    schema: Seq[String], maxBufferedRecords: Int,
-                   capOf: Int => Int)(
+                   capOf: Int => Int, keepsState: Boolean)(
                    toRecords: Seq[Vector[Any]] => Seq[RawRecord]): Handle = {
     val session = df.sparkSession
     val log = new RecordLog(maxBufferedRecords, df, capOf)
-    val writer = df.writeStream
+    val writer = (if (keepsState) inStatePartition(df) else df).writeStream
       .outputMode(outputMode)
       .queryName(queryName)
       .foreachBatch((batch: DataFrame, _: Long) =>
@@ -295,6 +318,15 @@ object ChangelogStream {
     new Handle(query, schema, log)
   }
 
+  /** `df` with every streaming source of its analyzed plan read through
+    * `coalesce(1)`: a `Repartition` without shuffle, which Spark plans as
+    * a `CoalesceExec(1)` reporting a single partition. Static sources and
+    * everything above the sources are untouched. */
+  private def inStatePartition(df: DataFrame): DataFrame =
+    ColumnBridge.ofRows(df.sparkSession, df.queryExecution.analyzed.transformUp {
+      case l: LeafNode if l.isStreaming => Repartition(1, shuffle = false, l)
+    })
+
   /** A sink whose rule runs a [[ChangelogSynthesizer]] keyed on `keyCols`
     * of `schema`. The rule runs under the synthesizer's lock:
     * `foreachBatch` invocations are serial per query, but cursor replays
@@ -308,7 +340,7 @@ object ChangelogStream {
     val synth = new ChangelogSynthesizer(schema, keyCols)
     val reserved = () => if (diffs) synth.synchronized(synth.size) else 0
     sink(df, outputMode, queryName, schema, maxBufferedRecords,
-        remaining => math.max(0, (remaining - reserved()) / 2)) { rows =>
+        remaining => math.max(0, (remaining - reserved()) / 2), keepsState = true) { rows =>
       synth.synchronized(rule(synth, rows))
         .map(r => RawRecord(r.op.map(_.code), r.values))
     }
@@ -376,7 +408,7 @@ object ChangelogStream {
                        maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle = {
     val opIdx = df.schema.fieldIndex("op")
     sink(df, "append", queryName, df.schema.fieldNames.toSeq.patch(opIdx, Nil, 1),
-        maxBufferedRecords, identity) { rows =>
+        maxBufferedRecords, identity, keepsState = true) { rows =>
       rows.map(vs => RawRecord(Some(vs(opIdx).asInstanceOf[Int]), vs.patch(opIdx, Nil, 1)))
     }
   }
@@ -388,5 +420,6 @@ object ChangelogStream {
   def appending(df: DataFrame, queryName: String,
                 maxBufferedRecords: Int = DefaultMaxBufferedRecords): Handle =
     sink(df, "append", queryName, df.schema.fieldNames.toSeq,
-        maxBufferedRecords, identity)(_.map(vs => RawRecord(Some(Op.Insert.code), vs)))
+        maxBufferedRecords, identity, keepsState = false)(
+      _.map(vs => RawRecord(Some(Op.Insert.code), vs)))
 }

@@ -116,13 +116,18 @@ class StatementsSpec extends AnyFunSuite {
 
   // a continuous statement's state partitioning is fixed when its query
   // starts; the sinks start it under spark.sql.shuffle.partitions = 1 and
-  // give the caller's session back its own value, or none. Three routes:
+  // give the caller's session back its own value, or none. Four routes:
   // a default-route GROUP BY (updating), a default-route HAVING
-  // (snapshotting) and a 2-feed join (deltaPassthrough over zJoinStream).
+  // (snapshotting), a 2-feed join (deltaPassthrough over zJoinStream) and
+  // a GROUP BY over a feed (foldingSnapshot over its upsert operator).
+  // Their sinks read each source in that one partition, so no plan holds
+  // a shuffle before its first state store (the join's second operator,
+  // keyed on the join key, still gets one).
   test("streaming statements run one state partition per stateful operator " +
     "and leave the caller's spark.sql.shuffle.partitions as it was") {
     import java.util.concurrent.{Executors, TimeUnit}
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
@@ -148,6 +153,11 @@ class StatementsSpec extends AnyFunSuite {
       assert(ops.length == stateful && ops.forall(_.numShufflePartitions == 1),
         s"${stmt.sql}: state partitions ${ops.map(_.numShufflePartitions).toSeq}")
       assert(s.conf.get(key) == "4", "the caller's batch count must stay 4")
+      val plan = stmt.handle.get.query.asInstanceOf[StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan
+      val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
+      info(s"${stmt.sql}: ${exchanges.length} shuffle exchange(s)")
+      assert(exchanges.length < stateful, s"${stmt.sql}: shuffles in\n$plan")
     }
     def running(sql: String)(check: Statement => Unit): Unit = {
       val stmt = new Statements(s).create(sql)
@@ -161,6 +171,8 @@ class StatementsSpec extends AnyFunSuite {
         "HAVING count(*) <= 2")(onePartition(_, 1))
       running("SELECT * FROM sp_l AS a JOIN sp_r AS b ON a.key = b.key")(
         onePartition(_, 2))
+      running("SELECT key, count(*) AS n FROM sp_l GROUP BY key")(
+        onePartition(_, 1))
       // an explicit value is kept exactly; an unset conf stays unset
       s.conf.set(key, "3")
       running("SELECT color, count(*) AS c3 FROM sp_colors GROUP BY color")(_ => ())
@@ -185,6 +197,50 @@ class StatementsSpec extends AnyFunSuite {
         }
       } finally stmts.foreach(_.stop())
     } finally saved.fold(s.conf.unset(key))(s.conf.set(key, _))
+  }
+
+  // a default-route GROUP BY whose first micro-batch holds several pages
+  // of a 2-partition source: the input partitions coalesce into the one
+  // state task, and the changelog collapses to spark.sql over the rows
+  test("a default-route GROUP BY over a 2-partition source collapses to " +
+    "spark.sql over the same rows") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    val mem = MemoryStream[(String, Int)](2)
+    mem.toDF().toDF("color", "n").createOrReplaceTempView("pp_colors")
+    val sql = "SELECT color, count(*) AS c, sum(n) AS total, max(n) AS top " +
+      "FROM %s GROUP BY color"
+    val rnd = new scala.util.Random(16)
+    val fed = scala.collection.mutable.ArrayBuffer.empty[(String, Int)]
+    def pages(k: Int): Unit = (0 until k).foreach { _ =>
+      val page = Seq.fill(10)(
+        (Seq("brown", "blue", "green", "amber")(rnd.nextInt(4)), rnd.nextInt(50)))
+      fed ++= page
+      mem.addData(page)
+    }
+    def batchTwin: Map[Vector[Any], Int] = {
+      fed.toSeq.toDF("color", "n").createOrReplaceTempView("pp_colors_batch")
+      s.sql(sql.format("pp_colors_batch")).collect().toSeq
+        .map(_.toSeq.toVector).groupBy(identity).view.mapValues(_.size).toMap
+    }
+    pages(3)
+    val stmt = new Statements(s).create(sql.format("pp_colors"))
+    try {
+      val cl = stmt.handle.get.changelog()
+      def sync(): Map[Vector[Any], Int] = {
+        stmt.handle.get.processAllAvailable()
+        while (cl.consume(1).nonEmpty) ()
+        cl.collapse().toMultiset
+      }
+      assert(sync() == batchTwin)
+      pages(4)
+      assert(sync() == batchTwin)
+      assert(cl.collapse().missedRetractions == 0)
+      assert(cl.opsReceived.contains(graft.changelog.Op.UpdateBefore),
+        "later pages must update the first batch's groups")
+    } finally stmt.stop()
   }
 
   test("statement properties route sql.current-database: the same " +

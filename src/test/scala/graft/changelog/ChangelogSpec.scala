@@ -80,6 +80,64 @@ class ChangelogSpec extends AnyFunSuite {
     assert(cl.opsReceived == Set(Op.Insert, Op.UpdateBefore, Op.UpdateAfter))
   }
 
+  // ResultTable retracts through a value index over tombstoned slots; this
+  // reference keeps the plain list it replaced: rows in insertion order, a
+  // retraction removes the first value-equal row (a linear search).
+  private final class ListTable {
+    val buf = scala.collection.mutable.ArrayBuffer.empty[Vector[Any]]
+    var missed = 0
+    def update(recs: Seq[ChangelogRecord]): Unit = recs.foreach { rec =>
+      rec.op match {
+        case Some(Op.Insert) | Some(Op.UpdateAfter) | None => buf += rec.values
+        case _ =>
+          val i = buf.indexOf(rec.values)
+          if (i < 0) missed += 1 else buf.remove(i)
+      }
+    }
+  }
+
+  // a small value domain, so duplicates and missing retraction targets
+  // both occur; Int 1 and Long 1L are equal values, as in `indexOf`; a
+  // case's retraction share decides whether tombstones pile up enough to
+  // compact the slots
+  test("property: ResultTable equals the list it replaced after every chunk") {
+    val genValue: Gen[Vector[Any]] = for {
+      k <- Gen.choose(0, 4)
+      tag <- Gen.oneOf[Any](null, 1, 1L, "t")
+    } yield Vector(k, tag)
+    val genCase = for {
+      retractShare <- Gen.choose(0, 9)
+      records <- Gen.listOf(for {
+        retract <- Gen.choose(0, 9).map(_ < retractShare)
+        op <- if (retract) Gen.oneOf[Option[Op]](Some(Op.UpdateBefore), Some(Op.Delete))
+              else Gen.oneOf[Option[Op]](Some(Op.Insert), Some(Op.UpdateAfter), None)
+        v <- genValue
+      } yield ChangelogRecord(op, v))
+      chunks <- Gen.nonEmptyListOf(Gen.choose(1, 40))
+    } yield (records, chunks)
+
+    (0 until 300).foreach { i =>
+      val (records, chunks) =
+        genCase.pureApply(Gen.Parameters.default.withSize(400), Seed(16L + i))
+      val table = new ResultTable(Seq("k", "tag"))
+      val ref = new ListTable
+      var rest = records
+      var j = 0
+      while (rest.nonEmpty) {
+        val (chunk, tail) = rest.splitAt(chunks(j % chunks.size))
+        table.update(chunk)
+        ref.update(chunk)
+        val where = s"case $i after ${records.size - tail.size} of ${records.size} records"
+        assert(table.rows == ref.buf.toSeq, where)
+        assert(table.size == ref.buf.size, where)
+        assert(table.toMultiset == ref.buf.groupBy(identity).view.mapValues(_.size).toMap, where)
+        assert(table.missedRetractions == ref.missed, where)
+        rest = tail
+        j += 1
+      }
+    }
+  }
+
   // The reference's documented contract (lib/flink.py:4-20): consuming in
   // chunks and updating incrementally is equivalent to one full collapse.
   test("property: incremental consume+update == collapse, any chunking") {

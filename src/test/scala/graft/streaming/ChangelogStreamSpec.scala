@@ -374,12 +374,14 @@ class ChangelogStreamSpec extends AnyFunSuite {
   // batch's partition count (a `limit(n).collect()` reads partition 0 in
   // one job and the other partitions in a second). A listener counts job
   // starts per streaming batch id in each query's job group (its run id),
-  // and the tasks of each job's last stage. The grouped, deduplicating
-  // and upsert plans end in the query's one state partition; each int
-  // sink reads a 2-partition memory stream, so its input (and the
-  // appending sink's whole batch) spans 2 partitions. (Two `addData`
-  // pages would race the running query: it may take them as two
-  // batches.)
+  // each job's stages, and the tasks of its last stage. The grouped,
+  // deduplicating and upsert plans end in the query's one state
+  // partition; each int sink reads a 2-partition memory stream, so its
+  // input (and the appending sink's whole batch) spans 2 partitions. The
+  // stateful sinks read that input in their one state partition, so a
+  // grouped batch runs in one stage, with no shuffle before the state
+  // store. (Two `addData` pages would race the running query: it may take
+  // them as two batches.)
   test("every sink runs one Spark job per micro-batch") {
     val s = spark
     import s.implicits._
@@ -388,6 +390,7 @@ class ChangelogStreamSpec extends AnyFunSuite {
     val markerSeen = new CountDownLatch(1)
     val jobs = new ConcurrentHashMap[(String, String), Integer]()
     val lastStageTasks = new ConcurrentHashMap[(String, String), Integer]()
+    val stages = new ConcurrentHashMap[(String, String), Integer]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
@@ -396,6 +399,7 @@ class ChangelogStreamSpec extends AnyFunSuite {
         for (g <- group; b <- prop("streaming.sql.batchId")) {
           jobs.merge((g, b), 1, (a: Integer, c: Integer) => a + c)
           lastStageTasks.put((g, b), e.stageInfos.maxBy(_.stageId).numTasks)
+          stages.merge((g, b), e.stageInfos.size, (a: Integer, c: Integer) => a + c)
         }
       }
     }
@@ -446,9 +450,15 @@ class ChangelogStreamSpec extends AnyFunSuite {
       }
       assert(perBatch.forall(_._2.forall(_._2 == 1)),
         s"Spark jobs per micro-batch (sink -> batch id -> jobs): $perBatch")
-      val appendTasks = batches.collect { case ("appending", runId, withInput) =>
-        withInput.map(b => Option(lastStageTasks.get((runId, b))).fold(0)(_.intValue))
-      }.flatten
+      def perBatchOf(counts: ConcurrentHashMap[(String, String), Integer]) =
+        batches.map { case (sink, runId, withInput) =>
+          sink -> withInput.map(b => Option(counts.get((runId, b))).fold(0)(_.intValue))
+        }.toMap
+      val stagesOf = perBatchOf(stages)
+      info(s"stages per micro-batch: $stagesOf")
+      assert(Seq("updating", "snapshotting").forall(k => stagesOf(k).forall(_ == 1)),
+        s"a grouped sink's micro-batch must run in one stage: $stagesOf")
+      val appendTasks = perBatchOf(lastStageTasks)("appending")
       assert(appendTasks.nonEmpty && appendTasks.forall(_ >= 2),
         s"appending's 2-partition batches must end in >= 2 tasks: $appendTasks")
     } finally s.sparkContext.removeSparkListener(listener)
